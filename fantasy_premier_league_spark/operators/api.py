@@ -46,10 +46,7 @@ from fantasy_premier_league_spark.operators.pipeline import (
     _PLAYERS_CSV_SQL,
     _RATING_SQL,
     _RAW_SQL,
-    _TEAM_ENTRIES_SQL,
     _TEAMS_CSV_SQL,
-    fpl_a6,
-    fpl_a7,
     load_players,
     load_teams,
     matches_df,
@@ -62,7 +59,6 @@ REQ2 = os.path.join(REQ_DIR, "req2_profile.json")
 REQ3 = os.path.join(REQ_DIR, "req3_match.json")
 
 PLAYER_KEYS = [f"player{i}" for i in range(1, 12)]
-_FM_SQL_ = _FM_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -100,10 +96,10 @@ def team_strengths(spark: SparkSession, request: dict) -> DataFrame:
     )
     from fantasy_premier_league_spark.operators.pipeline import (
         chemistry_from_trace,
+        latest_per_player,
         performance_df,
         rating_trace_df,
     )
-    from pyspark.sql import Window
 
     # ONE rating-trace materialization feeds both consumers (the
     # chemistry pair join AND the final-rating branch): without the
@@ -129,12 +125,7 @@ def team_strengths(spark: SparkSession, request: dict) -> DataFrame:
         .groupBy(F.col("a.team").alias("team"))
         .agg((F.sum("chemistry") * 2 / 11).alias("team_avg"))
     )
-    w = Window.partitionBy("playerId").orderBy(F.col("matchId").desc())
-    final_rating = (
-        trace.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("playerId", "rating")
-    )
+    final_rating = latest_per_player(trace).select("playerId", "rating")
     # A10 (ui.py:66-70): strength = sum(rating) * team_avg / 11
     return (
         ids.join(final_rating, "playerId")
@@ -458,7 +449,7 @@ def _req2_oracle(include_goals: bool) -> str:
       SELECT fm.playerId, fm.matchId, fm.pass_accuracy, fm.fouls, fm.goals,
              fm.own_goals, fm.shots_on_target,
              row_number() OVER (PARTITION BY fm.playerId ORDER BY fm.matchId) AS seq
-      FROM ({_FM_SQL_}) fm
+      FROM ({_FM_SQL}) fm
       JOIN {_PLAYERS_CSV_SQL} p ON p.Id = fm.playerId
       JOIN req ON p.name = req.name
     ),

@@ -640,6 +640,7 @@ def ml_kmeans_rating_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     the KMeans clustering; composes Lloyd's with the rating pipeline)."""
     from fantasy_premier_league_spark.operators.pipeline import (
         events_df,
+        latest_per_player,
         match_counters,
         metric_vectors,
         performance_df,
@@ -654,10 +655,8 @@ def ml_kmeans_rating_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lab = _fpl_cluster_labels(spark, counters=ctrs)
     trace = rating_trace_df(performance_df(spark, counters=ctrs))
-    w = Window.partitionBy("playerId").orderBy(F.col("matchId").desc())
     rat = (
-        trace.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        latest_per_player(trace)
         .select(F.col("playerId").alias("user_id"), "rating")
         .localCheckpoint(eager=False)  # rating recurrence feeds 2 joins
     )

@@ -687,6 +687,16 @@ def fpl_a5_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rebuild's canonical behavior is the true latest rating per player).
 
 
+def latest_per_player(df: DataFrame) -> DataFrame:
+    """Each player's row with the highest matchId (A7's "latest")."""
+    w = Window.partitionBy("playerId").orderBy(F.col("matchId").desc())
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 @register(
     "fpl_a7_final_rating",
     oracle=f"""
@@ -699,10 +709,8 @@ def fpl_a5_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fpl_a7(spark: SparkSession, sf_dir: str) -> DataFrame:
     trace = rating_trace_df(performance_df(spark))
-    w = Window.partitionBy("playerId").orderBy(F.col("matchId").desc())
     return (
-        trace.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        latest_per_player(trace)
         .select("playerId", rounded(F.col("rating"), 6).alias("rating"))
         .orderBy("playerId")
     )

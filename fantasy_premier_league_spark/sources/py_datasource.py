@@ -24,6 +24,8 @@ job (sources/testdata.py), not a connector concern.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 _FEED_COLUMNS = ["event_id", "user_id", "event_type", "value"]
@@ -66,11 +68,26 @@ class EventsFeedDataSource(DataSource):
         return _EventsFeedReader(self.options["path"])
 
 
+# Spark rejects registering a name on a session that lacks it when the
+# calling thread's active session already resolves that name
+# (DATA_SOURCE_ALREADY_EXISTS), so two threads racing one session's first
+# registration can fail; the parallel suites register from several
+# threads, so the check and the register run under one lock
+_REGISTER_LOCK = threading.Lock()
+
+
+def _register_once(spark, source: type[DataSource]) -> None:
+    """Idempotent per-session registration of ``source``."""
+    flag = f"_{source.name()}_registered"
+    with _REGISTER_LOCK:
+        if not getattr(spark, flag, False):
+            spark.dataSource.register(source)
+            setattr(spark, flag, True)
+
+
 def register_feed_source(spark) -> None:
     """Idempotent per-session registration."""
-    if not getattr(spark, "_events_feed_registered", False):
-        spark.dataSource.register(EventsFeedDataSource)
-        spark._events_feed_registered = True
+    _register_once(spark, EventsFeedDataSource)
 
 
 # ---------------------------------------------------------------------------
@@ -341,9 +358,7 @@ class EventsStreamFeedDataSource(DataSource):
 
 def register_stream_feed_source(spark) -> None:
     """Idempotent per-session registration."""
-    if not getattr(spark, "_events_stream_feed_registered", False):
-        spark.dataSource.register(EventsStreamFeedDataSource)
-        spark._events_stream_feed_registered = True
+    _register_once(spark, EventsStreamFeedDataSource)
 
 
 @register(
@@ -701,9 +716,7 @@ class EventsFeedSinkDataSource(DataSource):
 
 def register_feed_sink(spark) -> None:
     """Idempotent per-session registration."""
-    if not getattr(spark, "_events_feed_sink_registered", False):
-        spark.dataSource.register(EventsFeedSinkDataSource)
-        spark._events_feed_sink_registered = True
+    _register_once(spark, EventsFeedSinkDataSource)
 
 
 def committed_feed_files(root: str) -> list[str]:
@@ -786,6 +799,11 @@ def python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("path", path)
         .load()
     )
+    # writeStream.start() resolves a Python data source NAME through the
+    # calling thread's ACTIVE JVM session, not the stream's own session
+    # (DataSource.lookupDataSource): on a thread that never had one (a
+    # thread-pool worker) the registered sink is DATA_SOURCE_NOT_FOUND
+    spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
     with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         query = (
             stream.writeStream.format("events_feed_sink")

@@ -36,6 +36,9 @@ driver-memory state.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -45,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from fantasy_premier_league_spark.functions import scoped_conf
 from fantasy_premier_league_spark.schemas import STREAM_SCHEMA
 
 INIT_RATING = 0.5
@@ -130,8 +134,6 @@ def run_ingest_sinks(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         stamped = batch_df.withColumn("batch_id", F.lit(batch_id))
         # two write actions below -- without a persist each re-runs the
         # source scan + from_json parse (the same double-execution the
@@ -143,15 +145,15 @@ def run_ingest_sinks(
                 "batch_id", "wyId", "label", "dateutc", "duration", "winner",
                 "venue", "gameweek",
                 F.to_json(F.struct("teamsData")).alias("teams_json"),
-            ).write.mode("overwrite").partitionBy("batch_id").parquet(
-                os.path.join(out_dir, "match_log")
-            )
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("batch_id").parquet(os.path.join(out_dir, "match_log"))
             stamped.filter(F.col("eventId").isNotNull()).select(
                 "batch_id", "id", "eventId", "subEventId", "playerId",
                 "matchId", "teamId", F.col("tags.id").alias("tag_ids"),
-            ).write.mode("overwrite").partitionBy("batch_id").parquet(
-                os.path.join(out_dir, "events")
-            )
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("batch_id").parquet(os.path.join(out_dir, "events"))
         finally:
             stamped.unpersist()
 
@@ -185,12 +187,7 @@ def latest_committed_version(root: str, batch_id: int) -> "str | None":
     return prevs[-1] if prevs else None
 
 
-def make_state_sink(
-    rating_dir: str,
-    profile_root: str,
-    marks: list | None = None,
-    persist_batch: bool = True,
-):
+def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = None):
     """K3 + K4 foreachBatch sink over the streaming player state
     (shared by t16_fpl_pipeline_roundtrip and the restart-idempotency
     test, so the test exercises the REAL sink).
@@ -207,49 +204,35 @@ def make_state_sink(
     silently dropped) -- it re-reads v{batch_id-1} and reproduces the
     identical snapshot.
 
-    ``marks`` (r16 stage study): when given, each batch appends
+    ``marks``: when given, each batch appends
     ``{"batch_id", "rating_s", "merge_s"}`` so the K4 write and the K3
-    MERGE are priced separately -- both actions re-execute the
-    micro-batch's stateful-fold plan (foreachBatch DataFrames are not
-    materialized between actions), which is exactly the double-run the
-    study quantifies.
+    MERGE are priced separately (``python3 perfbench/run.py --workload
+    stream --trace 1`` reports them as ``stream.sink_rating_ms_p50`` and
+    ``stream.sink_merge_ms_p50``).
     """
     import time as _time
 
-    from pyspark.sql import Window
+    from fantasy_premier_league_spark.operators.pipeline import latest_per_player
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
-        sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # The K4 write and the K3 MERGE are two ACTIONS on batch_df,
         # and foreachBatch DataFrames are not materialized between
         # actions -- without a persist each action re-executes the
         # micro-batch's whole stateful-fold plan. Caching costs only
         # the touched-groups output (bounded per batch) and cut the
         # t16 state stage to 0.60x in the r16 stage study
-        # (tools/t16_stage_study.py; BASELINE.md "Round 16").
-        # persist_batch=False exists for that study's before/after row.
-        if not persist_batch:
-            _sink_inner(batch_df, batch_id)
-            return
+        # (BASELINE.md "Round 16").
         batch_df.persist()
         try:
-            _sink_inner(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _sink_inner(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        t0 = _time.perf_counter()
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id").parquet(rating_dir)
-        t_rating = _time.perf_counter()
-        wlast = Window.partitionBy("playerId").orderBy(F.col("matchId").desc())
-        latest = (
-            batch_df.withColumn("rn", F.row_number().over(wlast))
-            .filter(F.col("rn") == 1)
-            .select(
+            t0 = _time.perf_counter()
+            batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").partitionBy(
+                "batch_id"
+            ).parquet(rating_dir)
+            t_rating = _time.perf_counter()
+            latest = latest_per_player(batch_df).select(
                 "playerId",
                 "matchId",
                 F.col("pass_accuracy_mean").alias("pass_accuracy"),
@@ -258,27 +241,28 @@ def make_state_sink(
                 F.col("own_goals_total").alias("own_goals"),
                 F.col("shots_on_target_total").alias("shots_on_target"),
             )
-        )
-        prev_dir = latest_committed_version(profile_root, batch_id)
-        if prev_dir is not None:
-            prev = sp.read.parquet(prev_dir)
-            merged = prev.join(latest, "playerId", "left_anti").unionByName(
-                latest
+            prev_dir = latest_committed_version(profile_root, batch_id)
+            if prev_dir is not None:
+                prev = sp.read.parquet(prev_dir)
+                merged = prev.join(latest, "playerId", "left_anti").unionByName(
+                    latest
+                )
+            else:
+                merged = latest
+            merged.write.mode("overwrite").parquet(
+                os.path.join(profile_root, f"v{batch_id:05d}")
             )
-        else:
-            merged = latest
-        merged.write.mode("overwrite").parquet(
-            os.path.join(profile_root, f"v{batch_id:05d}")
-        )
-        if marks is not None:
-            t_end = _time.perf_counter()
-            marks.append(
-                {
-                    "batch_id": batch_id,
-                    "rating_s": t_rating - t0,
-                    "merge_s": t_end - t_rating,
-                }
-            )
+            if marks is not None:
+                t_end = _time.perf_counter()
+                marks.append(
+                    {
+                        "batch_id": batch_id,
+                        "rating_s": t_rating - t0,
+                        "merge_s": t_end - t_rating,
+                    }
+                )
+        finally:
+            batch_df.unpersist()
 
     return sink
 
@@ -386,20 +370,37 @@ def streaming_player_state(parsed: DataFrame) -> DataFrame:
     )
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame,
-    checkpoint: str,
-    output_mode: str = "append",
-    query_name: str = "fpl_stream",
-) -> DataFrame:
-    """Drain with availableNow and return the sink table (T7)."""
-    query = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return stream_df.sparkSession.table(query_name)
+def run_stream_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain a streaming query into a memory sink, synchronously, and
+    return the sink table (T7).
+
+    The drain is ``processAllAvailable`` on the default trigger, the
+    semantics t12's watermark-evicted outer rows are gated against. The
+    checkpoint is a throwaway (the memory sink's rows live in the
+    session, and each call uses a fresh query name), so it is deleted
+    after the drain -- without this, every call leaks a WAL+state
+    directory into the temp dir (~1.5 MB each, hundreds per
+    verification sweep)."""
+    name = "s" + uuid.uuid4().hex[:12]
+    checkpoint = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
+    # state partitions are fixed at the first checkpoint, so their
+    # count is a deliberate deployment knob, not something AQE can fix
+    # later: size it to the cluster (hundreds+ at 100 TB) or pay a
+    # per-partition state-store commit/snapshot fixed cost per
+    # micro-batch. The gate queries drain sf<=0.1 inputs, where the
+    # session's 32 partitions are pure overhead (~3x wall). The query
+    # clones the session at start, so the scope only covers start().
+    with scoped_conf(stream_df.sparkSession, "spark.sql.shuffle.partitions", "8"):
+        query = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    return stream_df.sparkSession.table(name)

@@ -22,16 +22,15 @@ import shutil
 import tempfile
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fantasy_premier_league_spark.functions import epoch_us, fixed_units, rounded
+from fantasy_premier_league_spark.functions import epoch_us, fixed_units, rounded, scoped_conf
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import canonicalize_ts, load_table
-
-
-from contextlib import contextmanager
+from fantasy_premier_league_spark.streaming.pipeline import run_stream_to_memory
 
 
 # per-session scratch-dir lifecycle (wipe-at-claim, stale-sibling
@@ -39,49 +38,6 @@ from contextlib import contextmanager
 from fantasy_premier_league_spark.functions.tuning import (
     claim_session_tmpdir as _claim_session_tmpdir,
 )
-
-
-@contextmanager
-def scoped_conf(spark: SparkSession, key: str, value: str):
-    """Set a SQL conf for the duration of one streaming-query start.
-
-    Streaming state partitioning is FIXED at the query's first
-    checkpoint, so its count is a deliberate deployment knob, not
-    something AQE can fix later: size it to the cluster (hundreds+ at
-    100 TB) or pay a per-partition state-store commit/snapshot fixed
-    cost per micro-batch. The gate queries run one drain batch over
-    sf<=0.1, where 32 partitions are pure overhead (~3x wall)."""
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-def run_stream_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
-    """Drain a streaming aggregation into a memory sink, synchronously.
-
-    The checkpoint is a throwaway (the memory sink's rows live in the
-    session, and each gate invocation uses a fresh query name), so it is
-    deleted after the drain -- without this, every invocation leaks a
-    WAL+state directory into the temp dir (~1.5 MB each, hundreds per
-    verification sweep)."""
-    name = "s" + uuid.uuid4().hex[:12]
-    checkpoint = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
-    query = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-        shutil.rmtree(checkpoint, ignore_errors=True)
-    return stream_df.sparkSession.table(name)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,8 +77,7 @@ def windowed_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.sum(fixed_units(F.col("value"))).alias("total_value_c"))
     )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        result = run_stream_to_memory(stream, output_mode="complete")
+    result = run_stream_to_memory(stream, output_mode="complete")
     return result.select(
         F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("day"),
         "event_type",
@@ -162,8 +117,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["day_ts", "user_id", "event_type"])
         .select("day_ts", "user_id", "event_type")
     )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        result = run_stream_to_memory(stream, output_mode="append")
+    result = run_stream_to_memory(stream, output_mode="append")
     return result.select(
         F.date_format("day_ts", "yyyy-MM-dd").alias("day"), "user_id", "event_type"
     ).orderBy("day", "user_id", "event_type")
@@ -228,8 +182,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("s_ts") <= F.col("p_ts"))
         & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 DAY")),
     )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        result = run_stream_to_memory(joined, output_mode="append")
+    result = run_stream_to_memory(joined, output_mode="append")
     return result.select(
         F.col("p_user").alias("user_id"),
         "signup_event",
@@ -288,8 +241,7 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(fixed_units(F.col("value"))).alias("total_value_c"),
         )
     )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        result = run_stream_to_memory(stream, output_mode="complete")
+    result = run_stream_to_memory(stream, output_mode="complete")
     return result.select(
         "user_id",
         "n_events",
@@ -317,28 +269,18 @@ def _fpl_stateful_oracle() -> str:
 
 
 def _register_stateful() -> None:
-    import tempfile
-    import uuid
-
     from fantasy_premier_league_spark.sources import fpl_fixtures
 
     @register("fpl_t5_stateful_stream", oracle=_fpl_stateful_oracle())
     def fpl_t5(spark: SparkSession, sf_dir: str) -> DataFrame:
         from fantasy_premier_league_spark.streaming.pipeline import (
-            run_stream_to_memory,
             stream_source,
             streaming_player_state,
         )
 
         stream_dir = os.path.join(fpl_fixtures.ensure_fixtures(), "stream")
-        ckpt = os.path.join(tempfile.gettempdir(), "t5_ckpt_" + uuid.uuid4().hex[:8])
         out = streaming_player_state(stream_source(spark, stream_dir))
-        try:
-            table = run_stream_to_memory(
-                out, ckpt, query_name="t5_" + uuid.uuid4().hex[:8]
-            )
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)  # throwaway, like the gate's
+        table = run_stream_to_memory(out, output_mode="append")
         return table.select(
             "playerId",
             "matchId",
@@ -403,8 +345,7 @@ def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bucket")
         .agg(F.max("rho").alias("m"))
     )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        regs = run_stream_to_memory(stream, output_mode="complete")
+    regs = run_stream_to_memory(stream, output_mode="complete")
     return (
         regs.groupBy("event_type")
         .agg(
@@ -609,8 +550,7 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 DAY")),
         "left_outer",
     )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        result = run_stream_to_memory(joined, output_mode="append")
+    result = run_stream_to_memory(joined, output_mode="append")
     return result.select(
         F.col("s_user").alias("user_id"),
         "signup_event",
@@ -769,8 +709,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        result = run_stream_to_memory(stream, output_mode="append")
+    result = run_stream_to_memory(stream, output_mode="append")
     return result.select("user_id", "event_type").orderBy("user_id", "event_type")
 
 
@@ -812,8 +751,7 @@ def sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "2 days", "1 day").alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.sum(fixed_units(F.col("value"))).alias("cents"))
     )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        result = run_stream_to_memory(stream, output_mode="complete")
+    result = run_stream_to_memory(stream, output_mode="complete")
     return result.select(
         F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("win_day"),
         "event_type",
@@ -915,169 +853,33 @@ def _t16_oracle() -> str:
     """
 
 
-def t16_stage_plan(spark: SparkSession) -> dict:
-    """Shared setup for the t16 ladder (r16, VERDICT r15 stretch #8:
-    the ladder is split into module-level stage functions so
-    tools/t16_stage_study.py times the SAME code the registered query
-    runs): fixture stream dir, per-session sink root, and the trigger
-    sizing that keeps the stateful drain a 4-batch ladder.
-
-    Honors SPARK_GRAFT_FPL_FIXTURES (scaled fixture dirs) like the
-    batch pipeline; triggers size to the file count so the BATCH COUNT
-    stays constant under stream-volume scaling -- the study then
-    measures data scaling, not batch-count overhead."""
-    import glob as _glob
-
-    from fantasy_premier_league_spark.operators.pipeline import (
-        FIXTURES as _fixtures_root,
-    )
-
-    stream_dir = os.path.join(_fixtures_root, "stream")
-    n_stream_files = len(_glob.glob(os.path.join(stream_dir, "*.jsonl")))
-    # per-session sink dir + stale-sibling prune + atexit removal:
-    # the shared lifecycle contract lives in _claim_session_tmpdir
-    out_dir = _claim_session_tmpdir(
-        "t16_roundtrip", spark.sparkContext.applicationId
-    )
-    return {
-        "stream_dir": stream_dir,
-        "out_dir": out_dir,
-        "n_stream_files": n_stream_files,
-        "state_fpt": max(3, -(-n_stream_files // 4)),  # ceil: 4-batch ladder
-    }
-
-
-def t16_run_ingest(spark: SparkSession, plan: dict) -> None:
-    """Stage 1 -- K2 + event feed: idempotent batch_id partitions (T8).
-    The ingest sink needs no per-match cadence, so the whole fixture
-    drains in one batch; the stateful ladder below keeps multi-batch."""
-    from fantasy_premier_league_spark.streaming.pipeline import (
-        run_ingest_sinks,
-        stream_source,
-    )
-
-    run_ingest_sinks(
-        stream_source(
-            spark,
-            plan["stream_dir"],
-            max_files_per_trigger=max(64, plan["n_stream_files"]),
-        ),
-        plan["out_dir"],
-        os.path.join(plan["out_dir"], "_ckpt_ingest"),
-    ).awaitTermination()
-
-
-def t16_run_state(spark: SparkSession, plan: dict, sink=None) -> None:
-    """Stage 2 -- the stateful fold drained through the K3 + K4 sink
-    (shared with the restart-idempotency test -- streaming/pipeline.py
-    make_state_sink documents the committed-snapshot MERGE rule).
-    ``sink`` overrides the foreachBatch callable (the stage study wraps
-    the real sink with per-batch timing marks).
-
-    3 match files per micro-batch: still a genuine multi-batch
-    incremental run (4 batches, 4 profile snapshot versions) at a
-    third of the per-batch fixed cost; file order is path order, so
-    matches still arrive chronologically and the state fold's
-    per-batch matchId sort preserves the recurrence order."""
-    from fantasy_premier_league_spark.streaming.pipeline import (
-        make_state_sink,
-        stream_source,
-        streaming_player_state,
-    )
-
-    out_dir = plan["out_dir"]
-    if sink is None:
-        sink = make_state_sink(
-            os.path.join(out_dir, "rating"), os.path.join(out_dir, "profile")
-        )
-    with scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-        (
-            streaming_player_state(
-                stream_source(
-                    spark,
-                    plan["stream_dir"],
-                    max_files_per_trigger=plan["state_fpt"],
-                )
-            )
-            .writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation", os.path.join(out_dir, "_ckpt_state")
-            )
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-
-def t16_run_ingest_and_state(spark: SparkSession, plan: dict) -> None:
-    """Stages 1+2 OVERLAPPED (r17, guide §2.6 "overlap independent
-    jobs"): the ingest sinks and the stateful ladder read the same
-    static fixture dir and write DISJOINT sink tables (events/feed vs
-    rating/profile) with separate checkpoints, so the two availableNow
-    drains are independent jobs; running both lets the scheduler
-    back-fill the ladder's per-batch tails with ingest tasks. Results
-    are identical to the sequential t16_run_ingest + t16_run_state
-    (same sources, same sinks, same per-query confs: each streaming
-    query clones the session at start, so the state ladder still runs
-    under the scoped shuffle.partitions=4 and ingest under the session
-    default). Measured 0.78x of the sequential ingest+state wall in
-    tools/t16_stage_study.py's concurrent variant."""
-    from fantasy_premier_league_spark.streaming.pipeline import (
-        make_state_sink,
-        run_ingest_sinks,
-        stream_source,
-        streaming_player_state,
-    )
-
-    out_dir = plan["out_dir"]
-    q_ingest = run_ingest_sinks(
-        stream_source(
-            spark,
-            plan["stream_dir"],
-            max_files_per_trigger=max(64, plan["n_stream_files"]),
-        ),
-        out_dir,
-        os.path.join(out_dir, "_ckpt_ingest"),
-    )
-    sink = make_state_sink(
-        os.path.join(out_dir, "rating"), os.path.join(out_dir, "profile")
-    )
-    q_state = None
+@contextmanager
+def stop_on_error(queries: list):
+    """On an exception in the block, stop every still-active query in
+    ``queries`` and re-raise. Each stop runs on its own: a stop that
+    raises (py4j error from a query that already failed) is attached
+    to the original error as a note, so it neither hides that error
+    nor skips the next query's stop."""
     try:
-        with scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-            q_state = (
-                streaming_player_state(
-                    stream_source(
-                        spark,
-                        plan["stream_dir"],
-                        max_files_per_trigger=plan["state_fpt"],
-                    )
-                )
-                .writeStream.foreachBatch(sink)
-                .option(
-                    "checkpointLocation", os.path.join(out_dir, "_ckpt_state")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-        q_ingest.awaitTermination()
-        q_state.awaitTermination()
-    finally:
-        # if either start() or awaitTermination() raised, stop whichever
-        # availableNow drain is still active so a failed run cannot leak
-        # a streaming query holding the session temp dirs (ADVICE r17)
-        for q in (q_ingest, q_state):
-            if q is not None and q.isActive:
-                q.stop()
+        yield
+    except BaseException as err:
+        for q in queries:
+            try:
+                if q.isActive:
+                    q.stop()
+            except Exception as stop_err:  # noqa: BLE001 -- kept as a note
+                err.add_note(f"stopping {q!r} also failed: {stop_err!r}")
+        raise
 
 
 def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
     """Stage 3 -- serving: every input comes from the sink tables."""
     import glob as _glob
 
-    from pyspark.sql import Window
-
-    from fantasy_premier_league_spark.operators.pipeline import INIT_CHEMISTRY
+    from fantasy_premier_league_spark.operators.pipeline import (
+        chemistry_from_trace,
+        latest_per_player,
+    )
 
     rating_dir = os.path.join(out_dir, "rating")
     profile_root = os.path.join(out_dir, "profile")
@@ -1093,39 +895,14 @@ def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
         .select("playerId", "matchId", "teamId")
         .distinct()
     )
-    wf = Window.partitionBy("playerId").orderBy(F.col("matchId").desc())
-    final = (
-        rating.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select("playerId", F.col("rating").alias("final_rating"))
+    final = latest_per_player(rating).select(
+        "playerId", F.col("rating").alias("final_rating")
     )
     trace = rating.select("playerId", "matchId", "delta").join(
         teams, ["playerId", "matchId"]
     )
-    a, b = trace.alias("a"), trace.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.matchId") == F.col("b.matchId"))
-        & (F.col("a.playerId") < F.col("b.playerId")),
-    ).select(
-        F.col("a.playerId").alias("p1"),
-        F.col("b.playerId").alias("p2"),
-        F.abs((F.col("a.delta") + F.col("b.delta")) / 2).alias("mag"),
-        (
-            ((F.col("a.delta") > 0) & (F.col("b.delta") > 0))
-            | ((F.col("a.delta") < 0) & (F.col("b.delta") < 0))
-        ).alias("same_sign"),
-        (F.col("a.teamId") == F.col("b.teamId")).alias("same_team"),
-    )
-    chem_expr = F.lit(INIT_CHEMISTRY) + F.sum(
-        F.when(F.col("same_team") == F.col("same_sign"), F.col("mag")).otherwise(
-            -F.col("mag")
-        )
-    )
-    chem = pairs.groupBy("p1", "p2").agg(
-        rounded(F.greatest(F.lit(0.0), F.least(F.lit(1.0), chem_expr)), 6).alias(
-            "chemistry"
-        )
+    chem = chemistry_from_trace(trace).select(
+        "p1", "p2", rounded(F.col("chemistry"), 6).alias("chemistry")
     )
     # per-pair values are 6-dp-rounded on both engines, so the
     # per-player sum runs on exact scaled integers (order-free)
@@ -1172,12 +949,85 @@ def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
 def _register_pipeline_roundtrip() -> None:
     @register("t16_fpl_pipeline_roundtrip", oracle=_t16_oracle())
     def t16_fpl_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-        plan = t16_stage_plan(spark)
-        # ingest and the stateful ladder overlap (r17, guide §2.6) --
-        # independent sources/sinks/checkpoints, identical results;
-        # serve still waits for both
-        t16_run_ingest_and_state(spark, plan)
-        return t16_serve(spark, plan["out_dir"])
+        """Stage the fixture stream, drain the ingest sinks and the
+        stateful ladder concurrently, then serve from the sink tables.
+
+        Honors SPARK_GRAFT_FPL_FIXTURES (scaled fixture dirs) like the
+        batch pipeline; triggers size to the file count so the BATCH
+        COUNT stays constant under stream-volume scaling."""
+        import glob as _glob
+
+        from fantasy_premier_league_spark.operators.pipeline import (
+            FIXTURES as _fixtures_root,
+        )
+        from fantasy_premier_league_spark.streaming.pipeline import (
+            make_state_sink,
+            run_ingest_sinks,
+            stream_source,
+            streaming_player_state,
+        )
+
+        stream_dir = os.path.join(_fixtures_root, "stream")
+        n_stream_files = len(_glob.glob(os.path.join(stream_dir, "*.jsonl")))
+        # per-session sink dir + stale-sibling prune + atexit removal:
+        # the shared lifecycle contract lives in _claim_session_tmpdir
+        out_dir = _claim_session_tmpdir(
+            "t16_roundtrip", spark.sparkContext.applicationId
+        )
+        # The two availableNow drains OVERLAP (r17, guide §2.6 "overlap
+        # independent jobs"): they read the same static fixture dir and
+        # write DISJOINT sink tables (events/feed vs rating/profile)
+        # with separate checkpoints, so the scheduler back-fills the
+        # ladder's per-batch tails with ingest tasks (0.78x of the
+        # sequential wall). Each streaming query clones the session at
+        # start, so the state ladder runs under the scoped
+        # shuffle.partitions=4 and ingest under the session default.
+        queries: list = []
+        with stop_on_error(queries):
+            # K2 + event feed: idempotent batch_id partitions (T8). The
+            # ingest sink needs no per-match cadence, so the whole
+            # fixture drains in one batch.
+            queries.append(
+                run_ingest_sinks(
+                    stream_source(
+                        spark,
+                        stream_dir,
+                        max_files_per_trigger=max(64, n_stream_files),
+                    ),
+                    out_dir,
+                    os.path.join(out_dir, "_ckpt_ingest"),
+                )
+            )
+            # The stateful fold drained through the K3 + K4 sink
+            # (make_state_sink documents the committed-snapshot MERGE
+            # rule). max(3, ceil(files/4)) match files per micro-batch
+            # keeps a genuine multi-batch incremental run (4 batches, 4 profile
+            # snapshot versions) at a fraction of the per-batch fixed
+            # cost; file order is path order, so matches still arrive
+            # chronologically and the fold's per-batch matchId sort
+            # preserves the recurrence order.
+            sink = make_state_sink(
+                os.path.join(out_dir, "rating"), os.path.join(out_dir, "profile")
+            )
+            with scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
+                queries.append(
+                    streaming_player_state(
+                        stream_source(
+                            spark,
+                            stream_dir,
+                            max_files_per_trigger=max(3, -(-n_stream_files // 4)),
+                        )
+                    )
+                    .writeStream.foreachBatch(sink)
+                    .option(
+                        "checkpointLocation", os.path.join(out_dir, "_ckpt_state")
+                    )
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            for q in queries:
+                q.awaitTermination()
+        return t16_serve(spark, out_dir)
 
 
 _register_pipeline_roundtrip()
@@ -1275,7 +1125,6 @@ def make_dedup_history_sink(hist_root: str, accepted: str):
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
-        sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         bd = batch_df.select(
             "doc_id", F.md5(F.col("text").cast("binary")).alias("digest")
         )
@@ -1289,7 +1138,9 @@ def make_dedup_history_sink(hist_root: str, accepted: str):
             new = in_batch_first
         new.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "overwrite"
-        ).partitionBy("batch_id").parquet(accepted)
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "batch_id"
+        ).parquet(accepted)
         # merge the history from the batch partition just COMMITTED
         # above: `new` is lazy, so unioning it directly would recompute
         # the scan + anti-join a second time (review r9). No distinct()

@@ -22,6 +22,7 @@ both sides, timestamps compared against shared ISO literals.
 from __future__ import annotations
 
 import random
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1086,8 +1087,12 @@ def draw_stream_case(seed: int) -> dict:
 
 
 # one multi-file source copy per (app, sf_dir, table) -- the axis pays
-# the write once, every case reuses it
+# the write once, every case reuses it. Populated under the lock: the
+# cases run on a thread pool, and claim_session_tmpdir wipes the dir it
+# claims, so two threads that both missed the cache would delete each
+# other's in-flight write.
 _STREAM_SRC_CACHE: dict[tuple[str, str, str], str] = {}
+_STREAM_SRC_LOCK = threading.Lock()
 
 
 def build_stream_spark(spark: SparkSession, sf_dir: str, case: dict) -> DataFrame:
@@ -1096,21 +1101,22 @@ def build_stream_spark(spark: SparkSession, sf_dir: str, case: dict) -> DataFram
 
     from fantasy_premier_league_spark.functions.tuning import (
         claim_session_tmpdir,
+        scoped_conf,
     )
-    from fantasy_premier_league_spark.streaming.queries import scoped_conf
 
     app = spark.sparkContext.applicationId
     table = case["table"]
     key = (app, sf_dir, table)
-    if key not in _STREAM_SRC_CACHE:
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        root = claim_session_tmpdir(f"fuzz_stream_{table}_{tag}", app)
-        src = os.path.join(root, "src")
-        spark.read.parquet(f"{sf_dir}/{table}.parquet").repartition(
-            4
-        ).write.parquet(src)
-        _STREAM_SRC_CACHE[key] = src
-    src = _STREAM_SRC_CACHE[key]
+    with _STREAM_SRC_LOCK:
+        if key not in _STREAM_SRC_CACHE:
+            tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+            root = claim_session_tmpdir(f"fuzz_stream_{table}_{tag}", app)
+            src = os.path.join(root, "src")
+            spark.read.parquet(f"{sf_dir}/{table}.parquet").repartition(
+                4
+            ).write.parquet(src)
+            _STREAM_SRC_CACHE[key] = src
+        src = _STREAM_SRC_CACHE[key]
     schema = spark.read.parquet(src).schema
     cond = _conj(case["pred_cols"])
     stream = (

@@ -14,10 +14,12 @@ count, same per-case attribution (the stored exception re-raises inside
 the owning test), a fraction of the wall.
 
 Safety notes, checked against the code rather than assumed:
-- temp-view races: only sql_frontend queries create temp views, always
-  CREATE OR REPLACE with definitions that are identical within one
-  suite (same sf_dir), and spark.sql() resolves views at analysis time,
-  so a concurrent identical replace cannot change any result;
+- temp-view races: sql_frontend queries and the fuzz lateral axis's
+  `range_sql` shape (tests/fuzz_grammar.py, view ``lat_sql_<table>``)
+  create temp views, always CREATE OR REPLACE with definitions that
+  are identical for one name within one suite (same sf_dir, same
+  table), and spark.sql() resolves views at analysis time, so a
+  concurrent identical replace cannot change any result;
 - scoped session confs (sized_loop_partitions et al.) are performance
   keys (shuffle.partitions); a cross-thread overlap can only move
   partition counts, never rows;
@@ -55,7 +57,7 @@ def fan_out(
         key, thunk = case
         try:
             return key, ("ok", thunk())
-        except BaseException as exc:  # noqa: BLE001 -- re-raised in the test
+        except Exception as exc:  # noqa: BLE001 -- re-raised in the test
             return key, ("err", exc)
 
     workers = max_workers or DEFAULT_WORKERS

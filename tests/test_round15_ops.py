@@ -194,6 +194,78 @@ def test_s10_sink_exactly_once_across_restart(spark, tmp_path):
     )
 
 
+def test_s10_runs_on_a_fresh_thread(spark):
+    """The parity suites run queries on a thread pool. A fresh Python
+    thread maps to a JVM thread with no active session, and the
+    streaming writer looks Python data source names up through that
+    active session, so s10 must not depend on the caller's thread."""
+    import threading
+
+    from fantasy_premier_league_spark.plans.registry import all_queries
+    from tests.conftest import SF_SMOKE
+
+    out: dict = {}
+
+    def run() -> None:
+        try:
+            out["rows"] = all_queries()["s10_python_datasource_writer"](
+                spark, SF_SMOKE
+            ).collect()
+        except Exception as exc:  # noqa: BLE001 -- asserted below
+            out["err"] = exc
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "s10 drain did not finish"
+    assert "err" not in out, out.get("err")
+    assert out["rows"], "s10 returned no rows"
+
+
+def test_feed_registration_is_thread_safe(spark):
+    """The parallel suites register the Python data sources from many
+    threads at once. Spark rejects registering a name on a session that
+    lacks it when the calling thread's active session already resolves
+    it, so two concurrent first registrations on one session can fail
+    (DATA_SOURCE_ALREADY_EXISTS); only one may reach the register call."""
+    import sys
+    import threading
+
+    from fantasy_premier_league_spark.sources.py_datasource import (
+        register_stream_feed_source,
+    )
+
+    n_threads, rounds = 8, 25
+    errors: list = []
+
+    def run(sess, barrier) -> None:
+        try:
+            sess._jvm.SparkSession.setActiveSession(sess._jsparkSession)
+            barrier.wait(timeout=30)
+            register_stream_feed_source(sess)
+        except Exception as exc:  # noqa: BLE001 -- asserted below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(rounds):
+            sess = spark.newSession()  # fresh registry: nothing registered
+            barrier = threading.Barrier(n_threads)
+            threads = [
+                threading.Thread(target=run, args=(sess, barrier))
+                for _ in range(n_threads)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+
+
 def test_stream_feed_reader_restart_canary(spark, tmp_path):
     """The self-offset demo reader cannot be restart-safe on the Python
     stream API (the engine never hands the reader the committed offset;

@@ -22,7 +22,7 @@ def tmp_ckpt(tmp_path):
     return str(tmp_path / "ckpt")
 
 
-def test_stateful_rating_matches_batch(spark, tmp_ckpt):
+def test_stateful_rating_matches_batch(spark):
     """applyInPandasWithState trace == batch applyInPandas trace (T5)."""
     from fantasy_premier_league_spark.operators.pipeline import (
         performance_df,
@@ -36,7 +36,7 @@ def test_stateful_rating_matches_batch(spark, tmp_ckpt):
 
     stream_dir = os.path.join(ensure_fixtures(), "stream")
     out = streaming_player_state(stream_source(spark, stream_dir))
-    got = run_stream_to_memory(out, tmp_ckpt, query_name="rating_stream")
+    got = run_stream_to_memory(out, output_mode="append")
     stream_rows = {
         (r["playerId"], r["matchId"]): r for r in got.collect()
     }
@@ -48,7 +48,7 @@ def test_stateful_rating_matches_batch(spark, tmp_ckpt):
         assert s["delta"] == pytest.approx(b["delta"], abs=1e-12)
 
 
-def test_stateful_profile_matches_batch(spark, tmp_ckpt):
+def test_stateful_profile_matches_batch(spark):
     """Final per-player profile state == batch profile (A4 parity)."""
     from fantasy_premier_league_spark.operators.pipeline import profile_df
     from fantasy_premier_league_spark.streaming.pipeline import (
@@ -59,7 +59,7 @@ def test_stateful_profile_matches_batch(spark, tmp_ckpt):
 
     stream_dir = os.path.join(ensure_fixtures(), "stream")
     out = streaming_player_state(stream_source(spark, stream_dir))
-    got = run_stream_to_memory(out, tmp_ckpt, query_name="profile_stream")
+    got = run_stream_to_memory(out, output_mode="append")
     # last row per player = final cumulative state
     final = {}
     for r in got.collect():
@@ -75,7 +75,7 @@ def test_stateful_profile_matches_batch(spark, tmp_ckpt):
         assert s["pass_accuracy_mean"] == pytest.approx(b["pass_accuracy"], abs=1e-12)
 
 
-def test_streaming_match_counters_update_mode(spark, tmp_ckpt):
+def test_streaming_match_counters_update_mode(spark):
     """A2 as an incremental agg == batch counters (T5/T6)."""
     from fantasy_premier_league_spark.operators.pipeline import (
         events_df,
@@ -90,9 +90,7 @@ def test_streaming_match_counters_update_mode(spark, tmp_ckpt):
 
     stream_dir = os.path.join(ensure_fixtures(), "stream")
     agg = streaming_match_counters(stream_source(spark, stream_dir, max_files_per_trigger=4))
-    got = run_stream_to_memory(
-        agg, tmp_ckpt, output_mode="complete", query_name="counters_stream"
-    )
+    got = run_stream_to_memory(agg, output_mode="complete")
     stream_counts = {
         (r["playerId"], r["matchId"]): r for r in got.collect()
     }
@@ -255,6 +253,84 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert totals.get(10) == 1.0  # on-time window emitted once closed
 
 
+def test_sinks_leave_session_overwrite_mode_unchanged(spark, tmp_path):
+    """The batch_id-partitioned sinks ask for dynamic partition
+    overwrite per write, never by setting the session conf. Inside a
+    drain the sink sees the query's cloned session, so a conf set there
+    leaks into every later write of that query; a sink called directly
+    on a static batch (as below) would flip the caller's own session."""
+    from fantasy_premier_league_spark.streaming.pipeline import (
+        RATING_OUTPUT_SCHEMA,
+        make_state_sink,
+        run_ingest_sinks,
+        stream_source,
+    )
+    from fantasy_premier_league_spark.streaming.queries import (
+        make_dedup_history_sink,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    # own SQL conf, so no earlier test's state decides the baseline
+    sess = spark.newSession()
+    before = sess.conf.get(key)
+
+    out_dir = str(tmp_path / "ingest")
+    run_ingest_sinks(
+        stream_source(
+            sess, os.path.join(ensure_fixtures(), "stream"), max_files_per_trigger=12
+        ),
+        out_dir,
+        str(tmp_path / "ckpt"),
+    ).awaitTermination()
+    assert sess.read.parquet(os.path.join(out_dir, "match_log")).count() == 12
+
+    rating_dir = str(tmp_path / "rating")
+    state_sink = make_state_sink(rating_dir, str(tmp_path / "profile"))
+    dedup_sink = make_dedup_history_sink(
+        str(tmp_path / "history"), str(tmp_path / "accepted")
+    )
+    for batch_id in (0, 1):
+        state_sink(
+            sess.createDataFrame(
+                [(7, batch_id, 0.5, 0.0, 0.5, 1, 0, 0, 1)], RATING_OUTPUT_SCHEMA
+            ),
+            batch_id,
+        )
+        dedup_sink(
+            sess.createDataFrame([(batch_id, f"doc {batch_id}")], "doc_id long, text string"),
+            batch_id,
+        )
+    assert sess.conf.get(key) == before
+    # each write replaced only its own batch_id partition
+    for table in (rating_dir, str(tmp_path / "accepted")):
+        got = sess.read.parquet(table).select("batch_id").distinct().collect()
+        assert sorted(r[0] for r in got) == [0, 1]
+
+
+def test_stop_on_error_stops_every_query_and_keeps_first_error():
+    """The t16 concurrent-drain cleanup: when the block fails, every
+    active query is stopped even if an earlier stop raises, and the
+    block's own error is the one that propagates."""
+    from fantasy_premier_league_spark.streaming.queries import stop_on_error
+
+    class StubQuery:
+        isActive = True
+
+        def __init__(self) -> None:
+            self.stop_calls = 0
+
+        def stop(self) -> None:
+            self.stop_calls += 1
+            raise RuntimeError("stop failed")
+
+    queries = [StubQuery(), StubQuery()]
+    with pytest.raises(ValueError, match="drain failed") as info:
+        with stop_on_error(queries):
+            raise ValueError("drain failed")
+    assert [q.stop_calls for q in queries] == [1, 1]
+    assert len(info.value.__notes__) == 2
+
+
 def test_state_sink_restart_idempotent(spark, tmp_path):
     """T8 under a REAL restart (VERDICT r8 #4, carried from r7 #8):
     crash the state query mid-ladder AFTER the K3/K4 sink wrote batch 2
@@ -353,10 +429,10 @@ def test_dedup_history_restart_idempotent(spark, tmp_path):
     clean uninterrupted run."""
     from pyspark.errors import StreamingQueryException
 
+    from fantasy_premier_league_spark.functions.tuning import scoped_conf
     from fantasy_premier_league_spark.streaming.queries import (
         make_dedup_history_sink,
         stage_crawl_stream,
-        scoped_conf,
     )
 
     SF = "/root/testdata/sf0.001"
