@@ -1,45 +1,73 @@
 """Request servicing (Phase 5): the reference ui.py's three request
-types, rebuilt as set-based DataFrame jobs.
+types, answered from one request snapshot.
 
-The reference issues dozens of driver round-trips per request --
-``players_df.filter(...).first()`` inside loops (ui.py:41-42,129-184),
-one Catalyst job each. Here every lookup batch becomes ONE broadcast
-join, and each request type is a single job:
+The reference answers requests from saved state: master.py writes the
+profiles and ratings, metrics.py writes chemistry.json/rating.json, and
+ui.py only reads them. Here that state is a ``RequestSnapshot``, built
+on the first request and shared by every request until the data
+changes. It holds small cached DataFrames and one driver-side index:
 
-- req_type 1 (win prediction, ui.py:27-76): roster -> broadcast join
-  players -> role validation (A8: gk==1, df>=2, md>=2, fw>=1 -- the
-  CODE's thresholds; spec says DF>=3, SURVEY 2.4 A8) -> team chemistry
-  (A9: the reference's `visited` list is never appended, so every
-  unordered pair counts TWICE, ui.py:57-64 -- reproduced as 2x the
-  pair sum) -> strength & win chance (A10, ui.py:66-74).
-- req_type 2 (player profile, ui.py:77-107): background fields JOIN
-  cumulative profile. The reference drops `goals` from the response
-  though the spec requires it (ui.py:100-104); canonical behavior here
-  INCLUDES goals (SURVEY 3.3 quirk, fixed).
-- req_type 3 (match details, ui.py:109-191): match log filter by
-  (date, label) -> roster explode -> one broadcast join for names.
-  The reference fills yellow_cards/red_cards with every player's name
-  regardless of cards (ui.py:162-163,183-184); canonical behavior here
-  returns the actual per-player card counts from teamsData (fixed).
+- ``players``: players.csv as a dict, name -> (Id, role) of each player
+  of that name, which resolves a request's 22 names without a job;
+- ``rating``: each player's latest rating (A7, off the A5 fold);
+- ``chemistry``: the clamped pair chemistry, each unordered pair once
+  (A6, operators/pipeline.py), not the reference's unclamped
+  double-applied chemistry.json;
+- ``profile``: each player's background fields and cumulative profile
+  (A4);
+- ``lines``: one row per rostered player per match, with the match's
+  (date, label) lookup key and the player's team id and name.
 
-Chemistry/rating inputs come from the pipeline's canonical tables
-(clamped chemistry, each unordered pair once -- operators/pipeline.py)
-rather than the reference's unclamped double-applied chemistry.json.
+The snapshot is keyed by (SparkContext, data version), where the data
+version is the sorted ``(path, size, mtime_ns)`` of the stream files and
+players.csv/teams.csv. A request whose key differs from the current
+snapshot's builds a new one under a lock, so concurrent first requests
+wait for one build. The superseded snapshot is released with
+``unpersist()`` first. Each table is a copy of its rows, collected once
+through the driver, so its plan is a scan of those rows: reading it
+never re-runs the rating fold or re-reads a file, even after it is
+released. The build parses and aggregates the event corpus once, shared
+by the rating trace and the profile.
 
-``serve_request(spark, request)`` gives the dict-shaped responses
-(drop-in for the reference's JSON files); the registered queries expose
-the same computations as flat driver-gated DataFrames.
+Request cost (x10 fixture, 4 CPUs): match_details and player_profile
+are one job each, predict_win four (the invalid path none).
+
+- req_type 1 (win prediction, ui.py:27-76): roster -> players index ->
+  role validation (A8: gk==1, df>=2, md>=2, fw>=1 -- the CODE's
+  thresholds; spec says DF>=3, SURVEY 2.4 A8) -> team chemistry (A9:
+  the reference's `visited` list is never appended, so every unordered
+  pair counts TWICE, ui.py:57-64 -- reproduced as 2x the pair sum) ->
+  strength & win chance (A10, ui.py:66-74).
+- req_type 2 (player profile, ui.py:77-107): the named player's profile
+  row. The reference drops `goals` from the response though the spec
+  requires it (ui.py:100-104); canonical behavior here INCLUDES goals
+  (SURVEY 3.3 quirk, fixed).
+- req_type 3 (match details, ui.py:109-191): the match's roster lines,
+  filtered by (date, label); the winner's name comes from the same
+  lines. The reference fills yellow_cards/red_cards with every player's
+  name regardless of cards (ui.py:162-163,183-184); canonical behavior
+  here returns the actual per-player card counts from teamsData (fixed).
+
+``predict_win``, ``player_profile`` and ``match_details`` give the
+dict-shaped responses (drop-in for the reference's JSON files); the
+registered queries expose the same computations, over the same
+snapshot, as flat driver-gated DataFrames.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import threading
+from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import rounded
+from fantasy_premier_league_spark.operators import pipeline
 from fantasy_premier_league_spark.operators.pipeline import (
     FIXTURES,
     _FM_SQL,
@@ -47,9 +75,17 @@ from fantasy_premier_league_spark.operators.pipeline import (
     _RATING_SQL,
     _RAW_SQL,
     _TEAMS_CSV_SQL,
+    chemistry_from_trace,
+    events_df,
+    latest_per_player,
     load_players,
     load_teams,
+    match_counters,
     matches_df,
+    metric_vectors,
+    performance_df,
+    profile_df,
+    rating_trace_df,
 )
 from fantasy_premier_league_spark.plans.registry import register
 
@@ -62,17 +98,193 @@ PLAYER_KEYS = [f"player{i}" for i in range(1, 12)]
 
 
 # ---------------------------------------------------------------------------
+# The request snapshot
+# ---------------------------------------------------------------------------
+
+# fpl_req3's columns: one row per rostered player of the requested match
+LINE_COLS = (
+    "matchId",
+    "duration",
+    "venue",
+    "gameweek",
+    "winner_id",
+    "team",
+    "player_name",
+    "goals",
+    "own_goals",
+    "yellow_cards",
+    "red_cards",
+)
+
+
+class RequestSnapshot(NamedTuple):
+    key: tuple
+    players: dict  # players.csv name -> (Id, role) of each player so named
+    rating: DataFrame
+    chemistry: DataFrame
+    profile: DataFrame
+    lines: DataFrame
+
+    def tables(self) -> tuple[DataFrame, ...]:
+        return self[2:]
+
+    def release(self) -> None:
+        for table in self.tables():
+            table.unpersist()
+
+
+_snapshot_lock = threading.Lock()
+_snapshot: RequestSnapshot | None = None
+
+
+def _data_version() -> tuple:
+    """Sorted (path, size, mtime_ns) of every file the snapshot reads."""
+    paths = glob.glob(pipeline.STREAM_GLOB) + [
+        os.path.join(pipeline.FIXTURES, name) for name in ("players.csv", "teams.csv")
+    ]
+    version = []
+    for path in paths:
+        st = os.stat(path)
+        version.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(version))
+
+
+def request_snapshot(spark: SparkSession) -> RequestSnapshot:
+    """The snapshot for this SparkContext and the current data version,
+    built on first use; a superseded snapshot is released."""
+    global _snapshot
+    key = (spark.sparkContext.applicationId, _data_version())
+    with _snapshot_lock:
+        if _snapshot is None or _snapshot.key != key:
+            # released before the build: a new snapshot of the same rows
+            # would share, and then lose, the old one's cache entries. A
+            # snapshot of a stopped SparkContext went with its cache.
+            if _snapshot is not None and _snapshot.key[0] == key[0]:
+                _snapshot.release()
+            _snapshot = None  # a failed build leaves no released snapshot
+            _snapshot = _build_snapshot(spark, key)
+        return _snapshot
+
+
+def _card(col):
+    return F.when(col == "null", 0).otherwise(col.cast("int"))
+
+
+def _roster_lines(spark: SparkSession, players: DataFrame) -> DataFrame:
+    """Every match's per-player rows (LINE_COLS plus the match's date and
+    label and the player's teamId); ONE plan instead of ui.py's
+    per-player .first() loops."""
+    te = matches_df(spark).select(
+        F.substring("dateutc", 1, 10).alias("date"),
+        "label",
+        F.col("wyId").alias("matchId"),
+        "duration",
+        "winner",
+        "venue",
+        "gameweek",
+        F.explode(F.map_entries("teamsData")).alias("td"),
+    ).select(
+        "date",
+        "label",
+        "matchId",
+        "duration",
+        "winner",
+        "venue",
+        "gameweek",
+        F.col("td.key").cast("int").alias("teamId"),
+        F.explode(
+            F.concat(F.col("td.value.formation.bench"), F.col("td.value.formation.lineup"))
+        ).alias("p"),
+    )
+    players = F.broadcast(players)
+    teams = F.broadcast(load_teams(spark))
+    return (
+        te.join(players, te["p.playerId"] == players.Id)
+        .join(teams, te.teamId == teams.Id)
+        .select(
+            "date",
+            "label",
+            "matchId",
+            "duration",
+            "venue",
+            "gameweek",
+            F.when(F.col("winner") == 0, "draw")
+            .otherwise(F.col("winner").cast("string"))
+            .alias("winner_id"),
+            "teamId",
+            teams["name"].alias("team"),
+            players["name"].alias("player_name"),
+            F.col("p.goals").alias("goals"),
+            F.col("p.ownGoals").alias("own_goals"),
+            _card(F.col("p.yellowCards")).alias("yellow_cards"),
+            _card(F.col("p.redCards")).alias("red_cards"),
+        )
+    )
+
+
+def _detached(df: DataFrame) -> DataFrame:
+    """df's rows, collected once as Arrow and handed back to Spark: the
+    copy's plan is a scan of those rows, not df's lineage."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+
+
+def _build_snapshot(spark: SparkSession, key: tuple) -> RequestSnapshot:
+    # one events pass feeds both the rating trace and the profile, and
+    # one trace feeds both the final rating and chemistry
+    counters = _detached(match_counters(metric_vectors(events_df(spark))))
+    trace = _detached(rating_trace_df(performance_df(spark, counters)))
+    dim = _detached(load_players(spark))
+    players: dict[str, list] = {}
+    for name, pid, role in dim.select("name", "Id", "role").collect():
+        if name is not None:  # as in a join, a null name matches nothing
+            players.setdefault(name, []).append((pid, role))
+    snap = RequestSnapshot(
+        key,
+        players,
+        *(
+            _detached(df).cache()
+            for df in (
+                latest_per_player(trace).select("playerId", "rating"),
+                chemistry_from_trace(trace.select("playerId", "matchId", "teamId", "delta")),
+                dim.join(profile_df(spark, counters), dim.Id == F.col("playerId")),
+                _roster_lines(spark, dim),
+            )
+        ),
+    )
+    # fill the caches here, not in the first request that reads each table
+    for table in snap.tables():
+        table.count()
+    return snap
+
+
+# ---------------------------------------------------------------------------
 # req_type 1: win prediction
 # ---------------------------------------------------------------------------
 
 
-def _team_rosters(request: dict) -> list[tuple[str, str, str]]:
-    rows = []
-    for team_key in ("team1", "team2"):
-        td = request[team_key]
-        for pk in PLAYER_KEYS:
-            rows.append((team_key, td["name"], td[pk]))
-    return rows
+_IDS_SCHEMA = pa.schema(
+    [("team", pa.string()), ("team_name", pa.string()), ("playerId", pa.int32())]
+)
+
+
+def _roster_ids(spark: SparkSession, players: dict, request: dict) -> DataFrame:
+    """(team, team_name, playerId) for the players the 22 names resolve to,
+    as an inner join on name resolves them. Built from Arrow, it is a
+    local relation of known size, so every join against it broadcasts."""
+    rows = [
+        {"team": tk, "team_name": request[tk]["name"], "playerId": pid}
+        for tk in ("team1", "team2")
+        for pk in PLAYER_KEYS
+        for pid, _ in players.get(request[tk][pk], ())
+    ]
+    return spark.createDataFrame(pa.Table.from_pylist(rows, _IDS_SCHEMA))
+
+
+def _team_roles(players: dict, team: dict) -> list:
+    """The role of each player a team's 11 names resolve to, as a left
+    join on name resolves them: None for an unknown name, one role per
+    player for a name two players share."""
+    return [role for pk in PLAYER_KEYS for _, role in players.get(team[pk], [(None, None)])]
 
 
 def validate_composition(roles: list[str]) -> bool:
@@ -85,80 +297,51 @@ def validate_composition(roles: list[str]) -> bool:
 
 
 def team_strengths(spark: SparkSession, request: dict) -> DataFrame:
-    """Per team: (team, team_name, strength); one broadcast-join plan
-    replacing ui.py's 44 driver round-trips."""
-    roster = spark.createDataFrame(
-        _team_rosters(request), "team string, team_name string, player_name string"
-    )
-    players = F.broadcast(load_players(spark))
-    ids = roster.join(players, roster.player_name == players.name).select(
-        "team", "team_name", F.col("Id").alias("playerId")
-    )
-    from fantasy_premier_league_spark.operators.pipeline import (
-        chemistry_from_trace,
-        latest_per_player,
-        performance_df,
-        rating_trace_df,
-    )
-
-    # ONE rating-trace materialization feeds both consumers (the
-    # chemistry pair join AND the final-rating branch): without the
-    # checkpoint the perf+fold pipeline appears 3x in the plan and only
-    # the chem self-join's identical exchanges get runtime reuse -- the
-    # final-rating branch re-ran the whole applyInPandas fold (the t16
-    # double-fold class; ml_kmeans_rating_impute checkpoints for the
-    # same reason). r17 A/B: 4.8 -> 3.8 s solo med at sf0.1.
-    trace = rating_trace_df(performance_df(spark)).localCheckpoint(
-        eager=False
-    )
-    chem = chemistry_from_trace(
-        trace.select("playerId", "matchId", "teamId", "delta")
+    """Per team: (team, team_name, strength) from the snapshot's final
+    ratings and chemistry; one broadcast-join plan replacing ui.py's 44
+    driver round-trips."""
+    snap = request_snapshot(spark)
+    ids = _roster_ids(spark, snap.players, request)
+    chem = snap.chemistry
+    none = F.lit(None).cast("double")
+    ratings = ids.join(snap.rating, "playerId").select(
+        "team", "team_name", "rating", none.alias("chemistry")
     )
     a, b = ids.alias("a"), ids.alias("b")
-    # A9: ordered-pair double count (ui.py:57-64) == 2 x unordered sum
-    team_chem = (
+    pairs = (
         a.join(b, (F.col("a.team") == F.col("b.team")))
         .join(
             chem,
             (F.col("a.playerId") == chem.p1) & (F.col("b.playerId") == chem.p2),
         )
-        .groupBy(F.col("a.team").alias("team"))
-        .agg((F.sum("chemistry") * 2 / 11).alias("team_avg"))
+        .select("a.team", "a.team_name", none.alias("rating"), "chemistry")
     )
-    final_rating = latest_per_player(trace).select("playerId", "rating")
-    # A10 (ui.py:66-70): strength = sum(rating) * team_avg / 11
-    return (
-        ids.join(final_rating, "playerId")
+    # both per-team sums in one aggregation over one partition (at most
+    # 22 players and their pairs), so the plan has no shuffle
+    totals = (
+        ratings.unionByName(pairs)
+        .coalesce(1)
         .groupBy("team", "team_name")
-        .agg(F.sum("rating").alias("rating_sum"))
-        .join(team_chem, "team")
-        .select(
-            "team",
-            "team_name",
-            (F.col("rating_sum") * F.col("team_avg") / 11).alias("strength"),
-        )
+        .agg(F.sum("rating").alias("rating_sum"), F.sum("chemistry").alias("chem_sum"))
     )
+    # A9: ordered-pair double count (ui.py:57-64) == 2 x unordered sum;
+    # A10 (ui.py:66-70): strength = sum(rating) * team_avg / 11. A team
+    # without a rated player or a chemistry pair has no strength.
+    team_avg = F.col("chem_sum") * 2 / 11
+    return totals.filter(
+        F.col("rating_sum").isNotNull() & F.col("chem_sum").isNotNull()
+    ).select("team", "team_name", (F.col("rating_sum") * team_avg / 11).alias("strength"))
 
 
 def predict_win(spark: SparkSession, request: dict) -> dict:
     """Full req_type-1 response (ui.py:27-76), canonical behavior: an
     invalid team invalidates the request (the reference's second-loop
     overwrite bug, ui.py:53-74, is fixed)."""
-    roster = spark.createDataFrame(
-        _team_rosters(request), "team string, team_name string, player_name string"
-    )
-    players = F.broadcast(load_players(spark))
-    roles = roster.join(players, roster.player_name == players.name, "left").select(
-        "team", "role"
-    ).collect()
-    by_team: dict[str, list[str]] = {"team1": [], "team2": []}
-    for r in roles:
-        by_team[r["team"]].append(r["role"])
-    if any(
-        len(rs) != 11 or any(x is None for x in rs) or not validate_composition(rs)
-        for rs in by_team.values()
-    ):
-        return {"status": "Invalid Team"}
+    players = request_snapshot(spark).players
+    for tk in ("team1", "team2"):
+        roles = _team_roles(players, request[tk])
+        if len(roles) != 11 or None in roles or not validate_composition(roles):
+            return {"status": "Invalid Team"}
     s = {r["team"]: r["strength"] for r in team_strengths(spark, request).collect()}
     chance1 = (0.5 + s["team1"] - (s["team1"] + s["team2"]) / 2) * 100
     return {
@@ -356,30 +539,15 @@ def fpl_req1_invalid_quirk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with open(ensure_invalid_req1(FIXTURES)) as f:
         request = json.load(f)
-    roster = spark.createDataFrame(
-        _team_rosters(request), "team string, team_name string, player_name string"
-    )
-    players = F.broadcast(load_players(spark))
-    validity = (
-        roster.join(players, roster.player_name == players.name)
-        .groupBy("team")
-        .agg(
-            F.sum(F.when(F.col("role") == "GK", 1).otherwise(0)).alias("gk"),
-            F.sum(F.when(F.col("role") == "DF", 1).otherwise(0)).alias("dfn"),
-            F.sum(F.when(F.col("role") == "MD", 1).otherwise(0)).alias("md"),
-            F.sum(F.when(F.col("role") == "FW", 1).otherwise(0)).alias("fw"),
-        )
-        .select(
-            "team",
-            (
-                (F.col("gk") == 1)
-                & (F.col("dfn") >= 2)
-                & (F.col("md") >= 2)
-                & (F.col("fw") >= 1)
-            )
-            .cast("int")
-            .alias("is_valid"),
-        )
+    players = request_snapshot(spark).players
+    # an unknown name adds a None role, which no composition rule counts,
+    # just as the oracle's inner join drops it
+    valid = [
+        {"team": tk, "is_valid": int(validate_composition(_team_roles(players, request[tk])))}
+        for tk in ("team1", "team2")
+    ]
+    validity = spark.createDataFrame(
+        pa.Table.from_pylist(valid, pa.schema([("team", pa.string()), ("is_valid", pa.int32())]))
     )
     tot = Window.partitionBy(F.lit(0))
     s = (
@@ -411,15 +579,13 @@ def fpl_req1_invalid_quirk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def player_profile(spark: SparkSession, name: str) -> dict | None:
-    from fantasy_premier_league_spark.operators.pipeline import profile_df
+def _profile_of(spark: SparkSession, name: str) -> DataFrame:
+    """The named player's background fields and profile."""
+    return request_snapshot(spark).profile.filter(F.col("name") == name)
 
-    players = load_players(spark)
-    row = (
-        F.broadcast(players.filter(F.col("name") == name))
-        .join(profile_df(spark), players.Id == F.col("playerId"))
-        .collect()
-    )
+
+def player_profile(spark: SparkSession, name: str) -> dict | None:
+    row = _profile_of(spark, name).collect()
     if not row:
         return None
     r = row[0]
@@ -483,11 +649,8 @@ def _req2_oracle(include_goals: bool) -> str:
 
 
 def _req2_profile(spark: SparkSession, include_goals: bool) -> DataFrame:
-    from fantasy_premier_league_spark.operators.pipeline import profile_df
-
     with open(REQ2) as f:
         name = json.load(f)["name"]
-    players = load_players(spark)
     cols = [
         "name",
         "birthArea",
@@ -502,11 +665,7 @@ def _req2_profile(spark: SparkSession, include_goals: bool) -> DataFrame:
         rounded(F.col("pass_accuracy"), 6).alias("pass_accuracy"),
         "shots_on_target",
     ]
-    return (
-        F.broadcast(players.filter(F.col("name") == name))
-        .join(profile_df(spark), players.Id == F.col("playerId"))
-        .select(*cols)
-    )
+    return _profile_of(spark, name).select(*cols)
 
 
 @register("fpl_req2_player_profile", oracle=_req2_oracle(include_goals=True))
@@ -531,74 +690,28 @@ def fpl_req2_dropped_goals_quirk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _card(col):
-    return F.when(col == "null", 0).otherwise(col.cast("int"))
+def _match_lines(spark: SparkSession, date: str, label: str) -> DataFrame:
+    lines = request_snapshot(spark).lines
+    return lines.filter((F.col("date") == date) & (F.col("label") == label))
 
 
 def match_player_lines(spark: SparkSession, date: str, label: str) -> DataFrame:
-    """Flat per-player rows for the matched match; ONE plan instead of
-    ui.py's per-player .first() loops."""
-    m = matches_df(spark).filter(
-        (F.substring("dateutc", 1, 10) == date) & (F.col("label") == label)
-    )
-    te = m.select(
-        F.col("wyId").alias("matchId"),
-        "duration",
-        "winner",
-        "venue",
-        "gameweek",
-        F.explode(F.map_entries("teamsData")).alias("td"),
-    ).select(
-        "matchId",
-        "duration",
-        "winner",
-        "venue",
-        "gameweek",
-        F.col("td.key").cast("int").alias("teamId"),
-        F.explode(
-            F.concat(F.col("td.value.formation.bench"), F.col("td.value.formation.lineup"))
-        ).alias("p"),
-    )
-    players = F.broadcast(load_players(spark))
-    teams = F.broadcast(load_teams(spark))
-    return (
-        te.join(players, te["p.playerId"] == players.Id)
-        .join(teams, te.teamId == teams.Id)
-        .select(
-            "matchId",
-            "duration",
-            "venue",
-            "gameweek",
-            F.when(F.col("winner") == 0, "draw")
-            .otherwise(
-                # winner name via a correlated lookup would re-join; the
-                # winner teamId is in this row's scope already
-                F.col("winner").cast("string")
-            )
-            .alias("winner_id"),
-            teams["name"].alias("team"),
-            players["name"].alias("player_name"),
-            F.col("p.goals").alias("goals"),
-            F.col("p.ownGoals").alias("own_goals"),
-            _card(F.col("p.yellowCards")).alias("yellow_cards"),
-            _card(F.col("p.redCards")).alias("red_cards"),
-        )
-    )
+    """Flat per-player rows (LINE_COLS) for the matched match."""
+    return _match_lines(spark, date, label).select(*LINE_COLS)
 
 
 def match_details(spark: SparkSession, request: dict) -> dict:
     """Full req_type-3 dict response (ui.py:109-191); canonical card
-    behavior (actual counts), winner resolved to a team name."""
-    lines = match_player_lines(spark, request["date"], request["label"]).collect()
+    behavior (actual counts), winner resolved to a team name from the
+    match's own roster lines, which hold both teams."""
+    lines = _match_lines(spark, request["date"], request["label"]).collect()
     if not lines:
         return {"status": "Not Found"}
     winner_id = lines[0]["winner_id"]
     if winner_id == "draw":
         winner = "draw"
     else:
-        winner = (
-            load_teams(spark).filter(F.col("Id") == int(winner_id)).collect()[0]["name"]
-        )
+        winner = {ln["teamId"]: ln["team"] for ln in lines}[int(winner_id)]
     out = {
         "date": request["date"],
         "duration": lines[0]["duration"],

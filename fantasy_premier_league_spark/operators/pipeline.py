@@ -723,8 +723,14 @@ def fpl_a7(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def profile_df(spark: SparkSession) -> DataFrame:
-    fm = final_metrics_df(match_counters(metric_vectors(events_df(spark))))
+def profile_df(spark: SparkSession, counters: DataFrame | None = None) -> DataFrame:
+    """Per player: summed counters plus the running-mean pass accuracy.
+    ``counters`` has the meaning it has in ``performance_df``: a caller
+    that also builds the rating trace passes one materialized counters
+    frame, so the event corpus is parsed and aggregated once."""
+    if counters is None:
+        counters = match_counters(metric_vectors(events_df(spark)))
+    fm = final_metrics_df(counters)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("matchId").reset_index(drop=True)
@@ -819,9 +825,10 @@ def chemistry_df(spark: SparkSession) -> DataFrame:
 def chemistry_from_trace(trace: DataFrame) -> DataFrame:
     """A6 chemistry off an already-built rating trace (playerId,
     matchId, teamId, delta). Split from chemistry_df so callers that
-    ALSO consume the trace directly (team_strengths: chem + the
-    final-rating branch) can share ONE materialized trace instead of
-    re-running the perf+fold pipeline per branch."""
+    ALSO consume the trace directly (the request snapshot in
+    operators/api.py: chemistry + the final ratings) can share ONE
+    materialized trace instead of re-running the perf+fold pipeline per
+    branch."""
     a, b = trace.alias("a"), trace.alias("b")
     pairs = a.join(
         b,

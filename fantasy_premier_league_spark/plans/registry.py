@@ -59,6 +59,13 @@ CHANGED_THIS_ROUND: list[str] = [
     # physical plan moves; the 28 r17 entries were consumed by the r17
     # driver sample -- all 28 green in CORRECTNESS_r17.json -- and
     # pruned here at round open per the standing rule.)
+    # The request queries now read the request snapshot (operators/api.py).
+    "fpl_req1_win_prediction",
+    "fpl_req1_invalid_team_quirk",
+    "fpl_req2_player_profile",
+    "fpl_req2_dropped_goals_quirk",
+    "fpl_req3_match_details",
+    "fpl_req3_card_list_quirk",
 ]
 # (The 28 r17 entries -- triangle counts, blocked pairs, req1 shared
 # trace, perceptron fused readouts, t18 staging, CC cached edges,

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -117,3 +118,92 @@ def test_req3_card_list_quirk_twin(spark):
     # fixtures carry no cards: the quirk lists players anyway, and the
     # carried actual count exhibits the ignored discrepancy
     assert all(r["actual_cards"] == 0 for r in quirk)
+
+
+# ---------------------------------------------------------------------------
+# The request snapshot: one per data version, released when superseded,
+# built once under concurrent first requests
+# ---------------------------------------------------------------------------
+
+
+def _stream_copy(tmp_path, monkeypatch):
+    """Point the pipeline's stream glob at a copy of the fixture stream,
+    which is a data version no snapshot has been built for."""
+    from fantasy_premier_league_spark.operators import pipeline
+
+    stream = tmp_path / "stream"
+    shutil.copytree(os.path.dirname(pipeline.STREAM_GLOB), stream)
+    monkeypatch.setattr(pipeline, "STREAM_GLOB", str(stream / "*.jsonl"))
+    return stream
+
+
+def test_snapshot_follows_the_data_version(spark, tmp_path, monkeypatch):
+    from fantasy_premier_league_spark.operators import api
+
+    stream = _stream_copy(tmp_path, monkeypatch)
+    req, name = _load(REQ1), _load(REQ2)["name"]
+
+    def answers():
+        return predict_win(spark, req), player_profile(spark, name)
+
+    def pinned():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    n0 = pinned()
+    before = answers()
+    n1 = pinned()
+    # the last match team1 (Arsenal, teamId 10) played: removing it moves
+    # team1's ratings and the req2 player's profile
+    arsenal = [p for p in sorted(stream.glob("*.jsonl"))
+               if '"10":{' in p.read_text().split("\n", 1)[0]]
+    arsenal[-1].unlink()
+    after = answers()
+    assert after != before
+    # the superseded snapshot was released: one snapshot's worth pinned
+    assert pinned() == n1
+    assert n1 - n0 <= len(api._snapshot.tables())
+
+    api._snapshot.release()
+    monkeypatch.setattr(api, "_snapshot", None)
+    fresh = answers()
+    api._snapshot.release()
+    assert after == fresh
+
+
+def test_concurrent_cold_requests_share_one_snapshot(spark, tmp_path, monkeypatch):
+    from fantasy_premier_league_spark.operators import api
+    from tests.parallel import fan_out, unwrap
+
+    _stream_copy(tmp_path, monkeypatch)
+    req1, req3 = _load(REQ1), _load(REQ3)
+    name = _load(REQ2)["name"]
+    kinds = {
+        "predict_win": lambda: predict_win(spark, req1),
+        "player_profile": lambda: player_profile(spark, name),
+        "match_details": lambda: match_details(spark, req3),
+        "fpl_req1": lambda: api.fpl_req1(spark, "").collect(),
+        "fpl_req2": lambda: api.fpl_req2(spark, "").collect(),
+        "fpl_req3": lambda: api.fpl_req3(spark, "").collect(),
+    }
+    builds = []
+    build = api._build_snapshot
+
+    def counted(*args):
+        builds.append(args)
+        return build(*args)
+
+    monkeypatch.setattr(api, "_build_snapshot", counted)
+
+    def case(kind):
+        answer = kinds[kind]()
+        return answer, api.request_snapshot(spark)
+
+    outcomes = fan_out(
+        [((kind, i), lambda kind=kind: case(kind)) for i in range(2) for kind in kinds],
+        max_workers=8,
+    )
+    results = {key: unwrap(out) for key, out in outcomes.items()}
+    assert len(builds) == 1
+    assert len({id(snap) for _, snap in results.values()}) == 1
+    for (kind, _), (answer, _) in results.items():
+        assert answer == kinds[kind](), kind
