@@ -70,6 +70,7 @@ from fantasy_premier_league_spark.functions import rounded
 from fantasy_premier_league_spark.operators import pipeline
 from fantasy_premier_league_spark.operators.pipeline import (
     FIXTURES,
+    _CHEM_SQL,
     _FM_SQL,
     _PLAYERS_CSV_SQL,
     _RATING_SQL,
@@ -77,6 +78,7 @@ from fantasy_premier_league_spark.operators.pipeline import (
     _TEAMS_CSV_SQL,
     chemistry_from_trace,
     events_df,
+    final_rating_sql,
     latest_per_player,
     load_players,
     load_teams,
@@ -85,6 +87,7 @@ from fantasy_premier_league_spark.operators.pipeline import (
     metric_vectors,
     performance_df,
     profile_df,
+    profile_sql,
     rating_trace_df,
 )
 from fantasy_premier_league_spark.plans.registry import register
@@ -361,6 +364,7 @@ _REQ1_COLS = (
     + "}"
 )
 
+
 def _req1_roster_sql(path: str) -> str:
     return f"""
   SELECT team, team_name, unnest(names) AS player_name FROM (
@@ -375,30 +379,11 @@ def _req1_roster_sql(path: str) -> str:
 """
 
 
-_REQ1_ROSTER_SQL = _req1_roster_sql(REQ1)
-
-_CHEM_SQL = f"""
-    WITH trace AS ({_RATING_SQL}),
-    cpairs AS (
-      SELECT a.playerId AS p1, b.playerId AS p2,
-             abs((a.delta + b.delta) / 2) AS mag,
-             ((a.delta > 0 AND b.delta > 0) OR (a.delta < 0 AND b.delta < 0)) AS same_sign,
-             (a.teamId = b.teamId) AS same_team
-      FROM trace a JOIN trace b
-        ON a.matchId = b.matchId AND a.playerId < b.playerId
-    )
-    SELECT p1, p2,
-           greatest(0.0, least(1.0,
-             0.5 + sum(CASE WHEN same_team = same_sign THEN mag ELSE -mag END)))
-             AS chemistry
-    FROM cpairs GROUP BY p1, p2
-"""
-
-
-@register(
-    "fpl_req1_win_prediction",
-    oracle=f"""
-    WITH roster AS ({_REQ1_ROSTER_SQL}),
+def _req1_ctes(path: str) -> str:
+    """WITH-body shared by the req1 oracles: the request's roster, the
+    players its names resolve to, and each team's strength (A9/A10)."""
+    return f"""
+    WITH roster AS ({_req1_roster_sql(path)}),
     ids AS (
       SELECT r.team, r.team_name, p.Id AS playerId
       FROM roster r JOIN {_PLAYERS_CSV_SQL} p ON p.name = r.player_name
@@ -410,19 +395,18 @@ _CHEM_SQL = f"""
       JOIN chem c ON c.p1 = a.playerId AND c.p2 = b.playerId
       GROUP BY a.team
     ),
-    final_rating AS (
-      SELECT playerId, rating FROM (
-        SELECT playerId, rating,
-               row_number() OVER (PARTITION BY playerId ORDER BY matchId DESC) AS rn
-        FROM ({_RATING_SQL})
-      ) WHERE rn = 1
-    ),
+    final_rating AS ({final_rating_sql(f"({_RATING_SQL})")}),
     strength AS (
       SELECT i.team, i.team_name, sum(fr.rating) * any_value(tc.team_avg) / 11 AS s
       FROM ids i JOIN final_rating fr ON fr.playerId = i.playerId
       JOIN team_chem tc ON tc.team = i.team
       GROUP BY i.team, i.team_name
-    )
+    )"""
+
+
+@register(
+    "fpl_req1_win_prediction",
+    oracle=f"""{_req1_ctes(REQ1)}
     SELECT team, team_name, round(s, 6) AS strength,
            round(CASE WHEN team = 'team1'
                  THEN (0.5 + s - (SELECT sum(s) FROM strength) / 2) * 100
@@ -473,12 +457,7 @@ from fantasy_premier_league_spark.sources.fpl_fixtures import (  # noqa: E402
 # second write call (ADVICE r7); the operator body re-ensures lazily.
 REQ1_INVALID = os.path.join(FIXTURES, "requests", "req1_invalid_team1.json")
 
-_REQ1_INVALID_ORACLE = f"""
-    WITH roster AS ({_req1_roster_sql(REQ1_INVALID)}),
-    ids AS (
-      SELECT r.team, r.team_name, p.Id AS playerId
-      FROM roster r JOIN {_PLAYERS_CSV_SQL} p ON p.name = r.player_name
-    ),
+_REQ1_INVALID_ORACLE = f"""{_req1_ctes(REQ1_INVALID)},
     validity AS (
       SELECT r.team,
              CASE WHEN sum(CASE WHEN p.role = 'GK' THEN 1 ELSE 0 END) = 1
@@ -488,26 +467,6 @@ _REQ1_INVALID_ORACLE = f"""
                   THEN 1 ELSE 0 END AS is_valid
       FROM roster r JOIN {_PLAYERS_CSV_SQL} p ON p.name = r.player_name
       GROUP BY r.team
-    ),
-    chem AS ({_CHEM_SQL}),
-    team_chem AS (
-      SELECT a.team, sum(c.chemistry) * 2 / 11 AS team_avg
-      FROM ids a JOIN ids b ON a.team = b.team
-      JOIN chem c ON c.p1 = a.playerId AND c.p2 = b.playerId
-      GROUP BY a.team
-    ),
-    final_rating AS (
-      SELECT playerId, rating FROM (
-        SELECT playerId, rating,
-               row_number() OVER (PARTITION BY playerId ORDER BY matchId DESC) AS rn
-        FROM ({_RATING_SQL})
-      ) WHERE rn = 1
-    ),
-    strength AS (
-      SELECT i.team, i.team_name, sum(fr.rating) * any_value(tc.team_avg) / 11 AS s
-      FROM ids i JOIN final_rating fr ON fr.playerId = i.playerId
-      JOIN team_chem tc ON tc.team = i.team
-      GROUP BY i.team, i.team_name
     ),
     used AS (
       SELECT s.team, s.team_name, v.is_valid,
@@ -608,43 +567,25 @@ def player_profile(spark: SparkSession, name: str) -> dict | None:
 def _req2_oracle(include_goals: bool) -> str:
     goals_col = "s.goals, " if include_goals else ""
     return f"""
-    WITH RECURSIVE req AS (
+    WITH req AS (
       SELECT name FROM read_json('{REQ2}', columns={{"name": "VARCHAR"}})
     ),
     fm AS (
-      SELECT fm.playerId, fm.matchId, fm.pass_accuracy, fm.fouls, fm.goals,
-             fm.own_goals, fm.shots_on_target,
-             row_number() OVER (PARTITION BY fm.playerId ORDER BY fm.matchId) AS seq
+      SELECT fm.*
       FROM ({_FM_SQL}) fm
       JOIN {_PLAYERS_CSV_SQL} p ON p.Id = fm.playerId
       JOIN req ON p.name = req.name
     ),
-    pa AS (
-      SELECT playerId, seq, pass_accuracy AS pa FROM fm WHERE seq = 1
-      UNION ALL
-      SELECT f.playerId, f.seq, (f.pass_accuracy + pa.pa) / 2 AS pa
-      FROM fm f JOIN pa ON f.playerId = pa.playerId AND f.seq = pa.seq + 1
-    )
+    s AS ({profile_sql("fm")})
     SELECT p.name, p.birthArea, p.birthDate, p.foot, p.role,
            -- INTEGER (not the sniffer's BIGINT) so the driver's pandas
            -- fetch path matches Spark's int32 CSV schema byte-for-byte
            -- (r12 strict-preflight normalization, VERDICT r11 #3)
            CAST(p.height AS INTEGER) AS height,
            CAST(p.weight AS INTEGER) AS weight,
-           s.fouls, {goals_col}s.own_goals, round(lp.pa, 6) AS pass_accuracy,
+           s.fouls, {goals_col}s.own_goals, round(s.pass_accuracy, 6) AS pass_accuracy,
            s.shots_on_target
-    FROM (
-      SELECT playerId, CAST(sum(fouls) AS BIGINT) AS fouls,
-             CAST(sum(goals) AS BIGINT) AS goals,
-             CAST(sum(own_goals) AS BIGINT) AS own_goals,
-             CAST(sum(shots_on_target) AS BIGINT) AS shots_on_target
-      FROM fm GROUP BY playerId
-    ) s
-    JOIN (SELECT playerId, pa FROM (
-            SELECT playerId, pa, row_number() OVER (PARTITION BY playerId
-                                                    ORDER BY seq DESC) AS rn
-            FROM pa) WHERE rn = 1) lp ON lp.playerId = s.playerId
-    JOIN {_PLAYERS_CSV_SQL} p ON p.Id = s.playerId
+    FROM s JOIN {_PLAYERS_CSV_SQL} p ON p.Id = s.playerId
     """
 
 
@@ -738,9 +679,9 @@ def match_details(spark: SparkSession, request: dict) -> dict:
     return out
 
 
-@register(
-    "fpl_req3_match_details",
-    oracle=f"""
+# the requested match's LINE_COLS rows, unordered: fpl_req3's oracle and
+# the input of its card-list twin
+_REQ3_LINES_SQL = f"""
     WITH req AS (
       SELECT date, label
       FROM read_json('{REQ3}', columns={{"date": "VARCHAR", "label": "VARCHAR"}})
@@ -769,9 +710,12 @@ def match_details(spark: SparkSession, request: dict) -> dict:
                 ELSE CAST(l.p.redCards AS INTEGER) END AS red_cards
     FROM lines l
     JOIN {_PLAYERS_CSV_SQL} p ON p.Id = l.p.playerId
-    JOIN {_TEAMS_CSV_SQL} t ON t.Id = l.teamId
-    ORDER BY team, player_name
-    """,
+    JOIN {_TEAMS_CSV_SQL} t ON t.Id = l.teamId"""
+
+
+@register(
+    "fpl_req3_match_details",
+    oracle=f"{_REQ3_LINES_SQL}\n    ORDER BY team, player_name",
 )
 def fpl_req3(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(REQ3) as f:
@@ -784,33 +728,11 @@ def fpl_req3(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fpl_req3_card_list_quirk",
     oracle=f"""
-    WITH req AS (
-      SELECT date, label
-      FROM read_json('{REQ3}', columns={{"date": "VARCHAR", "label": "VARCHAR"}})
-    ),
-    m AS (
-      SELECT wyId, teamsData
-      FROM {_RAW_SQL} rj, req
-      WHERE rj.wyId IS NOT NULL AND substr(rj.dateutc, 1, 10) = req.date
-        AND rj.label = req.label
-    ),
-    lines AS (
-      SELECT wyId AS matchId, CAST(e.key AS INTEGER) AS teamId,
-             unnest(list_concat(e.value.formation.bench,
-                                e.value.formation.lineup)) AS p
-      FROM (SELECT wyId, unnest(map_entries(teamsData)) AS e FROM m)
-    )
-    SELECT l.matchId, colors.card_color, p.name AS player_name, t.name AS team,
-           CASE WHEN colors.card_color = 'yellow'
-                THEN CASE WHEN l.p.yellowCards = 'null' THEN 0
-                          ELSE CAST(l.p.yellowCards AS INTEGER) END
-                ELSE CASE WHEN l.p.redCards = 'null' THEN 0
-                          ELSE CAST(l.p.redCards AS INTEGER) END
-           END AS actual_cards
-    FROM lines l
+    SELECT matchId, card_color, player_name, team,
+           CASE WHEN card_color = 'yellow' THEN yellow_cards ELSE red_cards END
+             AS actual_cards
+    FROM ({_REQ3_LINES_SQL})
     CROSS JOIN (SELECT unnest(['yellow', 'red']) AS card_color) colors
-    JOIN {_PLAYERS_CSV_SQL} p ON p.Id = l.p.playerId
-    JOIN {_TEAMS_CSV_SQL} t ON t.Id = l.teamId
     ORDER BY card_color, team, player_name
     """,
 )

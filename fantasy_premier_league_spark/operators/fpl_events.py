@@ -11,8 +11,7 @@ implementation with the real schemas).
 Scale: every aggregation below keys on (user_id[, day]) -- one shuffle,
 partial aggregation map-side, no Python in the plan. The chemistry
 pair-join is the only super-linear op; its pair space is bounded by
-|users|^2 and is block-partitioned in the production variant
-(operators/chemistry.py).
+|users|^2 and is block-partitioned in fpl_chem_blocked_pairs below.
 """
 
 from __future__ import annotations
@@ -21,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import fixed_units, rounded
+from fantasy_premier_league_spark.operators.pipeline import chemistry_from_trace
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
 
@@ -62,15 +62,6 @@ def _event_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(t == "error", 1).otherwise(0).alias("n_error"),
         F.when(t == "signup", 1).otherwise(0).alias("n_signup"),
     )
-
-
-# (a1_metric_vector -- the events-table A1 stand-in predating the FPL
-# tier -- was retired in r11 per the r10 verdict's registration-budget
-# note: its per-event counter projection is the first stage of every
-# gate built on _event_vectors (a2_keyed_counters and the rest of this
-# module), and §2's A1 is gated directly by fpl_a1_metric_vector on
-# the reference's own data shape, so the standalone registration
-# verified nothing the surviving gates don't.)
 
 
 # ---------------------------------------------------------------------------
@@ -126,31 +117,13 @@ def keyed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _daily_counters(spark, sf_dir).orderBy("user_id", "day")
 
 
-# A3 (derived-metric ratio projection, reference getFinalMetrics
-# master.py:177-212): the events-table twin `a3_final_metrics` was
-# retired in r12 (VERDICT r11 #2, registration budget) -- A3 coverage
-# remains via `fpl_a3_final_metrics` (operators/pipeline.py, the real
-# reference formulas on the fixture tables, driver-green r11) and
-# `a2a3_pricing_summary` (operators/relational.py).
-
-
-# A4 (cumulative player profile, reference getPlayerProfile
-# master.py:242-259): the events-table twin `a4_profile` was retired in
-# r12 (registration budget, same precedent as the a1/a3 twins) -- it was
-# a vanilla lifetime groupBy whose machinery (conditional counts,
-# countDistinct, fixed-point sums) is exercised by a2_keyed_counters and
-# dozens of other gates, while A4's actual reference semantics (the
-# order-dependent (new+old)/2 running pairwise mean) are gated by
-# `fpl_a4_profile` (operators/pipeline.py, driver-green r11) on the
-# reference's own data shape.
-
-
 # ---------------------------------------------------------------------------
 # A6 + J4: pairwise chemistry (reference metrics.py:26-49 -- O(n^2) Python
 # dict loop applying the sign rule per batch). Rebuilt as: per-(user, day)
-# delta via a lag window, then a self equi-join on day with p1 < p2, then
-# one grouped sum and a final clamp to [0,1] (the clamp the spec demands
-# and the reference omits; SURVEY 2.4 A6).
+# delta via a lag window, then the FPL chemistry (chemistry_from_trace,
+# operators/pipeline.py) over that events-table trace: a self equi-join
+# on day with p1 < p2, one grouped sum and a final clamp to [0,1] (the
+# clamp the spec demands and the reference omits; SURVEY 2.4 A6).
 #
 # Sign rule (exact reference semantics, metrics.py:37-44): same team and
 # same strict sign -> +mag; same team, opposite/zero -> -mag; opposing
@@ -207,31 +180,15 @@ def chemistry_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     team = F.broadcast(
         cust.select(F.col("c_custkey").alias("user_id"), F.col("c_nationkey").alias("team"))
     )
-    a = delta.alias("a")
-    b = delta.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.day") == F.col("b.day")) & (F.col("a.user_id") < F.col("b.user_id")))
-        .join(team.alias("ta"), F.col("a.user_id") == F.col("ta.user_id"))
-        .join(team.alias("tb"), F.col("b.user_id") == F.col("tb.user_id"))
-        .select(
-            F.col("a.user_id").alias("p1"),
-            F.col("b.user_id").alias("p2"),
-            F.abs((F.col("a.d") + F.col("b.d")) / 2).alias("mag"),
-            (
-                ((F.col("a.d") > 0) & (F.col("b.d") > 0))
-                | ((F.col("a.d") < 0) & (F.col("b.d") < 0))
-            ).alias("same_sign"),
-            (F.col("ta.team") == F.col("tb.team")).alias("same_team"),
-        )
+    trace = delta.join(team, "user_id").select(
+        F.col("user_id").alias("playerId"),
+        F.col("day").alias("matchId"),
+        F.col("team").alias("teamId"),
+        F.col("d").alias("delta"),
     )
-    chem = F.lit(0.5) + F.sum(
-        F.when(F.col("same_team") == F.col("same_sign"), F.col("mag")).otherwise(-F.col("mag"))
-    )
-    return (
-        pairs.groupBy("p1", "p2")
-        .agg(rounded(F.greatest(F.lit(0.0), F.least(F.lit(1.0), chem)), 6).alias("chemistry"))
-        .orderBy("p1", "p2")
-    )
+    return chemistry_from_trace(trace).select(
+        "p1", "p2", rounded(F.col("chemistry"), 6).alias("chemistry")
+    ).orderBy("p1", "p2")
 
 
 # ---------------------------------------------------------------------------

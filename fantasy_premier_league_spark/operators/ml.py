@@ -538,17 +538,14 @@ def _fpl_lloyds_ctes() -> str:
 
 
 def _impute_oracle() -> str:
-    from fantasy_premier_league_spark.operators.pipeline import _RATING_SQL
+    from fantasy_premier_league_spark.operators.pipeline import (
+        _RATING_SQL,
+        final_rating_sql,
+    )
 
     sql = _fpl_lloyds_ctes()
     sql += f""",
-    rat AS (
-      SELECT playerId, rating FROM (
-        SELECT playerId, rating,
-               row_number() OVER (PARTITION BY playerId ORDER BY matchId DESC) AS rn
-        FROM ({_RATING_SQL})
-      ) WHERE rn = 1
-    ),
+    rat AS ({final_rating_sql(f"({_RATING_SQL})")}),
     dense AS (
       SELECT a.cid, r.rating
       FROM a{_ITERS} a
@@ -708,28 +705,11 @@ def ml_kmeans_rating_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _chem_impute_oracle() -> str:
-    from fantasy_premier_league_spark.operators.pipeline import (
-        INIT_CHEMISTRY,
-        _RATING_SQL,
-    )
+    from fantasy_premier_league_spark.operators.pipeline import _CHEM_SQL
 
     sql = _fpl_lloyds_ctes()
     sql += f""",
-    trace AS ({_RATING_SQL}),
-    chem AS (
-      SELECT p1, p2,
-             greatest(0.0, least(1.0,
-               {INIT_CHEMISTRY} + sum(CASE WHEN same_team = same_sign THEN mag
-                                           ELSE -mag END))) AS chemistry
-      FROM (
-        SELECT a.playerId AS p1, b.playerId AS p2,
-               abs((a.delta + b.delta) / 2) AS mag,
-               ((a.delta > 0 AND b.delta > 0) OR (a.delta < 0 AND b.delta < 0)) AS same_sign,
-               (a.teamId = b.teamId) AS same_team
-        FROM trace a JOIN trace b
-          ON a.matchId = b.matchId AND a.playerId < b.playerId
-      ) GROUP BY p1, p2
-    ),
+    chem AS ({_CHEM_SQL}),
     labs AS (
       SELECT a.user_id, a.cid, f.n_matches
       FROM a{_ITERS} a JOIN f ON f.user_id = a.user_id

@@ -34,6 +34,13 @@ Every step is driver-gated: the DuckDB oracle re-derives the same
 result from the identical raw JSONL fixtures, so the full chain
 (JSON parse -> explode -> agg -> recurrence) is differentially tested.
 
+Each rule is written once per engine. The A3/A4/A5 arithmetic lives in
+functions/fpl_rules.py, shared as Columns here and as pandas scalars by
+the streaming fold (streaming/pipeline.py). On the oracle side this
+module owns one SQL fragment per rule -- ``_FM_SQL``, ``_rating_sql``,
+``final_rating_sql``, ``profile_sql`` and ``chemistry_sql`` -- which the
+request, KMeans and streaming oracles embed.
+
 Scale: the stream parses once and splits by record type (no double
 parse); all aggregations key on (playerId, matchId) -- one shuffle,
 map-side partial aggregation; dimension joins broadcast; the rating
@@ -45,12 +52,21 @@ match, linear in matches).
 from __future__ import annotations
 
 import os
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import rounded, safe_div
+from fantasy_premier_league_spark.functions.fpl_rules import (
+    FULL_MATCH,
+    INIT_RATING,
+    final_metrics,
+    performance,
+    rating_step,
+    running_mean,
+)
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.schemas import (
     METRIC_COUNTER_COLS,
@@ -69,7 +85,6 @@ from fantasy_premier_league_spark.sources.fpl_fixtures import ensure_fixtures
 FIXTURES = os.environ.get("SPARK_GRAFT_FPL_FIXTURES") or ensure_fixtures()
 STREAM_GLOB = os.path.join(FIXTURES, "stream", "*.jsonl")
 
-INIT_RATING = 0.5  # master.py:229
 INIT_CHEMISTRY = 0.5  # metrics.py:16
 
 # ---------------------------------------------------------------------------
@@ -230,27 +245,18 @@ def fpl_a2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def final_metrics_df(counters: DataFrame) -> DataFrame:
-    c = F.col
+    m = {k: v.alias(k) for k, v in final_metrics(F.col, safe_div).items()}
     return counters.select(
         "playerId",
         "matchId",
-        safe_div(
-            c("acc_normal_passes") + c("acc_key_passes") * 2,
-            c("normal_passes") + c("key_passes") * 2,
-        ).alias("pass_accuracy"),
-        safe_div(c("duels_won") + c("neutral_duels") * 0.5, c("total_duels")).alias(
-            "duel_effectiveness"
-        ),
-        safe_div(
-            c("shots_on_target_goal") + c("shots_on_target_no_goal") * 0.5, c("shots")
-        ).alias("shot_effectiveness"),
-        c("fouls"),
-        c("own_goals"),
-        c("shots_on_target"),
-        safe_div(c("effective_free_kicks") + c("penalty_goals"), c("free_kicks")).alias(
-            "free_kick_effectiveness"
-        ),
-        c("goals"),
+        m["pass_accuracy"],
+        m["duel_effectiveness"],
+        m["shot_effectiveness"],
+        "fouls",
+        "own_goals",
+        "shots_on_target",
+        m["free_kick_effectiveness"],
+        "goals",
     )
 
 
@@ -474,7 +480,12 @@ def fpl_j5(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def performance_df(spark: SparkSession, counters: DataFrame | None = None) -> DataFrame:
+def performance_df(
+    spark: SparkSession,
+    counters: DataFrame | None = None,
+    effectiveness: str = "shot_effectiveness",
+    time_on_pitch: bool = False,
+) -> DataFrame:
     """Per fielded (player, match): the penalized contribution
     (master.py:230-232), joined J2-style (inner on roster membership).
 
@@ -483,30 +494,34 @@ def performance_df(spark: SparkSession, counters: DataFrame | None = None) -> Da
     + rating trace) pass ONE materialized counters frame instead of
     re-running the events corpus pass per branch; the expression is
     identical to the default, so plans only change for callers that
-    opt in."""
+    opt in. ``effectiveness`` and ``time_on_pitch`` are the spec twin's
+    two departures (see spec_performance_df); ``time_on_pitch`` adds
+    the span's minutes as ``top``."""
     if counters is None:
         counters = match_counters(metric_vectors(events_df(spark)))
     fm = final_metrics_df(counters)
-    spans = player_spans(matches_df(spark)).select("matchId", "playerId", "teamId")
-    contribution = (
-        F.col("pass_accuracy")
-        + F.col("duel_effectiveness")
-        + F.col("shot_effectiveness")
-        + F.col("shots_on_target")
-    ) / 4
-    perf = contribution - (0.005 * F.col("fouls") + 0.05 * F.col("own_goals")) * contribution
+    minutes = ["inTime", "outTime"] if time_on_pitch else []
+    spans = player_spans(matches_df(spark)).select("matchId", "playerId", "teamId", *minutes)
+    cols = [performance(F.col, effectiveness).alias("perf")]
+    if time_on_pitch:
+        cols.append((F.col("outTime") - F.col("inTime")).alias("top"))
     return fm.join(spans, ["playerId", "matchId"]).select(
-        "playerId", "matchId", "teamId", perf.alias("perf")
+        "playerId", "matchId", "teamId", *cols
     )
 
 
 def rating_trace_df(perf: DataFrame) -> DataFrame:
+    """Per (player, match) in match order: the rating after the match
+    and its change. A ``top`` column feeds each match's minutes to
+    rating_step; without one every match is a full match."""
+
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("matchId").reset_index(drop=True)
+        tops = pdf["top"] if "top" in pdf else repeat(FULL_MATCH)
         ratings, deltas = [], []
         r = INIT_RATING
-        for p in pdf["perf"]:
-            new = 1.05 * ((p + r) / 2)  # master.py:233-235 (90-minute path)
+        for p, top in zip(pdf["perf"], tops):
+            new = rating_step(p, r, top)
             ratings.append(new)
             deltas.append(new - r)
             r = new
@@ -519,53 +534,80 @@ def rating_trace_df(perf: DataFrame) -> DataFrame:
     )
 
 
-_PERF_SQL = f"""
+def _perf_sql(effectiveness: str = "shot_effectiveness", time_on_pitch: bool = False) -> str:
+    """performance_df's oracle, with the same two arguments."""
+    contribution = f"""((fm.pass_accuracy + fm.duel_effectiveness + fm.{effectiveness}
+           + fm.shots_on_target) / 4)"""
+    minutes = ", inTime, outTime" if time_on_pitch else ""
+    top = ",\n         sp.outTime - sp.inTime AS top" if time_on_pitch else ""
+    return f"""
   SELECT fm.playerId, fm.matchId, sp.teamId,
-         ((fm.pass_accuracy + fm.duel_effectiveness + fm.shot_effectiveness
-           + fm.shots_on_target) / 4)
+         {contribution}
          - (0.005 * fm.fouls + 0.05 * fm.own_goals)
-           * ((fm.pass_accuracy + fm.duel_effectiveness + fm.shot_effectiveness
-               + fm.shots_on_target) / 4) AS perf
+           * {contribution} AS perf{top}
   FROM ({_FM_SQL}) fm
-  JOIN (SELECT DISTINCT matchId, playerId, teamId FROM ({_SPANS_SQL})) sp
+  JOIN (SELECT DISTINCT matchId, playerId, teamId{minutes} FROM ({_SPANS_SQL})) sp
     ON sp.playerId = fm.playerId AND sp.matchId = fm.matchId
 """
 
-_RATING_SQL = f"""
+
+def _step_sql(row: str, old: str, time_on_pitch: bool) -> str:
+    """rating_step for the row with alias prefix ``row`` ("" or "s.")."""
+    fc = f"(({row}perf + {old}) / 2)"
+    if not time_on_pitch:
+        return f"1.05 * {fc}"
+    return f"CASE WHEN {row}top = {FULL_MATCH} THEN 1.05 * {fc} ELSE ({row}top / 90.0) * {fc} END"
+
+
+def _rating_sql(effectiveness: str = "shot_effectiveness", time_on_pitch: bool = False) -> str:
+    """rating_trace_df's oracle over _perf_sql with the same arguments."""
+    return f"""
   WITH RECURSIVE seqd AS (
-    SELECT playerId, matchId, teamId, perf,
+    SELECT playerId, matchId, teamId, perf{", top" if time_on_pitch else ""},
            row_number() OVER (PARTITION BY playerId ORDER BY matchId) AS seq
-    FROM ({_PERF_SQL})
+    FROM ({_perf_sql(effectiveness, time_on_pitch)})
   ),
   r AS (
     SELECT playerId, matchId, teamId, seq,
-           1.05 * ((perf + {INIT_RATING}) / 2) AS rating,
+           {_step_sql("", INIT_RATING, time_on_pitch)} AS rating,
            CAST({INIT_RATING} AS DOUBLE) AS prev
     FROM seqd WHERE seq = 1
     UNION ALL
     SELECT s.playerId, s.matchId, s.teamId, s.seq,
-           1.05 * ((s.perf + r.rating) / 2) AS rating, r.rating AS prev
+           {_step_sql("s.", "r.rating", time_on_pitch)} AS rating, r.rating AS prev
     FROM seqd s JOIN r ON s.playerId = r.playerId AND s.seq = r.seq + 1
   )
   SELECT playerId, matchId, teamId, rating, rating - prev AS delta FROM r
 """
 
 
-@register(
-    "fpl_a5_rating",
-    oracle=f"""
+_RATING_SQL = _rating_sql()
+
+
+def _rating_rows_sql(rating_sql: str) -> str:
+    return f"""
     SELECT playerId, matchId, round(rating, 6) AS rating, round(delta, 6) + 0 AS delta
-    FROM ({_RATING_SQL}) ORDER BY playerId, matchId
-    """,
-)
-def fpl_a5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    trace = rating_trace_df(performance_df(spark))
+    FROM ({rating_sql}) ORDER BY playerId, matchId
+    """
+
+
+# the rounded trace: fpl_a5_rating's oracle, and fpl_t5_stateful_stream's
+# (the streaming fold must reproduce the batch trace)
+RATING_ROWS_SQL = _rating_rows_sql(_RATING_SQL)
+
+
+def _rating_rows(trace: DataFrame) -> DataFrame:
     return trace.select(
         "playerId",
         "matchId",
         rounded(F.col("rating"), 6).alias("rating"),
         rounded(F.col("delta"), 6).alias("delta"),
     ).orderBy("playerId", "matchId")
+
+
+@register("fpl_a5_rating", oracle=RATING_ROWS_SQL)
+def fpl_a5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _rating_rows(rating_trace_df(performance_df(spark)))
 
 
 # ---------------------------------------------------------------------------
@@ -580,106 +622,21 @@ def fpl_a5(spark: SparkSession, sf_dir: str) -> DataFrame:
 # This twin pins the SPEC behavior: free-kick effectiveness in the
 # mean, and the real (out-in)/90 scaling for substituted players
 # (never-fielded bench spans (-1,-1) scale to 0 by the same formula).
-# Same execution shape as the faithful side: JVM-computed perf, one
-# applyInPandas fold per player, recursive-CTE oracle.
+# It is the faithful chain with those two arguments flipped.
 # ---------------------------------------------------------------------------
+
+_SPEC_ARGS = {"effectiveness": "free_kick_effectiveness", "time_on_pitch": True}
 
 
 def spec_performance_df(spark: SparkSession) -> DataFrame:
     """Per fielded (player, match): the SPEC contribution (free-kick
     effectiveness, not shot) plus the span's real time-on-pitch."""
-    fm = final_metrics_df(match_counters(metric_vectors(events_df(spark))))
-    spans = player_spans(matches_df(spark)).select(
-        "matchId", "playerId", "teamId", "inTime", "outTime"
-    )
-    contribution = (
-        F.col("pass_accuracy")
-        + F.col("duel_effectiveness")
-        + F.col("free_kick_effectiveness")
-        + F.col("shots_on_target")
-    ) / 4
-    perf = contribution - (0.005 * F.col("fouls") + 0.05 * F.col("own_goals")) * contribution
-    return fm.join(spans, ["playerId", "matchId"]).select(
-        "playerId",
-        "matchId",
-        "teamId",
-        perf.alias("perf"),
-        (F.col("outTime") - F.col("inTime")).alias("top"),
-    )
+    return performance_df(spark, **_SPEC_ARGS)
 
 
-def spec_rating_trace_df(perf: DataFrame) -> DataFrame:
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("matchId").reset_index(drop=True)
-        ratings, deltas = [], []
-        r = INIT_RATING
-        for p, top in zip(pdf["perf"], pdf["top"]):
-            fc = (p + r) / 2
-            new = 1.05 * fc if top == 90 else (top / 90.0) * fc
-            ratings.append(new)
-            deltas.append(new - r)
-            r = new
-        pdf["rating"] = ratings
-        pdf["delta"] = deltas
-        return pdf[["playerId", "matchId", "teamId", "rating", "delta"]]
-
-    return perf.groupBy("playerId").applyInPandas(
-        fold, schema="playerId int, matchId int, teamId int, rating double, delta double"
-    )
-
-
-_SPEC_PERF_SQL = f"""
-  SELECT fm.playerId, fm.matchId, sp.teamId,
-         ((fm.pass_accuracy + fm.duel_effectiveness + fm.free_kick_effectiveness
-           + fm.shots_on_target) / 4)
-         - (0.005 * fm.fouls + 0.05 * fm.own_goals)
-           * ((fm.pass_accuracy + fm.duel_effectiveness + fm.free_kick_effectiveness
-               + fm.shots_on_target) / 4) AS perf,
-         sp.outTime - sp.inTime AS top
-  FROM ({_FM_SQL}) fm
-  JOIN (SELECT DISTINCT matchId, playerId, teamId, inTime, outTime
-        FROM ({_SPANS_SQL})) sp
-    ON sp.playerId = fm.playerId AND sp.matchId = fm.matchId
-"""
-
-_SPEC_RATING_SQL = f"""
-  WITH RECURSIVE seqd AS (
-    SELECT playerId, matchId, teamId, perf, top,
-           row_number() OVER (PARTITION BY playerId ORDER BY matchId) AS seq
-    FROM ({_SPEC_PERF_SQL})
-  ),
-  r AS (
-    SELECT playerId, matchId, teamId, seq,
-           CASE WHEN top = 90 THEN 1.05 * ((perf + {INIT_RATING}) / 2)
-                ELSE (top / 90.0) * ((perf + {INIT_RATING}) / 2) END AS rating,
-           CAST({INIT_RATING} AS DOUBLE) AS prev
-    FROM seqd WHERE seq = 1
-    UNION ALL
-    SELECT s.playerId, s.matchId, s.teamId, s.seq,
-           CASE WHEN s.top = 90 THEN 1.05 * ((s.perf + r.rating) / 2)
-                ELSE (s.top / 90.0) * ((s.perf + r.rating) / 2) END AS rating,
-           r.rating AS prev
-    FROM seqd s JOIN r ON s.playerId = r.playerId AND s.seq = r.seq + 1
-  )
-  SELECT playerId, matchId, rating, rating - prev AS delta FROM r
-"""
-
-
-@register(
-    "fpl_a5_spec_rating",
-    oracle=f"""
-    SELECT playerId, matchId, round(rating, 6) AS rating, round(delta, 6) + 0 AS delta
-    FROM ({_SPEC_RATING_SQL}) ORDER BY playerId, matchId
-    """,
-)
+@register("fpl_a5_spec_rating", oracle=_rating_rows_sql(_rating_sql(**_SPEC_ARGS)))
 def fpl_a5_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    trace = spec_rating_trace_df(spec_performance_df(spark))
-    return trace.select(
-        "playerId",
-        "matchId",
-        rounded(F.col("rating"), 6).alias("rating"),
-        rounded(F.col("delta"), 6).alias("delta"),
-    ).orderBy("playerId", "matchId")
+    return _rating_rows(rating_trace_df(spec_performance_df(spark)))
 
 
 # A7: final rating extract (reference metrics.py:53-63 reads the LAST
@@ -697,14 +654,22 @@ def latest_per_player(df: DataFrame) -> DataFrame:
     )
 
 
+def final_rating_sql(trace: str) -> str:
+    """latest_per_player's oracle: (playerId, rating) from the relation
+    ``trace`` (a CTE name or a parenthesized subquery)."""
+    return f"""
+    SELECT playerId, rating FROM (
+      SELECT playerId, rating,
+             row_number() OVER (PARTITION BY playerId ORDER BY matchId DESC) AS rn
+      FROM {trace}
+    ) WHERE rn = 1"""
+
+
 @register(
     "fpl_a7_final_rating",
     oracle=f"""
-    SELECT playerId, round(rating, 6) AS rating FROM (
-      SELECT playerId, rating,
-             row_number() OVER (PARTITION BY playerId ORDER BY matchId DESC) AS rn
-      FROM ({_RATING_SQL})
-    ) WHERE rn = 1 ORDER BY playerId
+    SELECT playerId, round(rating, 6) AS rating
+    FROM ({final_rating_sql(f"({_RATING_SQL})")}) ORDER BY playerId
     """,
 )
 def fpl_a7(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,7 +701,7 @@ def profile_df(spark: SparkSession, counters: DataFrame | None = None) -> DataFr
         pdf = pdf.sort_values("matchId").reset_index(drop=True)
         pa = None
         for p in pdf["pass_accuracy"]:
-            pa = p if pa is None else (p + pa) / 2
+            pa = running_mean(p, pa)
         return pd.DataFrame(
             {
                 "playerId": [pdf["playerId"].iloc[0]],
@@ -757,19 +722,20 @@ def profile_df(spark: SparkSession, counters: DataFrame | None = None) -> DataFr
     )
 
 
-@register(
-    "fpl_a4_profile",
-    oracle=f"""
-    WITH RECURSIVE fm AS (
-      SELECT playerId, matchId, pass_accuracy,
+def profile_sql(fm: str) -> str:
+    """profile_df's oracle over the final-metrics relation ``fm`` (a CTE
+    name or a parenthesized subquery); pass_accuracy unrounded."""
+    return f"""
+    WITH RECURSIVE seqd AS (
+      SELECT playerId, pass_accuracy,
              row_number() OVER (PARTITION BY playerId ORDER BY matchId) AS seq
-      FROM ({_FM_SQL})
+      FROM {fm}
     ),
     pa AS (
-      SELECT playerId, seq, pass_accuracy AS pa FROM fm WHERE seq = 1
+      SELECT playerId, seq, pass_accuracy AS pa FROM seqd WHERE seq = 1
       UNION ALL
       SELECT f.playerId, f.seq, (f.pass_accuracy + pa.pa) / 2 AS pa
-      FROM fm f JOIN pa ON f.playerId = pa.playerId AND f.seq = pa.seq + 1
+      FROM seqd f JOIN pa ON f.playerId = pa.playerId AND f.seq = pa.seq + 1
     ),
     last_pa AS (
       SELECT playerId, pa FROM (
@@ -778,15 +744,22 @@ def profile_df(spark: SparkSession, counters: DataFrame | None = None) -> DataFr
       ) WHERE rn = 1
     )
     SELECT s.playerId, s.fouls, s.goals, s.own_goals,
-           round(last_pa.pa, 6) AS pass_accuracy, s.shots_on_target
+           last_pa.pa AS pass_accuracy, s.shots_on_target
     FROM (
       SELECT playerId, CAST(sum(fouls) AS BIGINT) AS fouls,
              CAST(sum(goals) AS BIGINT) AS goals,
              CAST(sum(own_goals) AS BIGINT) AS own_goals,
              CAST(sum(shots_on_target) AS BIGINT) AS shots_on_target
-      FROM ({_FM_SQL}) GROUP BY playerId
-    ) s JOIN last_pa ON last_pa.playerId = s.playerId
-    ORDER BY s.playerId
+      FROM {fm} GROUP BY playerId
+    ) s JOIN last_pa ON last_pa.playerId = s.playerId"""
+
+
+@register(
+    "fpl_a4_profile",
+    oracle=f"""
+    SELECT playerId, fouls, goals, own_goals,
+           round(pass_accuracy, 6) AS pass_accuracy, shots_on_target
+    FROM ({profile_sql(f"({_FM_SQL})")}) ORDER BY playerId
     """,
 )
 def fpl_a4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,23 +827,35 @@ def chemistry_from_trace(trace: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "fpl_a6_chemistry",
-    oracle=f"""
-    WITH trace AS ({_RATING_SQL}),
-    pairs AS (
+def chemistry_sql(trace: str) -> str:
+    """chemistry_from_trace's oracle over the relation ``trace``
+    (playerId, matchId, teamId, delta); chemistry unrounded."""
+    return f"""
+    SELECT p1, p2,
+           greatest(0.0, least(1.0,
+             {INIT_CHEMISTRY} + sum(CASE WHEN same_team = same_sign THEN mag
+                                         ELSE -mag END))) AS chemistry
+    FROM (
       SELECT a.playerId AS p1, b.playerId AS p2,
              abs((a.delta + b.delta) / 2) AS mag,
              ((a.delta > 0 AND b.delta > 0) OR (a.delta < 0 AND b.delta < 0)) AS same_sign,
              (a.teamId = b.teamId) AS same_team
-      FROM trace a JOIN trace b
+      FROM {trace} a JOIN {trace} b
         ON a.matchId = b.matchId AND a.playerId < b.playerId
-    )
-    SELECT p1, p2,
-           round(greatest(0.0, least(1.0,
-             {INIT_CHEMISTRY} + sum(CASE WHEN same_team = same_sign THEN mag
-                                         ELSE -mag END))), 6) AS chemistry
-    FROM pairs GROUP BY p1, p2 ORDER BY p1, p2
+    ) GROUP BY p1, p2"""
+
+
+# chemistry over the A5 trace, self-contained
+_CHEM_SQL = f"""
+    WITH trace AS ({_RATING_SQL}){chemistry_sql("trace")}
+"""
+
+
+@register(
+    "fpl_a6_chemistry",
+    oracle=f"""
+    SELECT p1, p2, round(chemistry, 6) AS chemistry
+    FROM ({_CHEM_SQL}) ORDER BY p1, p2
     """,
 )
 def fpl_a6(spark: SparkSession, sf_dir: str) -> DataFrame:

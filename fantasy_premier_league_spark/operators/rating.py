@@ -11,7 +11,7 @@ is one of the few places Python is justified (SURVEY section 4 "custom
 work"): ``applyInPandas`` over user groups -- one shuffle on the key,
 Arrow-batched, O(1) state per key, embarrassingly parallel across keys.
 The streaming variant (applyInPandasWithState) lives in
-streaming/stateful.py; this batch form replays the full history in
+streaming/pipeline.py; this batch form replays the full history in
 event-time order, which is also how a 100 TB backfill would run.
 
 Events-table mapping (FIXTURES.md section 7): performance for a
@@ -31,10 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import fixed_units, rounded
+from fantasy_premier_league_spark.functions.fpl_rules import INIT_RATING
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
-
-INIT_RATING = 0.5  # reference master.py:233 (old state None -> 0.5)
 
 
 def rating_fold(perf: pd.Series, init: float = INIT_RATING) -> pd.Series:

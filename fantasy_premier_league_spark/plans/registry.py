@@ -66,6 +66,19 @@ CHANGED_THIS_ROUND: list[str] = [
     "fpl_req2_dropped_goals_quirk",
     "fpl_req3_match_details",
     "fpl_req3_card_list_quirk",
+    # Each FPL rule is spelled once: the shared A3/A4/A5 arithmetic
+    # (functions/fpl_rules.py) and one oracle fragment per rule.
+    "fpl_a3_final_metrics",
+    "fpl_a4_profile",
+    "fpl_a5_rating",
+    "fpl_a5_spec_rating",
+    "fpl_a6_chemistry",
+    "fpl_a7_final_rating",
+    "fpl_t5_stateful_stream",
+    "t16_fpl_pipeline_roundtrip",
+    "a6_chemistry_pairs",
+    "ml_kmeans_rating_impute",
+    "ml_kmeans_chemistry_impute",
 ]
 # (The 28 r17 entries -- triangle counts, blocked pairs, req1 shared
 # trace, perceptron fused readouts, t18 staging, CC cached edges,

@@ -25,7 +25,8 @@ Reference topology: socket text DStream, 5 s batches, 4 chained
   4-deep updateStateByKey chain recomputed everything every batch),
   so counters/metrics are derived inside the state function from the
   batch's raw events -- each batch is one match, so the per-match
-  aggregate is complete within the invocation.
+  aggregate is complete within the invocation. The fold applies the
+  same A3/A4/A5 rules as the batch chain, from functions/fpl_rules.py.
 
 At 100 TB: the file/kafka source partitions by file/topic-partition;
 the single stateful shuffle keys on playerId (bounded state, one row
@@ -49,9 +50,15 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 from fantasy_premier_league_spark.functions import scoped_conf
+from fantasy_premier_league_spark.functions.fpl_rules import (
+    INIT_RATING,
+    final_metrics,
+    performance,
+    rating_step,
+    running_mean,
+    scalar_div,
+)
 from fantasy_premier_league_spark.schemas import STREAM_SCHEMA
-
-INIT_RATING = 0.5
 
 RATING_OUTPUT_SCHEMA = T.StructType(
     [
@@ -270,21 +277,12 @@ def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = Non
 def streaming_match_counters(parsed: DataFrame) -> DataFrame:
     """A2 as an incremental streaming aggregation: state keyed by
     (playerId, matchId); update mode emits only changed keys."""
-    from fantasy_premier_league_spark.operators.pipeline import metric_vectors
-
-    events = parsed.filter(F.col("eventId").isNotNull())
-    return metric_vectors(events).drop("id").groupBy("playerId", "matchId").agg(
-        *[
-            F.sum(c).cast("long").alias(c)
-            for c in (
-                "acc_normal_passes", "acc_key_passes", "normal_passes", "key_passes",
-                "duels_won", "neutral_duels", "total_duels", "shots",
-                "shots_on_target_goal", "shots_on_target_no_goal", "shots_on_target",
-                "fouls", "own_goals", "free_kicks", "effective_free_kicks",
-                "penalty_goals", "goals",
-            )
-        ]
+    from fantasy_premier_league_spark.operators.pipeline import (
+        match_counters,
+        metric_vectors,
     )
+
+    return match_counters(metric_vectors(parsed.filter(F.col("eventId").isNotNull())))
 
 
 def _fold_player_state(
@@ -306,27 +304,12 @@ def _fold_player_state(
     for match_id, g in pdf.sort_values("matchId").groupby("matchId", sort=True):
         if match_id <= last_match:
             continue  # replayed/duplicate match: idempotent skip
-        c = g.sum(numeric_only=True)
-        pa_den = c["normal_passes"] + c["key_passes"] * 2
-        pass_accuracy = (
-            (c["acc_normal_passes"] + c["acc_key_passes"] * 2) / pa_den if pa_den else 0.0
-        )
-        duel_eff = (
-            (c["duels_won"] + c["neutral_duels"] * 0.5) / c["total_duels"]
-            if c["total_duels"]
-            else 0.0
-        )
-        shot_eff = (
-            (c["shots_on_target_goal"] + c["shots_on_target_no_goal"] * 0.5) / c["shots"]
-            if c["shots"]
-            else 0.0
-        )
-        contrib = (pass_accuracy + duel_eff + shot_eff + c["shots_on_target"]) / 4
-        contrib = contrib - (0.005 * c["fouls"] + 0.05 * c["own_goals"]) * contrib
-        new_rating = 1.05 * ((contrib + rating) / 2)
+        c = g.sum(numeric_only=True).to_dict()  # the match's counters...
+        c.update(final_metrics(c.__getitem__, scalar_div))  # ...and A3 metrics
+        new_rating = rating_step(performance(c.__getitem__), rating)
         delta = new_rating - rating
         rating = new_rating
-        pa_mean = pass_accuracy if pa_mean is None else (pass_accuracy + pa_mean) / 2
+        pa_mean = running_mean(c["pass_accuracy"], pa_mean)
         fouls_t += int(c["fouls"])
         goals_t += int(c["goals"])
         og_t += int(c["own_goals"])

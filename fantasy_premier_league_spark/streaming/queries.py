@@ -259,19 +259,11 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _fpl_stateful_oracle() -> str:
-    from fantasy_premier_league_spark.operators import pipeline as P
-
-    return f"""
-    SELECT playerId, matchId, round(rating, 6) AS rating, round(delta, 6) + 0 AS delta
-    FROM ({P._RATING_SQL}) ORDER BY playerId, matchId
-    """
-
-
 def _register_stateful() -> None:
+    from fantasy_premier_league_spark.operators.pipeline import RATING_ROWS_SQL
     from fantasy_premier_league_spark.sources import fpl_fixtures
 
-    @register("fpl_t5_stateful_stream", oracle=_fpl_stateful_oracle())
+    @register("fpl_t5_stateful_stream", oracle=RATING_ROWS_SQL)
     def fpl_t5(spark: SparkSession, sf_dir: str) -> DataFrame:
         from fantasy_premier_league_spark.streaming.pipeline import (
             stream_source,
@@ -781,55 +773,15 @@ def sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _t16_oracle() -> str:
     from fantasy_premier_league_spark.operators import pipeline as P
 
+    # one trace CTE feeds both the final rating and chemistry, so the
+    # rating recursion runs once
     return f"""
-    WITH RECURSIVE trace AS ({P._RATING_SQL}),
-    final AS (
-      SELECT playerId, rating FROM (
-        SELECT playerId, rating,
-               row_number() OVER (PARTITION BY playerId ORDER BY matchId DESC) AS rn
-        FROM trace
-      ) WHERE rn = 1
-    ),
-    fm AS (
-      SELECT playerId, matchId, pass_accuracy,
-             row_number() OVER (PARTITION BY playerId ORDER BY matchId) AS seq
-      FROM ({P._FM_SQL})
-    ),
-    pa AS (
-      SELECT playerId, seq, pass_accuracy AS pa FROM fm WHERE seq = 1
-      UNION ALL
-      SELECT f.playerId, f.seq, (f.pass_accuracy + pa.pa) / 2 AS pa
-      FROM fm f JOIN pa ON f.playerId = pa.playerId AND f.seq = pa.seq + 1
-    ),
-    last_pa AS (
-      SELECT playerId, pa FROM (
-        SELECT playerId, pa,
-               row_number() OVER (PARTITION BY playerId ORDER BY seq DESC) AS rn
-        FROM pa
-      ) WHERE rn = 1
-    ),
-    totals AS (
-      SELECT playerId, CAST(sum(fouls) AS BIGINT) AS fouls,
-             CAST(sum(goals) AS BIGINT) AS goals,
-             CAST(sum(own_goals) AS BIGINT) AS own_goals,
-             CAST(sum(shots_on_target) AS BIGINT) AS shots_on_target
-      FROM ({P._FM_SQL}) GROUP BY playerId
-    ),
-    cpairs AS (
-      SELECT a.playerId AS p1, b.playerId AS p2,
-             abs((a.delta + b.delta) / 2) AS mag,
-             ((a.delta > 0 AND b.delta > 0) OR (a.delta < 0 AND b.delta < 0))
-               AS same_sign,
-             (a.teamId = b.teamId) AS same_team
-      FROM trace a JOIN trace b
-        ON a.matchId = b.matchId AND a.playerId < b.playerId
-    ),
+    WITH trace AS ({P._RATING_SQL}),
+    final AS ({P.final_rating_sql("trace")}),
+    prof AS ({P.profile_sql(f"({P._FM_SQL})")}),
     chem AS (
-      SELECT p1, p2,
-             round(greatest(0.0, least(1.0,
-               {P.INIT_CHEMISTRY} + sum(CASE WHEN same_team = same_sign THEN mag
-                                             ELSE -mag END))), 6) AS chemistry
-      FROM cpairs GROUP BY p1, p2
+      SELECT p1, p2, round(chemistry, 6) AS chemistry
+      FROM ({P.chemistry_sql("trace")})
     ),
     chem_pp AS (
       SELECT playerId,
@@ -842,12 +794,11 @@ def _t16_oracle() -> str:
       ) GROUP BY playerId
     )
     SELECT f.playerId, round(f.rating, 6) AS final_rating,
-           round(lp.pa, 6) AS pass_accuracy,
-           t.fouls, t.goals, t.own_goals, t.shots_on_target,
+           round(pr.pass_accuracy, 6) AS pass_accuracy,
+           pr.fouls, pr.goals, pr.own_goals, pr.shots_on_target,
            round(cp.chem_sum, 6) AS chem_sum
     FROM final f
-    JOIN last_pa lp ON lp.playerId = f.playerId
-    JOIN totals t ON t.playerId = f.playerId
+    JOIN prof pr ON pr.playerId = f.playerId
     JOIN chem_pp cp ON cp.playerId = f.playerId
     ORDER BY f.playerId
     """

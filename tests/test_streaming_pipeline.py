@@ -75,6 +75,24 @@ def test_stateful_profile_matches_batch(spark):
         assert s["pass_accuracy_mean"] == pytest.approx(b["pass_accuracy"], abs=1e-12)
 
 
+def test_stream_fold_imports_skip_the_batch_pipeline():
+    """The stream fold and the applyInPandas folds reach the shared FPL
+    rules by reference inside Python workers. Importing them, or the
+    streaming pipeline, must not import operators/pipeline.py, whose
+    import generates the fixtures."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import fantasy_premier_league_spark.functions.fpl_rules\n"
+        "import fantasy_premier_league_spark.streaming.pipeline\n"
+        "assert 'fantasy_premier_league_spark.operators.pipeline' not in sys.modules\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=repo, check=True, timeout=120)
+
+
 def test_streaming_match_counters_update_mode(spark):
     """A2 as an incremental agg == batch counters (T5/T6)."""
     from fantasy_premier_league_spark.operators.pipeline import (
