@@ -2,6 +2,8 @@ from fantasy_premier_league_spark.functions.scalars import (
     epoch_secs,
     epoch_us,
     fixed_units,
+    md5_hash,
+    md5_hash_sql,
     rounded,
     safe_div,
 )
@@ -14,6 +16,8 @@ __all__ = [
     "epoch_secs",
     "epoch_us",
     "fixed_units",
+    "md5_hash",
+    "md5_hash_sql",
     "rounded",
     "safe_div",
     "scoped_conf",

@@ -44,6 +44,21 @@ def rounded(col: Column, scale: int = 6) -> Column:
     return F.round(col * factor) / factor
 
 
+def md5_hash(col: Column, width: int = 8) -> Column:
+    """Portable hash: the first ``width`` hex digits of md5 of the value's
+    string form, as a BIGINT (32 bits at the default width; at most 15).
+    Oracle twin: :func:`md5_hash_sql`, which DuckDB evaluates to the
+    same integer."""
+    return F.conv(
+        F.substring(F.md5(col.cast("string").cast("binary")), 1, width), 16, 10
+    ).cast("long")
+
+
+def md5_hash_sql(expr: str, width: int = 8) -> str:
+    """DuckDB text of :func:`md5_hash` over the VARCHAR expression ``expr``."""
+    return f"('0x' || substr(md5({expr}), 1, {width}))::BIGINT"
+
+
 def _epoch_ntz() -> Column:
     # built lazily: F.lit needs an active SparkContext, and this module
     # is imported before the session exists

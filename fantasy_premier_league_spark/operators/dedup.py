@@ -14,6 +14,13 @@ Design for 100 TB:
   band -> bucket-join pipeline, all expressible as DataFrame ops with
   a portable md5-based hash (so the DuckDB oracle computes the exact
   same signatures).
+
+Every near-dup tier runs one filter-then-verify path (the stages below
+the shingling section): collapse exact duplicates into classes, build a
+signature, bucket it, self-join the buckets, verify the surviving pairs
+exactly, and expand class pairs back to documents. Each stage has one
+Spark spelling with its DuckDB fragment beside it; only the pruning
+rule varies per tier.
 """
 
 from __future__ import annotations
@@ -21,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fantasy_premier_league_spark.functions import rounded
+from fantasy_premier_league_spark.functions import md5_hash, md5_hash_sql, rounded
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
 
@@ -104,95 +111,74 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# N-gram Jaccard near-dup: inverted-index candidate join.
-# jaccard(A,B) = |A n B| / (|A| + |B| - |A n B|); only pairs sharing a
-# shingle are materialized. Threshold 0.2 keeps the result non-trivial
-# on the synthetic corpus.
-#
-# Hot-shingle cap: a shingle appearing in more than _MAX_SHINGLE_DF
-# documents (boilerplate, stop-word runs) is dropped from the posting
-# list BEFORE the self-join -- at 100 TB one ubiquitous 3-gram would
-# otherwise create a quadratic posting bucket. Jaccard is then computed
-# over the CAPPED shingle sets on both engines (sizes recomputed after
-# the cap), so the capped semantics are themselves oracle-gated.
+# The filter-then-verify stages. Every near-dup tier composes these, in
+# this order: exact-duplicate classes -> signature -> band or posting
+# rows -> one bucket self-join -> exact verify -> class pairs expanded
+# to document pairs. The tiers differ only in the pruning rule.
 # ---------------------------------------------------------------------------
 
-_MAX_SHINGLE_DF = 100
 
+def _collapse_classes(
+    tagged: DataFrame, payload: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """Exact-duplicate classes of a (doc_id, digest, *payload) frame.
 
-@register(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    capped AS (
-      SELECT doc_id, shingle FROM posting
-      QUALIFY count(*) OVER (PARTITION BY shingle) <= {_MAX_SHINGLE_DF}
-    ),
-    sized AS (
-      SELECT doc_id, shingle, count(*) OVER (PARTITION BY doc_id) AS sz
-      FROM capped
-    ),
-    inter AS (
-      SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-             a.sz AS sz1, b.sz AS sz2, count(*) AS n_common
-      FROM sized a JOIN sized b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2, 3, 4
-    )
-    SELECT doc1, doc2,
-           round(CAST(n_common AS DOUBLE) / (sz1 + sz2 - n_common), 6) AS jaccard
-    FROM inter
-    WHERE CAST(n_common AS DOUBLE) / (sz1 + sz2 - n_common) >= 0.2
-    ORDER BY doc1, doc2
-    """,
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index Jaccard join over exact-dup CLASSES.
-
-    Round-8 fix of the r7 verdict's one `weak` mark: the raw doc-level
-    posting join re-paid candidate enumeration and verification for
-    every exact-duplicate twin (sf10 measured exp 0.91 -- the factor-100
-    replica gives every doc ~4 identical copies, a ~16x avoidable
-    constant on pair work). Shared `_shingle_classes` collapse, the df
-    cap member-weighted so capped semantics stay IDENTICAL to the raw
-    form (oracle unchanged); duplicate mass survives only as output
-    rows. Within-class (identical-doc) pairs are jaccard 1.0 but are
-    emitted only for classes with at least one cap-surviving shingle --
-    a doc whose capped set is empty has no posting rows and therefore
-    no pairs in the raw form either.
+    Returns ``(mapping, reps)``: (doc_id, cls) membership and one
+    (cls, m, *payload) row per class, where cls is the minimum member
+    doc_id and m the member count. Pairwise tiers must never pay twice
+    for exact duplicates, so they collapse to classes before any
+    O(pairs) work and expand after. cls and m come from ONE
+    digest-partitioned window, i.e. one shuffle, with no groupBy and
+    join back.
     """
-    mapping, sized = _capped_class_sized(spark, sf_dir)
-    inter = _class_intersections(sized)
-    jac = F.col("n_common").cast("double") / (
-        F.col("sz1") + F.col("sz2") - F.col("n_common")
+    w = Window.partitionBy("digest")
+    annotated = tagged.select(
+        "doc_id",
+        *payload,
+        F.min("doc_id").over(w).alias("cls"),
+        F.count("*").over(w).alias("m"),
     )
-    cpairs = inter.filter(jac >= 0.2).select(
-        "c1", "c2", rounded(jac, 6).alias("jaccard")
+    mapping = annotated.select("doc_id", "cls").localCheckpoint(eager=False)
+    reps = (
+        annotated.filter(F.col("doc_id") == F.col("cls"))
+        .select("cls", "m", *payload)
+        .localCheckpoint(eager=False)  # feeds the filter AND the verify
     )
-    cross = _expand_class_pairs(mapping, cpairs, ["jaccard"])
-    within = _within_class_pairs(
-        mapping,
-        sized.select(F.col("cls").alias("s_cls")).distinct(),
-        [rounded(F.lit(1.0), 6).alias("jaccard")],
-    )
-    return cross.unionByName(within).orderBy("doc1", "doc2")
+    return mapping, reps
 
 
-# ---------------------------------------------------------------------------
-# MinHash: portable signature. Shingle -> 32-bit int via the first 8 hex
-# chars of md5 (identical in Spark and DuckDB), then k=8 universal-hash
-# permutations h_j(x) = (a_j * x + b_j) mod p, minhash_j = min over
-# shingles. LSH banding (4 bands x 2 rows) turns near-dup candidate
-# generation into equality joins on the band signature.
-# ---------------------------------------------------------------------------
+def _shingle_classes(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Classes of documents with the same nonempty shingle list:
+    ``(mapping, usets)`` with usets = (cls, m, shingles, sz). The digest
+    is over the ORDERED list (first-occurrence order within the text):
+    identical texts collapse; equal sets in a different order
+    conservatively stay separate classes."""
+    tagged = (
+        doc_shingles(spark, sf_dir)
+        .filter(F.size("shingles") > 0)
+        .select(
+            "doc_id",
+            "shingles",
+            F.size("shingles").alias("sz"),
+            # to_json, not concat_ws(sep): a separator-joined encoding is
+            # ambiguous when a token contains the separator (["a\\x1eb"]
+            # vs ["a","b"] would merge distinct docs into one class and
+            # emit false jaccard-1.0 pairs). JSON escapes element
+            # boundaries unambiguously on both engines.
+            F.md5(F.to_json(F.col("shingles")).cast("binary")).alias("digest"),
+        )
+        .localCheckpoint(eager=False)  # shingling feeds classes AND mapping
+    )
+    return _collapse_classes(tagged, ["shingles", "sz"])
 
+
+# MinHash signature: shingle -> 32-bit int (md5_hash, identical in Spark
+# and DuckDB), then k=8 universal-hash permutations
+# h_j(x) = (a_j * x + b_j) mod p, minhash_j = min over shingles.
 _P = 4294967311  # prime > 2^32
 _HASHES = [(1_103_515_245 + 2 * j, 12_345 + 7 * j) for j in range(8)]
-
-
-def _shingle_int(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c.cast("binary")), 1, 8), 16, 10).cast("long")
 
 
 def _permutation(a: int, b: int):
@@ -201,70 +187,36 @@ def _permutation(a: int, b: int):
     return lambda x: (x * a + b) % _P
 
 
-@register(
-    "dedup_minhash_signatures",
-    oracle="""
-    WITH sh AS ({sh}),
-    ints AS (
-      SELECT doc_id,
-             [('0x' || substr(md5(s), 1, 8))::BIGINT for s in shingles] AS xs
-      FROM sh
-    )
-    SELECT doc_id,
-           {mins}
-    FROM ints ORDER BY doc_id
-    """.format(
-        sh=_SHINGLES_SQL,
-        mins=",\n           ".join(
-            f"CAST(list_min([({a} * x + {b}) % {_P} for x in xs]) AS BIGINT) AS mh{j}"
+def _shingle_hashes(shingles: Column) -> Column:
+    return F.transform(shingles, lambda s: md5_hash(s))
+
+
+def _minhash_sig(frame: DataFrame) -> DataFrame:
+    """``frame`` (which has a ``shingles`` column) plus its MinHash
+    signature mh0..mh7."""
+    ints = frame.withColumn("xs", _shingle_hashes(F.col("shingles")))
+    return ints.select(
+        *frame.columns,
+        *[
+            F.array_min(F.transform(F.col("xs"), _permutation(a, b))).alias(f"mh{j}")
             for j, (a, b) in enumerate(_HASHES)
-        ),
-    ),
-)
-def dedup_minhash_signatures(
-    spark: SparkSession, sf_dir: str, sort: bool = True
-) -> DataFrame:
-    sh = doc_shingles(spark, sf_dir)
-    ints = sh.select(
-        "doc_id", F.transform(F.col("shingles"), _shingle_int).alias("xs")
+        ],
     )
-    mins = [
-        F.array_min(F.transform(F.col("xs"), _permutation(a, b))).alias(f"mh{j}")
-        for j, (a, b) in enumerate(_HASHES)
-    ]
-    out = ints.select("doc_id", *mins)
-    # sort is presentation-only (stable driver hashing); internal
-    # consumers (LSH banding) skip it
-    return out.orderBy("doc_id") if sort else out
 
 
-# shared CTE chain: documents -> shingles -> minhash signatures -> LSH
-# bands -> distinct candidate pairs (reused by the clustering oracle)
-_LSH_CAND_CTES = """
+_MINHASH_SQL = """
     sh AS ({sh}),
     ints AS (
       SELECT doc_id,
-             [('0x' || substr(md5(s), 1, 8))::BIGINT for s in shingles] AS xs
+             [{h} for s in shingles] AS xs
       FROM sh
     ),
     sig AS (
       SELECT doc_id, {mins}
       FROM ints
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band, mh0 AS r0, mh1 AS r1 FROM sig
-      UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
-      UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
-      UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.r0 = b.r0 AND a.r1 = b.r1
-       AND a.doc_id < b.doc_id
-    )
-""".format(
+    )""".format(
     sh=_SHINGLES_SQL,
+    h=md5_hash_sql("s"),
     mins=", ".join(
         f"CAST(list_min([({a} * x + {b}) % {_P} for x in xs]) AS BIGINT) AS mh{j}"
         for j, (a, b) in enumerate(_HASHES)
@@ -272,89 +224,6 @@ _LSH_CAND_CTES = """
 )
 
 
-def _lsh_class_candidates(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(mapping, class_pairs): distinct (c1 < c2) LSH band-collision
-    pairs over exact-dup classes (shared ``_shingle_classes`` collapse,
-    round 8 -- the r7 lesson applied to the minhash tier: signatures,
-    banding, and the bucket self-join run once per DISTINCT shingle
-    list, so exact-duplicate twins never multiply candidate work).
-
-    Semantics preserved vs the raw doc-level join: identical lists give
-    identical signatures, so every cross-class doc pair is a band
-    collision iff its class pair is; within-class (identical-doc) pairs
-    always collide on every band; and docs with EMPTY shingle lists --
-    excluded by _shingle_classes -- produce null minhashes in the raw
-    form, which null-equality drops from the join identically.
-    """
-    mapping, usets = _shingle_classes(spark, sf_dir)
-    ints = usets.select(
-        "cls", F.transform(F.col("shingles"), _shingle_int).alias("xs")
-    )
-    mins = [
-        F.array_min(F.transform(F.col("xs"), _permutation(a, b))).alias(f"mh{j}")
-        for j, (a, b) in enumerate(_HASHES)
-    ]
-    sig = ints.select("cls", *mins)
-    bands = None
-    for band in range(4):
-        part = sig.select(
-            "cls",
-            F.lit(band).alias("band"),
-            F.col(f"mh{2 * band}").alias("r0"),
-            F.col(f"mh{2 * band + 1}").alias("r1"),
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    # shuffle_hash on both sides: the bucket self-join must never
-    # broadcast (each side is the full corpus at scale), and identical
-    # shuffle exchanges let AQE reuse the first side's exchange so the
-    # shingle -> minhash pipeline runs once, not twice.
-    a = bands.alias("a").hint("shuffle_hash")
-    b = bands.alias("b").hint("shuffle_hash")
-    cpairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.r0") == F.col("b.r0"))
-            & (F.col("a.r1") == F.col("b.r1"))
-            & (F.col("a.cls") < F.col("b.cls")),
-        )
-        .select(F.col("a.cls").alias("c1"), F.col("b.cls").alias("c2"))
-        .distinct()
-    )
-    return mapping, cpairs
-
-
-def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc1 < doc2) LSH candidate pairs, UNSORTED.
-
-    Internal building block: the registered query adds a presentation
-    orderBy; iterative consumers must not pay a global sort for input
-    whose order is irrelevant. Distinct class pairs expand through the
-    disjoint mapping to distinct doc pairs, and within-class pairs are
-    disjoint from cross-class ones, so no final distinct is needed.
-    """
-    mapping, cpairs = _lsh_class_candidates(spark, sf_dir)
-    cross = _expand_class_pairs(mapping, cpairs, [])
-    within = _within_class_pairs(
-        mapping, mapping.select(F.col("cls").alias("s_cls")).distinct(), []
-    )
-    return cross.unionByName(within)
-
-
-@register(
-    "dedup_minhash_lsh_candidates",
-    oracle=f"""
-    WITH {_LSH_CAND_CTES}
-    SELECT doc1, doc2 FROM cand ORDER BY doc1, doc2
-    """,
-)
-def dedup_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _lsh_candidate_pairs(spark, sf_dir).orderBy("doc1", "doc2")
-
-
-# ---------------------------------------------------------------------------
 # SimHash: 32-bit locality-sensitive fingerprint. Each shingle hash
 # votes +1/-1 on every bit position; bit b of the fingerprint is the
 # sign of the vote sum. Near-duplicate documents differ in only a few
@@ -374,7 +243,6 @@ def dedup_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signature/band width with log(corpus) to hold occupancy constant
 # (64-bit simhash, 8-bit bands); the join shape is already the
 # scale-correct form at any width.
-# ---------------------------------------------------------------------------
 
 _SIMHASH_BITS = 32
 _BAND_BITS = _SIMHASH_BITS // 4
@@ -407,54 +275,342 @@ _SIMHASH_SQL_BITS = " + ".join(
     for b in range(_SIMHASH_BITS)
 )
 
-def _simhash_sql(nonempty: bool = False) -> str:
-    # nonempty: drop docs whose shingle set is empty (<3 tokens). Their
-    # vote sums are all 0 -> the identical all-ones fingerprint, so every
-    # short-doc pair would meet as a hamming-0 "near-dup" (an O(k^2) pair
-    # blow-up carrying zero similarity signal). The pairs operator always
-    # filters them; the fingerprint operator keeps all docs.
-    where = "WHERE len(shingles) > 0" if nonempty else ""
-    return f"""
+# Documents with an empty shingle set (<3 tokens) are left out: their
+# vote sums are all 0, so they share the all-ones fingerprint and every
+# short-doc pair would meet as a hamming-0 "near-dup" (an O(k^2) blow-up
+# with no similarity signal).
+_SIMHASH_BANDS_SQL = f"""
     WITH sh AS ({_SHINGLES_SQL}),
     ints AS (
       SELECT doc_id,
-             [('0x' || substr(md5(s), 1, 8))::BIGINT for s in shingles] AS xs
-      FROM sh {where}
+             [{md5_hash_sql("s")} for s in shingles] AS xs
+      FROM sh WHERE len(shingles) > 0
     ),
     sig AS (
       SELECT doc_id, {_SIMHASH_SQL_BITS} AS simhash
       FROM ints
     )
-"""
 
-
-def _simhash_df(spark: SparkSession, sf_dir: str, nonempty: bool = False) -> DataFrame:
-    sh = doc_shingles(spark, sf_dir)
-    if nonempty:
-        sh = sh.filter(F.size("shingles") > 0)
-    ints = sh.select("doc_id", F.transform(F.col("shingles"), _shingle_int).alias("xs"))
-    return ints.select("doc_id", simhash_col(F.col("xs")).alias("simhash"))
-
-
-# (`dedup_simhash` -- the bare fingerprint table -- was retired in r13
-# under the N=200 registration budget to make room for the Arrow UDTF
-# query (VERDICT r12 #7 + #5). Coverage of the signature machinery
-# continues through `dedup_simhash_pairs` and `dedup_simhash_accuracy`
-# below, which run the identical `_simhash_df` pipeline (driver-green
-# r11/r10) plus banding; the one surface the bare query alone pinned --
-# the nonempty=False all-ones fold of empty shingle sets -- is a
-# deterministic constant documented in simhash_col's docstring.)
-
-
-@register(
-    "dedup_simhash_pairs",
-    oracle=_simhash_sql(nonempty=True)
-    + f"""
     , bands AS (
       SELECT doc_id, simhash, band,
              (simhash >> ({_BAND_BITS} * band)) & {(1 << _BAND_BITS) - 1} AS band_val
       FROM sig, (SELECT unnest([0, 1, 2, 3]) AS band)
+    )"""
+
+
+def _simhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, simhash, band, band_val): the four 8-bit bands of the
+    32-bit simhash of each (doc_id, shingles) row of ``sh``. The voting
+    fold is the CPU-hot stage and feeds both sides of every band join,
+    so the tiny (doc_id, simhash) table is materialized once."""
+    ints = sh.select("doc_id", _shingle_hashes(F.col("shingles")).alias("xs"))
+    sig = ints.select("doc_id", simhash_col(F.col("xs")).alias("simhash"))
+    mask = (1 << _BAND_BITS) - 1
+    return _banded(
+        sig.localCheckpoint(),
+        "doc_id",
+        [F.shiftright("simhash", _BAND_BITS * b).bitwiseAND(mask) for b in range(4)],
+        carry=["simhash"],
     )
+
+
+def _banded(
+    sig: DataFrame, ident: str, bands: list[Column], carry: list[str] = ()
+) -> DataFrame:
+    """One (ident, *carry, band, band_val) row per band of each signature
+    row, ``bands[b]`` being band b's value. Two rows fall in one bucket
+    when they agree on (band, band_val)."""
+    return sig.select(
+        ident, *carry, F.posexplode(F.array(*bands)).alias("band", "band_val")
+    )
+
+
+def _bucket_pairs(rows: DataFrame, ident: str, bucket: list[str]) -> DataFrame:
+    """Every pair of ``rows`` equal on the ``bucket`` columns, with
+    a.ident < b.ident; the sides are aliased ``a`` and ``b``. Both sides
+    carry shuffle_hash: the bucket self-join must never broadcast (each
+    side is the full corpus at scale), and identical exchanges let AQE
+    reuse the first side's exchange, so what feeds it runs once."""
+    a = rows.alias("a").hint("shuffle_hash")
+    b = rows.alias("b").hint("shuffle_hash")
+    return a.join(
+        b,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket]
+        + [F.col(f"a.{ident}") < F.col(f"b.{ident}")],
+    )
+
+
+def _capped_postings(posting: DataFrame, token: str, max_df: int) -> DataFrame:
+    """The rows of a class posting table (cls, m, token) whose token
+    occurs in at most ``max_df`` DOCUMENTS. A hot token (boilerplate,
+    stop-word runs) would otherwise make a quadratic posting bucket at
+    100 TB. Summing member counts m, not classes, keeps the cap the
+    doc-level one the oracles encode."""
+    dfreq = posting.groupBy(token).agg(F.sum("m").alias("df"))
+    return posting.join(dfreq.hint("shuffle_hash"), token).filter(
+        F.col("df") <= max_df
+    )
+
+
+def _posting_pairs(
+    posting: DataFrame, token: str, carry: list[str] = ()
+) -> DataFrame:
+    """(c1, c2, <carry>1, <carry>2, n_common): every pair c1 < c2 of
+    posting entities (``cls``) that share a token, with the number of
+    tokens they share. Only pairs that meet on a posting list are ever
+    materialized."""
+    sides = [
+        F.col(f"{s}.{c}").alias(f"{c}{i}") for c in carry for i, s in ((1, "a"), (2, "b"))
+    ]
+    return (
+        _bucket_pairs(posting, "cls", [token])
+        .groupBy(F.col("a.cls").alias("c1"), F.col("b.cls").alias("c2"), *sides)
+        .agg(F.count("*").alias("n_common"))
+    )
+
+
+def _set_jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two distinct-element arrays."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter.cast("double") / (F.size(a) + F.size(b) - inter)
+
+
+def _set_jaccard_sql(a: str, b: str) -> str:
+    return (
+        f"CAST(len(list_intersect({a}, {b})) AS DOUBLE)"
+        f" / (len({a}) + len({b}) - len(list_intersect({a}, {b})))"
+    )
+
+
+def _with_sides(
+    pairs: DataFrame,
+    rows: DataFrame,
+    cols: list[str],
+    ends: tuple[str, str] = ("c1", "c2"),
+    key: str = "cls",
+    hint: str = "shuffle_hash",
+) -> DataFrame:
+    """``pairs`` with both ends' ``cols`` from ``rows`` (keyed by
+    ``key``): column x of the first end as x1, of the second as x2. The
+    exact verify reads what the filter stage already built."""
+    for i, end in enumerate(ends, 1):
+        side = rows.select(
+            F.col(key).alias(end), *[F.col(c).alias(f"{c}{i}") for c in cols]
+        )
+        pairs = pairs.join(side.hint(hint), end)
+    return pairs
+
+
+def _doc_pairs(
+    mapping: DataFrame, cpairs: DataFrame, same: DataFrame
+) -> DataFrame:
+    """Document pairs (doc1 < doc2, scores...) from verified class pairs
+    (c1, c2, scores...). Each class pair expands to its members' cross
+    pairs (classes are disjoint, so least/greatest cannot collide), and
+    each class in ``same`` (cls, scores...) adds the pairs among its
+    own, identical, members with that row's scores."""
+    scores = [c for c in cpairs.columns if c not in ("c1", "c2")]
+    m1 = mapping.select(F.col("cls").alias("c1"), F.col("doc_id").alias("d1"))
+    m2 = mapping.select(F.col("cls").alias("c2"), F.col("doc_id").alias("d2"))
+    cross = (
+        cpairs.join(m1.hint("shuffle_hash"), "c1")
+        .join(m2.hint("shuffle_hash"), "c2")
+        .select(
+            F.least("d1", "d2").alias("doc1"),
+            F.greatest("d1", "d2").alias("doc2"),
+            *scores,
+        )
+    )
+    within = (
+        _bucket_pairs(mapping, "doc_id", ["cls"])
+        .join(
+            same.withColumnRenamed("cls", "s_cls").hint("shuffle_hash"),
+            F.col("a.cls") == F.col("s_cls"),
+        )
+        .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"), *scores)
+    )
+    return cross.unionByName(within)
+
+
+def _within_token_limit(toks: Column, limit: int, query: str) -> Column:
+    """``toks``, or a raise_error for a document of ``limit`` or more
+    tokens. Position keys packed below a document or hash value overflow
+    past the limit -- identically on both engines, so the oracle cannot
+    see it -- and a filter would drop the document silently. No testdata
+    SF holds such a document; a 100 TB deployment shards giant documents
+    upstream or widens the packing."""
+    return F.when(F.size(toks) < F.lit(limit), toks).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"{query}: document has {limit} or more tokens, its packed "
+                      "position keys would overflow: doc_id="),
+                F.col("doc_id").cast("string"),
+            )
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# N-gram Jaccard near-dup: inverted-index candidate join.
+# jaccard(A,B) = |A n B| / (|A| + |B| - |A n B|); only pairs sharing a
+# shingle are materialized. Threshold 0.2 keeps the result non-trivial
+# on the synthetic corpus.
+#
+# Hot-shingle cap: a shingle appearing in more than _MAX_SHINGLE_DF
+# documents (boilerplate, stop-word runs) is dropped from the posting
+# list BEFORE the self-join -- at 100 TB one ubiquitous 3-gram would
+# otherwise create a quadratic posting bucket. Jaccard is then computed
+# over the CAPPED shingle sets on both engines (sizes recomputed after
+# the cap), so the capped semantics are themselves oracle-gated.
+# ---------------------------------------------------------------------------
+
+_MAX_SHINGLE_DF = 100
+
+# the capped posting self-join shared by the jaccard and containment oracles
+_CAPPED_INTER_SQL = f"""
+    WITH sh AS ({_SHINGLES_SQL}),
+    posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+    capped AS (
+      SELECT doc_id, shingle FROM posting
+      QUALIFY count(*) OVER (PARTITION BY shingle) <= {_MAX_SHINGLE_DF}
+    ),
+    sized AS (
+      SELECT doc_id, shingle, count(*) OVER (PARTITION BY doc_id) AS sz
+      FROM capped
+    ),
+    inter AS (
+      SELECT a.doc_id AS doc1, b.doc_id AS doc2,
+             a.sz AS sz1, b.sz AS sz2, count(*) AS n_common
+      FROM sized a JOIN sized b
+        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2, 3, 4
+    )"""
+
+
+def _capped_class_sized(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(mapping, sized): the df-capped class posting table (cls,
+    shingle, sz) shared by the jaccard and containment joins, sz being
+    the class's count of surviving shingles."""
+    mapping, usets = _shingle_classes(spark, sf_dir)
+    posting = usets.select("cls", "m", F.explode("shingles").alias("shingle"))
+    sized = _capped_postings(posting, "shingle", _MAX_SHINGLE_DF).select(
+        "cls",
+        "shingle",
+        F.count("*").over(Window.partitionBy("cls")).alias("sz"),
+    ).localCheckpoint(eager=False)  # feeds the pair join AND the within pairs
+    return mapping, sized
+
+
+@register(
+    "dedup_ngram_jaccard",
+    oracle=_CAPPED_INTER_SQL
+    + """
+    SELECT doc1, doc2,
+           round(CAST(n_common AS DOUBLE) / (sz1 + sz2 - n_common), 6) AS jaccard
+    FROM inter
+    WHERE CAST(n_common AS DOUBLE) / (sz1 + sz2 - n_common) >= 0.2
+    ORDER BY doc1, doc2
+    """,
+)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inverted-index Jaccard join over exact-dup classes. Identical
+    documents pair at jaccard 1.0, but only in classes with at least one
+    cap-surviving shingle: a doc whose capped set is empty has no
+    posting rows, and so no pairs, in the doc-level oracle either."""
+    mapping, sized = _capped_class_sized(spark, sf_dir)
+    inter = _posting_pairs(sized, "shingle", ["sz"])
+    jac = F.col("n_common").cast("double") / (
+        F.col("sz1") + F.col("sz2") - F.col("n_common")
+    )
+    cpairs = inter.filter(jac >= 0.2).select(
+        "c1", "c2", rounded(jac, 6).alias("jaccard")
+    )
+    same = sized.select("cls").distinct().withColumn("jaccard", F.lit(1.0))
+    return _doc_pairs(mapping, cpairs, same).orderBy("doc1", "doc2")
+
+
+@register(
+    "dedup_minhash_signatures",
+    oracle=f"""
+    WITH {_MINHASH_SQL}
+    SELECT * FROM sig ORDER BY doc_id
+    """,
+)
+def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sig = _minhash_sig(doc_shingles(spark, sf_dir))
+    return sig.drop("shingles").orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# MinHash-LSH: banding (4 bands x 2 rows) turns near-dup candidate
+# generation into equality joins on the band signature. Shared CTE
+# chain: documents -> shingles -> minhash signatures -> LSH bands ->
+# distinct candidate pairs (reused by the clustering oracles).
+# ---------------------------------------------------------------------------
+
+_LSH_CAND_CTES = _MINHASH_SQL + """,
+    bands AS (
+      SELECT doc_id, 0 AS band, mh0 AS r0, mh1 AS r1 FROM sig
+      UNION ALL SELECT doc_id, 1, mh2, mh3 FROM sig
+      UNION ALL SELECT doc_id, 2, mh4, mh5 FROM sig
+      UNION ALL SELECT doc_id, 3, mh6, mh7 FROM sig
+    ),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.r0 = b.r0 AND a.r1 = b.r1
+       AND a.doc_id < b.doc_id
+    )
+"""
+
+
+def _lsh_class_candidates(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(mapping, sig, cpairs): distinct (c1 < c2) LSH band-collision
+    pairs over exact-dup classes, and the per-class signature table sig
+    = (cls, m, shingles, sz, mh0..mh7) they were banded from.
+
+    Same pairs as the doc-level join: identical lists give identical
+    signatures, so every cross-class doc pair is a band collision iff
+    its class pair is; within-class (identical-doc) pairs always collide
+    on every band; and docs with EMPTY shingle lists -- excluded by
+    _shingle_classes -- produce null minhashes in the doc-level form,
+    which null-equality drops from the join identically.
+    """
+    mapping, usets = _shingle_classes(spark, sf_dir)
+    sig = _minhash_sig(usets).localCheckpoint(eager=False)  # bands AND verify
+    # a band's value is its two-row array: arrays compare element-wise
+    bands = _banded(
+        sig, "cls", [F.array(f"mh{2 * b}", f"mh{2 * b + 1}") for b in range(4)]
+    )
+    cpairs = (
+        _bucket_pairs(bands, "cls", ["band", "band_val"])
+        .select(F.col("a.cls").alias("c1"), F.col("b.cls").alias("c2"))
+        .distinct()
+    )
+    return mapping, sig, cpairs
+
+
+@register(
+    "dedup_minhash_lsh_candidates",
+    oracle=f"""
+    WITH {_LSH_CAND_CTES}
+    SELECT doc1, doc2 FROM cand ORDER BY doc1, doc2
+    """,
+)
+def dedup_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    mapping, _, cpairs = _lsh_class_candidates(spark, sf_dir)
+    same = mapping.select("cls").distinct()
+    return _doc_pairs(mapping, cpairs, same).orderBy("doc1", "doc2")
+
+
+@register(
+    "dedup_simhash_pairs",
+    oracle=_SIMHASH_BANDS_SQL
+    + """
     SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
     FROM bands a JOIN bands b
@@ -464,33 +620,12 @@ def _simhash_df(spark: SparkSession, sf_dir: str, nonempty: bool = False) -> Dat
     """,
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # nonempty: content-less fingerprints (docs with <3 tokens) carry no
-    # similarity signal and would all collide pairwise -- see _simhash_sql
-    # The 32-bit voting aggregate over the shingle hashes is the CPU-hot
-    # stage and feeds BOTH sides of the self-join; materialize the tiny
-    # (doc_id, simhash) table once instead of recomputing it per side.
-    sig = _simhash_df(spark, sf_dir, nonempty=True).localCheckpoint()
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("band"),
-    ).withColumn(
-        # expr: F.shiftright only takes a literal shift amount
-        "band_val",
-        F.expr(f"shiftright(simhash, band * {_BAND_BITS}) & {(1 << _BAND_BITS) - 1}"),
-    )
-    # same shuffle_hash rationale as the LSH candidate join above
-    a, b = bands.alias("a").hint("shuffle_hash"), bands.alias("b").hint("shuffle_hash")
+    sh = doc_shingles(spark, sf_dir).filter(F.size("shingles") > 0)
     hamming = F.bit_count(
         F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     ).cast("int")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _bucket_pairs(_simhash_bands(sh), "doc_id", ["band", "band_val"])
         .select(
             F.col("a.doc_id").alias("doc1"),
             F.col("b.doc_id").alias("doc2"),
@@ -560,9 +695,9 @@ def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     ).select("node", F.col("m_lbl").alias("lbl"))
 
 
-@register(
-    "dedup_cluster_components",
-    oracle=f"""
+# the recursive-CTE fixpoint: every candidate-graph node labelled with
+# the minimum doc_id it reaches (shared by both cluster oracles)
+_CLUSTER_LABELS_SQL = f"""
     WITH RECURSIVE {_LSH_CAND_CTES},
     edges AS (
       SELECT doc1 AS src, doc2 AS dst FROM cand
@@ -573,14 +708,22 @@ def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
       SELECT node, node FROM nodes
       UNION
       SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src
-    )
-    SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster
-    FROM reach GROUP BY node ORDER BY doc_id
+    ),
+    lab AS (
+      SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster
+      FROM reach GROUP BY node
+    )"""
+
+
+@register(
+    "dedup_cluster_components",
+    oracle=_CLUSTER_LABELS_SQL + """
+    SELECT doc_id, cluster FROM lab ORDER BY doc_id
     """,
 )
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the CLASS-level candidate graph
-    (round 8): exact-duplicate twins share one node, so the fixpoint
+    """Connected components over the CLASS-level candidate graph:
+    exact-duplicate twins share one node, so the fixpoint
     loop runs over distinct shingle lists -- on twin-heavy corpora the
     graph shrinks ~|dup factor|x and the per-round joins with it.
     Labels expand back through the membership mapping at the end.
@@ -593,8 +736,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly; singleton classes with no edges are absent from the raw
     output and stay absent here.
     """
-    mapping, cpairs = _lsh_class_candidates(spark, sf_dir)
-    mapping = mapping.localCheckpoint(eager=False)  # feeds extra + expand
+    mapping, _, cpairs = _lsh_class_candidates(spark, sf_dir)
     edges = cpairs.select(
         F.col("c1").alias("src"), F.col("c2").alias("dst")
     ).unionByName(
@@ -732,63 +874,51 @@ def dedup_exact_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH-pruned pair set, never all pairs.
 # ---------------------------------------------------------------------------
 
+_SLOTS_SQL = " + ".join(f"CASE WHEN a.mh{j} = b.mh{j} THEN 1 ELSE 0 END" for j in range(8))
+
 
 @register(
     "dedup_minhash_accuracy",
     oracle=f"""
-    WITH {_LSH_CAND_CTES},
-    sets AS (
-      SELECT doc_id, list_distinct(shingles) AS s FROM sh
-    )
+    WITH {_LSH_CAND_CTES}
     SELECT c.doc1, c.doc2,
-           CAST({' + '.join(f'CASE WHEN a.mh{j} = b.mh{j} THEN 1 ELSE 0 END' for j in range(8))}
-                AS BIGINT) AS n_match_slots,
-           round(CAST({' + '.join(f'CASE WHEN a.mh{j} = b.mh{j} THEN 1 ELSE 0 END' for j in range(8))}
-                 AS DOUBLE) / 8 * 1000000) / 1000000 AS est_jaccard,
-           round(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-                 / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)))
-                 * 1000000) / 1000000 AS exact_jaccard
+           CAST({_SLOTS_SQL} AS BIGINT) AS n_match_slots,
+           round(CAST({_SLOTS_SQL} AS DOUBLE) / 8, 6) AS est_jaccard,
+           round({_set_jaccard_sql("sa.shingles", "sb.shingles")}, 6) AS exact_jaccard
     FROM cand c
     JOIN sig a ON a.doc_id = c.doc1
     JOIN sig b ON b.doc_id = c.doc2
-    JOIN sets sa ON sa.doc_id = c.doc1
-    JOIN sets sb ON sb.doc_id = c.doc2
+    JOIN sh sa ON sa.doc_id = c.doc1
+    JOIN sh sb ON sb.doc_id = c.doc2
     ORDER BY doc1, doc2
     """,
 )
 def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cand = _lsh_candidate_pairs(spark, sf_dir)
-    sig = dedup_minhash_signatures(spark, sf_dir, sort=False)
-    sets = doc_shingles(spark, sf_dir).select(
-        "doc_id", F.array_distinct("shingles").alias("s")
-    )
-    a = sig.select(
-        F.col("doc_id").alias("doc1"), *[F.col(f"mh{j}").alias(f"a{j}") for j in range(8)]
-    )
-    b = sig.select(
-        F.col("doc_id").alias("doc2"), *[F.col(f"mh{j}").alias(f"b{j}") for j in range(8)]
-    )
-    sa = sets.select(F.col("doc_id").alias("doc1"), F.col("s").alias("sa"))
-    sb = sets.select(F.col("doc_id").alias("doc2"), F.col("s").alias("sb"))
+    """Scores each class-level candidate pair once, from the signatures
+    and shingle lists candidate generation already built, then expands
+    to doc pairs. Members of one class share their shingle list, so
+    their pairs match on all 8 slots and score 1.0 both ways."""
+    mapping, sig, cpairs = _lsh_class_candidates(spark, sf_dir)
+    both = _with_sides(cpairs, sig, ["shingles", *[f"mh{j}" for j in range(8)]])
     matches = sum(
-        F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0) for j in range(8)
+        F.when(F.col(f"mh{j}1") == F.col(f"mh{j}2"), 1).otherwise(0) for j in range(8)
     )
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    return (
-        cand.join(a, "doc1")
-        .join(b, "doc2")
-        .join(sa, "doc1")
-        .join(sb, "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            matches.cast("long").alias("n_match_slots"),
-            rounded(matches.cast("double") / 8, 6).alias("est_jaccard"),
-            rounded(inter.cast("double") / union, 6).alias("exact_jaccard"),
-        )
-        .orderBy("doc1", "doc2")
+    scored = both.select(
+        "c1",
+        "c2",
+        matches.cast("long").alias("n_match_slots"),
+        rounded(matches.cast("double") / 8, 6).alias("est_jaccard"),
+        rounded(_set_jaccard(F.col("shingles1"), F.col("shingles2")), 6).alias(
+            "exact_jaccard"
+        ),
     )
+    same = mapping.select("cls").distinct().select(
+        "cls",
+        F.lit(8).cast("long").alias("n_match_slots"),
+        F.lit(1.0).alias("est_jaccard"),
+        F.lit(1.0).alias("exact_jaccard"),
+    )
+    return _doc_pairs(mapping, scored, same).orderBy("doc1", "doc2")
 
 
 # ---------------------------------------------------------------------------
@@ -813,187 +943,29 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PF_T = 0.5
 
 
-def _shingle_classes(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate equivalence classes over nonempty shingle lists:
-    returns ``(mapping, usets)`` -- (doc_id, cls) membership and one
-    (cls, shingles, sz) row per distinct list, cls = min member doc_id.
-    The round-7 lesson shared by the prefix-filter and simhash-accuracy
-    joins: pairwise tiers must never re-pay for exact duplicates, so
-    collapse to classes before any O(pairs) work and expand after.
-    The digest is over the ORDERED list (first-occurrence order within
-    the text): identical texts collapse; equal sets in different order
-    conservatively stay separate classes."""
-    base = (
-        doc_shingles(spark, sf_dir)
-        .filter(F.size("shingles") > 0)
-        .select("doc_id", "shingles", F.size("shingles").alias("sz"))
-    )
-    tagged = base.withColumn(
-        # to_json, not concat_ws(sep): a separator-joined encoding is
-        # ambiguous when a token contains the separator (["a\\x1eb"] vs
-        # ["a","b"] would collide and merge distinct docs into one
-        # class, emitting false jaccard-1.0 pairs -- ADVICE r7). JSON
-        # escapes element boundaries unambiguously on both engines.
-        "digest", F.md5(F.to_json(F.col("shingles")).cast("binary"))
-    ).localCheckpoint(eager=False)  # shingling feeds classes AND mapping
-    # class id and member count as WINDOW aggregates over the digest
-    # partitioning (r17, guide §2.4: the former groupBy(digest) + two
-    # joins back re-shuffled the doc list three more times; one
-    # digest-partitioned window computes cls = min(doc_id) and
-    # m = count(*) in the SAME shuffle, and column pruning keeps the
-    # mapping materialization narrow). m rides along so the posting
-    # tier's member-weighted df cap needs no groupBy+join either.
-    w = Window.partitionBy("digest")
-    annotated = tagged.select(
-        "doc_id",
-        "shingles",
-        "sz",
-        F.min("doc_id").over(w).alias("cls"),
-        F.count("*").over(w).alias("m"),
-    )
-    mapping = (
-        annotated.select("doc_id", "cls").localCheckpoint(eager=False)
-    )
-    usets = (
-        annotated.filter(F.col("doc_id") == F.col("cls"))
-        .select("cls", "shingles", "sz", "m")
-        .localCheckpoint(eager=False)  # feeds posting build AND verify
-    )
-    return mapping, usets
-
-
-def _capped_class_sized(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(mapping, sized): the df-capped per-class posting table shared by
-    the jaccard and containment joins. The hot-shingle cap counts
-    DOCUMENTS in the raw form, so class postings are weighted by member
-    count before the df sum -- capped semantics stay byte-identical to
-    the uncollapsed doc-level plan the oracles encode."""
-    mapping, usets = _shingle_classes(spark, sf_dir)
-    # usets carries the member count m from the class window (r17):
-    # the former mapping.groupBy(cls) + posting-side join re-shuffled
-    # the posting mass by cls just to attach a per-class constant
-    posting = usets.select("cls", "m", F.explode("shingles").alias("shingle"))
-    dfreq = posting.groupBy("shingle").agg(F.sum("m").alias("df"))
-    capped = posting.join(dfreq.hint("shuffle_hash"), "shingle").filter(
-        F.col("df") <= _MAX_SHINGLE_DF
-    )
-    sized = capped.select(
-        "cls",
-        "shingle",
-        F.count("*").over(Window.partitionBy("cls")).alias("sz"),
-    ).localCheckpoint(eager=False)  # feeds the pair join AND `surviving`
-    return mapping, sized
-
-
-def _class_intersections(sized: DataFrame) -> DataFrame:
-    """(c1, c2, sz1, sz2, n_common) over cap-surviving class postings.
-    shuffle_hash on both sides: each side is the full posting mass at
-    scale (never broadcast), and identical exchanges let AQE reuse the
-    first side's shuffle."""
-    a = sized.alias("a").hint("shuffle_hash")
-    b = sized.alias("b").hint("shuffle_hash")
-    return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.cls") < F.col("b.cls")),
-        )
-        .groupBy(
-            F.col("a.cls").alias("c1"),
-            F.col("b.cls").alias("c2"),
-            F.col("a.sz").alias("sz1"),
-            F.col("b.sz").alias("sz2"),
-        )
-        .agg(F.count("*").alias("n_common"))
-    )
-
-
-def _expand_class_pairs(
-    mapping: DataFrame, cpairs: DataFrame, score_cols: list[str]
-) -> DataFrame:
-    """Expand surviving (c1, c2, scores...) class pairs to doc pairs.
-    Classes are disjoint, so least/greatest ordering cannot collide."""
-    m1 = mapping.select(F.col("cls").alias("c1"), F.col("doc_id").alias("d1"))
-    m2 = mapping.select(F.col("cls").alias("c2"), F.col("doc_id").alias("d2"))
-    return (
-        cpairs.join(m1.hint("shuffle_hash"), "c1")
-        .join(m2.hint("shuffle_hash"), "c2")
-        .select(
-            F.least("d1", "d2").alias("doc1"),
-            F.greatest("d1", "d2").alias("doc2"),
-            *score_cols,
-        )
-    )
-
-
-def _within_class_pairs(
-    mapping: DataFrame, surviving: DataFrame, score_cols: list
-) -> DataFrame:
-    """All (doc1 < doc2) member pairs of classes in ``surviving`` (a
-    single-column ``s_cls`` frame), with constant score columns --
-    identical docs score 1.0 by definition, but only classes whose
-    capped posting set is nonempty may emit (a doc with no posting rows
-    has no pairs in the raw form either)."""
-    ma, mb = mapping.alias("ma"), mapping.alias("mb")
-    return (
-        ma.join(
-            mb.hint("shuffle_hash"),
-            (F.col("ma.cls") == F.col("mb.cls"))
-            & (F.col("ma.doc_id") < F.col("mb.doc_id")),
-        )
-        .join(
-            surviving.hint("shuffle_hash"),
-            F.col("ma.cls") == F.col("s_cls"),
-            "leftsemi",
-        )
-        .select(
-            F.col("ma.doc_id").alias("doc1"),
-            F.col("mb.doc_id").alias("doc2"),
-            *score_cols,
-        )
-    )
-
-
 @register(
     "dedup_prefix_filter_pairs",
     oracle=f"""
     WITH sh AS ({_SHINGLES_SQL.replace("shingles", "s")}),
     nz AS (SELECT doc_id, s FROM sh WHERE len(s) > 0)
     SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-           round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6)
-             AS jaccard
+           round({_set_jaccard_sql("a.s", "b.s")}, 6) AS jaccard
     FROM nz a JOIN nz b ON a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= {_PF_T}
+    WHERE {_set_jaccard_sql("a.s", "b.s")} >= {_PF_T}
     ORDER BY doc1, doc2
     """,
 )
 def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossless prefix-filtered similarity join, run over exact-dup
-    CLASSES rather than raw documents.
+    """Lossless prefix-filtered similarity join over exact-dup classes.
 
-    Exact duplicates are collapsed first (one digest groupBy -- the
-    dedup_exact shape), the prefix-filter candidate/verify machinery
-    runs once per distinct shingle list, and surviving class pairs
-    expand back to doc pairs at the end; within-class pairs are
-    Jaccard 1.0 by definition and are emitted directly. Semantics are
-    IDENTICAL to the raw pairwise join (the brute-force oracle is
-    unchanged) -- what changes is who pays for duplicate mass: the r7
-    sf10 study caught the raw form dying of disk (*No space left on
-    device*) because the factor-100 replica wraps the 26-letter Caesar
-    rotation, giving every document ~4 identical twins, so every base
-    candidate pair was re-verified 16x with ~1 KB of shingle arrays
-    shipped per pair (~186M candidate pairs, ~400 GB of shuffle).
-    Collapsing first cuts candidate mass to the distinct-text tier
-    (11M here) and array bytes to one verify per class pair; the
-    quadratic duplicate mass survives only as OUTPUT rows (true pairs),
-    which no pair-emitting contract can avoid. This is also the
-    production ordering: exact dedup always precedes near-dup.
+    The candidate/verify machinery runs once per distinct shingle list
+    and surviving class pairs expand back to doc pairs; the brute-force
+    oracle is the doc-level join. Collapsing first is what keeps the
+    sf10 replica alive: it gives every document ~4 identical twins, and
+    verifying every doc pair re-shipped ~1 KB of shingle arrays 16x per
+    base pair (~400 GB of shuffle); now the duplicate mass survives only
+    as OUTPUT rows. This is also the production ordering: exact dedup
+    always precedes near-dup.
     """
     mapping, usets = _shingle_classes(spark, sf_dir)
     posting = usets.select("cls", "sz", F.explode("shingles").alias("shingle"))
@@ -1008,49 +980,21 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rn") <= F.col("sz") - F.ceil(_PF_T * F.col("sz")) + 1
     ).select("cls", "shingle")
     cand = (
-        prefix.alias("a")
-        .hint("shuffle_hash")
-        .join(
-            prefix.alias("b").hint("shuffle_hash"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.cls") < F.col("b.cls")),
-        )
+        _bucket_pairs(prefix, "cls", ["shingle"])
         .select(F.col("a.cls").alias("c1"), F.col("b.cls").alias("c2"))
         .distinct()
     )
-    verify = (
-        cand.join(
-            usets.select(
-                F.col("cls").alias("c1"),
-                F.col("shingles").alias("s1"),
-                F.col("sz").alias("sz1"),
-            ).hint("shuffle_hash"),
-            "c1",
-        )
-        .join(
-            usets.select(
-                F.col("cls").alias("c2"),
-                F.col("shingles").alias("s2"),
-                F.col("sz").alias("sz2"),
-            ).hint("shuffle_hash"),
-            "c2",
-        )
-        .withColumn("inter", F.size(F.array_intersect("s1", "s2")))
+    jac = _set_jaccard(F.col("shingles1"), F.col("shingles2"))
+    cpairs = (
+        _with_sides(cand, usets, ["shingles"])
+        .filter(jac >= _PF_T)
+        .select("c1", "c2", rounded(jac, 6).alias("jaccard"))
     )
-    jac = F.col("inter").cast("double") / (F.col("sz1") + F.col("sz2") - F.col("inter"))
-    cpairs = verify.filter(jac >= _PF_T).select(
-        "c1", "c2", rounded(jac, 6).alias("jaccard")
-    )
-    cross = _expand_class_pairs(mapping, cpairs, ["jaccard"])
-    # prefix filtering is LOSSLESS and _shingle_classes keeps nonempty
-    # lists only, so EVERY class emits its within-class pairs (identical
-    # docs always share their prefix tokens in the raw form)
-    within = _within_class_pairs(
-        mapping,
-        mapping.select(F.col("cls").alias("s_cls")).distinct(),
-        [rounded(F.lit(1.0), 6).alias("jaccard")],
-    )
-    return cross.unionByName(within).orderBy("doc1", "doc2")
+    # lossless, and _shingle_classes keeps nonempty lists only, so EVERY
+    # class emits its within-class pairs (identical docs always share
+    # their prefix tokens in the doc-level form)
+    same = mapping.select("cls").distinct().withColumn("jaccard", F.lit(1.0))
+    return _doc_pairs(mapping, cpairs, same).orderBy("doc1", "doc2")
 
 
 # ---------------------------------------------------------------------------
@@ -1072,7 +1016,7 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CHUNK_TOKENS = 8
-_CHUNK_POS = 1 << 20  # doc chunk index packed below doc_id, same guard idea as winnowing
+_CHUNK_POS = 1 << 20  # chunk index packed below doc_id; see _within_token_limit
 
 
 @register(
@@ -1109,18 +1053,20 @@ def dedup_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     First occurrence is the (doc_id, chunk_idx)-minimal copy, encoded
     as one packed BIGINT so the per-chunk decision is a single min()
-    (map-side combinable). The packed key needs idx < 2^20 -- enforced
-    with a filter on the token count like text_winnowing's guard, so an
-    oversized document drops out loudly in counts rather than silently
-    corrupting keys.
+    (map-side combinable). The packed key needs idx < _CHUNK_POS: a
+    longer document fails the query (_within_token_limit) rather than
+    corrupting keys or silently dropping out.
 
     Capability extension (north star): the reference app has no corpus
     operators; SURVEY 2.10 adds the LLM-pipeline tier this belongs to.
     """
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.size(F.split("text", " ")) < F.lit(_CHUNK_POS * _CHUNK_TOKENS)
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id",
+        _within_token_limit(
+            F.split("text", " "), _CHUNK_POS * _CHUNK_TOKENS, "dedup_chunk_spans"
+        ).alias("t"),
     )
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
     chunks = toks.select(
         "doc_id",
         F.posexplode(
@@ -1179,24 +1125,8 @@ _CONTAIN_T = 0.5
 
 @register(
     "dedup_containment_pairs",
-    oracle=f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    capped AS (
-      SELECT doc_id, shingle FROM posting
-      QUALIFY count(*) OVER (PARTITION BY shingle) <= {_MAX_SHINGLE_DF}
-    ),
-    sized AS (
-      SELECT doc_id, shingle, count(*) OVER (PARTITION BY doc_id) AS sz
-      FROM capped
-    ),
-    inter AS (
-      SELECT a.doc_id AS doc1, b.doc_id AS doc2,
-             a.sz AS sz1, b.sz AS sz2, count(*) AS n_common
-      FROM sized a JOIN sized b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2, 3, 4
-    )
+    oracle=_CAPPED_INTER_SQL
+    + f"""
     SELECT doc1, doc2,
            round(CAST(n_common AS DOUBLE) / least(sz1, sz2), 6) AS containment,
            round(CAST(n_common AS DOUBLE) / (sz1 + sz2 - n_common), 6) AS jaccard
@@ -1206,21 +1136,14 @@ _CONTAIN_T = 0.5
     """,
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Containment join over exact-dup CLASSES (shared _shingle_classes
-    collapse): posting lists, the df cap, and the pair aggregation run
-    once per distinct shingle list, and surviving class pairs expand
-    back to doc pairs. Two semantics-preserving details: the hot-
-    shingle cap counts DOCUMENTS, so class postings are weighted by
-    member count before the df sum; and within-class (identical-doc)
-    pairs are emitted only for classes with at least one cap-surviving
-    shingle -- a doc whose capped set is empty has no posting rows and
-    therefore no pairs in the raw form either. Oracle (raw doc-level
-    inverted index) unchanged. Without the collapse the sf10 replica's
-    ~4 identical twins per doc multiplied pair enumeration 16x
-    (measured 27x wall at 100x data); duplicate mass now survives only
-    as output rows."""
+    """Containment join over exact-dup classes, on the same capped class
+    postings as dedup_ngram_jaccard (and the same within-class rule:
+    only classes with a cap-surviving shingle pair up). Without the
+    collapse the sf10 replica's ~4 identical twins per doc multiplied
+    pair enumeration 16x; duplicate mass now survives only as output
+    rows."""
     mapping, sized = _capped_class_sized(spark, sf_dir)
-    inter = _class_intersections(sized)
+    inter = _posting_pairs(sized, "shingle", ["sz"])
     contain = F.col("n_common").cast("double") / F.least("sz1", "sz2")
     jac = F.col("n_common").cast("double") / (
         F.col("sz1") + F.col("sz2") - F.col("n_common")
@@ -1231,16 +1154,10 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         rounded(contain, 6).alias("containment"),
         rounded(jac, 6).alias("jaccard"),
     )
-    cross = _expand_class_pairs(mapping, cpairs, ["containment", "jaccard"])
-    within = _within_class_pairs(
-        mapping,
-        sized.select(F.col("cls").alias("s_cls")).distinct(),
-        [
-            rounded(F.lit(1.0), 6).alias("containment"),
-            rounded(F.lit(1.0), 6).alias("jaccard"),
-        ],
+    same = sized.select("cls").distinct().select(
+        "cls", F.lit(1.0).alias("containment"), F.lit(1.0).alias("jaccard")
     )
-    return cross.unionByName(within).orderBy("doc1", "doc2")
+    return _doc_pairs(mapping, cpairs, same).orderBy("doc1", "doc2")
 
 
 # ---------------------------------------------------------------------------
@@ -1259,22 +1176,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_cluster_keep_best",
-    oracle=f"""
-    WITH RECURSIVE {_LSH_CAND_CTES},
-    edges AS (
-      SELECT doc1 AS src, doc2 AS dst FROM cand
-      UNION SELECT doc2, doc1 FROM cand
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach(node, lbl) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.dst, r.lbl FROM reach r JOIN edges e ON r.node = e.src
-    ),
-    lab AS (
-      SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster
-      FROM reach GROUP BY node
-    )
+    oracle=_CLUSTER_LABELS_SQL + """
     SELECT cluster, n_members, kept_doc, kept_chars FROM (
       SELECT l.cluster,
              CAST(count(*) OVER (PARTITION BY l.cluster) AS BIGINT) AS n_members,
@@ -1332,13 +1234,8 @@ _CAL_PROBES = 64
 
 @register(
     "dedup_simhash_accuracy",
-    oracle=_simhash_sql(nonempty=True)
-    + f"""
-    , bands AS (
-      SELECT doc_id, simhash, band,
-             (simhash >> ({_BAND_BITS} * band)) & {(1 << _BAND_BITS) - 1} AS band_val
-      FROM sig, (SELECT unnest([0, 1, 2, 3]) AS band)
-    ),
+    oracle=_SIMHASH_BANDS_SQL
+    + f""",
     cand AS (
       SELECT DISTINCT p.doc_id AS probe_doc, b.doc_id AS other_doc,
              CAST(bit_count(xor(p.simhash, b.simhash)) AS INT) AS hamming
@@ -1346,32 +1243,24 @@ _CAL_PROBES = 64
         ON p.band = b.band AND p.band_val = b.band_val
        AND p.doc_id <> b.doc_id
       WHERE p.doc_id < {_CAL_PROBES}
-    ),
-    sets AS (
-      SELECT doc_id, list_distinct(shingles) AS s FROM sh WHERE len(shingles) > 0
     )
     SELECT c.probe_doc, c.other_doc, c.hamming,
            round(1.0 - CAST(c.hamming AS DOUBLE) / {_SIMHASH_BITS}, 6)
              AS est_agreement,
-           round(CAST(len(list_intersect(sp.s, so.s)) AS DOUBLE)
-                 / (len(sp.s) + len(so.s) - len(list_intersect(sp.s, so.s))), 6)
-             AS exact_jaccard
+           round({_set_jaccard_sql("sp.shingles", "so.shingles")}, 6) AS exact_jaccard
     FROM cand c
-    JOIN sets sp ON sp.doc_id = c.probe_doc
-    JOIN sets so ON so.doc_id = c.other_doc
+    JOIN sh sp ON sp.doc_id = c.probe_doc
+    JOIN sh so ON so.doc_id = c.other_doc
     ORDER BY probe_doc, other_doc
     """,
 )
 def dedup_simhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = _simhash_df(spark, sf_dir, nonempty=True).localCheckpoint()
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("band"),
-    ).withColumn(
-        "band_val",
-        F.expr(f"shiftright(simhash, band * {_BAND_BITS}) & {(1 << _BAND_BITS) - 1}"),
+    sh = (
+        doc_shingles(spark, sf_dir)
+        .filter(F.size("shingles") > 0)
+        .localCheckpoint(eager=False)  # feeds the simhash AND the verify
     )
+    bands = _simhash_bands(sh)
     probes = bands.filter(F.col("doc_id") < _CAL_PROBES).select(
         F.col("doc_id").alias("probe_doc"),
         F.col("simhash").alias("p_simhash"),
@@ -1394,30 +1283,18 @@ def dedup_simhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sets = (
-        doc_shingles(spark, sf_dir)
-        .filter(F.size("shingles") > 0)
-        .select("doc_id", F.array_distinct("shingles").alias("s"))
-    )
-    sp = sets.select(F.col("doc_id").alias("probe_doc"), F.col("s").alias("sp"))
-    so = sets.select(F.col("doc_id").alias("other_doc"), F.col("s").alias("so"))
-    inter = F.size(F.array_intersect("sp", "so"))
-    union = F.size("sp") + F.size("so") - inter
-    return (
-        cand.join(sp.hint("shuffle_hash"), "probe_doc")
-        .join(so.hint("shuffle_hash"), "other_doc")
-        .select(
-            "probe_doc",
-            "other_doc",
-            "hamming",
-            rounded(
-                F.lit(1.0) - F.col("hamming").cast("double") / _SIMHASH_BITS, 6
-            ).alias("est_agreement"),
-            rounded(inter.cast("double") / union, 6).alias("exact_jaccard"),
-        )
-        .orderBy("probe_doc", "other_doc")
-    )
-
+    sides = _with_sides(cand, sh, ["shingles"], ("probe_doc", "other_doc"), "doc_id")
+    return sides.select(
+        "probe_doc",
+        "other_doc",
+        "hamming",
+        rounded(
+            F.lit(1.0) - F.col("hamming").cast("double") / _SIMHASH_BITS, 6
+        ).alias("est_agreement"),
+        rounded(_set_jaccard(F.col("shingles1"), F.col("shingles2")), 6).alias(
+            "exact_jaccard"
+        ),
+    ).orderBy("probe_doc", "other_doc")
 
 
 # ---------------------------------------------------------------------------
@@ -1471,30 +1348,21 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-shuffled three times
     ds = (
         docs.select(
-            "source", F.explode(shingles_col(F.col("text"))).alias("shingle")
+            F.col("source").alias("cls"),
+            F.explode(shingles_col(F.col("text"))).alias("shingle"),
         )
         .distinct()
         .localCheckpoint(eager=False)
     )
-    sizes = ds.groupBy("source").agg(F.count("*").alias("n"))
-    a = ds.select(F.col("source").alias("src1"), "shingle")
-    b = ds.select(F.col("source").alias("src2"), "shingle")
-    inter = (
-        a.join(b.hint("shuffle_hash"), "shingle")
-        .filter(F.col("src1") < F.col("src2"))
-        .groupBy("src1", "src2")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = F.broadcast(sizes.select(F.col("source").alias("src1"), F.col("n").alias("n1")))
-    sb = F.broadcast(sizes.select(F.col("source").alias("src2"), F.col("n").alias("n2")))
+    sizes = ds.groupBy("cls").agg(F.count("*").alias("n"))
+    inter = _posting_pairs(ds, "shingle")
     return (
-        inter.join(sa, "src1")
-        .join(sb, "src2")
+        _with_sides(inter, sizes, ["n"], hint="broadcast")
         .select(
-            "src1",
-            "src2",
-            F.col("n1").cast("long").alias("n1"),
-            F.col("n2").cast("long").alias("n2"),
+            F.col("c1").alias("src1"),
+            F.col("c2").alias("src2"),
+            "n1",
+            "n2",
             F.col("n_common").cast("long").alias("n_common"),
             rounded(
                 F.col("n_common").cast("double")

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fantasy_premier_league_spark.functions import md5_hash, md5_hash_sql
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
 
@@ -435,7 +436,7 @@ _DOULION_MOD = 4  # keep-probability p = 1/4
     ),
     e AS (
       SELECT u, v FROM alle
-      WHERE ('0x' || substr(md5(u || ':' || v), 1, 8))::BIGINT
+      WHERE {md5_hash_sql("u || ':' || v")}
             % {_DOULION_MOD} = 0
     ),
     t AS (
@@ -457,18 +458,7 @@ def graph_triangle_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = _copurchase_is_small(spark, sf_dir)
     edges = _copurchase_edges(spark, sf_dir, small)
     keep = (
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.col("u"), F.col("v")).cast("binary")),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(_DOULION_MOD),
-        )
+        F.pmod(md5_hash(F.concat_ws(":", F.col("u"), F.col("v"))), F.lit(_DOULION_MOD))
         == 0
     )
     # r17: materialize the sampled edge list ONCE -- it previously fed

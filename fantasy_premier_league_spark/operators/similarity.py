@@ -39,42 +39,30 @@ def norm(a: Column) -> Column:
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, vec, label, nrm). The norm is a per-vector column, so a
+    pair join reads it instead of paying two sqrt folds per PAIR."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
+    v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec"), "label"
     )
+    return v.withColumn("nrm", norm(F.col("vec")))
 
 
-@register(
-    "ann_cosine_topk",
-    oracle=f"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS vec, label FROM embeddings
-    ),
-    q AS (SELECT vec_id AS query_id, vec AS qvec FROM v WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.query_id, v.vec_id,
-             round(list_dot_product(q.qvec, v.vec)
-               / (sqrt(list_dot_product(q.qvec, q.qvec))
-                  * sqrt(list_dot_product(v.vec, v.vec))), 6) + 0 AS cosine
-      FROM q JOIN v ON v.vec_id <> q.query_id
+def _top_k(scored: DataFrame, score: str) -> DataFrame:
+    """``scored`` (query_id, vec_id, score) cut to each query's TOP_K by
+    descending score, ties on vec_id, with the rank."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= TOP_K
     )
-    SELECT query_id, vec_id, cosine, CAST(rank AS INTEGER) AS rank FROM (
-      SELECT query_id, vec_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, vec_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
-    ORDER BY query_id, rank
-    """,
-)
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-SIDE norms computed once per row before the pair join (r17,
-    # guide §1.2; the dedup_embedding_cosine precedent): norm() is a
-    # per-vector quantity, and evaluating it inside the crossJoin paid
-    # 2 sqrt folds per (query, vector) PAIR -- |q|x the per-row cost on
-    # the corpus side. Same doubles, bit-identical rounded cosine.
-    v = _vectors(spark, sf_dir).withColumn("nrm", norm(F.col("vec")))
+
+
+def _cosine_topk(v: DataFrame) -> DataFrame:
+    """(query_id, vec_id, cosine, rank): the exact cosine top-K of each
+    query vector (vec_id < N_QUERIES) over every other vector of
+    ``_vectors`` -- the ground truth the approximate tiers are measured
+    against. The bounded query set broadcasts; the corpus never
+    shuffles."""
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("vec").alias("qvec"),
@@ -91,12 +79,42 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, "cosine")
+
+
+# oracle twin of _vectors + _cosine_topk: CTEs v, q, scored and exact
+_EXACT_TOPK_SQL = f"""
+    v AS (
+      SELECT vec_id, embedding::DOUBLE[] AS vec, label FROM embeddings
+    ),
+    q AS (SELECT vec_id AS query_id, vec AS qvec FROM v WHERE vec_id < {N_QUERIES}),
+    scored AS (
+      SELECT q.query_id, v.vec_id,
+             round(list_dot_product(q.qvec, v.vec)
+               / (sqrt(list_dot_product(q.qvec, q.qvec))
+                  * sqrt(list_dot_product(v.vec, v.vec))), 6) + 0 AS cosine
+      FROM q JOIN v ON v.vec_id <> q.query_id
+    ),
+    exact AS (
+      SELECT query_id, vec_id, cosine, CAST(rank AS INTEGER) AS rank FROM (
+        SELECT query_id, vec_id, cosine,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY cosine DESC, vec_id) AS rank
+        FROM scored
+      ) WHERE rank <= {TOP_K}
+    )"""
+
+
+@register(
+    "ann_cosine_topk",
+    oracle=f"""
+    WITH {_EXACT_TOPK_SQL}
+    SELECT query_id, vec_id, cosine, rank FROM exact
+    ORDER BY query_id, rank
+    """,
+)
+def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cosine_topk(_vectors(spark, sf_dir)).orderBy("query_id", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -105,10 +123,11 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (portable across engines -- no RNG at query time). Demonstrates the
 # bucket-join scale path: at 100 TB candidates meet on bucket equality,
 # cutting the cross product by ~2^bits; the exact re-rank then runs on
-# candidates only.
+# candidates only. A bucket code folds one bit per stride, most
+# significant first.
 # ---------------------------------------------------------------------------
 
-_LSH_BITS = 4
+_LSH_STRIDES = [1, 2, 4, 8]
 
 
 def _bit(vec: Column, stride: int) -> Column:
@@ -133,23 +152,18 @@ _BIT_SQL = """
 """
 
 
-def _bucket_col(vec: Column) -> Column:
-    return (
-        _bit(vec, 1) * 8 + _bit(vec, 2) * 4 + _bit(vec, 4) * 2 + _bit(vec, 8)
+def _sign_bucket(vec: Column, strides: list[int]) -> Column:
+    out = F.lit(0)
+    for k, stride in enumerate(strides):
+        out = out + _bit(vec, stride) * (1 << (len(strides) - 1 - k))
+    return out
+
+
+def _sign_bucket_sql(strides: list[int]) -> str:
+    return " + ".join(
+        f"({_BIT_SQL.format(stride=stride)}) * {1 << (len(strides) - 1 - k)}"
+        for k, stride in enumerate(strides)
     )
-
-
-# (`ann_lsh_buckets` -- the bare bucket-occupancy histogram -- was
-# retired in r15 under the N=200 budget to make room for the Python
-# DataSource streaming WRITER (s10_python_datasource_writer, the
-# r14-verdict-named candidate; sources/py_datasource.py). The function
-# body was deleted with the registration (the text_winnowing r14
-# precedent). Coverage of the sign-LSH assignment machinery continues
-# through `ann_lsh_recall` below, whose Spark side runs the identical
-# `_bucket_col` over the identical full embeddings table and whose
-# oracle embeds the identical _BIT_SQL bucket CTE; the one surface the
-# bare query alone exposed -- the per-bucket occupancy count -- was a
-# groupBy projection of the shared assignment.)
 
 
 # ---------------------------------------------------------------------------
@@ -164,26 +178,13 @@ def _bucket_col(vec: Column) -> Column:
 _NEARDUP_COS = 0.35  # synthetic corpus tops out ~0.51; 0.35 is selective
 
 # 8 hyperplane bits for the near-dup prefilter (vs the 4-bit coarse
-# assignment _bucket_col above): bucket count is THE pruning lever.
+# assignment of _LSH_STRIDES): bucket count is THE pruning lever.
 # 4 bits / 16 buckets leaves ~1/16 of the n^2 pair space as candidates
 # (measured: 5k vectors -> 1.6M candidate pairs, ~7 s at sf0.1); 8
 # bits / 256 buckets cuts candidate density ~16x further at the usual
 # recall cost, which is the knob a 100 TB run tunes (more tables for
 # recall, more bits for precision).
 _NEARDUP_STRIDES = [1, 2, 4, 8, 16, 32, 3, 5]
-
-
-def _neardup_bucket_col(vec: Column) -> Column:
-    out = F.lit(0)
-    for k, stride in enumerate(_NEARDUP_STRIDES):
-        out = out + _bit(vec, stride) * (1 << (len(_NEARDUP_STRIDES) - 1 - k))
-    return out
-
-
-_NEARDUP_BUCKET_SQL = " + ".join(
-    f"({_BIT_SQL.format(stride=stride)}) * {1 << (len(_NEARDUP_STRIDES) - 1 - k)}"
-    for k, stride in enumerate(_NEARDUP_STRIDES)
-)
 
 
 # Sorted-neighborhood window inside each LSH bucket (Hernandez &
@@ -204,7 +205,7 @@ _NEARDUP_WINDOW = 64
     b AS (
       SELECT vec_id,
              [x / sqrt(list_dot_product(vec, vec)) for x in vec] AS nvec,
-             {_NEARDUP_BUCKET_SQL} AS bucket
+             {_sign_bucket_sql(_NEARDUP_STRIDES)} AS bucket
       FROM v
     ),
     r AS (
@@ -228,19 +229,15 @@ _NEARDUP_WINDOW = 64
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = _vectors(spark, sf_dir)
     # normalize per ROW before the pair join: cosine then costs one dot
     # product per pair instead of dot + two norms (3x less of the
-    # dominant per-pair arithmetic). nrm must be materialized as a
-    # column FIRST -- referencing norm(vec) inside the transform lambda
-    # would re-run the whole reduction once per element.
-    v = (
-        raw.withColumn("nrm", norm(F.col("vec")))
-        .select(
-            "vec_id",
-            F.transform(F.col("vec"), lambda x: x / F.col("nrm")).alias("nvec"),
-            _neardup_bucket_col(F.col("vec")).alias("bucket"),
-        )
+    # dominant per-pair arithmetic). nrm is a column of _vectors --
+    # referencing norm(vec) inside the transform lambda would re-run the
+    # whole reduction once per element.
+    v = _vectors(spark, sf_dir).select(
+        "vec_id",
+        F.transform(F.col("vec"), lambda x: x / F.col("nrm")).alias("nvec"),
+        _sign_bucket(F.col("vec"), _NEARDUP_STRIDES).alias("bucket"),
     )
     ranked = v.withColumn(
         "rk", F.row_number().over(Window.partitionBy("bucket").orderBy("vec_id"))
@@ -334,15 +331,7 @@ _COS_SQL = """list_dot_product({a}, {b})
     """,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-SIDE norms once per row (r17, guide §1.2): the assignment
-    # crossJoin evaluated norm(vec) once per (vector, centroid) pair --
-    # nlist x the per-row cost over the whole corpus. Same doubles,
-    # bit-identical rounded cosines.
-    v = (
-        _vectors(spark, sf_dir)
-        .select("vec_id", "vec")
-        .withColumn("nrm", norm(F.col("vec")))
-    )
+    v = _vectors(spark, sf_dir)
     cent = v.filter(F.col("vec_id") < _NLIST).select(
         F.col("vec_id").alias("cid"),
         F.col("vec").alias("cvec"),
@@ -436,10 +425,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _vectors(spark, sf_dir)
-    n = v.select("label", norm(F.col("vec")).alias("nrm"))
     return (
-        n.groupBy("label")
+        _vectors(spark, sf_dir)
+        .groupBy("label")
         .agg(
             F.count("*").alias("n_vectors"),
             rounded(F.min("nrm"), 6).alias("min_norm"),
@@ -456,9 +444,7 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # approximation-quality readout every ANN deployment needs before
 # trusting the bucketed path -- computed here as a differential query
 # so the measurement itself is oracle-checked. Composes the exact
-# brute-force ranking (ann_cosine_topk's shape) with the bucket
-# assignment (ann_lsh_buckets' shape); both engines reuse their
-# existing, already-verified formulations.
+# ranking (_cosine_topk) with the 4-bit bucket code (_sign_bucket).
 #
 # The measured number is deliberately honest: one 4-bit sign-LSH table
 # over these 64-dim embeddings recalls only ~0-20% of the exact top-5
@@ -471,27 +457,12 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_lsh_recall",
-    oracle="""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-    ),
+    oracle=f"""
+    WITH {_EXACT_TOPK_SQL},
     b AS (
       SELECT vec_id,
-             {b0} * 8 + {b1} * 4 + {b2} * 2 + {b3} AS bucket
+             {_sign_bucket_sql(_LSH_STRIDES)} AS bucket
       FROM v
-    ),
-    q AS (SELECT vec_id AS query_id, vec AS qvec FROM v WHERE vec_id < {nq}),
-    exact AS (
-      SELECT query_id, vec_id, rank FROM (
-        SELECT q.query_id, v.vec_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round(list_dot_product(q.qvec, v.vec)
-                     / (sqrt(list_dot_product(q.qvec, q.qvec))
-                        * sqrt(list_dot_product(v.vec, v.vec))), 6) DESC,
-                   v.vec_id) AS rank
-        FROM q JOIN v ON v.vec_id <> q.query_id
-      ) WHERE rank <= {k}
     )
     SELECT e.query_id,
            CAST(count(*) AS BIGINT) AS k,
@@ -503,43 +474,17 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN b bq ON bq.vec_id = e.query_id
     JOIN b bv ON bv.vec_id = e.vec_id
     GROUP BY e.query_id ORDER BY e.query_id
-    """.format(
-        b0=_BIT_SQL.format(stride=1),
-        b1=_BIT_SQL.format(stride=2),
-        b2=_BIT_SQL.format(stride=4),
-        b3=_BIT_SQL.format(stride=8),
-        nq=N_QUERIES,
-        k=TOP_K,
-    ),
+    """,
 )
 def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-side norms once per row (r17, guide §1.2; see ann_cosine_topk)
-    v = _vectors(spark, sf_dir).withColumn("nrm", norm(F.col("vec")))
-    buckets = v.select("vec_id", _bucket_col(F.col("vec")).alias("bucket"))
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    exact = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            rounded(
-                dot(F.col("qvec"), F.col("vec")) / (F.col("qnrm") * F.col("nrm")), 6
-            ).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    v = _vectors(spark, sf_dir)
+    buckets = v.select("vec_id", _sign_bucket(F.col("vec"), _LSH_STRIDES).alias("bucket"))
     bq = buckets.select(F.col("vec_id").alias("query_id"), F.col("bucket").alias("q_bucket"))
     bv = buckets.select(F.col("vec_id").alias("vec_id"), F.col("bucket").alias("v_bucket"))
     hit = F.when(F.col("q_bucket") == F.col("v_bucket"), 1).otherwise(0)
     return (
-        exact.join(F.broadcast(bq), "query_id")
+        _cosine_topk(v)
+        .join(F.broadcast(bq), "query_id")
         .join(bv, "vec_id")
         .groupBy("query_id")
         .agg(
@@ -575,9 +520,7 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_sq8_recall",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-    ),
+    WITH {_EXACT_TOPK_SQL},
     qz AS (
       SELECT vec_id,
              list_transform(vec,
@@ -588,25 +531,8 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     qn AS (
       SELECT vec_id, code, list_dot_product(code, code) AS self_dot FROM qz
     ),
-    q AS (SELECT vec_id AS query_id, vec AS qvec FROM v WHERE vec_id < {N_QUERIES}),
     qq AS (SELECT vec_id AS query_id, code AS qcode, self_dot AS q_self
            FROM qn WHERE vec_id < {N_QUERIES}),
-    exact AS (
-      SELECT query_id, vec_id, cosine, rank FROM (
-        SELECT q.query_id, v.vec_id,
-               round(list_dot_product(q.qvec, v.vec)
-                     / (sqrt(list_dot_product(q.qvec, q.qvec))
-                        * sqrt(list_dot_product(v.vec, v.vec))) * 1000000) / 1000000
-                 AS cosine,
-               row_number() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY round(list_dot_product(q.qvec, v.vec)
-                     / (sqrt(list_dot_product(q.qvec, q.qvec))
-                        * sqrt(list_dot_product(v.vec, v.vec))) * 1000000) / 1000000 DESC,
-                   v.vec_id) AS rank
-        FROM q JOIN v ON v.vec_id <> q.query_id
-      ) WHERE rank <= {TOP_K}
-    ),
     approx AS (
       SELECT query_id, vec_id, qcos, rank FROM (
         SELECT qq.query_id, c.vec_id,
@@ -634,41 +560,19 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-side norms once per row (r17, guide §1.2; see ann_cosine_topk)
-    v = _vectors(spark, sf_dir).withColumn("nrm", norm(F.col("vec")))
+    v = _vectors(spark, sf_dir)
     scale = F.array_max(F.transform(F.col("vec"), lambda y: F.abs(y)))
     qz = v.select(
         "vec_id",
         F.transform(F.col("vec"), lambda x: F.round(x / scale * 127)).alias("code"),
     )
     qn = qz.withColumn("self_dot", dot(F.col("code"), F.col("code")))
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
     qq = qn.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("code").alias("qcode"),
         F.col("self_dot").alias("q_self"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    exact = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            rounded(
-                dot(F.col("qvec"), F.col("vec")) / (F.col("qnrm") * F.col("nrm")),
-                6,
-            ).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), F.col("vec_id"))
-    approx = (
+    qscored = (
         qn.crossJoin(F.broadcast(qq))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -680,16 +584,13 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("qcos"),
         )
-        .withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "qcos")
     )
-    a2 = approx.select(
+    a2 = _top_k(qscored, "qcos").select(
         F.col("query_id").alias("a_query_id"),
         F.col("vec_id").alias("a_vec_id"),
         "qcos",
     )
-    joined = exact.join(
+    joined = _cosine_topk(v).join(
         F.broadcast(a2),
         (F.col("a_query_id") == F.col("query_id")) & (F.col("a_vec_id") == F.col("vec_id")),
         "left",
@@ -776,6 +677,22 @@ def _exact_chain_sql(left: str, right: str) -> str:
     )
 
 
+def _l2_exact_sql() -> str:
+    """CTE ``exact`` (query_id, vec_id, edist): the exact squared-L2
+    top-K of each query in ``q`` over ``f`` -- the PQ tiers' yardstick."""
+    chain = _exact_chain_sql("f", "q")
+    return f"""
+    exact AS (
+      SELECT query_id, vec_id, edist FROM (
+        SELECT q.vec_id AS query_id, f.vec_id, {chain} AS edist,
+               row_number() OVER (PARTITION BY q.vec_id
+                                  ORDER BY {chain} ASC, f.vec_id ASC) AS rank
+        FROM q, f
+        WHERE f.vec_id <> q.vec_id
+      ) WHERE rank <= {TOP_K}
+    )"""
+
+
 def _pq_train_ctes() -> str:
     """Per-subspace codebook-training + query-LUT CTE text; expects
     CTEs ``f`` (quantized features) and ``q`` (query subset of f) to be
@@ -840,7 +757,6 @@ def _adc_sum_sql() -> str:
 
 
 def _pq_oracle() -> str:
-    exact_chain = _exact_chain_sql("f", "q")
     lut_joins = _lut_joins_sql()
     adc_sum = _adc_sum_sql()
     sql = (
@@ -863,16 +779,7 @@ def _pq_oracle() -> str:
                                   ORDER BY adist ASC, vec_id ASC) AS rank
         FROM adc
       ) WHERE rank <= {TOP_K}
-    ),
-    exact AS (
-      SELECT query_id, vec_id, edist FROM (
-        SELECT q.vec_id AS query_id, f.vec_id, {exact_chain} AS edist,
-               row_number() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {exact_chain} ASC, f.vec_id ASC) AS rank
-        FROM q, f
-        WHERE f.vec_id <> q.vec_id
-      ) WHERE rank <= {TOP_K}
-    )
+    ),{_l2_exact_sql()}
     SELECT e.query_id,
            CAST(count(*) AS BIGINT) AS k,
            CAST(count(a.vec_id) AS BIGINT) AS n_hits,
@@ -1019,6 +926,23 @@ def _full_dist2(a: Column, b: Column) -> Column:
     )
 
 
+def _l2_topk(feats: DataFrame, q: DataFrame) -> DataFrame:
+    """(query_id, vec_id, edist, rank): the exact squared-L2 top-K of
+    each query (query_id, xs) over every other vector of ``feats`` --
+    the PQ tiers' yardstick; the bounded query set broadcasts."""
+    qf = q.select("query_id", F.col("xs").alias("qxs"))
+    w = Window.partitionBy("query_id").orderBy(F.col("edist").asc(), F.col("vec_id"))
+    return (
+        feats.crossJoin(F.broadcast(qf))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id", "vec_id", _full_dist2(F.col("xs"), F.col("qxs")).alias("edist")
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+    )
+
+
 @register("ann_pq_recall", oracle=_pq_oracle())
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = _pq_feats_df(spark, sf_dir)
@@ -1043,24 +967,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "adist",
         )
     )
-    qf = q_ids.select("query_id", F.col("xs").alias("qxs"))
-    edist = F.aggregate(
-        F.zip_with(
-            "xs", "qxs", lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    we = Window.partitionBy("query_id").orderBy(F.col("edist").asc(), F.col("vec_id"))
-    exact = (
-        feats.crossJoin(F.broadcast(qf))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", edist.alias("edist"))
-        .withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-    )
-    joined = exact.join(
+    joined = _l2_topk(feats, q_ids).join(
         F.broadcast(approx),
         (F.col("a_query_id") == F.col("query_id"))
         & (F.col("a_vec_id") == F.col("vec_id")),
@@ -1184,16 +1091,7 @@ def _ivfpq_oracle() -> str:
         JOIN f ON f.vec_id = s.vec_id
         JOIN q ON q.vec_id = s.query_id
       ) WHERE rn <= {TOP_K}
-    ),
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.vec_id AS query_id, f.vec_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {fq} ASC, f.vec_id ASC) AS rank
-        FROM q, f
-        WHERE f.vec_id <> q.vec_id
-      ) WHERE rank <= {TOP_K}
-    ),
+    ),{_l2_exact_sql()},
     candn AS (SELECT query_id, count(*) AS n_cand FROM cand GROUP BY query_id)
     SELECT e.query_id,
            CAST(any_value(cn.n_cand) AS BIGINT) AS n_cand,
@@ -1279,20 +1177,8 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("query_id").alias("r_query_id"), F.col("vec_id").alias("r_vec_id")
         )
     )
-    # the yardstick: exact top-k over the full corpus
-    we = Window.partitionBy("query_id").orderBy(F.col("edist").asc(), F.col("vec_id"))
-    exact = (
-        feats.crossJoin(F.broadcast(qf))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", "vec_id", _full_dist2(F.col("xs"), F.col("qxs")).alias("edist")
-        )
-        .withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
     candn = cand.groupBy("query_id").agg(F.count("*").alias("n_cand"))
-    joined = exact.join(
+    joined = _l2_topk(feats, q).join(
         F.broadcast(rerank),
         (F.col("r_query_id") == F.col("query_id"))
         & (F.col("r_vec_id") == F.col("vec_id")),

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fantasy_premier_league_spark.functions import rounded
+from fantasy_premier_league_spark.functions import md5_hash, md5_hash_sql, rounded
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
 
@@ -30,19 +30,12 @@ _M = 16  # registers; alpha_16 from the HLL paper (Flajolet et al. 2007)
 _ALPHA = 0.673
 
 
-def _hash32(c: Column) -> Column:
-    """Portable 32-bit hash: first 8 hex chars of md5 (same in DuckDB)."""
-    return F.conv(F.substring(F.md5(c.cast("string").cast("binary")), 1, 8), 16, 10).cast(
-        "long"
-    )
-
-
 @register(
     "sketch_hll_distinct",
     oracle=f"""
     WITH h AS (
       SELECT event_type,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT AS h
+             {md5_hash_sql("CAST(user_id AS VARCHAR)")} AS h
       FROM events
     ),
     r AS (
@@ -75,7 +68,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     bias is part of the pinned, reproducible answer.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = _hash32(F.col("user_id"))
+    h = md5_hash(F.col("user_id"))
     w = F.shiftright(h, 4)  # h // 16: top 28 bits
     # leftmost-1 position via INTEGER bit arithmetic: floor(log2(w)) =
     # len(bin(w)) - 1 exactly, with no libm transcendental whose last
@@ -208,10 +201,7 @@ _CMS_ROWS = (0, 1)
 
 def _cms_bucket(tok: Column, row: int) -> Column:
     salted = F.concat(F.lit(f"r{row}:"), tok)
-    return F.pmod(
-        F.conv(F.substring(F.md5(salted.cast("binary")), 1, 8), 16, 10).cast("long"),
-        F.lit(_CMS_W),
-    )
+    return F.pmod(md5_hash(salted), F.lit(_CMS_W))
 
 
 @register(
@@ -221,7 +211,7 @@ def _cms_bucket(tok: Column, row: int) -> Column:
       SELECT unnest(string_split(text, ' ')) AS tok FROM documents
     ),
     cells AS (
-      SELECT r, ('0x' || substr(md5('r' || r || ':' || tok), 1, 8))::BIGINT
+      SELECT r, {md5_hash_sql("'r' || r || ':' || tok")}
                  % {_CMS_W} AS bucket,
              count(*) AS c
       FROM toks, (SELECT unnest([0, 1]) AS r)
@@ -234,7 +224,7 @@ def _cms_bucket(tok: Column, row: int) -> Column:
       SELECT p.tok, min(c.c) AS est_count
       FROM probes p
       JOIN cells c
-        ON c.bucket = ('0x' || substr(md5('r' || c.r || ':' || p.tok), 1, 8))::BIGINT
+        ON c.bucket = {md5_hash_sql("'r' || c.r || ':' || p.tok")}
                       % {_CMS_W}
       GROUP BY p.tok
     )
@@ -294,7 +284,7 @@ _KMV_K = 32
     oracle=f"""
     WITH act AS (
       SELECT DISTINCT event_type,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h,
+             {md5_hash_sql("CAST(user_id AS VARCHAR)", 15)} AS h,
              user_id
       FROM events WHERE value >= 90
     ),
@@ -356,13 +346,7 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "user_id",
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h"),
+            md5_hash(F.col("user_id"), 15).alias("h"),
         )
         .distinct()
     )

@@ -13,7 +13,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fantasy_premier_league_spark.functions import rounded
+from fantasy_premier_league_spark.functions import md5_hash, md5_hash_sql, rounded
+from fantasy_premier_league_spark.operators.dedup import (
+    _capped_postings,
+    _collapse_classes,
+    _doc_pairs,
+    _posting_pairs,
+    _within_token_limit,
+)
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
 
@@ -227,26 +234,25 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _doc_pct() -> Column:
+    return F.pmod(md5_hash(F.col("doc_id")), F.lit(100))
+
+
+_DOC_PCT_SQL = md5_hash_sql("CAST(doc_id AS VARCHAR)") + " % 100"
+
+
 @register(
     "sample_hash_split",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang
     FROM documents
-    WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 10
+    WHERE {_DOC_PCT_SQL} < 10
     ORDER BY doc_id
     """,
 )
 def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pct = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(100),
-    )
-    return docs.filter(pct < 10).select("doc_id", "lang").orderBy("doc_id")
+    return docs.filter(_doc_pct() < 10).select("doc_id", "lang").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -363,7 +369,7 @@ _STRATA_RATES = {"en": 20, "zh": 80, "es": 80, "de": 80, "fr": 80}  # percent
     oracle=f"""
     SELECT lang, CAST(count(*) AS BIGINT) AS n_sampled
     FROM documents
-    WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+    WHERE {_DOC_PCT_SQL}
           < CASE lang {' '.join(f"WHEN '{k}' THEN {v}" for k, v in _STRATA_RATES.items())}
             ELSE 50 END
     GROUP BY lang ORDER BY lang
@@ -371,19 +377,11 @@ _STRATA_RATES = {"en": 20, "zh": 80, "es": 80, "de": 80, "fr": 80}  # percent
 )
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pct = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(100),
-    )
     rate = F.lit(50)
     for k, v in _STRATA_RATES.items():
         rate = F.when(F.col("lang") == k, v).otherwise(rate)
     return (
-        docs.filter(pct < rate)
+        docs.filter(_doc_pct() < rate)
         .groupBy("lang")
         .agg(F.count("*").alias("n_sampled"))
         .orderBy("lang")
@@ -408,48 +406,20 @@ _WINNOW_W = 4
 _POS_BITS = 1 << 20
 
 
-# (`text_winnowing` -- the bare per-document fingerprint table -- was
-# retired in r14 under the N=200 registration budget to make room for
-# the state-store reader query (t19, the r13-precedented paired swap).
-# Coverage of the winnowing machinery continues through
-# `dedup_winnowing_pairs` below, which runs the identical
-# `_winnow_selected` pipeline (its oracle embeds the same CTE chain
-# verbatim) plus the df-capped posting join; the one surface the bare
-# query alone exposed -- the (pos, fp) unpacking of the packed key --
-# is a pure projection of the shared pipeline's output.)
-
-
 def _winnow_selected(docs: DataFrame) -> DataFrame:
     """Distinct selected (doc_id, k) winnowing keys of a documents
     frame, k = hash32 * 2^20 + pos. Factored out so the pairs operator
-    can winnow class REPRESENTATIVES only (round-8 exact-dup collapse).
+    can winnow class REPRESENTATIVES only (exact-dup collapse).
     """
     # shingle construction stays inside codegen: split ONCE into a
     # token array, then transform() -- no self-join, no Python. The
     # size guard matters: Spark's sequence(0, -1) DESCENDS instead of
-    # returning empty.
-    # (hash, pos) pack shares one 64-bit key: pos gets the low 20 bits,
-    # so a document with >= 2^20 tokens would silently overflow pos into
-    # the hash bits -- identically on both engines, invisible to the
-    # differential gate. Fail LOUDLY instead: raise_error on oversized
-    # docs (none exist in any testdata SF; a 100 TB deployment shards
-    # giant docs upstream or widens _POS_BITS).
+    # returning empty. pos gets the low 20 bits of the packed key.
     toks = docs.select(
         "doc_id",
-        F.when(
-            F.size(F.split("text", " ")) < F.lit(_POS_BITS),
-            F.split("text", " "),
-        )
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("text_winnowing: document exceeds 2^20 tokens, "
-                          "position bits would overflow: doc_id="),
-                    F.col("doc_id").cast("string"),
-                )
-            )
-        )
-        .alias("t"),
+        _within_token_limit(
+            F.split("text", " "), _POS_BITS, "dedup_winnowing_pairs"
+        ).alias("t"),
     )
     shingled = toks.select(
         "doc_id",
@@ -462,12 +432,8 @@ def _winnow_selected(docs: DataFrame) -> DataFrame:
             )
         ).alias("pos0", "shingle"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "shingle")
-    hash32 = F.conv(
-        F.substring(F.md5(F.col("shingle").cast("binary")), 1, 8), 16, 10
-    ).cast("long")
-    keyed = shingled.select(
-        "doc_id", "pos", (hash32 * _POS_BITS + F.col("pos")).alias("k")
-    )
+    k = md5_hash(F.col("shingle")) * _POS_BITS + F.col("pos")
+    keyed = shingled.select("doc_id", "pos", k.alias("k"))
     win = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -502,8 +468,8 @@ _WINNOW_MAXDF = 50  # fingerprints in more docs than this are stop-patterns
     ),
     keyed AS (
       SELECT doc_id, pos,
-             ('0x' || substr(md5(t[pos] || ' ' || t[pos + 1] || ' ' || t[pos + 2]),
-                             1, 8))::BIGINT * {_POS_BITS} + pos AS k
+             {md5_hash_sql("t[pos] || ' ' || t[pos + 1] || ' ' || t[pos + 2]")}
+               * {_POS_BITS} + pos AS k
       FROM pos
     ),
     sel AS (
@@ -530,99 +496,45 @@ _WINNOW_MAXDF = 50  # fingerprints in more docs than this are stop-patterns
     """,
 )
 def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing posting join over exact-dup CLASSES (round-8 collapse,
-    the r7 lesson applied to the third posting-join sibling): identical
-    texts share identical fingerprint sets, so winnowing, the df count,
-    and the pair self-join all run once per DISTINCT text; class pairs
-    expand back through the membership mapping at the end. The df cap
-    counts DOCUMENTS in the raw form, so class postings are weighted by
-    member count before the df sum; within-class (identical-doc) pairs
-    share exactly the class's live-fingerprint count, emitted only when
-    that count clears _WINNOW_SHARED -- byte-identical semantics to the
-    raw doc-level join the oracle encodes.
+    """Winnowing posting join over exact-dup classes: identical texts
+    share identical fingerprint sets, so winnowing, the df count and the
+    pair self-join run once per distinct text, and class pairs expand
+    back through the membership mapping at the end. The df cap counts
+    DOCUMENTS as in the doc-level join (_capped_postings); members of
+    one class share the class's live-fingerprint count, and pair up
+    when that count clears _WINNOW_SHARED.
 
     Classes use the text digest (not the shingle-list digest of the
     jaccard tier) because winnowing keys depend on token POSITIONS, not
     just the shingle set."""
-    from fantasy_premier_league_spark.operators.dedup import _expand_class_pairs
-
     docs = load_table(spark, sf_dir, "documents")
-    classed = docs.select(
-        "doc_id", F.md5(F.col("text").cast("binary")).alias("digest")
+    mapping, reps = _collapse_classes(
+        docs.select("doc_id", F.md5(F.col("text").cast("binary")).alias("digest")), []
     )
-    # class id and member count from ONE digest-partitioned window
-    # (r17, the _shingle_classes fix applied to the text-digest
-    # collapse: the former groupBy(digest) + join back + a second
-    # mapping groupBy(cls) for the member count re-shuffled the doc
-    # list three times for two per-class constants)
-    wd = Window.partitionBy("digest")
-    annotated = classed.select(
-        "doc_id",
-        F.min("doc_id").over(wd).alias("cls"),
-        F.count("*").over(wd).alias("m"),
-    )
-    mapping = (
-        annotated.select("doc_id", "cls")
-        .localCheckpoint(eager=False)  # feeds reps, expansion
-    )
-    members = annotated.filter(F.col("doc_id") == F.col("cls")).select(
-        "cls", "m"
-    )
-    reps = docs.join(
-        mapping.filter(F.col("doc_id") == F.col("cls")).select("doc_id"),
-        "doc_id",
-        "leftsemi",
-    )
-    # the fingerprint set feeds three consumers (df filter + both sides
-    # of the self-join); materialize it once instead of re-running the
-    # shingle+window pipeline per consumer
+    rep_docs = docs.join(reps.select(F.col("cls").alias("doc_id")), "doc_id", "leftsemi")
     fps = (
-        _winnow_selected(reps)
+        _winnow_selected(rep_docs)
         .select(
             F.col("doc_id").alias("cls"),
             (F.col("k") / _POS_BITS).cast("long").alias("fp"),
         )
         .distinct()
-        .localCheckpoint()
     )
-    live = (
-        fps.join(members.hint("shuffle_hash"), "cls")
-        .groupBy("fp")
-        .agg(F.sum("m").alias("df"))
-        .filter(F.col("df") <= _WINNOW_MAXDF)
-    )
-    posting = fps.join(F.broadcast(live.select("fp")), "fp")
-    left = posting.select(F.col("fp"), F.col("cls").alias("c1"))
-    right = posting.select(F.col("fp"), F.col("cls").alias("c2"))
+    # the shingle + window pipeline is the costly stage and the posting
+    # table feeds both the df count and the capped join: build it once
+    posting = fps.join(reps.select("cls", "m").hint("shuffle_hash"), "cls").localCheckpoint()
+    live = _capped_postings(posting, "fp", _WINNOW_MAXDF)
     cpairs = (
-        left.join(right, "fp")
-        .filter(F.col("c1") < F.col("c2"))
-        .groupBy("c1", "c2")
+        _posting_pairs(live, "fp")
+        .filter(F.col("n_common") >= _WINNOW_SHARED)
+        .select("c1", "c2", F.col("n_common").alias("n_shared"))
+    )
+    same = (
+        live.groupBy("cls")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= _WINNOW_SHARED)
     )
-    cross = _expand_class_pairs(mapping, cpairs, ["n_shared"])
-    within_counts = (
-        posting.groupBy("cls")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= _WINNOW_SHARED)
-        .withColumnRenamed("cls", "wc_cls")
-    )
-    ma, mb = mapping.alias("ma"), mapping.alias("mb")
-    within = (
-        ma.join(
-            mb.hint("shuffle_hash"),
-            (F.col("ma.cls") == F.col("mb.cls"))
-            & (F.col("ma.doc_id") < F.col("mb.doc_id")),
-        )
-        .join(within_counts.hint("shuffle_hash"), F.col("ma.cls") == F.col("wc_cls"))
-        .select(
-            F.col("ma.doc_id").alias("doc1"),
-            F.col("mb.doc_id").alias("doc2"),
-            "n_shared",
-        )
-    )
-    return cross.unionByName(within).orderBy("doc1", "doc2")
+    return _doc_pairs(mapping, cpairs, same).orderBy("doc1", "doc2")
 
 
 # ---------------------------------------------------------------------------
@@ -773,10 +685,10 @@ def text_subword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_source_mix",
-    oracle="""
+    oracle=f"""
     WITH rated AS (
       SELECT doc_id, source, lang,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+             {_DOC_PCT_SQL}
                AS pct,
              10 * (1 + CAST(substr(source, 4) AS INT) % 4) AS rate
       FROM documents
@@ -787,17 +699,11 @@ def text_subword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def docs_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pct = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(100),
-    )
     rate = 10 * (1 + F.pmod(F.substring("source", 4, 10).cast("int"), F.lit(4)))
     return (
-        docs.filter(pct < rate).select("doc_id", "source", "lang").orderBy("doc_id")
+        docs.filter(_doc_pct() < rate)
+        .select("doc_id", "source", "lang")
+        .orderBy("doc_id")
     )
 
 
@@ -1418,7 +1324,7 @@ _RESERVOIR_K = 4
       SELECT event_type, event_id, user_id,
              row_number() OVER (
                PARTITION BY event_type
-               ORDER BY ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8))::BIGINT,
+               ORDER BY {md5_hash_sql("CAST(event_id AS VARCHAR)")},
                         event_id) AS slot
       FROM events
     ) WHERE slot <= {_RESERVOIR_K}
@@ -1427,11 +1333,7 @@ _RESERVOIR_K = 4
 )
 def sample_reservoir_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    hkey = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string").cast("binary")), 1, 8),
-        16,
-        10,
-    ).cast("long")
+    hkey = md5_hash(F.col("event_id"))
     w = Window.partitionBy("event_type").orderBy("hkey", "event_id")
     return (
         ev.select("event_type", "event_id", "user_id", hkey.alias("hkey"))

@@ -79,6 +79,39 @@ CHANGED_THIS_ROUND: list[str] = [
     "a6_chemistry_pairs",
     "ml_kmeans_rating_impute",
     "ml_kmeans_chemistry_impute",
+    # One filter-then-verify path for the near-dup and similarity family
+    # (operators/dedup.py stages) and one md5_hash helper
+    # (functions/scalars.py) for every query that hashes.
+    "dedup_ngram_jaccard",
+    "dedup_minhash_signatures",
+    "dedup_minhash_lsh_candidates",
+    "dedup_simhash_pairs",
+    "dedup_cluster_components",
+    "dedup_minhash_accuracy",
+    "dedup_prefix_filter_pairs",
+    "dedup_chunk_spans",
+    "dedup_containment_pairs",
+    "dedup_cluster_keep_best",
+    "dedup_simhash_accuracy",
+    "corpus_source_overlap",
+    "dedup_winnowing_pairs",
+    "dedup_embedding_cosine",
+    "ann_cosine_topk",
+    "ann_lsh_recall",
+    "ann_sq8_recall",
+    "ann_ivf_topk",
+    "ann_pq_recall",
+    "ann_ivfpq_recall",
+    "emb_norm_stats",
+    "sample_hash_split",
+    "sample_stratified",
+    "docs_source_mix",
+    "sample_reservoir_per_key",
+    "sketch_hll_distinct",
+    "sketch_cms_heavy_hitters",
+    "sketch_kmv_setops",
+    "graph_triangle_doulion",
+    "t10_stream_hll",
 ]
 # (The 28 r17 entries -- triangle counts, blocked pairs, req1 shared
 # trace, perceptron fused readouts, t18 staging, CC cached edges,

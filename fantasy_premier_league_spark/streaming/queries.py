@@ -27,7 +27,14 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fantasy_premier_league_spark.functions import epoch_us, fixed_units, rounded, scoped_conf
+from fantasy_premier_league_spark.functions import (
+    epoch_us,
+    fixed_units,
+    md5_hash,
+    md5_hash_sql,
+    rounded,
+    scoped_conf,
+)
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import canonicalize_ts, load_table
 from fantasy_premier_league_spark.streaming.pipeline import run_stream_to_memory
@@ -304,7 +311,7 @@ _HLL_ALPHA = 0.673
     oracle=f"""
     WITH h AS (
       SELECT event_type,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT AS h
+             {md5_hash_sql("CAST(user_id AS VARCHAR)")} AS h
       FROM events
     ),
     r AS (
@@ -322,9 +329,7 @@ _HLL_ALPHA = 0.673
     """,
 )
 def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 8), 16, 10
-    ).cast("long")
+    h = md5_hash(F.col("user_id"))
     w = F.shiftright(h, 4)
     rho = F.when(w == 0, F.lit(29)).otherwise(
         (F.lit(29) - F.length(F.bin(w))).cast("int")

@@ -589,12 +589,35 @@ def test_topk_per_group_uses_window_group_limit(spark, name):
 # ---------------------------------------------------------------------------
 
 
-def test_containment_pairs_join_shape(spark):
-    """The posting-list self-join must hash-join (never sort-merge: no
-    downstream order need) and must never broadcast a corpus side."""
-    plan = plan_of(all_queries()["dedup_containment_pairs"](spark, SF))
-    assert "SortMergeJoin" not in plan, f"containment self-join sorts:\n{plan}"
-    assert "ShuffledHashJoin" in plan, f"containment self-join not SHJ:\n{plan}"
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_containment_pairs", "dedup_minhash_lsh_candidates", "dedup_simhash_pairs"],
+)
+def test_containment_pairs_join_shape(spark, name):
+    """The bucket self-join (posting list or LSH band) must hash-join
+    (never sort-merge: no downstream order need) and must never
+    broadcast a corpus side."""
+    plan = plan_of(all_queries()[name](spark, SF))
+    assert "SortMergeJoin" not in plan, f"{name}: bucket self-join sorts:\n{plan}"
+    assert "ShuffledHashJoin" in plan, f"{name}: bucket self-join not SHJ:\n{plan}"
+
+
+def test_md5_hash_is_spelled_only_in_its_helper():
+    """The portable md5-prefix hash has one Spark and one DuckDB spelling,
+    functions/scalars.py md5_hash/md5_hash_sql; every query that hashes
+    calls them, so the two engines cannot drift apart per query."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "fantasy_premier_league_spark"
+    helper = pkg / "functions" / "scalars.py"
+    hits = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != helper
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "F.substring(F.md5(" in line or "substr(md5(" in line
+    ]
+    assert not hits, f"md5-prefix hash spelled outside md5_hash: {hits}"
 
 
 def test_chem_blocked_pairs_pins_probe_parallelism(spark):

@@ -124,9 +124,9 @@ NONNEG_ROUNDS: dict[str, int] = {
     "w5_range_frame": 1,
     # -- ratios / probabilities / counts in [0, 1] or [0, inf) --
     "ann_ivfpq_recall": 1,
-    "ann_lsh_recall": 2,
+    "ann_lsh_recall": 1,
     "ann_pq_recall": 2,  # recall + mean ABS distance error
-    "ann_sq8_recall": 7,  # recalls, abs err, ORDER BY intermediates
+    "ann_sq8_recall": 5,  # recalls, abs err, ORDER BY intermediates
     "c8_safe_division": 2,  # coalesce(nonneg-ratio, 0.0)
     "corpus_source_overlap": 1,  # jaccard
     "dedup_containment_pairs": 2,

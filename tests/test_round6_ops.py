@@ -161,6 +161,24 @@ def test_chunk_dedup_is_conservative_and_lossless_on_uniques(spark):
     assert total_kept == distinct_chunks, (total_kept, distinct_chunks)
 
 
+def test_chunk_spans_fails_on_an_over_limit_document(spark, tmp_path, monkeypatch):
+    """A document too long for the packed (doc_id, chunk) key must fail
+    the query, not vanish from it: the oracle keeps every document."""
+    import pyarrow as pa
+    import pytest
+
+    from fantasy_premier_league_spark.operators import dedup
+
+    texts = ["a b c", " ".join(f"w{i}" for i in range(40))]
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2], pa.int64()), "text": texts}),
+        str(tmp_path / "documents.parquet"),
+    )
+    monkeypatch.setattr(dedup, "_CHUNK_POS", 2)  # limit: 2 chunks = 16 tokens
+    with pytest.raises(Exception, match="dedup_chunk_spans: document has 16"):
+        dedup.dedup_chunk_spans(spark, str(tmp_path)).collect()
+
+
 def test_fuzzy_search_self_similarity_wins(spark):
     """Rank 1 for every probe must carry the highest Jaccard, and all
     scores must be valid (0, 1] with rank strictly ordered."""
