@@ -4,31 +4,34 @@ asks for KMeans k=5 profile clustering and a quadratic rating-vs-age
 regression with a rating<0.2 => "retired" rule; no reference code
 exists for either).
 
-Two implementations of clustering:
+Clustering is one deterministic Lloyd's algorithm expressed AS
+DATAFRAME OPS (broadcast centroids -> assign -> re-center, iterated),
+with one Spark and one DuckDB spelling per step below. It serves every
+clustering and quantizer of the package: ``ml_kmeans_profiles``, the
+FPL player clustering behind the rating and chemistry imputations,
+``ml_kmeans_embeddings`` (the spec's k=5 over the 64-dim vectors) and
+``dedup_semantic_clusters``, and the PQ codebooks and IVF-PQ coarse
+cells of ``operators/similarity.py``. This is also the 100 TB shape:
+per iteration one broadcast join (centroids are tiny) + one groupBy(k)
+-- the corpus never shuffles on anything wider than the cluster id,
+and AQE handles the skew when one centroid captures most points.
 
-- ``ml_kmeans_profiles``: Lloyd's algorithm expressed AS DATAFRAME OPS
-  (broadcast centroids -> assign -> re-center, iterated), fully
-  deterministic so a DuckDB oracle verifies every assignment. This is
-  also the 100 TB shape: per iteration one broadcast join (centroids
-  are tiny) + one groupBy(k) -- the corpus never shuffles on anything
-  wider than the cluster id, and AQE handles the skew when one
-  centroid captures most points.
-- ``ml_kmeans_embeddings``: the spec'd pyspark.ml KMeans over the
-  64-dim embedding vectors (seeded; MLlib's init is still
-  sampling-based, so this registers without an oracle and the driver
-  applies the rows-only check).
-
-Determinism notes for the oracle twin (the whole trick of
-``ml_kmeans_profiles``): features are EXACT INTEGERS (value summed in
-fixed-point units, event counts), so centroid means are
+Determinism notes for the oracle twins: features are EXACT INTEGERS
+(value summed in fixed-point units, event counts, float32 embedding
+components scaled by 2^20 and floored), so centroid means are
 exact-integer-sum / count -- bit-identical across engines regardless
-of summation order. Distances and comparisons then see identical
-doubles on both sides. The same trick makes the regression exact: all
-normal-equation moments are integer sums, and Cramer's rule is written
-with the identical expression tree in Spark and SQL.
+of summation order. Distances are one left-associated fold and argmin
+ties go to the lowest centroid id, so both engines see identical
+doubles and pick identical centroids; MLlib's sampled init, which SQL
+cannot reproduce, is replaced by the first-k seed. The same trick
+makes the regression exact: all normal-equation moments are integer
+sums, and Cramer's rule is written with the identical expression tree
+in Spark and SQL.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,319 +40,278 @@ from fantasy_premier_league_spark.functions import fixed_units, rounded
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
 
-_K = 4
-_ITERS = 3
-
-_FEATURES_SQL = """
-      SELECT user_id,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
-             count(*) AS y
-      FROM events GROUP BY user_id
-"""
-
-
-def user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user profile features, exact-integer valued: x = total value
-    in cents, y = event count."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.sum(fixed_units(F.col("value"))).alias("x"),
-        F.count("*").alias("y"),
-    )
-
-
-def _dist2(x: Column, y: Column, cx: Column, cy: Column) -> Column:
-    dx = x.cast("double") - cx
-    dy = y.cast("double") - cy
-    return dx * dx + dy * dy
-
-
-def _assign(feats: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast join + windowed argmin."""
-    rn = F.row_number().over(
-        Window.partitionBy("user_id").orderBy(
-            _dist2(F.col("x"), F.col("y"), F.col("cx"), F.col("cy")).asc(),
-            F.col("cid").asc(),
-        )
-    )
-    return (
-        feats.crossJoin(F.broadcast(cent))
-        .withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select("user_id", "x", "y", "cid")
-    )
-
-
-def _recenter(assigned: DataFrame) -> DataFrame:
-    """New centroids: exact integer sums / counts (order-independent)."""
-    return assigned.groupBy("cid").agg(
-        (F.sum("x").cast("double") / F.count("*")).alias("cx"),
-        (F.sum("y").cast("double") / F.count("*")).alias("cy"),
-    )
-
-
-def _kmeans_oracle() -> str:
-    # unrolled Lloyd's: init from the _K smallest user_ids, then
-    # _ITERS rounds of (assign, recenter), final output = assignment
-    sql = f"""
-    WITH f AS ({_FEATURES_SQL}),
-    c0 AS (
-      SELECT row_number() OVER (ORDER BY user_id) AS cid,
-             CAST(x AS DOUBLE) AS cx, CAST(y AS DOUBLE) AS cy
-      FROM (SELECT * FROM f ORDER BY user_id LIMIT {_K})
-    )"""
-    prev = "c0"
-    for i in range(1, _ITERS + 1):
-        sql += f""",
-    a{i} AS (
-      SELECT user_id, x, y, cid FROM (
-        SELECT f.user_id, f.x, f.y, c.cid,
-               row_number() OVER (
-                 PARTITION BY f.user_id
-                 ORDER BY (CAST(f.x AS DOUBLE) - c.cx) * (CAST(f.x AS DOUBLE) - c.cx)
-                        + (CAST(f.y AS DOUBLE) - c.cy) * (CAST(f.y AS DOUBLE) - c.cy) ASC,
-                        c.cid ASC) AS rn
-        FROM f, {prev} c
-      ) WHERE rn = 1
-    ),
-    c{i} AS (
-      SELECT cid, CAST(sum(x) AS DOUBLE) / count(*) AS cx,
-             CAST(sum(y) AS DOUBLE) / count(*) AS cy
-      FROM a{i} GROUP BY cid
-    )"""
-        prev = f"c{i}"
-    sql += f"""
-    SELECT user_id, CAST(cid AS INT) AS cluster FROM a{_ITERS}
-    ORDER BY user_id
-    """
-    return sql
-
-
-@register("ml_kmeans_profiles", oracle=_kmeans_oracle())
-def ml_kmeans_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Lloyd's KMeans (k=4, 3 iters) over user profiles."""
-    feats = user_features(spark, sf_dir)
-    cent = (
-        feats.orderBy("user_id")
-        .limit(_K)
-        .select(
-            # constant partition key: the input is <= _K rows (post-limit),
-            # so a single window partition is by design; the explicit key
-            # keeps WindowExec off its move-everything-global path/warning
-            F.row_number().over(Window.partitionBy(F.lit(0)).orderBy("user_id")).alias("cid"),
-            F.col("x").cast("double").alias("cx"),
-            F.col("y").cast("double").alias("cy"),
-        )
-    )
-    assigned = None
-    for _ in range(_ITERS):
-        assigned = _assign(feats, cent)
-        cent = _recenter(assigned)
-    return assigned.select(
-        "user_id", F.col("cid").cast("int").alias("cluster")
-    ).orderBy("user_id")
-
-
-# --- deterministic KMeans over the 64-dim embedding vectors ------------
+# --- Deterministic Lloyd's: one spelling per step on each engine --------
 #
-# The hash-gate trick from ml_kmeans_profiles extended to floats: each
-# float32 component is scaled by 2^20 and FLOORED to an exact BIGINT
-# (float32 * 2^20 is exactly representable in double, and floor has no
-# tie-breaking semantics to disagree on, unlike round). From there every
-# quantity both engines compute -- centroid means (exact integer sum /
-# count), squared distances (identical left-associated 64-term chains of
-# IEEE double ops), argmin tie-breaks (cid asc) -- is bit-identical, so
-# MLlib's unreproducible sampled init is replaced and the oracle is exact.
-
-_K_EMB = 5  # k=5 per Specs.pdf "Solution: Clustering"
-_ITERS_EMB = 2
-_DIMS = 64
-_SCALE = 1048576.0  # 2^20: exact double product with any float32
+# Spark: features are an array column ``xs``, centroids ``(cid, cs)``.
+# DuckDB: features are columns x1..xd of a feature CTE, centroids
+# ``(cid, c1..cd)``.
 
 
-def _emb_features_sql() -> str:
-    cols = ",\n             ".join(
-        f"CAST(floor(CAST(embedding[{i}] AS DOUBLE) * {_SCALE}) AS BIGINT) AS x{i}"
-        for i in range(1, _DIMS + 1)
-    )
-    return f"SELECT vec_id,\n             {cols}\n      FROM embeddings"
-
-
-def _emb_dist_sql(left: str, cent: str) -> str:
-    """Left-assoc 64-term squared-distance chain between a feature row
-    alias and a centroid alias (same fold order as _emb_dist2)."""
-    return " + ".join(
-        f"(CAST({left}.x{i} AS DOUBLE) - {cent}.c{i}) * "
-        f"(CAST({left}.x{i} AS DOUBLE) - {cent}.c{i})"
-        for i in range(1, _DIMS + 1)
-    )
-
-
-def _emb_kmeans_ctes() -> str:
-    """WITH-body through the final assignment: CTEs ``f`` (quantized
-    integer features), ``c0``..``c{ITERS}`` (centroids), ``a1``..
-    ``a{ITERS}`` (assignments, carrying the feature columns). Shared by
-    the kmeans gate and the semantic-dedup gate so both verify the
-    IDENTICAL clustering."""
-    rng = range(1, _DIMS + 1)
-    c0_cols = ", ".join(f"CAST(x{i} AS DOUBLE) AS c{i}" for i in rng)
-    dist = _emb_dist_sql("f", "c")
-    recenter = ", ".join(f"CAST(sum(x{i}) AS DOUBLE) / count(*) AS c{i}" for i in rng)
-    xs = ", ".join(f"x{i}" for i in rng)
-    sql = f"""
-    WITH f AS ({_emb_features_sql()}),
-    c0 AS (
-      SELECT row_number() OVER (ORDER BY vec_id) AS cid, {c0_cols}
-      FROM (SELECT * FROM f ORDER BY vec_id LIMIT {_K_EMB})
-    )"""
-    prev = "c0"
-    for it in range(1, _ITERS_EMB + 1):
-        sql += f""",
-    a{it} AS (
-      SELECT vec_id, {xs}, cid FROM (
-        SELECT f.*, c.cid,
-               row_number() OVER (PARTITION BY f.vec_id
-                                  ORDER BY {dist} ASC, c.cid ASC) AS rn
-        FROM f, {prev} c
-      ) WHERE rn = 1
-    ),
-    c{it} AS (SELECT cid, {recenter} FROM a{it} GROUP BY cid)"""
-        prev = f"c{it}"
-    return sql
-
-
-def _emb_kmeans_oracle() -> str:
-    return (
-        _emb_kmeans_ctes()
-        + f"""
-    SELECT CAST(cid AS INT) AS cluster, CAST(count(*) AS BIGINT) AS n_vectors
-    FROM a{_ITERS_EMB} GROUP BY cid ORDER BY cluster
-    """
-    )
-
-
-def _emb_dist2() -> Column:
-    """Squared distance as a sequential left-to-right array fold.
-
-    F.aggregate folds (((0+t1)+t2)+...) in element order -- the same
-    addition sequence as the oracle's explicit 64-term chain (0.0+t1
-    is bitwise t1 for the non-negative squares), so both engines see
-    identical IEEE double sums. Array form keeps the generated code a
-    few lines; 64 scalar columns made Janino compilation itself the
-    bottleneck (~4 s per stage at any data size).
-    """
+def dist2(a: Column, b: Column) -> Column:
+    """Squared L2 distance between two equal-length arrays as a
+    sequential left-to-right fold. (((0+t1)+t2)+...) is the addition
+    order of ``dist2_sql``'s chain (0.0+t1 is bitwise t1 for the
+    non-negative squares), so both engines see identical IEEE doubles.
+    The array form keeps the generated code a few lines; 64 scalar
+    columns made Janino compilation itself the bottleneck (~4 s per
+    stage at any data size)."""
     return F.aggregate(
         F.zip_with(
-            "xs",
-            "cs",
-            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
+            a,
+            b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
 
 
-def _emb_feats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # features/centroids stay ARRAY-typed end to end (one small generated
-    # expression per stage, vs 64 scalar columns whose codegen dominates
-    # wall time); feats is cached and each k-row centroid frame is
-    # localCheckpoint'ed -- the standard iterative-algorithm lineage
-    # discipline (MLlib's own KMeans caches + truncates the same way).
+def dist2_sql(a: str, b: str, dims: range) -> str:
+    """DuckDB twin of ``dist2`` between columns ``{a}{i}`` and
+    ``{b}{i}``, i in ``dims``: one left-associated chain."""
+    terms = (f"(CAST({a}{i} AS DOUBLE) - CAST({b}{i} AS DOUBLE))" for i in dims)
+    return " + ".join(f"{t} * {t}" for t in terms)
+
+
+def first_k_seed(feats: DataFrame, key: str, k: int) -> DataFrame:
+    """(cid, cs): the ``k`` rows of ``feats`` (key, xs) with the smallest
+    keys as double centroids, cid = 1..k in key order."""
+    return feats.orderBy(key).limit(k).select(
+        # constant partition key: the input is <= k rows (post-limit), so
+        # a single window partition is by design; the explicit key keeps
+        # WindowExec off its move-everything-global path/warning
+        F.row_number().over(Window.partitionBy(F.lit(0)).orderBy(key)).alias("cid"),
+        F.transform("xs", lambda x: x.cast("double")).alias("cs"),
+    )
+
+
+def nearest(
+    pairs: DataFrame, keys: list[str], c: str = "cs", cid: str = "cid"
+) -> DataFrame:
+    """(keys..., cid): the nearest centroid of each point of ``pairs``
+    (one row per point ``xs`` and candidate centroid ``c``), ties to the
+    lowest cid. min_by on the (dist, cid) struct picks what the oracle's
+    row_number(ORDER BY dist, cid) picks, over a (keys, cid, dist)
+    projection that combines map-side. A key column rides along with the
+    label, so a caller that needs a point's features back names ``xs``
+    among the keys instead of joining the points again."""
+    return (
+        pairs.select(*keys, cid, dist2(F.col("xs"), F.col(c)).alias("dist"))
+        .groupBy(*keys)
+        .agg(F.min_by(cid, F.struct("dist", cid)).alias(cid))
+    )
+
+
+def nearest_sql(
+    key: str, pts: str, cents: str, dims: range, c: str = "c", cid: str = "cid"
+) -> str:
+    """Twin of ``nearest``: (key, cid) for each row of ``pts`` (key,
+    x{dims}) against the centroid rows of ``cents`` ({cid}, {c}{dims})."""
+    return f"""
+      SELECT {key}, cid FROM (
+        SELECT p.{key}, c.{cid} AS cid,
+               row_number() OVER (PARTITION BY p.{key}
+                                  ORDER BY {dist2_sql("p.x", f"c.{c}", dims)} ASC,
+                                           c.{cid} ASC) AS rn
+        FROM {pts} p, {cents} c
+      ) WHERE rn = 1"""
+
+
+def recenter(assigned: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys..., cs): the elementwise mean of each group's ``xs``, exact
+    integer sums / count. posexplode + a (keys, pos) partial aggregate
+    (map-side combinable: the distributed dense-vector mean),
+    reassembled in pos order."""
+    return (
+        assigned.select(*keys, F.posexplode("xs").alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg((F.sum("x").cast("double") / F.count("*")).alias("c"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "c"))),
+                lambda t: t["c"],
+            ).alias("cs")
+        )
+    )
+
+
+def recenter_2d(assigned: DataFrame, keys: list[str]) -> DataFrame:
+    """``recenter`` for two-feature points as two scalar sums: the same
+    exact means in one aggregation instead of two. On 4 CPUs at sf0.1
+    the array path made ml_kmeans_profiles ~0.3 s slower (11 more
+    stages), and 64 scalar sums made ml_kmeans_embeddings slower."""
+    n = F.count("*")
+    return assigned.groupBy(*keys).agg(
+        F.array(*[F.sum(F.col("xs")[i]).cast("double") / n for i in range(2)]).alias("cs")
+    )
+
+
+def lloyd(
+    points: DataFrame,
+    cent: DataFrame,
+    by: list[str],
+    iters: int,
+    key: str,
+    recenter: Callable[[DataFrame, list[str]], DataFrame] = recenter,
+) -> tuple[DataFrame, DataFrame]:
+    """``iters`` assignment rounds of Lloyd's over ``points`` (key, *by,
+    xs) from the centroids ``cent`` (*by, cid, cs), recentering between
+    rounds with ``recenter``. ``by`` names clusterings that run side by
+    side in one pipeline (the PQ subspaces). Returns ``(labels, cent)``: the final
+    assignment (key, *by, xs, cid) and the centroids it minimized
+    against. Every centroid frame is localCheckpointed -- the
+    iterative-algorithm lineage discipline MLlib's own KMeans follows."""
+    for it in range(iters):
+        if it:
+            cent = recenter(labels, [*by, "cid"])
+        cent = cent.localCheckpoint(eager=False)
+        pairs = points.join(F.broadcast(cent), by or None)
+        labels = nearest(pairs, [key, *by, "xs"])
+    return labels, cent
+
+
+def lloyd_sql(
+    f: str, key: str, dims: range, k: int, iters: int, prefix: str = ""
+) -> str:
+    """Twin of ``first_k_seed`` + ``lloyd`` over the feature CTE ``f``
+    (key, x{dims}): CTE text, led by a comma. ``{prefix}c0`` is the seed,
+    ``{prefix}a{i}`` (key, cid) round i's assignment and ``{prefix}c{i}``
+    (cid, c{dims}) the centroids recentered from it, so the final
+    assignment ``{prefix}a{iters}`` minimized against ``{prefix}c{iters-1}``."""
+    seed = ", ".join(f"CAST(x{i} AS DOUBLE) AS c{i}" for i in dims)
+    mean = ", ".join(f"CAST(sum(f.x{i}) AS DOUBLE) / count(*) AS c{i}" for i in dims)
+    sql = f""",
+    {prefix}c0 AS (
+      SELECT row_number() OVER (ORDER BY {key}) AS cid, {seed}
+      FROM (SELECT * FROM {f} ORDER BY {key} LIMIT {k})
+    )"""
+    for i in range(1, iters + 1):
+        if i > 1:
+            sql += f""",
+    {prefix}c{i - 1} AS (
+      SELECT a.cid, {mean}
+      FROM {prefix}a{i - 1} a JOIN {f} f ON f.{key} = a.{key} GROUP BY a.cid
+    )"""
+        sql += f""",
+    {prefix}a{i} AS ({nearest_sql(key, f, f"{prefix}c{i - 1}", dims)}
+    )"""
+    return sql
+
+
+# --- KMeans over user profiles -----------------------------------------
+
+_K = 4
+_ITERS = 3
+_XY = range(1, 3)  # the two profile features
+
+_FEATURES_SQL = """
+      SELECT user_id,
+             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x1,
+             count(*) AS x2
+      FROM events GROUP BY user_id
+"""
+
+
+def user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user profile features, exact-integer valued: xs = [total value
+    in cents, event count]."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy("user_id").agg(
+        F.array(F.sum(fixed_units(F.col("value"))), F.count("*")).alias("xs")
+    )
+
+
+def _xy_lloyd(feats: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two-feature clustering of the user profiles and the FPL
+    players: ``lloyd``'s (labels, cent) over ``feats`` (user_id, xs)."""
+    seed = first_k_seed(feats, "user_id", _K)
+    return lloyd(feats, seed, [], _ITERS, "user_id", recenter_2d)
+
+
+def _xy_lloyd_sql() -> str:
+    """Twin of ``_xy_lloyd`` over the feature CTE ``f`` (user_id, x1, x2)."""
+    return lloyd_sql("f", "user_id", _XY, _K, _ITERS)
+
+
+def _kmeans_oracle() -> str:
+    return f"""
+    WITH f AS ({_FEATURES_SQL}){_xy_lloyd_sql()}
+    SELECT user_id, CAST(cid AS INT) AS cluster FROM a{_ITERS}
+    ORDER BY user_id
+    """
+
+
+@register("ml_kmeans_profiles", oracle=_kmeans_oracle())
+def ml_kmeans_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic Lloyd's KMeans (k=4, 3 iters) over user profiles."""
+    labels, _ = _xy_lloyd(user_features(spark, sf_dir))
+    return labels.select(
+        "user_id", F.col("cid").cast("int").alias("cluster")
+    ).orderBy("user_id")
+
+
+# --- KMeans over the 64-dim embedding vectors ---------------------------
+#
+# Each float32 component is scaled by 2^20 and FLOORED to an exact
+# BIGINT (float32 * 2^20 is exactly representable in double, and floor
+# has no tie-breaking semantics to disagree on, unlike round). The same
+# quantized features feed the PQ and IVF-PQ tiers of similarity.py.
+
+_K_EMB = 5  # k=5 per Specs.pdf "Solution: Clustering"
+_ITERS_EMB = 2
+EMB_DIMS = range(1, 65)
+EMB_SCALE = 1048576.0  # 2^20: exact double product with any float32
+
+EMB_FEATURES_SQL = "SELECT vec_id, " + ", ".join(
+    f"CAST(floor(CAST(embedding[{i}] AS DOUBLE) * {EMB_SCALE}) AS BIGINT) AS x{i}"
+    for i in EMB_DIMS
+) + " FROM embeddings"
+
+
+def emb_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, xs): the quantized embedding features, cached -- every
+    Lloyd's round and every quantizer pass scans them."""
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         "vec_id",
         F.transform(
-            "embedding",
-            lambda e: F.floor(e.cast("double") * _SCALE).cast("long"),
+            "embedding", lambda e: F.floor(e.cast("double") * EMB_SCALE).cast("long")
         ).alias("xs"),
     ).cache()
 
 
-def _emb_lloyd(feats: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Deterministic Lloyd's over the quantized features. Returns
-    ``(assigned, cent_used)``: the final assignment (vec_id, xs, cid)
-    and the centroid frame (cid, cs) that final assignment minimized
-    against -- the pair the semantic-dedup gate ranks by."""
-    cent = (
-        feats.orderBy("vec_id")
-        .limit(_K_EMB)
-        .select(
-            F.row_number()
-            .over(Window.partitionBy(F.lit(0)).orderBy("vec_id"))
-            .alias("cid"),
-            F.transform("xs", lambda x: x.cast("double")).alias("cs"),
-        )
-        .localCheckpoint(eager=False)
+def emb_lloyd(feats: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The embedding clustering: ``lloyd``'s (labels, cent) over
+    ``emb_features``."""
+    seed = first_k_seed(feats, "vec_id", _K_EMB)
+    return lloyd(feats, seed, [], _ITERS_EMB, "vec_id")
+
+
+def emb_lloyd_sql() -> str:
+    """Twin of ``emb_lloyd``: a WITH clause through CTEs ``f`` (features),
+    ``a{_ITERS_EMB}`` (labels) and ``c{_ITERS_EMB - 1}`` (centroids)."""
+    return f"WITH f AS ({EMB_FEATURES_SQL})" + lloyd_sql(
+        "f", "vec_id", EMB_DIMS, _K_EMB, _ITERS_EMB
     )
-    assigned = None
-    cent_used = cent
-    for it in range(_ITERS_EMB):
-        cent_used = cent
-        # argmin as min_by over a NARROW (vec_id, cid, dist) projection:
-        # the shuffle carries 3 columns and combines map-side (k rows per
-        # partition), never the feature vectors -- the same assignment
-        # the oracle's row_number(ORDER BY dist, cid) picks, since
-        # min_by on the (dist, cid) struct breaks ties identically.
-        pairs = feats.crossJoin(F.broadcast(cent)).select(
-            "vec_id", "cid", _emb_dist2().alias("dist")
-        )
-        assign = pairs.groupBy("vec_id").agg(
-            F.min_by("cid", F.struct("dist", "cid")).alias("cid")
-        )
-        assigned = feats.join(assign, "vec_id")
-        # elementwise centroid mean via posexplode + (cid, pos) partial
-        # aggregation (map-side combinable; the distributed dense-vector
-        # mean), reassembled in pos order -- exact integer sums / count.
-        cent = (
-            assigned.select("cid", F.posexplode("xs").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg((F.sum("x").cast("double") / F.count("*")).alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s["c"],
-                ).alias("cs")
-            )
-        )
-        if it < _ITERS_EMB - 1:
-            cent = cent.localCheckpoint(eager=False)
-    return assigned, cent_used
 
 
-@register("ml_kmeans_embeddings", oracle=_emb_kmeans_oracle())
+@register(
+    "ml_kmeans_embeddings",
+    oracle=emb_lloyd_sql()
+    + f"""
+    SELECT CAST(cid AS INT) AS cluster, CAST(count(*) AS BIGINT) AS n_vectors
+    FROM a{_ITERS_EMB} GROUP BY cid ORDER BY cluster
+    """,
+)
 def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Lloyd's KMeans (k=5, 2 iters) over the 64-dim
-    embedding column, reported as cluster sizes.
-
-    Same 100 TB shape as ml_kmeans_profiles: per iteration one
-    broadcast of k tiny centroid rows + one groupBy(cid) -- the corpus
-    itself never shuffles on anything wider than the cluster id.
-    """
-    assigned, _ = _emb_lloyd(_emb_feats_df(spark, sf_dir))
+    embedding column, reported as cluster sizes."""
+    labels, _ = emb_lloyd(emb_features(spark, sf_dir))
     return (
-        assigned.groupBy(F.col("cid").cast("int").alias("cluster"))
+        labels.groupBy(F.col("cid").cast("int").alias("cluster"))
         .agg(F.count("*").cast("long").alias("n_vectors"))
-        .orderBy("cluster")
-    )
-
-
-def ml_kmeans_embeddings_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The spec's literal pyspark.ml KMeans (Specs.pdf "Solution:
-    Clustering"). Unregistered: MLlib's seeded-but-sampling init is not
-    reproducible in SQL, so the hash-gated registered variant above is
-    the deterministic Lloyd's; this stays as the MLlib-API demo."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=5, seed=42, maxIter=5).fit(emb)
-    pred = model.transform(emb)
-    return (
-        pred.groupBy(F.col("prediction").alias("cluster"))
-        .agg(F.count("*").alias("n_vectors"))
         .orderBy("cluster")
     )
 
@@ -487,15 +449,15 @@ _MIN_MATCHES = 5
 def _fpl_lloyds_ctes() -> str:
     """WITH-body for the shared FPL player clustering: CTEs ``f``
     (exact-integer profile features + match counts, all rostered
-    players) and ``c0``..``a{_ITERS}`` (unrolled Lloyd's). Shared by
-    the rating- and chemistry-imputation oracles so both gates verify
-    the IDENTICAL clustering."""
+    players) and ``c0``..``a{_ITERS}`` (Lloyd's). Shared by the rating-
+    and chemistry-imputation oracles so both gates verify the IDENTICAL
+    clustering."""
     from fantasy_premier_league_spark.operators.pipeline import (
         _CTRS_SQL,
         _PLAYERS_CSV_SQL,
     )
 
-    sql = f"""
+    return f"""
     WITH f0 AS (
       SELECT playerId, count(*) AS n_matches,
              100 * sum(goals) + sum(shots_on_target) AS fx,
@@ -504,37 +466,11 @@ def _fpl_lloyds_ctes() -> str:
     ),
     f AS (
       SELECT CAST(p.Id AS INT) AS user_id,
-             CAST(coalesce(f0.fx, 0) AS BIGINT) AS x,
-             CAST(coalesce(f0.fy, 0) AS BIGINT) AS y,
+             CAST(coalesce(f0.fx, 0) AS BIGINT) AS x1,
+             CAST(coalesce(f0.fy, 0) AS BIGINT) AS x2,
              CAST(coalesce(f0.n_matches, 0) AS BIGINT) AS n_matches
       FROM {_PLAYERS_CSV_SQL} p LEFT JOIN f0 ON f0.playerId = p.Id
-    ),
-    c0 AS (
-      SELECT row_number() OVER (ORDER BY user_id) AS cid,
-             CAST(x AS DOUBLE) AS cx, CAST(y AS DOUBLE) AS cy
-      FROM (SELECT * FROM f ORDER BY user_id LIMIT {_K})
-    )"""
-    prev = "c0"
-    for i in range(1, _ITERS + 1):
-        sql += f""",
-    a{i} AS (
-      SELECT user_id, x, y, cid FROM (
-        SELECT f.user_id, f.x, f.y, c.cid,
-               row_number() OVER (
-                 PARTITION BY f.user_id
-                 ORDER BY (CAST(f.x AS DOUBLE) - c.cx) * (CAST(f.x AS DOUBLE) - c.cx)
-                        + (CAST(f.y AS DOUBLE) - c.cy) * (CAST(f.y AS DOUBLE) - c.cy) ASC,
-                        c.cid ASC) AS rn
-        FROM f, {prev} c
-      ) WHERE rn = 1
-    ),
-    c{i} AS (
-      SELECT cid, CAST(sum(x) AS DOUBLE) / count(*) AS cx,
-             CAST(sum(y) AS DOUBLE) / count(*) AS cy
-      FROM a{i} GROUP BY cid
-    )"""
-        prev = f"c{i}"
-    return sql
+    ){_xy_lloyd_sql()}"""
 
 
 def _impute_oracle() -> str:
@@ -603,30 +539,16 @@ def _fpl_cluster_labels(
         .join(f0.withColumnRenamed("playerId", "user_id"), "user_id", "left")
         .select(
             "user_id",
-            F.coalesce("fx", F.lit(0)).cast("long").alias("x"),
-            F.coalesce("fy", F.lit(0)).cast("long").alias("y"),
+            F.array(
+                F.coalesce("fx", F.lit(0)).cast("long"),
+                F.coalesce("fy", F.lit(0)).cast("long"),
+            ).alias("xs"),
             F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
         )
         .localCheckpoint(eager=False)  # feeds every Lloyd's round + output
     )
-    cent = (
-        feats.orderBy("user_id")
-        .limit(_K)
-        .select(
-            # constant partition key: <= _K rows post-limit (see
-            # ml_kmeans_profiles); allowlisted in GLOBAL_WINDOW_OK
-            F.row_number()
-            .over(Window.partitionBy(F.lit(0)).orderBy("user_id"))
-            .alias("cid"),
-            F.col("x").cast("double").alias("cx"),
-            F.col("y").cast("double").alias("cy"),
-        )
-    )
-    assigned = None
-    for _ in range(_ITERS):
-        assigned = _assign(feats.select("user_id", "x", "y"), cent)
-        cent = _recenter(assigned)
-    return assigned.select("user_id", "cid").join(
+    labels, _ = _xy_lloyd(feats)
+    return labels.select("user_id", "cid").join(
         feats.select("user_id", "n_matches"), "user_id"
     )
 

@@ -401,18 +401,6 @@ def fpl_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return player_spans(matches_df(spark)).orderBy("matchId", "teamId", "playerId", "inTime")
 
 
-def player_teams(matches: DataFrame) -> DataFrame:
-    """(matchId, playerId, teamId) for bench+lineup (getTeamIDforPlayer)."""
-    te = _team_entries(matches)
-    return te.select(
-        "matchId",
-        "teamId",
-        F.explode(F.concat(F.col("bench.playerId"), F.col("lineup.playerId"))).alias(
-            "playerId"
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # J5: roster enrichment -- two broadcast dim joins replacing ui.py's
 # per-row .first() lookups inside loops (ui.py:129-184).

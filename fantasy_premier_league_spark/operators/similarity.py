@@ -21,6 +21,22 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import rounded
+from fantasy_premier_league_spark.operators.ml import (
+    EMB_DIMS,
+    EMB_FEATURES_SQL,
+    EMB_SCALE,
+    _ITERS_EMB,
+    dist2,
+    dist2_sql,
+    emb_features,
+    emb_lloyd,
+    emb_lloyd_sql,
+    first_k_seed,
+    lloyd,
+    lloyd_sql,
+    nearest,
+    nearest_sql,
+)
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
 
@@ -198,6 +214,41 @@ _NEARDUP_STRIDES = [1, 2, 4, 8, 16, 32, 3, 5]
 _NEARDUP_WINDOW = 64
 
 
+def _window_pairs(ranked: DataFrame, part: str, window: int) -> DataFrame:
+    """The sorted-neighborhood window join: every pair of rows of
+    ``ranked`` (part, rk, ...) in one ``part`` with a.rk < b.rk <=
+    a.rk + window, sides aliased ``a`` and ``b``.
+
+    The window must be an EQUI key, not a join filter: on ``part``
+    equality alone the hash join still ENUMERATES every in-part pair
+    before filtering (measured: capping via a band filter only cut sf10
+    from 166s to 139s). Ranks fall in blocks of ``window``; the probe
+    side appears in its own block AND the next, the build side in its
+    block only, so every successor within the window meets its
+    predecessor on an exact (part, block) key and pair generation is
+    occupancy x 2W. Same neighbor-bin recipe as range_join_neighbors.
+    The build side is the unexploded one, and the pairs have no order
+    need, so the join is a shuffled hash join. The rank band is a filter
+    AFTER the join: Spark then evaluates it before any pair predicate
+    the caller filters on, where a band inside the join condition would
+    come after it, and the caller's cosine would run on every pair of
+    the two blocks."""
+    blk = ((F.col("rk") - 1) / window).cast("long")
+    a = ranked.withColumn("pblk", F.explode(F.array(blk, blk + 1))).alias("a")
+    b = ranked.withColumn("blk", blk).alias("b")
+    return a.join(
+        b.hint("shuffle_hash"),
+        (F.col(f"a.{part}") == F.col(f"b.{part}")) & (F.col("a.pblk") == F.col("b.blk")),
+    ).filter((F.col("b.rk") > F.col("a.rk")) & (F.col("b.rk") <= F.col("a.rk") + window))
+
+
+def _window_pairs_sql(ranked: str, part: str, window: int) -> str:
+    """Twin of ``_window_pairs`` over the CTE ``ranked`` (part, rk, ...);
+    DuckDB band-joins directly, so it needs no blocks."""
+    return f"""{ranked} a JOIN {ranked} b
+        ON a.{part} = b.{part} AND b.rk > a.rk AND b.rk <= a.rk + {window}"""
+
+
 @register(
     "dedup_embedding_cosine",
     oracle=f"""
@@ -210,20 +261,13 @@ _NEARDUP_WINDOW = 64
     ),
     r AS (
       SELECT vec_id, nvec, bucket,
-             row_number() OVER (PARTITION BY bucket ORDER BY vec_id) AS rk,
-             (row_number() OVER (PARTITION BY bucket ORDER BY vec_id) - 1)
-               // {_NEARDUP_WINDOW} AS blk
+             row_number() OVER (PARTITION BY bucket ORDER BY vec_id) AS rk
       FROM b
-    ),
-    probe AS (
-      SELECT vec_id, nvec, bucket, rk, u.pblk
-      FROM r, unnest([blk, blk + 1]) u(pblk)
     )
     SELECT vec1, vec2, round(cosine, 6) AS cosine FROM (
-      SELECT a.vec_id AS vec1, b2.vec_id AS vec2,
-             list_dot_product(a.nvec, b2.nvec) AS cosine
-      FROM probe a JOIN r b2 ON a.bucket = b2.bucket AND a.pblk = b2.blk
-                            AND b2.rk > a.rk AND b2.rk <= a.rk + {_NEARDUP_WINDOW}
+      SELECT a.vec_id AS vec1, b.vec_id AS vec2,
+             list_dot_product(a.nvec, b.nvec) AS cosine
+      FROM {_window_pairs_sql("r", "bucket", _NEARDUP_WINDOW)}
     ) WHERE cosine >= {_NEARDUP_COS}
     ORDER BY vec1, vec2
     """,
@@ -241,28 +285,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = v.withColumn(
         "rk", F.row_number().over(Window.partitionBy("bucket").orderBy("vec_id"))
-    ).withColumn("blk", ((F.col("rk") - 1) / _NEARDUP_WINDOW).cast("long"))
-    # The W-band must be an EQUI key, not a join filter: on bucket
-    # equality alone the hash join still ENUMERATES every in-bucket
-    # pair before filtering (measured: capping via a band filter only
-    # cut sf10 from 166s to 139s). Exploding each probe row to its own
-    # and the next rank-block makes the join key (bucket, block), so
-    # per-key fan-in is W and pair generation itself is occupancy x W.
-    # Same neighbor-bin recipe as range_join_neighbors.
-    probe = ranked.select(
-        "vec_id", "nvec", "bucket", "rk",
-        F.explode(F.array(F.col("blk"), F.col("blk") + 1)).alias("pblk"),
     )
-    a = probe.alias("a").hint("shuffle_hash")
-    b = ranked.alias("b").hint("shuffle_hash")
     return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.pblk") == F.col("b.blk"))
-            & (F.col("b.rk") > F.col("a.rk"))
-            & (F.col("b.rk") <= F.col("a.rk") + _NEARDUP_WINDOW),
-        )
+        _window_pairs(ranked, "bucket", _NEARDUP_WINDOW)
         .withColumn("cos", dot(F.col("a.nvec"), F.col("b.nvec")))
         .filter(F.col("cos") >= _NEARDUP_COS)
         .select(
@@ -619,8 +644,8 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Product quantization (PQ) + recall: the FAISS IVF-PQ compression
 # standard for billion-vector serving. The 64-dim space splits into
 # M=4 independent 16-dim subspaces; each subspace trains its own tiny
-# codebook (K=4 centroids, deterministic Lloyd's: first-K init + one
-# refinement, exactly the ml_kmeans_embeddings recipe), and every
+# codebook (K=8 centroids, the deterministic Lloyd's of operators/ml.py
+# that ml_kmeans_embeddings runs: first-K init + one refinement), and every
 # vector compresses to M small code ids -- here 4x log2(8) = 12 bits a
 # vector vs 64 float32s, the 32x that makes a 100 TB corpus fit a
 # serving tier. Queries rank candidates by ASYMMETRIC distance (ADC):
@@ -629,11 +654,9 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the fixed-order sum of its M looked-up entries -- the corpus itself
 # never computes a full-dimension distance at serving time.
 #
-# Determinism: features quantize to BIGINT (floor(x * 2^20), exact in
-# both engines); centroids are exact-integer-sum / count doubles; every
-# distance is the identical left-associated IEEE chain on both engines
-# (F.aggregate's fold order == the oracle's written 16-term chain);
-# argmin ties break on cid, ranking ties on vec_id. Output floats
+# Determinism is ml.py's: integer-quantized features, exact-integer-sum
+# / count centroids, one fold order for every distance (dist2/dist2_sql),
+# argmin ties on cid; ranking ties break on vec_id. Output floats
 # (recall, relative ADC error) snap to the 1e-6 grid on both sides.
 #
 # Scale: codebooks and LUTs are O(M*K) rows and broadcast; the corpus
@@ -644,43 +667,17 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 4  # subspaces
 _PQ_D = 16  # dims per subspace (4 x 16 = 64)
 _PQ_K = 8  # centroids per subspace codebook
-_PQ_SCALE = 1048576.0  # 2^20, exact double product with any float32
-
-
-def _pq_feats_sql() -> str:
-    cols = ", ".join(
-        f"CAST(floor(CAST(embedding[{i}] AS DOUBLE) * {_PQ_SCALE}) AS BIGINT) AS x{i}"
-        for i in range(1, _PQ_M * _PQ_D + 1)
-    )
-    return f"SELECT vec_id, {cols} FROM embeddings"
+_PQ_ITERS = 2  # assign to the seed, recenter once, assign again (the codes)
 
 
 def _pq_dims(s):  # 1-based feature indices of subspace s
     return range(s * _PQ_D + 1, (s + 1) * _PQ_D + 1)
 
 
-def _pq_chain(s, left, right):  # left-assoc 16-term squared-distance chain
-    return " + ".join(
-        f"(CAST({left}.x{i} AS DOUBLE) - {right}.c{i}) * "
-        f"(CAST({left}.x{i} AS DOUBLE) - {right}.c{i})"
-        for i in _pq_dims(s)
-    )
-
-
-def _exact_chain_sql(left: str, right: str) -> str:
-    # left-assoc 64-term exact squared distance (matches F.aggregate's
-    # elementwise fold order over zip_with on both engines)
-    return " + ".join(
-        f"(CAST({left}.x{i} AS DOUBLE) - CAST({right}.x{i} AS DOUBLE)) * "
-        f"(CAST({left}.x{i} AS DOUBLE) - CAST({right}.x{i} AS DOUBLE))"
-        for i in range(1, _PQ_M * _PQ_D + 1)
-    )
-
-
 def _l2_exact_sql() -> str:
     """CTE ``exact`` (query_id, vec_id, edist): the exact squared-L2
     top-K of each query in ``q`` over ``f`` -- the PQ tiers' yardstick."""
-    chain = _exact_chain_sql("f", "q")
+    chain = dist2_sql("f.x", "q.x", EMB_DIMS)
     return f"""
     exact AS (
       SELECT query_id, vec_id, edist FROM (
@@ -697,50 +694,26 @@ def _pq_train_ctes() -> str:
     """Per-subspace codebook-training + query-LUT CTE text; expects
     CTEs ``f`` (quantized features) and ``q`` (query subset of f) to be
     defined by the caller. Shared by the pure-PQ and IVF-PQ oracles so
-    both gate the IDENTICAL codebooks."""
-    dims, chain = _pq_dims, _pq_chain
+    both gate the IDENTICAL codebooks: subspace s trains in CTEs
+    ``s{s}_c0``..``s{s}_a{_PQ_ITERS}`` (its codebook is
+    ``s{s}_c{_PQ_ITERS - 1}``, its codes ``s{s}_a{_PQ_ITERS}``)."""
     sql = ""
     for s in range(_PQ_M):
-        init_cols = ", ".join(f"CAST(x{i} AS DOUBLE) AS c{i}" for i in dims(s))
-        recenter = ", ".join(
-            f"CAST(sum(x{i}) AS DOUBLE) / count(*) AS c{i}" for i in dims(s)
-        )
+        sql += lloyd_sql("f", "vec_id", _pq_dims(s), _PQ_K, _PQ_ITERS, f"s{s}_")
         sql += f""",
-    cb0_{s} AS (
-      SELECT row_number() OVER (ORDER BY vec_id) AS cid, {init_cols}
-      FROM (SELECT * FROM f ORDER BY vec_id LIMIT {_PQ_K})
-    ),
-    a_{s} AS (
-      SELECT vec_id, cid FROM (
-        SELECT f.vec_id, c.cid,
-               row_number() OVER (PARTITION BY f.vec_id
-                                  ORDER BY {chain(s, 'f', 'c')} ASC, c.cid ASC) AS rn
-        FROM f, cb0_{s} c
-      ) WHERE rn = 1
-    ),
-    cb_{s} AS (
-      SELECT a.cid, {recenter}
-      FROM a_{s} a JOIN f ON f.vec_id = a.vec_id GROUP BY a.cid
-    ),
-    code_{s} AS (
-      SELECT vec_id, cid FROM (
-        SELECT f.vec_id, c.cid,
-               row_number() OVER (PARTITION BY f.vec_id
-                                  ORDER BY {chain(s, 'f', 'c')} ASC, c.cid ASC) AS rn
-        FROM f, cb_{s} c
-      ) WHERE rn = 1
-    ),
     lut_{s} AS (
-      SELECT q.vec_id AS query_id, c.cid, {chain(s, 'q', 'c')} AS pdist
-      FROM q, cb_{s} c
+      SELECT q.vec_id AS query_id, c.cid,
+             {dist2_sql("q.x", "c.c", _pq_dims(s))} AS pdist
+      FROM q, s{s}_c{_PQ_ITERS - 1} c
     )"""
     code_joins = " ".join(
-        f"JOIN code_{s} USING (vec_id)" for s in range(1, _PQ_M)
+        f"JOIN s{s}_a{_PQ_ITERS} USING (vec_id)" for s in range(1, _PQ_M)
     )
+    cols = ", ".join(f"s{s}_a{_PQ_ITERS}.cid AS c{s}" for s in range(_PQ_M))
     sql += f""",
     codes AS (
-      SELECT vec_id, {", ".join(f"code_{s}.cid AS c{s}" for s in range(_PQ_M))}
-      FROM code_0 {code_joins}
+      SELECT vec_id, {cols}
+      FROM s0_a{_PQ_ITERS} {code_joins}
     )"""
     return sql
 
@@ -760,7 +733,7 @@ def _pq_oracle() -> str:
     lut_joins = _lut_joins_sql()
     adc_sum = _adc_sum_sql()
     sql = (
-        f"WITH f AS ({_pq_feats_sql()}),\n"
+        f"WITH f AS ({EMB_FEATURES_SQL}),\n"
         f"    q AS (SELECT * FROM f WHERE vec_id < {N_QUERIES})"
     )
     sql += _pq_train_ctes()
@@ -795,97 +768,35 @@ def _pq_oracle() -> str:
     return sql
 
 
-def _pq_sub(xs: Column, s: int) -> Column:
-    return F.slice(xs, s * _PQ_D + 1, _PQ_D)
-
-
-def _pq_dist2(sub: Column, cs: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(sub, cs, lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _pq_feats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda e: F.floor(e.cast("double") * _PQ_SCALE).cast("long")
-        ).alias("xs"),
-    ).cache()
-
-
-def _subspace_long(df: DataFrame, id_col: str) -> DataFrame:
-    """(id, s, sub): every subspace slice of every vector as ONE long
-    frame, so the train pipeline touches the corpus once per Lloyd's
-    step instead of once per subspace (r17, guide §1.1/§2.4: M=4
-    independent per-subspace pipelines re-scanned the corpus 3M times
-    and paid Catalyst planning per subspace -- the recenter checkpoints
-    alone were ~4.6 s of driver plan time at any data size)."""
+def _subspace_long(df: DataFrame, id_col: str, col: str) -> DataFrame:
+    """(id, s, col): every subspace slice of the array ``col`` of every
+    row as ONE long frame, so the train pipeline touches the corpus once
+    per Lloyd's step instead of once per subspace (r17, guide §1.1/§2.4:
+    M=4 independent per-subspace pipelines re-scanned the corpus 3M
+    times and paid Catalyst planning per subspace -- the recenter
+    checkpoints alone were ~4.6 s of driver plan time at any data
+    size)."""
     return df.select(
         id_col,
         F.posexplode(
-            F.array(*[_pq_sub(F.col("xs"), s) for s in range(_PQ_M)])
-        ).alias("s", "sub"),
+            F.array(*[F.slice(col, s * _PQ_D + 1, _PQ_D) for s in range(_PQ_M)])
+        ).alias("s", col),
     )
 
 
 def _pq_train(feats: DataFrame, q_ids: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
-    """Train the M per-subspace codebooks (deterministic Lloyd's:
-    first-K init + one exact-integer recenter) and return
-    ``(codes, luts)``: codes = (vec_id, c0..c{M-1}); luts[s] =
-    (query_id, c{s}, p{s}) broadcast-sized ADC lookup tables for the
-    given query frame (query_id, xs). Shared by the pure-PQ and IVF-PQ
-    recall queries so both serve from IDENTICAL codebooks.
-
-    All M subspaces train in ONE long-format pipeline keyed by (s, ...)
-    -- identical per-(vec_id, s) arithmetic to the per-subspace loop
-    (same slices, same fold-order distances, same min_by tie-breaks,
-    same exact-integer recenter sums), so codes and LUTs are
-    bit-identical; only the pass/plan count changes."""
-
-    def argmin_long(subs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-        pairs = subs.join(F.broadcast(cents), "s").select(
-            id_col, "s", "cid", _pq_dist2(F.col("sub"), F.col("cs")).alias("dist")
-        )
-        return pairs.groupBy(id_col, "s").agg(
-            F.min_by("cid", F.struct("dist", "cid")).alias("cid")
-        )
-
-    subs = _subspace_long(feats, "vec_id")
-    # init: the SAME first-K vectors seed every subspace's codebook
-    cb0 = _subspace_long(
-        feats.orderBy("vec_id")
-        .limit(_PQ_K)
-        .select(
-            F.row_number()
-            .over(Window.partitionBy(F.lit(0)).orderBy("vec_id"))
-            .alias("cid"),
-            "xs",
-        ),
-        "cid",
-    ).select(
-        "s", "cid", F.transform("sub", lambda x: x.cast("double")).alias("cs")
-    ).localCheckpoint(eager=False)
-    assign0 = argmin_long(subs, cb0, "vec_id")
-    # exact-integer elementwise recenter, reassembled in pos order
-    cb = (
-        subs.join(assign0.hint("shuffle_hash"), ["vec_id", "s"])
-        .select("s", "cid", F.posexplode("sub").alias("pos", "x"))
-        .groupBy("s", "cid", "pos")
-        .agg((F.sum("x").cast("double") / F.count("*")).alias("c"))
-        .groupBy("s", "cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda t: t["c"],
-            ).alias("cs")
-        )
-        .localCheckpoint(eager=False)
+    """Train the M per-subspace codebooks (Lloyd's from the first-K
+    seed, _PQ_ITERS assignment rounds) and return ``(codes, luts)``:
+    codes = (vec_id, c0..c{M-1}); luts[s] = (query_id, c{s}, p{s})
+    broadcast-sized ADC lookup tables for the given query frame
+    (query_id, xs). Shared by the pure-PQ and IVF-PQ recall queries so
+    both serve from IDENTICAL codebooks. All M subspaces train side by
+    side in ONE long-format pipeline keyed by (s, ...)."""
+    # the SAME first-K vectors seed every subspace's codebook
+    cb0 = _subspace_long(first_k_seed(feats, "vec_id", _PQ_K), "cid", "cs")
+    code_long, cb = lloyd(
+        _subspace_long(feats, "vec_id", "xs"), cb0, ["s"], _PQ_ITERS, "vec_id"
     )
-    code_long = argmin_long(subs, cb, "vec_id")
     # wide (vec_id, c0..c{M-1}) for the ADC join chain: one groupBy
     # replaces the former M-1 shuffle_hash self-joins on vec_id
     codes = code_long.groupBy("vec_id").agg(
@@ -895,14 +806,9 @@ def _pq_train(feats: DataFrame, q_ids: DataFrame) -> tuple[DataFrame, list[DataF
         ]
     )
     lut_long = (
-        _subspace_long(q_ids, "query_id")
+        _subspace_long(q_ids, "query_id", "xs")
         .join(F.broadcast(cb), "s")
-        .select(
-            "query_id",
-            "s",
-            "cid",
-            _pq_dist2(F.col("sub"), F.col("cs")).alias("p"),
-        )
+        .select("query_id", "s", "cid", dist2(F.col("xs"), F.col("cs")).alias("p"))
     ).localCheckpoint(eager=False)
     luts = [
         lut_long.filter(F.col("s") == s).select(
@@ -915,17 +821,6 @@ def _pq_train(feats: DataFrame, q_ids: DataFrame) -> tuple[DataFrame, list[DataF
     return codes, luts
 
 
-def _full_dist2(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _l2_topk(feats: DataFrame, q: DataFrame) -> DataFrame:
     """(query_id, vec_id, edist, rank): the exact squared-L2 top-K of
     each query (query_id, xs) over every other vector of ``feats`` --
@@ -936,7 +831,7 @@ def _l2_topk(feats: DataFrame, q: DataFrame) -> DataFrame:
         feats.crossJoin(F.broadcast(qf))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            "query_id", "vec_id", _full_dist2(F.col("xs"), F.col("qxs")).alias("edist")
+            "query_id", "vec_id", dist2(F.col("xs"), F.col("qxs")).alias("edist")
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
@@ -945,7 +840,7 @@ def _l2_topk(feats: DataFrame, q: DataFrame) -> DataFrame:
 
 @register("ann_pq_recall", oracle=_pq_oracle())
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = _pq_feats_df(spark, sf_dir)
+    feats = emb_features(spark, sf_dir)
     q_ids = feats.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "xs"
     )
@@ -1035,24 +930,17 @@ _IVFPQ_RERANK = 10 * TOP_K
 
 
 def _ivfpq_oracle() -> str:
-    fg = _exact_chain_sql("f", "g")
-    qg = _exact_chain_sql("q", "g")
-    fq = _exact_chain_sql("f", "q")
+    qg = dist2_sql("q.x", "g.x", EMB_DIMS)
+    fq = dist2_sql("f.x", "q.x", EMB_DIMS)
     sql = (
-        f"WITH f AS ({_pq_feats_sql()}),\n"
+        f"WITH f AS ({EMB_FEATURES_SQL}),\n"
         f"    g AS (SELECT * FROM f WHERE vec_id < {_NLIST}),\n"
         f"    q AS (SELECT * FROM f WHERE vec_id >= {_NLIST}"
         f" AND vec_id < {_NLIST + N_QUERIES})"
     )
     sql += _pq_train_ctes()
     sql += f""",
-    assigned AS (
-      SELECT vec_id, gid FROM (
-        SELECT f.vec_id, g.vec_id AS gid,
-               row_number() OVER (PARTITION BY f.vec_id
-                                  ORDER BY {fg} ASC, g.vec_id ASC) AS rn
-        FROM f, g
-      ) WHERE rn = 1
+    assigned AS ({nearest_sql("vec_id", "f", "g", EMB_DIMS, c="x", cid="vec_id")}
     ),
     probes AS (
       SELECT query_id, gid FROM (
@@ -1064,7 +952,7 @@ def _ivfpq_oracle() -> str:
     ),
     cand AS (
       SELECT p.query_id, a.vec_id
-      FROM probes p JOIN assigned a ON a.gid = p.gid
+      FROM probes p JOIN assigned a ON a.cid = p.gid
       WHERE a.vec_id <> p.query_id
     ),
     adc AS (
@@ -1109,7 +997,7 @@ def _ivfpq_oracle() -> str:
 
 @register("ann_ivfpq_recall", oracle=_ivfpq_oracle())
 def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = _pq_feats_df(spark, sf_dir)
+    feats = emb_features(spark, sf_dir)
     coarse = feats.filter(F.col("vec_id") < _NLIST).select(
         F.col("vec_id").alias("gid"), F.col("xs").alias("gxs")
     )
@@ -1119,20 +1007,15 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # build-time: one scan assigns every corpus vector to its nearest
     # coarse cell (nlist broadcast distances per row, map-side argmin)
-    assigned = (
-        feats.crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id", "gid", _full_dist2(F.col("xs"), F.col("gxs")).alias("dist")
-        )
-        .groupBy("vec_id")
-        .agg(F.min_by("gid", F.struct("dist", "gid")).alias("gid"))
+    assigned = nearest(
+        feats.crossJoin(F.broadcast(coarse)), ["vec_id"], c="gxs", cid="gid"
     )
     # query-time: nearest nprobe cells per query
     wp = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("gid"))
     probes = (
         q.crossJoin(F.broadcast(coarse))
         .select(
-            "query_id", "gid", _full_dist2(F.col("xs"), F.col("gxs")).alias("dist")
+            "query_id", "gid", dist2(F.col("xs"), F.col("gxs")).alias("dist")
         )
         .withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") <= _IVFPQ_NPROBE)
@@ -1169,7 +1052,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(feats, "vec_id")
         .join(F.broadcast(qf), "query_id")
         .select(
-            "query_id", "vec_id", _full_dist2(F.col("xs"), F.col("qxs")).alias("edist")
+            "query_id", "vec_id", dist2(F.col("xs"), F.col("qxs")).alias("edist")
         )
         .withColumn("rn", F.row_number().over(wr))
         .filter(F.col("rn") <= TOP_K)
@@ -1230,38 +1113,33 @@ _SEM_WINDOW = 128
 
 
 def _semantic_oracle() -> str:
-    from fantasy_premier_league_spark.operators.ml import (
-        _DIMS,
-        _ITERS_EMB,
-        _emb_dist_sql,
-        _emb_kmeans_ctes,
+    dot_ab = " + ".join(
+        f"CAST(a.x{i} AS DOUBLE) * CAST(b.x{i} AS DOUBLE)" for i in EMB_DIMS
     )
-
-    rng = range(1, _DIMS + 1)
-    dot_uv = " + ".join(f"CAST(u.x{i} AS DOUBLE) * CAST(v.x{i} AS DOUBLE)" for i in rng)
-    nrm_u = " + ".join(f"CAST(u.x{i} AS DOUBLE) * CAST(u.x{i} AS DOUBLE)" for i in rng)
-    nrm_v = " + ".join(f"CAST(v.x{i} AS DOUBLE) * CAST(v.x{i} AS DOUBLE)" for i in rng)
+    nrm_a = " + ".join(
+        f"CAST(a.x{i} AS DOUBLE) * CAST(a.x{i} AS DOUBLE)" for i in EMB_DIMS
+    )
+    nrm_b = " + ".join(
+        f"CAST(b.x{i} AS DOUBLE) * CAST(b.x{i} AS DOUBLE)" for i in EMB_DIMS
+    )
     return (
-        _emb_kmeans_ctes()
+        emb_lloyd_sql()
         + f""",
     cdist AS (
-      SELECT a.vec_id, a.cid, {_emb_dist_sql("a", "c")} AS cdist
-      FROM a{_ITERS_EMB} a JOIN c{_ITERS_EMB - 1} c ON c.cid = a.cid
+      SELECT a.vec_id, a.cid, {dist2_sql("f.x", "c.c", EMB_DIMS)} AS cdist
+      FROM a{_ITERS_EMB} a JOIN f ON f.vec_id = a.vec_id
+      JOIN c{_ITERS_EMB - 1} c ON c.cid = a.cid
     ),
     ranked AS (
-      SELECT vec_id, cid,
-             row_number() OVER (PARTITION BY cid
-                                ORDER BY cdist ASC, vec_id ASC) AS rnk
-      FROM cdist
-    ),
-    af AS (
-      SELECT a.*, r.rnk FROM a{_ITERS_EMB} a JOIN ranked r ON r.vec_id = a.vec_id
+      SELECT f.*, d.cid,
+             row_number() OVER (PARTITION BY d.cid
+                                ORDER BY d.cdist ASC, d.vec_id ASC) AS rk
+      FROM cdist d JOIN f ON f.vec_id = d.vec_id
     ),
     drops AS (
-      SELECT DISTINCT v.cid, v.vec_id
-      FROM af u JOIN af v
-        ON u.cid = v.cid AND u.rnk < v.rnk AND v.rnk - u.rnk <= {_SEM_WINDOW}
-      WHERE round(({dot_uv}) / (sqrt({nrm_u}) * sqrt({nrm_v})), 6) >= {_SEM_TAU}
+      SELECT DISTINCT b.cid, b.vec_id
+      FROM {_window_pairs_sql("ranked", "cid", _SEM_WINDOW)}
+      WHERE round(({dot_ab}) / (sqrt({nrm_a}) * sqrt({nrm_b})), 6) >= {_SEM_TAU}
     ),
     sizes AS (SELECT cid, count(*) AS n_vectors FROM a{_ITERS_EMB} GROUP BY cid),
     dcount AS (SELECT cid, count(*) AS n_dropped FROM drops GROUP BY cid)
@@ -1277,18 +1155,12 @@ def _semantic_oracle() -> str:
 
 @register("dedup_semantic_clusters", oracle=_semantic_oracle())
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fantasy_premier_league_spark.operators.ml import (
-        _emb_dist2,
-        _emb_feats_df,
-        _emb_lloyd,
-    )
-
-    assigned, cent = _emb_lloyd(_emb_feats_df(spark, sf_dir))
-    # assigned feeds BOTH the centroid-distance ranking and the cluster
-    # sizes; materialize the 2-iteration Lloyd's chain once
-    assigned = assigned.localCheckpoint(eager=False)
-    cdist = assigned.join(F.broadcast(cent), "cid").select(
-        "vec_id", "cid", "xs", _emb_dist2().alias("cdist")
+    labels, cent = emb_lloyd(emb_features(spark, sf_dir))
+    # the labels feed BOTH the centroid-distance ranking and the cluster
+    # sizes; materialize the Lloyd's chain once
+    labels = labels.localCheckpoint(eager=False)
+    cdist = labels.join(F.broadcast(cent), "cid").select(
+        "vec_id", "cid", "xs", dist2(F.col("xs"), F.col("cs")).alias("cdist")
     )
     wr = Window.partitionBy("cid").orderBy(F.col("cdist").asc(), F.col("vec_id"))
     xd = F.transform("xs", lambda x: x.cast("double"))
@@ -1298,51 +1170,22 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # values; same doubles (sqrt of the identical fold), so the rounded
     # cosine is bit-identical
     ranked = (
-        cdist.withColumn("rnk", F.row_number().over(wr))
-        .select("vec_id", "cid", "rnk", xd.alias("xd"), norm(xd).alias("nrm"))
+        cdist.withColumn("rk", F.row_number().over(wr))
+        .select("vec_id", "cid", "rk", xd.alias("xd"), norm(xd).alias("nrm"))
         .localCheckpoint(eager=False)  # truncate the Lloyd's lineage once
     )
-    # equi-key window join: the candidate (build) side appears in its
-    # own rank block AND the next, the probe side in its block only, so
-    # every predecessor within _SEM_WINDOW ranks meets its successor on
-    # an exact (cid, block) key -- the join never ENUMERATES a pair
-    # outside 2W (dedup_embedding_cosine's sorted-neighborhood recipe)
-    u = ranked.select(
-        "cid",
-        F.col("vec_id").alias("u_id"),
-        F.col("rnk").alias("u_rnk"),
-        F.col("xd").alias("uxs"),
-        F.col("nrm").alias("unrm"),
-        F.explode(
-            F.array(
-                (F.col("rnk") / _SEM_WINDOW).cast("long"),
-                (F.col("rnk") / _SEM_WINDOW).cast("long") + 1,
-            )
-        ).alias("blk"),
-    )
-    v = ranked.select(
-        "cid",
-        F.col("vec_id").alias("v_id"),
-        F.col("rnk").alias("v_rnk"),
-        F.col("xd").alias("vxs"),
-        F.col("nrm").alias("vnrm"),
-        (F.col("rnk") / _SEM_WINDOW).cast("long").alias("blk"),
-    )
+    # a vector drops when a closer-to-centroid predecessor within
+    # _SEM_WINDOW ranks of its cluster is cosine-similar
     cosine = rounded(
-        dot(F.col("uxs"), F.col("vxs")) / (F.col("unrm") * F.col("vnrm")),
-        6,
+        dot(F.col("a.xd"), F.col("b.xd")) / (F.col("a.nrm") * F.col("b.nrm")), 6
     )
     drops = (
-        u.join(v.hint("shuffle_hash"), ["cid", "blk"])
-        .filter(
-            (F.col("u_rnk") < F.col("v_rnk"))
-            & (F.col("v_rnk") - F.col("u_rnk") <= _SEM_WINDOW)
-        )
+        _window_pairs(ranked, "cid", _SEM_WINDOW)
         .filter(cosine >= _SEM_TAU)
-        .select("cid", "v_id")
+        .select(F.col("b.cid").alias("cid"), F.col("b.vec_id").alias("vec_id"))
         .distinct()
     )
-    sizes = assigned.groupBy("cid").agg(F.count("*").alias("n_vectors"))
+    sizes = labels.groupBy("cid").agg(F.count("*").alias("n_vectors"))
     dc = drops.groupBy("cid").agg(F.count("*").alias("n_dropped"))
     return (
         sizes.join(dc, "cid", "left")
@@ -1374,12 +1217,11 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _GRAM_D = 8
-_GRAM_SCALE = 1048576.0  # 2^20, exact double product with any float32
 
 
 def _gram_oracle() -> str:
     q = ", ".join(
-        f"CAST(floor(CAST(embedding[{i}] AS DOUBLE) * {_GRAM_SCALE}) AS BIGINT)"
+        f"CAST(floor(CAST(embedding[{i}] AS DOUBLE) * {EMB_SCALE}) AS BIGINT)"
         f" AS q{i}"
         for i in range(1, _GRAM_D + 1)
     )
@@ -1405,7 +1247,7 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qs = {
         i: F.floor(
-            F.col("embedding")[i - 1].cast("double") * _GRAM_SCALE
+            F.col("embedding")[i - 1].cast("double") * EMB_SCALE
         ).cast("long")
         for i in range(1, _GRAM_D + 1)
     }

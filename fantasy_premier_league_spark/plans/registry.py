@@ -112,6 +112,11 @@ CHANGED_THIS_ROUND: list[str] = [
     "sketch_kmv_setops",
     "graph_triangle_doulion",
     "t10_stream_hll",
+    # One deterministic Lloyd's (operators/ml.py) for every clustering
+    # and quantizer, and one sorted-neighborhood window join.
+    "ml_kmeans_profiles",
+    "ml_kmeans_embeddings",
+    "dedup_semantic_clusters",
 ]
 # (The 28 r17 entries -- triangle counts, blocked pairs, req1 shared
 # trace, perceptron fused readouts, t18 staging, CC cached edges,

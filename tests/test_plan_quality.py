@@ -620,6 +620,35 @@ def test_md5_hash_is_spelled_only_in_its_helper():
     assert not hits, f"md5-prefix hash spelled outside md5_hash: {hits}"
 
 
+def test_squared_l2_fold_is_spelled_only_in_its_helper():
+    """The squared-L2 distance has one Spark and one DuckDB spelling,
+    operators/ml.py dist2/dist2_sql; every clustering and quantizer
+    calls them, so the fold order the two engines must share cannot
+    drift apart per query. Spark's spelling is a two-argument lambda
+    opening on the difference of its arguments, DuckDB's a difference
+    of a CAST to DOUBLE."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "fantasy_premier_league_spark"
+    helper = pkg / "operators" / "ml.py"
+    allowed = {
+        n
+        for node in ast.parse(helper.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name in ("dist2", "dist2_sql")
+        for n in range(node.lineno, node.end_lineno + 1)
+    }
+    spark_fold = re.compile(r"lambda (\w+), (\w+): \(\1\b")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if (spark_fold.search(line) or "AS DOUBLE) - " in line)
+        and not (path == helper and n in allowed)
+    ]
+    assert not hits, f"squared-L2 fold spelled outside dist2/dist2_sql: {hits}"
+
+
 def test_chem_blocked_pairs_pins_probe_parallelism(spark):
     """r17 optimization guard: the blocked pair self-join's quadratic
     cost is in the JOIN OUTPUT while its shuffle INPUT is tiny, so

@@ -138,6 +138,8 @@ def _stream_copy(tmp_path, monkeypatch):
 
 
 def test_snapshot_follows_the_data_version(spark, tmp_path, monkeypatch):
+    from pyspark import StorageLevel
+
     from fantasy_premier_league_spark.operators import api
 
     stream = _stream_copy(tmp_path, monkeypatch)
@@ -146,12 +148,12 @@ def test_snapshot_follows_the_data_version(spark, tmp_path, monkeypatch):
     def answers():
         return predict_win(spark, req), player_profile(spark, name)
 
-    def pinned():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def cached(snapshot):
+        return [t.storageLevel != StorageLevel.NONE for t in snapshot.tables()]
 
-    n0 = pinned()
     before = answers()
-    n1 = pinned()
+    old = api._snapshot
+    assert all(cached(old))
     # the last match team1 (Arsenal, teamId 10) played: removing it moves
     # team1's ratings and the req2 player's profile
     arsenal = [p for p in sorted(stream.glob("*.jsonl"))
@@ -159,9 +161,10 @@ def test_snapshot_follows_the_data_version(spark, tmp_path, monkeypatch):
     arsenal[-1].unlink()
     after = answers()
     assert after != before
-    # the superseded snapshot was released: one snapshot's worth pinned
-    assert pinned() == n1
-    assert n1 - n0 <= len(api._snapshot.tables())
+    # the superseded snapshot was released and the new one is cached
+    assert api._snapshot is not old
+    assert not any(cached(old))
+    assert all(cached(api._snapshot))
 
     api._snapshot.release()
     monkeypatch.setattr(api, "_snapshot", None)
