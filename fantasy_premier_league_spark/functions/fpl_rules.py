@@ -1,25 +1,45 @@
 """The FPL domain rules, each written once (reference master.py:177-259).
 
-Every rule is plain arithmetic over a value accessor ``c(name)`` and a
-zero-guarded divide ``div(num, den)``, so the batch chain calls them
-with ``F.col`` and ``safe_div`` (Column expressions, operators/
-pipeline.py) and the streaming fold calls them with a per-match counter
-row and ``scalar_div`` (pandas scalars, streaming/pipeline.py). The
-module imports nothing else from the package: the stream fold and the
-``applyInPandas`` folds reach these functions by reference inside
-Python workers, where importing operators/pipeline.py would generate
-the fixtures.
+The A3 ratios and the A5 contribution are plain arithmetic over a value
+accessor ``c(name)`` and a zero-guarded divide ``div(num, den)``: the
+batch chain passes ``F.col`` and ``safe_div`` (Columns, operators/
+pipeline.py), the stream a per-match frame's ``__getitem__`` and
+``series_div`` (pandas Series, streaming/pipeline.py). The sequential
+A4+A5 part is one per-player fold, ``fold_player``, which the batch
+chain runs from ``INIT_STATE`` and the stream from each player's stored
+state.
+
+The module imports nothing else from the package: the Python workers
+reach it by reference, where importing operators/pipeline.py would
+generate the fixtures.
 """
 
 from __future__ import annotations
 
+import math
+from itertools import repeat
+
+import pandas as pd
+
 INIT_RATING = 0.5  # master.py:229 (old state None -> 0.5)
 FULL_MATCH = 90  # minutes; the reference overwrites time on pitch with it
 
+# one player's fold state, laid out as the stream's RATING_STATE_SCHEMA:
+# (rating, pa_mean, fouls, goals, own_goals, shots, last_match)
+INIT_STATE = (INIT_RATING, None, 0, 0, 0, 0, -1)
 
-def scalar_div(num, den):
-    """``safe_div`` for Python/numpy scalars: divide-by-zero -> 0.0."""
-    return num / den if den else 0.0
+# the per-match counters the profile sums, in the state's order
+PROFILE_COUNTS = ("fouls", "goals", "own_goals", "shots_on_target")
+
+# the columns fold_player adds to each folded match row
+FOLD_COLS = (
+    "rating", "delta", "pass_accuracy_mean", *(f"{c}_total" for c in PROFILE_COUNTS)
+)
+
+
+def series_div(num, den):
+    """``safe_div`` for pandas Series: divide-by-zero -> 0.0."""
+    return (num / den).where(den != 0, 0.0)
 
 
 def final_metrics(c, div) -> dict:
@@ -62,3 +82,43 @@ def rating_step(perf, old, top=FULL_MATCH):
 def running_mean(new, old):
     """A4's order-dependent pass-accuracy mean (master.py:242-259)."""
     return new if old is None else (new + old) / 2
+
+
+def fold_player(matches: pd.DataFrame, state: tuple = INIT_STATE) -> tuple:
+    """A4+A5 for one player from ``state`` (updatePlayerRating
+    master.py:214-239, getPlayerProfile master.py:242-259).
+
+    ``matches`` has one row per match in matchId order: ``matchId``,
+    ``perf`` (NaN without a roster span), an optional ``top`` (minutes;
+    a full match without it), ``pass_accuracy`` and the PROFILE_COUNTS.
+    A match at or below the state's ``last_match`` is skipped, so a
+    replayed match folds once and one that arrives after a later match
+    is dropped, where the batch chain would sort it in: stream and
+    batch agree only when matches arrive in matchId order. Only a row
+    with a roster span takes a rating step (the reference's J2 inner
+    join, master.py:367); one without keeps the rating and gets a null
+    ``delta``, leaving it out of the rating trace. Every row advances
+    the profile. Returns the folded rows (``matches`` plus FOLD_COLS)
+    and the new state.
+    """
+    rating, pa_mean, *totals, last_match = state
+    tops = matches["top"].tolist() if "top" in matches else repeat(FULL_MATCH)
+    kept, out = [], []
+    cols = (matches[c].tolist() for c in ("perf", "pass_accuracy", *PROFILE_COUNTS))
+    rows = zip(matches["matchId"].tolist(), tops, *cols)
+    for i, (match_id, top, perf, pass_accuracy, *counts) in enumerate(rows):
+        if match_id <= last_match:
+            continue
+        delta = None
+        if not math.isnan(perf):
+            new = rating_step(perf, rating, top)
+            delta = new - rating
+            rating = new
+        pa_mean = running_mean(pass_accuracy, pa_mean)
+        totals = [t + n for t, n in zip(totals, counts)]
+        last_match = match_id
+        kept.append(i)
+        out.append((rating, delta, pa_mean, *totals))
+    folded = matches.iloc[kept]
+    out = pd.DataFrame(out, columns=FOLD_COLS, index=folded.index)
+    return pd.concat([folded, out], axis=1), (rating, pa_mean, *totals, last_match)

@@ -26,8 +26,8 @@ wait for one build. The superseded snapshot is released with
 ``unpersist()`` first. Each table is a copy of its rows, collected once
 through the driver, so its plan is a scan of those rows: reading it
 never re-runs the rating fold or re-reads a file, even after it is
-released. The build parses and aggregates the event corpus once, shared
-by the rating trace and the profile.
+released. The build runs the A4+A5 fold once: the rating trace and the
+profile both read that pass.
 
 Request cost (x10 fixture, 4 CPUs): match_details and player_profile
 are one job each, predict_win four (the invalid path none).
@@ -77,18 +77,16 @@ from fantasy_premier_league_spark.operators.pipeline import (
     _RAW_SQL,
     _TEAMS_CSV_SQL,
     chemistry_from_trace,
-    events_df,
     final_rating_sql,
     latest_per_player,
+    latest_profile,
     load_players,
     load_teams,
-    match_counters,
     matches_df,
-    metric_vectors,
     performance_df,
-    profile_df,
+    player_fold_df,
     profile_sql,
-    rating_trace_df,
+    rated_rows,
 )
 from fantasy_premier_league_spark.plans.registry import register
 
@@ -232,10 +230,10 @@ def _detached(df: DataFrame) -> DataFrame:
 
 
 def _build_snapshot(spark: SparkSession, key: tuple) -> RequestSnapshot:
-    # one events pass feeds both the rating trace and the profile, and
-    # one trace feeds both the final rating and chemistry
-    counters = _detached(match_counters(metric_vectors(events_df(spark))))
-    trace = _detached(rating_trace_df(performance_df(spark, counters)))
+    # one A4+A5 fold feeds the rating trace and the profile, and one
+    # trace feeds both the final rating and chemistry
+    folded = _detached(player_fold_df(performance_df(spark)))
+    trace = rated_rows(folded)
     dim = _detached(load_players(spark))
     players: dict[str, list] = {}
     for name, pid, role in dim.select("name", "Id", "role").collect():
@@ -249,7 +247,7 @@ def _build_snapshot(spark: SparkSession, key: tuple) -> RequestSnapshot:
             for df in (
                 latest_per_player(trace).select("playerId", "rating"),
                 chemistry_from_trace(trace.select("playerId", "matchId", "teamId", "delta")),
-                dim.join(profile_df(spark, counters), dim.Id == F.col("playerId")),
+                dim.join(latest_profile(folded), dim.Id == F.col("playerId")),
                 _roster_lines(spark, dim),
             )
         ),

@@ -20,10 +20,10 @@ schemas, Spark-first:
 - A5: the rating recurrence rating = 1.05*(perf + old)/2
   (updatePlayerRating, master.py:214-239 -- including the documented
   time_on_pitch-overwritten-to-90 behavior, so the 1.05 path always
-  taken); perf is computed JVM-side, only the per-player fold runs in
-  Arrow-batched applyInPandas;
-- A4: the cumulative profile with the order-dependent running mean
-  (new+old)/2 for pass accuracy (getPlayerProfile, master.py:242-259);
+  taken) and A4, the cumulative profile with the order-dependent
+  running mean (new+old)/2 for pass accuracy (getPlayerProfile,
+  master.py:242-259): perf is computed JVM-side, and one per-player
+  fold runs both in Arrow-batched applyInPandas;
 - A6/J4: pairwise chemistry with the sign rule, init 0.5, clamped to
   [0,1] per the spec (reference metrics.py:26-49 omits the clamp and
   double-applies every pair per batch; the canonical rebuild counts
@@ -34,12 +34,15 @@ Every step is driver-gated: the DuckDB oracle re-derives the same
 result from the identical raw JSONL fixtures, so the full chain
 (JSON parse -> explode -> agg -> recurrence) is differentially tested.
 
-Each rule is written once per engine. The A3/A4/A5 arithmetic lives in
-functions/fpl_rules.py, shared as Columns here and as pandas scalars by
-the streaming fold (streaming/pipeline.py). On the oracle side this
-module owns one SQL fragment per rule -- ``_FM_SQL``, ``_rating_sql``,
-``final_rating_sql``, ``profile_sql`` and ``chemistry_sql`` -- which the
-request, KMeans and streaming oracles embed.
+Each rule is written once per engine. The A3/A4/A5 rules and the A4+A5
+fold live in functions/fpl_rules.py: the A3 arithmetic is shared as
+Columns here and as pandas Series by the stream, and ``fold_player``
+runs here from the initial state and in the stream
+(streaming/pipeline.py) from each player's stored state. On the oracle
+side this module owns one SQL fragment per rule -- ``_FM_SQL``,
+``_rating_sql``, ``final_rating_sql``, ``profile_sql`` and
+``chemistry_sql`` -- which the request, KMeans and streaming oracles
+embed.
 
 Scale: the stream parses once and splits by record type (no double
 parse); all aggregations key on (playerId, matchId) -- one shuffle,
@@ -52,7 +55,6 @@ match, linear in matches).
 from __future__ import annotations
 
 import os
-from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -60,12 +62,13 @@ from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import rounded, safe_div
 from fantasy_premier_league_spark.functions.fpl_rules import (
+    FOLD_COLS,
     FULL_MATCH,
     INIT_RATING,
+    PROFILE_COUNTS,
     final_metrics,
+    fold_player,
     performance,
-    rating_step,
-    running_mean,
 )
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.schemas import (
@@ -462,9 +465,11 @@ def fpl_j5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A5: rating recurrence. perf computed JVM-side with the exact reference
-# expression shape; the per-player fold (the only genuinely sequential
-# part) runs in applyInPandas, shuffled once on playerId.
+# A4+A5: the per-player fold. perf is computed JVM-side with the exact
+# reference expression shape; functions/fpl_rules.fold_player (the only
+# genuinely sequential part, shared with the stream) runs in one
+# applyInPandas, shuffled once on playerId, and yields both the rating
+# trace and the profile.
 # ---------------------------------------------------------------------------
 
 
@@ -474,8 +479,11 @@ def performance_df(
     effectiveness: str = "shot_effectiveness",
     time_on_pitch: bool = False,
 ) -> DataFrame:
-    """Per fielded (player, match): the penalized contribution
-    (master.py:230-232), joined J2-style (inner on roster membership).
+    """Per counted (player, match): the fold's inputs. ``teamId`` and
+    ``perf``, the penalized contribution (master.py:230-232), come from
+    the player's roster span, joined J2-style; a row without a span
+    keeps them null, so the fold moves only its profile. The profile
+    inputs are ``pass_accuracy`` and the PROFILE_COUNTS.
 
     ``counters`` lets a caller that ALSO aggregates the match counters
     for another branch (the KMeans imputation queries: cluster features
@@ -489,37 +497,49 @@ def performance_df(
         counters = match_counters(metric_vectors(events_df(spark)))
     fm = final_metrics_df(counters)
     minutes = ["inTime", "outTime"] if time_on_pitch else []
-    spans = player_spans(matches_df(spark)).select("matchId", "playerId", "teamId", *minutes)
-    cols = [performance(F.col, effectiveness).alias("perf")]
+    spans = player_spans(matches_df(spark)).select(
+        "matchId", "playerId", "teamId", *minutes, F.lit(True).alias("fielded")
+    )
+    cols = [F.when(F.col("fielded"), performance(F.col, effectiveness)).alias("perf")]
     if time_on_pitch:
         cols.append((F.col("outTime") - F.col("inTime")).alias("top"))
-    return fm.join(spans, ["playerId", "matchId"]).select(
-        "playerId", "matchId", "teamId", *cols
+    return fm.join(spans, ["playerId", "matchId"], "left").select(
+        "playerId", "matchId", "teamId", *cols, "pass_accuracy", *PROFILE_COUNTS
+    )
+
+
+def player_fold_df(perf: DataFrame) -> DataFrame:
+    """fold_player over each player's performance_df rows, from the
+    initial state: one row per counted (player, match) with the rating
+    after it and the profile so far (FOLD_COLS)."""
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        folded, _ = fold_player(pdf.sort_values("matchId"))
+        return folded[["playerId", "matchId", "teamId", *FOLD_COLS]]
+
+    return perf.groupBy("playerId").applyInPandas(
+        fold,
+        schema=(
+            "playerId int, matchId int, teamId int, rating double, delta double, "
+            "pass_accuracy_mean double, fouls_total long, goals_total long, "
+            "own_goals_total long, shots_on_target_total long"
+        ),
+    )
+
+
+def rated_rows(folded: DataFrame) -> DataFrame:
+    """The rating trace of a folded frame: its rows that took a rating
+    step (a null delta marks a match without a roster span)."""
+    return folded.filter(F.col("delta").isNotNull()).select(
+        "playerId", "matchId", "teamId", "rating", "delta"
     )
 
 
 def rating_trace_df(perf: DataFrame) -> DataFrame:
-    """Per (player, match) in match order: the rating after the match
-    and its change. A ``top`` column feeds each match's minutes to
+    """Per fielded (player, match) in match order: the rating after the
+    match and its change. A ``top`` column feeds each match's minutes to
     rating_step; without one every match is a full match."""
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("matchId").reset_index(drop=True)
-        tops = pdf["top"] if "top" in pdf else repeat(FULL_MATCH)
-        ratings, deltas = [], []
-        r = INIT_RATING
-        for p, top in zip(pdf["perf"], tops):
-            new = rating_step(p, r, top)
-            ratings.append(new)
-            deltas.append(new - r)
-            r = new
-        pdf["rating"] = ratings
-        pdf["delta"] = deltas
-        return pdf[["playerId", "matchId", "teamId", "rating", "delta"]]
-
-    return perf.groupBy("playerId").applyInPandas(
-        fold, schema="playerId int, matchId int, teamId int, rating double, delta double"
-    )
+    return rated_rows(player_fold_df(perf))
 
 
 def _perf_sql(effectiveness: str = "shot_effectiveness", time_on_pitch: bool = False) -> str:
@@ -642,6 +662,18 @@ def latest_per_player(df: DataFrame) -> DataFrame:
     )
 
 
+def latest_profile(folded: DataFrame) -> DataFrame:
+    """Each player's A4 profile from a folded frame (player_fold_df or
+    the stream's RATING_OUTPUT_SCHEMA rows): the totals of the player's
+    latest row, laid out as the stream's K3 profile snapshots."""
+    return latest_per_player(folded).select(
+        "playerId",
+        "matchId",
+        F.col("pass_accuracy_mean").alias("pass_accuracy"),
+        *(F.col(f"{c}_total").alias(c) for c in PROFILE_COUNTS),
+    )
+
+
 def final_rating_sql(trace: str) -> str:
     """latest_per_player's oracle: (playerId, rating) from the relation
     ``trace`` (a CTE name or a parenthesized subquery)."""
@@ -671,43 +703,13 @@ def fpl_a7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # A4: cumulative profile with the order-dependent running mean
-# (getPlayerProfile, master.py:242-259). Sums are window-expressible;
-# the (new+old)/2 pass-accuracy mean folds in the same pandas pass.
+# (getPlayerProfile, master.py:242-259), read off the A4+A5 fold.
 # ---------------------------------------------------------------------------
 
 
-def profile_df(spark: SparkSession, counters: DataFrame | None = None) -> DataFrame:
-    """Per player: summed counters plus the running-mean pass accuracy.
-    ``counters`` has the meaning it has in ``performance_df``: a caller
-    that also builds the rating trace passes one materialized counters
-    frame, so the event corpus is parsed and aggregated once."""
-    if counters is None:
-        counters = match_counters(metric_vectors(events_df(spark)))
-    fm = final_metrics_df(counters)
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("matchId").reset_index(drop=True)
-        pa = None
-        for p in pdf["pass_accuracy"]:
-            pa = running_mean(p, pa)
-        return pd.DataFrame(
-            {
-                "playerId": [pdf["playerId"].iloc[0]],
-                "fouls": [pdf["fouls"].sum()],
-                "goals": [pdf["goals"].sum()],
-                "own_goals": [pdf["own_goals"].sum()],
-                "pass_accuracy": [pa],
-                "shots_on_target": [pdf["shots_on_target"].sum()],
-            }
-        )
-
-    return fm.groupBy("playerId").applyInPandas(
-        fold,
-        schema=(
-            "playerId int, fouls long, goals long, own_goals long, "
-            "pass_accuracy double, shots_on_target long"
-        ),
-    )
+def profile_df(spark: SparkSession) -> DataFrame:
+    """Per player: summed counters plus the running-mean pass accuracy."""
+    return latest_profile(player_fold_df(performance_df(spark))).drop("matchId")
 
 
 def profile_sql(fm: str) -> str:

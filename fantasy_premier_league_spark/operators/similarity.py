@@ -1187,8 +1187,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sizes = labels.groupBy("cid").agg(F.count("*").alias("n_vectors"))
     dc = drops.groupBy("cid").agg(F.count("*").alias("n_dropped"))
+    # both sides hold one row per cluster: broadcast, never sort-merge
     return (
-        sizes.join(dc, "cid", "left")
+        sizes.join(F.broadcast(dc), "cid", "left")
         .select(
             F.col("cid").cast("int").alias("cluster"),
             F.col("n_vectors").cast("long").alias("n_vectors"),

@@ -138,8 +138,9 @@ STREAM_SCHEMA = T.StructType(
 )
 
 # --------------------------------------------------------------------------
-# State-value shapes (named replacements for the reference's positional
-# tuples; layouts documented at master.py:48-138, :212, :235, :259).
+# The metric vector (a named replacement for the reference's positional
+# tuple, master.py:48-138). The A4+A5 fold state is the stream's
+# RATING_STATE_SCHEMA (streaming/pipeline.py).
 # --------------------------------------------------------------------------
 
 # 17 counters + matchId: the fixed 18-slot metric vector (the reference's
@@ -163,33 +164,3 @@ METRIC_COUNTER_COLS = [
     "penalty_goals",
     "goals",
 ]
-
-FINAL_METRIC_COLS = [
-    "pass_accuracy",
-    "duel_effectiveness",
-    "shot_effectiveness",
-    "fouls",
-    "own_goals",
-    "shots_on_target",
-    "free_kick_effectiveness",
-    "goals",
-]
-
-RATING_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("playerId", T.IntegerType()),
-        T.StructField("rating", T.DoubleType()),
-        T.StructField("delta", T.DoubleType()),
-    ]
-)
-
-PROFILE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("playerId", T.IntegerType()),
-        T.StructField("fouls", T.LongType()),
-        T.StructField("goals", T.LongType()),
-        T.StructField("own_goals", T.LongType()),
-        T.StructField("pass_accuracy", T.DoubleType()),
-        T.StructField("shots_on_target", T.LongType()),
-    ]
-)

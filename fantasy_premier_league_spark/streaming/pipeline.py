@@ -23,10 +23,15 @@ Reference topology: socket text DStream, 5 s batches, 4 chained
   a single row per player. Chaining stateful ops inside one query is
   not supported by the incremental planner (and the reference's
   4-deep updateStateByKey chain recomputed everything every batch),
-  so counters/metrics are derived inside the state function from the
-  batch's raw events -- each batch is one match, so the per-match
-  aggregate is complete within the invocation. The fold applies the
-  same A3/A4/A5 rules as the batch chain, from functions/fpl_rules.py.
+  so the state function reduces the batch's raw events to per-match
+  rows itself: one pandas groupby-sum, then the A3 ratios and the
+  contribution on whole Series (each batch carries whole matches, so
+  the sums are complete). It then runs the batch chain's own fold,
+  functions/fpl_rules.py ``fold_player``, from the player's stored
+  state. The stream reads no roster spans, so every counted match
+  takes a rating step; it reproduces the batch results when every
+  counted (player, match) is fielded, as in the fixtures, and matches
+  arrive in matchId order.
 
 At 100 TB: the file/kafka source partitions by file/topic-partition;
 the single stateful shuffle keys on playerId (bounded state, one row
@@ -51,12 +56,11 @@ from pyspark.sql import types as T
 
 from fantasy_premier_league_spark.functions import scoped_conf
 from fantasy_premier_league_spark.functions.fpl_rules import (
-    INIT_RATING,
+    INIT_STATE,
     final_metrics,
+    fold_player,
     performance,
-    rating_step,
-    running_mean,
-    scalar_div,
+    series_div,
 )
 from fantasy_premier_league_spark.schemas import STREAM_SCHEMA
 
@@ -74,7 +78,8 @@ RATING_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-# state: one row per player (rating + cumulative profile)
+# state: one row per player (rating + cumulative profile); fold_player's
+# state tuple, starting at fpl_rules.INIT_STATE
 RATING_STATE_SCHEMA = T.StructType(
     [
         T.StructField("rating", T.DoubleType()),
@@ -219,7 +224,7 @@ def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = Non
     """
     import time as _time
 
-    from fantasy_premier_league_spark.operators.pipeline import latest_per_player
+    from fantasy_premier_league_spark.operators.pipeline import latest_profile
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -239,15 +244,7 @@ def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = Non
                 "batch_id"
             ).parquet(rating_dir)
             t_rating = _time.perf_counter()
-            latest = latest_per_player(batch_df).select(
-                "playerId",
-                "matchId",
-                F.col("pass_accuracy_mean").alias("pass_accuracy"),
-                F.col("fouls_total").alias("fouls"),
-                F.col("goals_total").alias("goals"),
-                F.col("own_goals_total").alias("own_goals"),
-                F.col("shots_on_target_total").alias("shots_on_target"),
-            )
+            latest = latest_profile(batch_df)
             prev_dir = latest_committed_version(profile_root, batch_id)
             if prev_dir is not None:
                 prev = sp.read.parquet(prev_dir)
@@ -288,52 +285,15 @@ def streaming_match_counters(parsed: DataFrame) -> DataFrame:
 def _fold_player_state(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """A4+A5 in one pass (updatePlayerRating master.py:214-239 +
-    getPlayerProfile master.py:242-259). Input rows: one per event for
-    this player in this batch; each batch carries whole matches."""
-    (player_id,) = key
-    if state.exists:
-        rating, pa_mean, fouls_t, goals_t, og_t, shots_t, last_match = state.get
-    else:
-        rating, pa_mean = INIT_RATING, None
-        fouls_t = goals_t = og_t = shots_t = 0
-        last_match = -1
-
-    out_rows = []
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    for match_id, g in pdf.sort_values("matchId").groupby("matchId", sort=True):
-        if match_id <= last_match:
-            continue  # replayed/duplicate match: idempotent skip
-        c = g.sum(numeric_only=True).to_dict()  # the match's counters...
-        c.update(final_metrics(c.__getitem__, scalar_div))  # ...and A3 metrics
-        new_rating = rating_step(performance(c.__getitem__), rating)
-        delta = new_rating - rating
-        rating = new_rating
-        pa_mean = running_mean(c["pass_accuracy"], pa_mean)
-        fouls_t += int(c["fouls"])
-        goals_t += int(c["goals"])
-        og_t += int(c["own_goals"])
-        shots_t += int(c["shots_on_target"])
-        last_match = int(match_id)
-        out_rows.append(
-            {
-                "playerId": player_id,
-                "matchId": last_match,
-                "rating": rating,
-                "delta": delta,
-                "pass_accuracy_mean": pa_mean,
-                "fouls_total": fouls_t,
-                "goals_total": goals_t,
-                "own_goals_total": og_t,
-                "shots_on_target_total": shots_t,
-            }
-        )
-
-    state.update((rating, pa_mean, fouls_t, goals_t, og_t, shots_t, last_match))
-    yield pd.DataFrame(
-        out_rows,
-        columns=[f.name for f in RATING_OUTPUT_SCHEMA.fields],
-    )
+    """A4+A5 (fpl_rules.fold_player) from the player's stored state.
+    Input rows: one per event for this player in this batch; each batch
+    carries whole matches, so its per-match sums are complete."""
+    c = pd.concat(list(pdfs)).groupby(["playerId", "matchId"], as_index=False).sum()
+    c = c.assign(**final_metrics(c.__getitem__, series_div))
+    c["perf"] = performance(c.__getitem__)
+    folded, new_state = fold_player(c, state.get if state.exists else INIT_STATE)
+    state.update(new_state)
+    yield folded[RATING_OUTPUT_SCHEMA.fieldNames()]
 
 
 def streaming_player_state(parsed: DataFrame) -> DataFrame:

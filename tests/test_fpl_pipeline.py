@@ -273,3 +273,71 @@ def test_span_shapes(spark):
         elif s["outTime"] == 90:
             shapes.add("subbed_in")
     assert shapes == {"full90", "subbed_out", "unused_bench", "subbed_in"}
+
+
+def _fold_input(*rows):
+    """fold_player's per-match input: (matchId, perf, pass_accuracy,
+    fouls, goals, own_goals, shots_on_target) per row."""
+    import pandas as pd
+
+    from fantasy_premier_league_spark.functions.fpl_rules import PROFILE_COUNTS
+
+    return pd.DataFrame(rows, columns=["matchId", "perf", "pass_accuracy", *PROFILE_COUNTS])
+
+
+def test_fold_drops_a_match_that_arrives_after_a_later_one():
+    """Out-of-order arrival: folding from a state whose last_match is M,
+    a row for an earlier match emits nothing and leaves the state as it
+    was, while the batch chain, which folds every match sorted from the
+    initial state, takes that match in. Stream and batch therefore
+    agree only when matches arrive in matchId order."""
+    from fantasy_premier_league_spark.functions.fpl_rules import fold_player
+
+    early, late = (10, 0.6, 0.9, 2, 1, 0, 0), (20, 0.4, 0.5, 1, 0, 0, 1)
+    _, state = fold_player(_fold_input(late))
+    folded, after = fold_player(_fold_input(early), state)
+    assert folded.empty
+    assert after == state
+    batch, batch_state = fold_player(_fold_input(early, late))
+    assert batch["matchId"].tolist() == [10, 20]
+    assert batch_state != state
+
+
+def test_unfielded_row_moves_the_profile_not_the_rating(spark):
+    """A counted (player, match) row without a roster span (null perf
+    and teamId) moves the profile totals and the running mean, but not
+    the rating, and is not part of the rating trace."""
+    from fantasy_premier_league_spark.functions.fpl_rules import INIT_RATING, rating_step
+    from fantasy_premier_league_spark.operators.pipeline import (
+        latest_profile,
+        player_fold_df,
+        rated_rows,
+    )
+
+    perf = spark.createDataFrame(
+        [
+            (7, 1, 100, 0.4, 0.5, 1, 1, 0, 2),
+            (7, 2, None, None, 0.9, 2, 1, 0, 1),
+            (7, 3, 100, 0.6, 0.7, 0, 0, 1, 0),
+        ],
+        "playerId int, matchId int, teamId int, perf double, pass_accuracy double, "
+        "fouls long, goals long, own_goals long, shots_on_target long",
+    )
+    folded = player_fold_df(perf).localCheckpoint()
+    r1 = rating_step(0.4, INIT_RATING)
+    r3 = rating_step(0.6, r1)
+    rows = {r["matchId"]: r for r in folded.collect()}
+    assert rows[2]["rating"] == r1 and rows[2]["delta"] is None
+    assert rows[2]["teamId"] is None
+    trace = sorted((r["matchId"], r["rating"], r["delta"]) for r in rated_rows(folded).collect())
+    assert trace == [(1, r1, r1 - INIT_RATING), (3, r3, r3 - r1)]
+    (profile,) = latest_profile(folded).collect()
+    assert profile.asDict() == {
+        "playerId": 7,
+        "matchId": 3,
+        "pass_accuracy": (0.7 + (0.9 + 0.5) / 2) / 2,
+        "fouls": 3,
+        "goals": 2,
+        "own_goals": 1,
+        "shots_on_target": 3,
+    }

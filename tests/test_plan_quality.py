@@ -649,6 +649,34 @@ def test_squared_l2_fold_is_spelled_only_in_its_helper():
     assert not hits, f"squared-L2 fold spelled outside dist2/dist2_sql: {hits}"
 
 
+def test_fpl_fold_steps_are_called_only_in_the_shared_fold():
+    """The A5 rating step and the A4 running mean are called from one
+    function, functions/fpl_rules.py fold_player, which the batch
+    chain, the request snapshot and the stream all run, so a second
+    loop over them cannot let stream and batch drift apart."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "fantasy_premier_league_spark"
+    rules = pkg / "functions" / "fpl_rules.py"
+    allowed = {
+        n
+        for node in ast.parse(rules.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "fold_player"
+        for n in range(node.lineno, node.end_lineno + 1)
+    }
+    steps = ("rating_step", "running_mean")
+    hits = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None)) in steps
+        and not (path == rules and node.lineno in allowed)
+    ]
+    assert not hits, f"rating_step/running_mean called outside fold_player: {hits}"
+
+
 def test_chem_blocked_pairs_pins_probe_parallelism(spark):
     """r17 optimization guard: the blocked pair self-join's quadratic
     cost is in the JOIN OUTPUT while its shuffle INPUT is tiny, so
