@@ -20,7 +20,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import fixed_units, rounded
-from fantasy_premier_league_spark.operators.pipeline import chemistry_from_trace
+from fantasy_premier_league_spark.operators.pipeline import (
+    chemistry_from_trace,
+    chemistry_sql,
+)
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import load_table
 
@@ -137,7 +140,7 @@ def keyed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a6_chemistry_pairs",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT user_id, date_trunc('day', ts) AS day,
              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 / count(*) AS v
@@ -148,23 +151,14 @@ def keyed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
              v - lag(v) OVER (PARTITION BY user_id ORDER BY day) AS d
       FROM daily
     ),
-    team AS (SELECT c_custkey AS user_id, c_nationkey AS team FROM customer),
-    pairs AS (
-      SELECT a.user_id AS p1, b.user_id AS p2,
-             abs((a.d + b.d) / 2) AS mag,
-             ((a.d > 0 AND b.d > 0) OR (a.d < 0 AND b.d < 0)) AS same_sign,
-             (ta.team = tb.team) AS same_team
-      FROM delta a
-      JOIN delta b ON a.day = b.day AND a.user_id < b.user_id
-      JOIN team ta ON ta.user_id = a.user_id
-      JOIN team tb ON tb.user_id = b.user_id
-      WHERE a.d IS NOT NULL AND b.d IS NOT NULL
+    trace AS (
+      SELECT delta.user_id AS playerId, delta.day AS matchId,
+             customer.c_nationkey AS teamId, delta.d AS delta
+      FROM delta JOIN customer ON customer.c_custkey = delta.user_id
+      WHERE delta.d IS NOT NULL
     )
-    SELECT p1, p2,
-           round(greatest(0.0, least(1.0,
-             0.5 + sum(CASE WHEN same_team = same_sign THEN mag ELSE -mag END))), 6)
-             AS chemistry
-    FROM pairs GROUP BY p1, p2 ORDER BY p1, p2
+    SELECT p1, p2, round(chemistry, 6) AS chemistry
+    FROM ({chemistry_sql("trace")}) ORDER BY p1, p2
     """,
 )
 def chemistry_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

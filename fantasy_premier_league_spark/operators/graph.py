@@ -259,9 +259,8 @@ def triangle_counts_plan(
     cache_edges: bool = True,
     node_mode: str = "explode",
 ) -> DataFrame:
-    """The registered query's full plan with the two study knobs
-    exposed, so tools/triangle_stage_study.py times the SAME code the
-    registered query runs (the t16-study discipline).
+    """The registered query's full plan with the two r16 stage-study
+    knobs exposed (the study's numbers are in OPTIMIZATION_r17.md).
 
     Defaults flipped in r17 after the study priced the pre-r17 shape
     (cache_edges=False, node_mode="union") at 1.9x the fixed one at
@@ -287,8 +286,8 @@ def _triangle_nodes(triangles: DataFrame, mode: str = "union") -> DataFrame:
     three times in the physical plan, and only ReuseExchange-level reuse
     mitigates the triplication; mode="explode" emits the same three rows
     from ONE pass via explode(array(a, v, w)) -- a JVM-side Generate,
-    no Python. tools/triangle_stage_study.py prices both (VERDICT r16
-    task #5: check specifically for hidden re-execution)."""
+    no Python. The r16 stage study priced both (VERDICT r16 task #5:
+    check specifically for hidden re-execution)."""
     if mode == "union":
         return (
             triangles.select(F.col("a").alias("node"))
@@ -364,7 +363,7 @@ def _oriented_triangles(
     the rank-annotation join, so inside the single orientation action
     its subtree (lineitem distinct + per-order self-join + pair
     distinct) appears twice; True localCheckpoints it first so the pair
-    generation runs once. Priced by tools/triangle_stage_study.py
+    generation runs once. Priced by the r16 stage study
     (VERDICT r16 task #5 -- the uncached-intermediate-consumed-twice
     class the t16 study found in the state sink)."""
     if cache_edges:

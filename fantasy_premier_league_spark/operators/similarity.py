@@ -366,20 +366,13 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _cos(a: Column, b: Column, na: Column, nb: Column) -> Column:
         return dot(a, b) / (na * nb)
 
-    # inverted-list assignment: every corpus vector -> nearest centroid
-    rn_assign = F.row_number().over(
-        Window.partitionBy("vec_id").orderBy(
-            rounded(
-                _cos(F.col("vec"), F.col("cvec"), F.col("nrm"), F.col("cnrm")), 6
-            ).desc(),
-            F.col("cid"),
-        )
-    )
+    # inverted-list assignment: every corpus vector -> nearest centroid,
+    # ties to the lowest cid (ml.nearest's map-side min_by shape)
+    cos = rounded(_cos(F.col("vec"), F.col("cvec"), F.col("nrm"), F.col("cnrm")), 6)
     assigned = (
         v.crossJoin(F.broadcast(cent))
-        .withColumn("rn", rn_assign)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "vec", "nrm", "cid")
+        .groupBy("vec_id", "vec", "nrm")
+        .agg(F.min_by("cid", F.struct(-cos, F.col("cid"))).alias("cid"))
     )
 
     q = v.filter(

@@ -30,10 +30,38 @@ _M = 16  # registers; alpha_16 from the HLL paper (Flajolet et al. 2007)
 _ALPHA = 0.673
 
 
-@register(
-    "sketch_hll_distinct",
-    oracle=f"""
-    WITH h AS (
+def hll_registers(ev: DataFrame) -> DataFrame:
+    """(event_type, bucket, m): the HLL registers of each event_type's
+    user_ids; over a streaming ``ev`` this is the streaming aggregation.
+
+    bucket = low 4 hash bits; rho = leftmost-1 position of the
+    remaining 28 bits; m = max rho per bucket."""
+    h = md5_hash(F.col("user_id"))
+    w = F.shiftright(h, 4)  # h // 16: top 28 bits
+    # leftmost-1 position via INTEGER bit arithmetic: floor(log2(w)) =
+    # len(bin(w)) - 1 exactly, with no libm transcendental whose last
+    # ulp near powers of two could differ between engines.
+    rho = F.when(w == 0, F.lit(29)).otherwise(
+        (F.lit(29) - F.length(F.bin(w))).cast("int")
+    )
+    return (
+        ev.select("event_type", F.pmod(h, F.lit(_M)).alias("bucket"), rho.alias("rho"))
+        .groupBy("event_type", "bucket")
+        .agg(F.max("rho").alias("m"))
+    )
+
+
+def hll_estimate() -> Column:
+    """Aggregate over one key's register rows: alpha * m^2 / harmonic
+    mean, with absent buckets contributing 2^0. No small/large-range
+    correction: bias is part of the pinned, reproducible answer."""
+    return F.lit(_ALPHA * _M * _M) / (
+        F.sum(F.pow(F.lit(2.0), -F.col("m"))) + (_M - F.count("*"))
+    )
+
+
+# hll_registers' twin over the events table: the CTEs h, r and regs
+HLL_REGS_SQL = f"""h AS (
       SELECT event_type,
              {md5_hash_sql("CAST(user_id AS VARCHAR)")} AS h
       FROM events
@@ -44,12 +72,15 @@ _ALPHA = 0.673
                   ELSE 29 - CAST(length(bin(h // {_M})) AS INT) END AS rho
       FROM h
     ),
-    regs AS (SELECT event_type, bucket, max(rho) AS m FROM r GROUP BY 1, 2),
-    est AS (
-      SELECT event_type,
-             {_ALPHA} * {_M * _M} / (sum(power(2.0, -m)) + ({_M} - count(*))) AS e
-      FROM regs GROUP BY event_type
-    ),
+    regs AS (SELECT event_type, bucket, max(rho) AS m FROM r GROUP BY 1, 2)"""
+HLL_ESTIMATE_SQL = f"{_ALPHA} * {_M * _M} / (sum(power(2.0, -m)) + ({_M} - count(*)))"
+
+
+@register(
+    "sketch_hll_distinct",
+    oracle=f"""
+    WITH {HLL_REGS_SQL},
+    est AS (SELECT event_type, {HLL_ESTIMATE_SQL} AS e FROM regs GROUP BY event_type),
     exact AS (
       SELECT event_type, count(DISTINCT user_id) AS exact_distinct FROM events GROUP BY 1
     )
@@ -60,33 +91,9 @@ _ALPHA = 0.673
 )
 def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic HLL distinct-user estimate per event_type, next to
-    the exact count so the sketch's error is visible in the result.
-
-    bucket = low 4 hash bits; rho = leftmost-1 position of the
-    remaining 28 bits; estimate = alpha * m^2 / harmonic mean, with
-    absent buckets contributing 2^0. No small/large-range correction:
-    bias is part of the pinned, reproducible answer.
-    """
+    the exact count so the sketch's error is visible in the result."""
     ev = load_table(spark, sf_dir, "events")
-    h = md5_hash(F.col("user_id"))
-    w = F.shiftright(h, 4)  # h // 16: top 28 bits
-    # leftmost-1 position via INTEGER bit arithmetic: floor(log2(w)) =
-    # len(bin(w)) - 1 exactly, with no libm transcendental whose last
-    # ulp near powers of two could differ between engines.
-    rho = F.when(w == 0, F.lit(29)).otherwise(
-        (F.lit(29) - F.length(F.bin(w))).cast("int")
-    )
-    regs = (
-        ev.select("event_type", F.pmod(h, F.lit(_M)).alias("bucket"), rho.alias("rho"))
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("m"))
-    )
-    est = regs.groupBy("event_type").agg(
-        (
-            F.lit(_ALPHA * _M * _M)
-            / (F.sum(F.pow(F.lit(2.0), -F.col("m"))) + (_M - F.count("*")))
-        ).alias("e")
-    )
+    est = hll_registers(ev).groupBy("event_type").agg(hll_estimate().alias("e"))
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_distinct")
     )

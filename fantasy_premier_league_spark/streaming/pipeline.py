@@ -177,13 +177,14 @@ def run_ingest_sinks(
     )
 
 
-def latest_committed_version(root: str, batch_id: int) -> "str | None":
-    """Newest COMMITTED snapshot dir ``root/vNNNNN`` strictly older than
-    ``batch_id``: the shared replay rule for versioned MERGE sinks
-    (K3 profile snapshots and the t18 dedup-history table). Committed =
-    the ``_SUCCESS`` marker exists AND the version is below the current
-    batch -- so a replayed batch after a crash ignores its own partial
-    write and re-reads the state its original attempt read (T8)."""
+def latest_committed_version(root: str, batch_id: "int | None" = None) -> "str | None":
+    """Newest COMMITTED snapshot dir ``root/vNNNNN``: the one commit rule
+    for versioned MERGE sinks (K3 profile snapshots and the t18
+    dedup-history table) and their readers. Committed = the
+    ``_SUCCESS`` marker exists. A sink replaying ``batch_id`` also
+    bounds the version strictly below it, so a replayed batch after a
+    crash ignores its own partial write and re-reads the state its
+    original attempt read (T8); a reader passes no bound."""
     import glob as _glob
     import re as _re
 
@@ -192,7 +193,7 @@ def latest_committed_version(root: str, batch_id: int) -> "str | None":
         m = _re.search(r"v(\d+)$", d)
         if (
             m is not None
-            and int(m.group(1)) < batch_id
+            and (batch_id is None or int(m.group(1)) < batch_id)
             and os.path.exists(os.path.join(d, "_SUCCESS"))
         ):
             prevs.append(d)

@@ -30,14 +30,21 @@ from pyspark.sql import functions as F
 from fantasy_premier_league_spark.functions import (
     epoch_us,
     fixed_units,
-    md5_hash,
-    md5_hash_sql,
     rounded,
     scoped_conf,
 )
+from fantasy_premier_league_spark.operators.sketches import (
+    HLL_ESTIMATE_SQL,
+    HLL_REGS_SQL,
+    hll_estimate,
+    hll_registers,
+)
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import canonicalize_ts, load_table
-from fantasy_premier_league_spark.streaming.pipeline import run_stream_to_memory
+from fantasy_premier_league_spark.streaming.pipeline import (
+    latest_committed_version,
+    run_stream_to_memory,
+)
 
 
 # per-session scratch-dir lifecycle (wipe-at-claim, stale-sibling
@@ -302,56 +309,21 @@ _register_stateful()
 # holds ~a hundred integers.
 # ---------------------------------------------------------------------------
 
-_HLL_M = 16
-_HLL_ALPHA = 0.673
-
-
 @register(
     "t10_stream_hll",
     oracle=f"""
-    WITH h AS (
-      SELECT event_type,
-             {md5_hash_sql("CAST(user_id AS VARCHAR)")} AS h
-      FROM events
-    ),
-    r AS (
-      SELECT event_type, h % {_HLL_M} AS bucket,
-             CASE WHEN h // {_HLL_M} = 0 THEN 29
-                  ELSE 29 - CAST(length(bin(h // {_HLL_M})) AS INT) END AS rho
-      FROM h
-    ),
-    regs AS (SELECT event_type, bucket, max(rho) AS m FROM r GROUP BY 1, 2)
-    SELECT event_type,
-           round({_HLL_ALPHA} * {_HLL_M * _HLL_M}
-                 / (sum(power(2.0, -m)) + ({_HLL_M} - count(*))) * 1000) / 1000
-             AS hll_estimate
+    WITH {HLL_REGS_SQL}
+    SELECT event_type, round({HLL_ESTIMATE_SQL} * 1000) / 1000 AS hll_estimate
     FROM regs GROUP BY event_type ORDER BY event_type
     """,
 )
 def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    h = md5_hash(F.col("user_id"))
-    w = F.shiftright(h, 4)
-    rho = F.when(w == 0, F.lit(29)).otherwise(
-        (F.lit(29) - F.length(F.bin(w))).cast("int")
+    regs = run_stream_to_memory(
+        hll_registers(_events_stream(spark, sf_dir)), output_mode="complete"
     )
-    stream = (
-        _events_stream(spark, sf_dir)
-        .select(
-            "event_type", F.pmod(h, F.lit(_HLL_M)).alias("bucket"), rho.alias("rho")
-        )
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("m"))
-    )
-    regs = run_stream_to_memory(stream, output_mode="complete")
     return (
         regs.groupBy("event_type")
-        .agg(
-            rounded(
-                F.lit(_HLL_ALPHA * _HLL_M * _HLL_M)
-                / (F.sum(F.pow(F.lit(2.0), -F.col("m"))) + (_HLL_M - F.count("*"))),
-                3,
-            ).alias("hll_estimate")
-        )
+        .agg(rounded(hll_estimate(), 3).alias("hll_estimate"))
         .orderBy("event_type")
     )
 
@@ -829,9 +801,8 @@ def stop_on_error(queries: list):
 
 
 def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Stage 3 -- serving: every input comes from the sink tables."""
-    import glob as _glob
-
+    """Stage 3 -- serving: every input comes from the sink tables; the
+    profile is the newest COMMITTED K3 snapshot, as the sink reads it."""
     from fantasy_premier_league_spark.operators.pipeline import (
         chemistry_from_trace,
         latest_per_player,
@@ -843,9 +814,7 @@ def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
 
     # ---- serving: every input below comes from the sink tables ----
     rating = spark.read.parquet(rating_dir)
-    profile = spark.read.parquet(
-        sorted(_glob.glob(os.path.join(profile_root, "v*")))[-1]
-    )
+    profile = spark.read.parquet(latest_committed_version(profile_root))
     teams = (
         spark.read.parquet(events_dir)
         .select("playerId", "matchId", "teamId")

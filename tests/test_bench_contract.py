@@ -271,3 +271,32 @@ def test_steal_burst_is_identifiable_from_artifact_alone():
     # artifact's spread[name]["steal_max"] is this exact computation
     assert burst is not None and burst >= 20.0, (burst, samples)
     assert quiet is None or quiet <= 5.0, (quiet, samples)
+
+
+def test_profile_covers_every_headline_query():
+    """PROFILE.json (tools/query_profile.py) has an error-free row for
+    every bench.HEADLINE query, with both phases' counters and stage
+    rows, so the committed profile cannot silently fall behind the
+    headline."""
+    sys.path.insert(0, REPO)
+    import bench
+
+    with open(os.path.join(REPO, "PROFILE.json")) as fh:
+        profile = json.load(fh)
+    meta, rows = profile["meta"], profile["queries"]
+    assert meta["errors"] == []
+    for key in ("nproc", "git_rev", "steal_max_pct"):
+        assert meta[key] is not None, key
+    assert set(bench.HEADLINE) <= set(rows)
+    counters = ("jobs", "tasks", "executor_run_ms", "executor_cpu_ms",
+                "shuffle_bytes", "spill_bytes", "gc_ms", "driver_ms", "stages")
+    for name in bench.HEADLINE:
+        row = rows[name]
+        assert "error" not in row, (name, row.get("error"))
+        for key in ("construction_ms", "action_ms", "persistent_rdds",
+                    "storage_memory_bytes"):
+            assert row[key] >= 0, (name, key)
+        for phase in ("construction", "action"):
+            assert all(k in row[phase] for k in counters), (name, phase)
+            stages = row[phase]["stages"]
+            assert sum(s["tasks"] for s in stages) == row[phase]["tasks"], (name, phase)

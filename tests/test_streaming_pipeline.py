@@ -362,9 +362,11 @@ def test_state_sink_restart_idempotent(spark, tmp_path):
 
     from fantasy_premier_league_spark.streaming.pipeline import (
         make_state_sink,
+        run_ingest_sinks,
         stream_source,
         streaming_player_state,
     )
+    from fantasy_premier_league_spark.streaming.queries import t16_serve
 
     stream_dir = os.path.join(ensure_fixtures(), "stream")
 
@@ -419,6 +421,22 @@ def test_state_sink_restart_idempotent(spark, tmp_path):
     with pytest.raises(StreamingQueryException):
         run(ckpt, crashing_sink)
     assert crashed["done"], "crash was never injected; ladder shape changed?"
+
+    # before the restart t16_serve must serve the last COMMITTED profile
+    # snapshot (v00001), not the partial v00002 the crash left
+    run_ingest_sinks(
+        stream_source(spark, stream_dir, max_files_per_trigger=64),
+        str(tmp_path / "crash"),
+        str(tmp_path / "crash" / "ckpt_ingest"),
+    ).awaitTermination()
+    counts = ["fouls", "goals", "own_goals", "shots_on_target"]
+
+    def by_player(df):
+        return {r[0]: tuple(r[1:]) for r in df.select("playerId", *counts).collect()}
+
+    served = by_player(t16_serve(spark, str(tmp_path / "crash")))
+    committed = by_player(spark.read.parquet(os.path.join(profile_root, "v00001")))
+    assert served and served == {p: committed.get(p) for p in served}
 
     # restart from the SAME checkpoint with the plain sink: batch 2
     # replays (same batch_id), then 3 runs fresh
