@@ -79,6 +79,13 @@ def rating_step(perf, old, top=FULL_MATCH):
     return 1.05 * fc if top == FULL_MATCH else (top / 90.0) * fc
 
 
+def win_chance(s1, total):
+    """A10: team1's winning chance in percent from its strength and the
+    two teams' total (ui.py:66-70); team2's is 100 minus it. Floats or
+    Columns, like ``performance``."""
+    return (0.5 + s1 - total / 2) * 100
+
+
 def running_mean(new, old):
     """A4's order-dependent pass-accuracy mean (master.py:242-259)."""
     return new if old is None else (new + old) / 2

@@ -63,10 +63,11 @@ import threading
 from typing import NamedTuple
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import rounded
+from fantasy_premier_league_spark.functions.fpl_rules import win_chance
 from fantasy_premier_league_spark.operators import pipeline
 from fantasy_premier_league_spark.operators.pipeline import (
     FIXTURES,
@@ -344,7 +345,7 @@ def predict_win(spark: SparkSession, request: dict) -> dict:
         if len(roles) != 11 or None in roles or not validate_composition(roles):
             return {"status": "Invalid Team"}
     s = {r["team"]: r["strength"] for r in team_strengths(spark, request).collect()}
-    chance1 = (0.5 + s["team1"] - (s["team1"] + s["team2"]) / 2) * 100
+    chance1 = win_chance(s["team1"], s["team1"] + s["team2"])
     return {
         "team1": {"name": request["team1"]["name"], "winning chance": chance1},
         "team2": {"name": request["team2"]["name"], "winning chance": 100 - chance1},
@@ -402,43 +403,45 @@ def _req1_ctes(path: str) -> str:
     )"""
 
 
+def _winning_chance_sql(rel: str, col: str) -> str:
+    """A10 (``win_chance``) for each row of a two-team relation
+    ``rel(team, col)``: team1's chance, and 100 minus it for team2."""
+    chance1 = (
+        f"(0.5 + (SELECT sum({col}) FROM {rel} WHERE team = 'team1')"
+        f" - (SELECT sum({col}) FROM {rel}) / 2) * 100"
+    )
+    return f"round(CASE WHEN team = 'team1' THEN {chance1} ELSE 100 - {chance1} END, 6) + 0"
+
+
+def _winning_chance(strength: str) -> Column:
+    """The Spark twin of ``_winning_chance_sql``. The total and team1's
+    strength are global-window sums over the 2-row frame (the oracle's
+    own shape) rather than driver collects, so the query stays ONE
+    plan."""
+    tot = Window.partitionBy(F.lit(0))
+    s = F.col(strength)
+    chance1 = win_chance(
+        F.sum(F.when(F.col("team") == "team1", s)).over(tot), F.sum(s).over(tot)
+    )
+    return rounded(F.when(F.col("team") == "team1", chance1).otherwise(100 - chance1), 6)
+
+
 @register(
     "fpl_req1_win_prediction",
     oracle=f"""{_req1_ctes(REQ1)}
     SELECT team, team_name, round(s, 6) AS strength,
-           round(CASE WHEN team = 'team1'
-                 THEN (0.5 + s - (SELECT sum(s) FROM strength) / 2) * 100
-                 ELSE 100 - (0.5 + (SELECT sum(s) FROM strength WHERE team = 'team1')
-                             - (SELECT sum(s) FROM strength) / 2) * 100 END, 6)
-             + 0 AS winning_chance
+           {_winning_chance_sql("strength", "s")} AS winning_chance
     FROM strength ORDER BY team
     """,
 )
 def fpl_req1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     with open(REQ1) as f:
         request = json.load(f)
-    # ONE plan, no driver collects: the total and team1's strength are
-    # global-window sums over the 2-row strength frame (the oracle's own
-    # shape) rather than two extra .collect() actions.
-    tot = Window.partitionBy(F.lit(0))
-    s = (
-        team_strengths(spark, request)
-        .withColumn("total", F.sum("strength").over(tot))
-        .withColumn(
-            "s1",
-            F.sum(F.when(F.col("team") == "team1", F.col("strength"))).over(tot),
-        )
-    )
-    chance1 = (0.5 + F.col("s1") - F.col("total") / 2) * 100
-    return s.select(
+    return team_strengths(spark, request).select(
         "team",
         "team_name",
         rounded(F.col("strength"), 6).alias("strength"),
-        rounded(
-            F.when(F.col("team") == "team1", chance1).otherwise(100 - chance1), 6
-        ).alias("winning_chance"),
+        _winning_chance("strength").alias("winning_chance"),
     ).orderBy("team")
 
 
@@ -472,11 +475,7 @@ _REQ1_INVALID_ORACLE = f"""{_req1_ctes(REQ1_INVALID)},
       FROM strength s JOIN validity v ON v.team = s.team
     )
     SELECT team, team_name, is_valid, round(su, 6) AS strength_used,
-           round(CASE WHEN team = 'team1'
-                 THEN (0.5 + su - (SELECT sum(su) FROM used) / 2) * 100
-                 ELSE 100 - (0.5 + (SELECT su FROM used WHERE team = 'team1')
-                             - (SELECT sum(su) FROM used) / 2) * 100 END, 6)
-             + 0 AS winning_chance
+           {_winning_chance_sql("used", "su")} AS winning_chance
     FROM used ORDER BY team
 """
 
@@ -492,8 +491,6 @@ def fpl_req1_invalid_quirk(spark: SparkSession, sf_dir: str) -> DataFrame:
     invalidates the request); this compat twin reproduces the quirk
     exactly on the two-GK team1 fixture, as the r6 verdict ordered
     (Next round #7)."""
-    from pyspark.sql import Window
-
     with open(ensure_invalid_req1(FIXTURES)) as f:
         request = json.load(f)
     players = request_snapshot(spark).players
@@ -506,7 +503,6 @@ def fpl_req1_invalid_quirk(spark: SparkSession, sf_dir: str) -> DataFrame:
     validity = spark.createDataFrame(
         pa.Table.from_pylist(valid, pa.schema([("team", pa.string()), ("is_valid", pa.int32())]))
     )
-    tot = Window.partitionBy(F.lit(0))
     s = (
         team_strengths(spark, request)
         .join(validity, "team")
@@ -514,20 +510,13 @@ def fpl_req1_invalid_quirk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "su",
             F.when(F.col("is_valid") == 1, F.col("strength")).otherwise(F.lit(0.0)),
         )
-        .withColumn("total", F.sum("su").over(tot))
-        .withColumn(
-            "s1", F.sum(F.when(F.col("team") == "team1", F.col("su"))).over(tot)
-        )
     )
-    chance1 = (0.5 + F.col("s1") - F.col("total") / 2) * 100
     return s.select(
         "team",
         "team_name",
         "is_valid",
         rounded(F.col("su"), 6).alias("strength_used"),
-        rounded(
-            F.when(F.col("team") == "team1", chance1).otherwise(100 - chance1), 6
-        ).alias("winning_chance"),
+        _winning_chance("su").alias("winning_chance"),
     ).orderBy("team")
 
 

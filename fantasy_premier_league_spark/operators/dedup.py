@@ -352,6 +352,14 @@ def _capped_postings(posting: DataFrame, token: str, max_df: int) -> DataFrame:
     )
 
 
+def _capped_postings_sql(posting: str, token: str, max_df: int) -> str:
+    """The DuckDB twin of ``_capped_postings`` over a doc-level posting
+    relation ``posting(doc_id, token)`` with one row per document and
+    token."""
+    return f"""SELECT doc_id, {token} FROM {posting}
+      QUALIFY count(*) OVER (PARTITION BY {token}) <= {max_df}"""
+
+
 def _posting_pairs(
     posting: DataFrame, token: str, carry: list[str] = ()
 ) -> DataFrame:
@@ -471,8 +479,7 @@ _CAPPED_INTER_SQL = f"""
     WITH sh AS ({_SHINGLES_SQL}),
     posting AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     capped AS (
-      SELECT doc_id, shingle FROM posting
-      QUALIFY count(*) OVER (PARTITION BY shingle) <= {_MAX_SHINGLE_DF}
+      {_capped_postings_sql("posting", "shingle", _MAX_SHINGLE_DF)}
     ),
     sized AS (
       SELECT doc_id, shingle, count(*) OVER (PARTITION BY doc_id) AS sz

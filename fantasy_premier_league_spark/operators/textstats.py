@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from fantasy_premier_league_spark.functions import md5_hash, md5_hash_sql, rounded
 from fantasy_premier_league_spark.operators.dedup import (
     _capped_postings,
+    _capped_postings_sql,
     _collapse_classes,
     _doc_pairs,
     _posting_pairs,
@@ -482,12 +483,10 @@ _WINNOW_MAXDF = 50  # fingerprints in more docs than this are stop-patterns
     fps AS (
       SELECT DISTINCT doc_id, CAST(k // {_POS_BITS} AS BIGINT) AS fp FROM sel
     ),
-    live AS (
-      SELECT fp FROM fps GROUP BY fp HAVING count(*) <= {_WINNOW_MAXDF}
-    ),
+    live AS ({_capped_postings_sql("fps", "fp", _WINNOW_MAXDF)}),
     pairs AS (
       SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS n_shared
-      FROM fps a JOIN live USING (fp) JOIN fps b USING (fp)
+      FROM live a JOIN live b USING (fp)
       WHERE a.doc_id < b.doc_id
       GROUP BY 1, 2 HAVING count(*) >= {_WINNOW_SHARED}
     )

@@ -904,9 +904,10 @@ def _register_pipeline_roundtrip() -> None:
         # write DISJOINT sink tables (events/feed vs rating/profile)
         # with separate checkpoints, so the scheduler back-fills the
         # ladder's per-batch tails with ingest tasks (0.78x of the
-        # sequential wall). Each streaming query clones the session at
-        # start, so the state ladder runs under the scoped
-        # shuffle.partitions=4 and ingest under the session default.
+        # sequential wall). The state ladder's source is built on a
+        # session clone with 4 shuffle (= state) partitions, so the
+        # caller's session conf is never written; ingest runs under the
+        # caller's session default.
         queries: list = []
         with stop_on_error(queries):
             # K2 + event feed: idempotent batch_id partitions (T8). The
@@ -934,22 +935,21 @@ def _register_pipeline_roundtrip() -> None:
             sink = make_state_sink(
                 os.path.join(out_dir, "rating"), os.path.join(out_dir, "profile")
             )
-            with scoped_conf(spark, "spark.sql.shuffle.partitions", "4"):
-                queries.append(
-                    streaming_player_state(
-                        stream_source(
-                            spark,
-                            stream_dir,
-                            max_files_per_trigger=max(3, -(-n_stream_files // 4)),
-                        )
+            state_spark = spark.newSession()
+            state_spark.conf.set("spark.sql.shuffle.partitions", "4")
+            queries.append(
+                streaming_player_state(
+                    stream_source(
+                        state_spark,
+                        stream_dir,
+                        max_files_per_trigger=max(3, -(-n_stream_files // 4)),
                     )
-                    .writeStream.foreachBatch(sink)
-                    .option(
-                        "checkpointLocation", os.path.join(out_dir, "_ckpt_state")
-                    )
-                    .trigger(availableNow=True)
-                    .start()
                 )
+                .writeStream.foreachBatch(sink)
+                .option("checkpointLocation", os.path.join(out_dir, "_ckpt_state"))
+                .trigger(availableNow=True)
+                .start()
+            )
             for q in queries:
                 q.awaitTermination()
         return t16_serve(spark, out_dir)

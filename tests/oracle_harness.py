@@ -4,7 +4,9 @@ row count, column names, and an order-insensitive value hash.
 
 Values are normalized the same way on both sides (dates/timestamps to
 ISO strings, floats via repr after the queries' own rounding), so this
-is a strictly-harder check than simple count equality.
+is a strictly-harder check than simple count equality. ``compare_strict``
+adds the driver's own pandas fetch path (dtypes and byte-exact cells),
+which that normalization cannot see.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import math
 from collections.abc import Iterable
 
 import duckdb
+import pandas as pd
 
 TABLES = [
     "region",
@@ -77,8 +80,8 @@ def signed_canonical_rows(
     """canonical_rows with the zero sign kept INSIDE each row, so any
     multiset difference after a value-equal compare() is exactly a
     signed-zero split -- including same-count-per-column splits landing
-    on different rows (ADVICE r13 #1). Shared by the contract sweep's
-    --strict-zero mode and the signedzero fuzz axis."""
+    on different rows (ADVICE r13 #1). Shared by compare_signed (and so
+    tools/contract_sweep.py) and the signedzero fuzz axis."""
     order = sorted(range(len(columns)), key=lambda i: columns[i])
     return sorted(tuple(_signed_cell(r[i]) for i in order) for r in rows)
 
@@ -221,3 +224,74 @@ def compare_signed(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> int:
         diffs = [(a, b) for a, b in zip(s_sgn, d_sgn) if a != b][:3]
         raise AssertionError(f"signed-zero split (spark vs duckdb): {diffs}")
     return len(s_rows)
+
+
+def canon(df: pd.DataFrame) -> tuple[dict[str, str], list[tuple]]:
+    """(per-column dtype map, rows sorted on a dtype-independent key).
+
+    The sort key stringifies every cell so int32/int64 or
+    datetime64/date-object frames sort the SAME way and the value diff
+    below reports cell-level divergence, not ordering noise.
+    """
+    cols = sorted(df.columns)
+    df = df[cols]
+    dtypes = {c: str(df[c].dtype) for c in cols}
+    rows = [tuple(r) for r in df.itertuples(index=False, name=None)]
+    rows.sort(key=lambda t: tuple(str(v) for v in t))
+    return dtypes, rows
+
+
+def _cell_eq(a: object, b: object) -> bool:
+    """Byte-exact cell equality: same concrete type AND same repr.
+    NaN == NaN (both engines emit it for the same nulls)."""
+    if type(a) is not type(b):
+        # numpy scalars vs python scalars ARE a pandas-path divergence
+        return False
+    if a != a and b != b:  # NaN
+        return True
+    return repr(a) == repr(b)
+
+
+def compare_strict(sdf_pd: pd.DataFrame, ddf_pd: pd.DataFrame) -> dict:
+    """The driver's pandas-path check of ``df.toPandas()`` against the
+    oracle's ``fetchdf()``. Status IDENTICAL (same per-column dtypes and
+    byte-exact cells), DTYPE (``dtype_diffs``: the class the fetchall
+    normalization above collapses -- DuckDB HUGEINT renders float64,
+    which cost rounds 9-11 on quality_perceptron_train) or VALUES
+    (``n_diff_rows`` and ``first_diff``)."""
+    s_dtypes, s_rows = canon(sdf_pd)
+    d_dtypes, d_rows = canon(ddf_pd)
+    out: dict = {"status": "IDENTICAL"}
+    dtype_diffs = {
+        c: [s_dtypes.get(c), d_dtypes.get(c)]
+        for c in set(s_dtypes) | set(d_dtypes)
+        if s_dtypes.get(c) != d_dtypes.get(c)
+    }
+    if dtype_diffs:
+        out["status"] = "DTYPE"
+        out["dtype_diffs"] = dict(sorted(dtype_diffs.items()))
+    if len(s_rows) != len(d_rows):
+        out["status"] = "VALUES" if not dtype_diffs else "DTYPE"
+        out["rows"] = [len(s_rows), len(d_rows)]
+        return out
+    # cell-level diff only when dtypes agree (differing dtypes imply
+    # differing cell types by construction -- don't double-report)
+    if not dtype_diffs:
+        n_bad = 0
+        first = None
+        for sr, dr in zip(s_rows, d_rows):
+            for i, (a, b) in enumerate(zip(sr, dr)):
+                if not _cell_eq(a, b):
+                    n_bad += 1
+                    if first is None:
+                        first = {
+                            "col": sorted(s_dtypes)[i],
+                            "spark": repr(a),
+                            "duck": repr(b),
+                        }
+                    break
+        if n_bad:
+            out["status"] = "VALUES"
+            out["n_diff_rows"] = n_bad
+            out["first_diff"] = first
+    return out

@@ -1,12 +1,5 @@
 """Round-12 behavior tests.
 
-0. The strict-pandas preflight logic (VERDICT r11 #3): the driver
-   hashes through a pandas fetch path that the value-normalizing local
-   harness cannot see; tools/strict_preflight.py compares both engines
-   through that exact path. These unit tests pin its divergence
-   classes without Spark; the committed PREFLIGHT_r12.json artifact
-   carries the real fleet-wide result (every registered oracle).
-
 1. The transformWithStateInPandas environment gate (VERDICT r11 #8):
    SURVEY §2.10 claims the Spark 4 stateful API is unusable here
    because its Python worker needs ``google.protobuf``, which this
@@ -23,94 +16,6 @@ from __future__ import annotations
 import importlib
 
 import pytest
-
-
-def test_strict_preflight_detects_dtype_divergence():
-    import pandas as pd
-
-    sys_path_repo()
-    from tools.strict_preflight import compare_strict
-
-    a = pd.DataFrame({"x": pd.array([1, 2], dtype="int32"), "k": ["a", "b"]})
-    b = pd.DataFrame({"x": pd.array([1, 2], dtype="int64"), "k": ["a", "b"]})
-    out = compare_strict(a, b)
-    assert out["status"] == "DTYPE"
-    assert out["dtype_diffs"] == {"x": ["int32", "int64"]}
-    # the HUGEINT class: int64 vs float64 -- the exact two-round bug
-    c = pd.DataFrame({"x": pd.array([1.0, 2.0], dtype="float64"), "k": ["a", "b"]})
-    assert compare_strict(b, c)["status"] == "DTYPE"
-
-
-def test_strict_preflight_detects_value_divergence_and_identity():
-    import pandas as pd
-
-    sys_path_repo()
-    from tools.strict_preflight import compare_strict
-
-    a = pd.DataFrame({"x": [1, 2], "k": ["a", "b"]})
-    # row order must NOT matter (the driver hash is order-insensitive)
-    b = pd.DataFrame({"x": [2, 1], "k": ["b", "a"]})
-    assert compare_strict(a, b)["status"] == "IDENTICAL"
-    c = pd.DataFrame({"x": [1, 3], "k": ["a", "b"]})
-    out = compare_strict(a, c)
-    assert out["status"] == "VALUES" and out["n_diff_rows"] == 1
-
-
-def test_preflight_artifact_is_committed_and_clean():
-    """The r11 preflight finding lived only in a commit message
-    (VERDICT r11 #3); the newest artifact must be on disk, tracked,
-    and free of dtype/value divergences. Generalized in r13 (VERDICT
-    r12 #6): the artifact is only as good as its vintage, so it must
-    also cover EXACTLY the currently registered fleet -- any
-    registration change (add/retire) or oracle edit forces a fresh
-    fleet-wide sweep and a new committed PREFLIGHT_r{N}.json."""
-    import glob
-    import json
-    import os
-    import re
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    arts = {
-        int(re.search(r"PREFLIGHT_r(\d+)\.json$", p).group(1)): p
-        for p in glob.glob(os.path.join(repo, "PREFLIGHT_r*.json"))
-    }
-    assert arts, "no PREFLIGHT_r*.json artifact exists"
-    rnd = max(arts)
-    name = os.path.basename(arts[rnd])
-    tracked = subprocess.run(
-        ["git", "ls-files", "--error-unmatch", name],
-        cwd=repo,
-        capture_output=True,
-    ).returncode
-    assert tracked == 0, f"{name} not git-tracked"
-    with open(arts[rnd]) as fh:
-        rep = json.load(fh)
-    bad = {
-        k: v
-        for k, v in rep["queries"].items()
-        if v["status"] not in ("IDENTICAL", "NO_ORACLE")
-    }
-    assert not bad, f"strict preflight divergences: {bad}"
-    from fantasy_premier_league_spark.plans.registry import all_queries
-
-    fleet = set(all_queries())
-    swept = set(rep["queries"])
-    assert swept == fleet, (
-        f"{name} is stale against the registered fleet: "
-        f"missing={sorted(fleet - swept)} extra={sorted(swept - fleet)} "
-        "-- re-run tools/strict_preflight.py fleet-wide and commit "
-        "the new artifact"
-    )
-
-
-def sys_path_repo() -> None:
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo not in sys.path:
-        sys.path.insert(0, repo)
 
 
 def _protobuf_available() -> bool:

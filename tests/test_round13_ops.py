@@ -13,12 +13,7 @@
 3. UDTF edge semantics both engines must share: empty documents emit
    no windows; a short document emits exactly one ragged window.
 
-4. The streaming-latency harness's percentile math (VERDICT r12 #8):
-   the p50/p95 rows recorded in BASELINE.md use tools/stream_latency.py's
-   linear-interpolation percentile, pinned here against the
-   quantile_cont definition.
-
-5. The signed-zero convention (machine-found by the r13 sf0.1 fleet
+4. The signed-zero convention (machine-found by the r13 sf0.1 fleet
    sweep, docs_dsir_weights doc 3533): a sign-crossing measure that
    rounds to zero from below yields -0.0 from DuckDB's std::round
    path but +0.0 from Spark's BigDecimal path, which has no signed
@@ -99,23 +94,8 @@ def test_registration_budget_holds_after_udtf_swap():
     assert staleness_threshold(len(names)) == math.ceil(200 / 50)
 
 
-def test_stream_latency_percentile_is_quantile_cont():
-    import sys as _sys
-
-    _sys.path.insert(0, "tools")
-    from stream_latency import _pct
-
-    xs = [10.0, 20.0, 30.0, 40.0]
-    # quantile_cont: index = (n-1)*p over the sorted values;
-    # p95 -> idx = 3 * 0.95 = 2.85 -> 30 + (40 - 30) * 0.85 = 38.5
-    assert _pct(xs, 0.50) == 25.0
-    assert abs(_pct(xs, 0.95) - 38.5) < 1e-9
-    assert _pct([7.0], 0.95) == 7.0
-    assert math.isnan(_pct([], 0.5))
-
-
 def test_signed_zero_pinned_on_both_engines(spark):
-    """The -0.0 convention (module docstring #5): Spark's rounded()
+    """The -0.0 convention (module docstring #4): Spark's rounded()
     can never emit a signed zero (BigDecimal path), and the oracle
     `round(...) + 0` spelling pins DuckDB to the same +0.0 -- so a
     sign-crossing measure that rounds to zero hashes identically on

@@ -233,30 +233,6 @@ def test_r14_sign_crossing_pins_stay_spelled():
             assert needle in o[name], (name, needle)
 
 
-def test_strict_zero_sweep_compares_row_multisets():
-    """ADVICE r13 #1: the sweep's --strict-zero canonicalization keeps
-    the zero sign inside the ROW, so same-count-per-column splits on
-    different rows are caught (the per-column counter missed them)."""
-    from tests.oracle_harness import _signed_cell, signed_canonical_rows
-
-    assert _signed_cell(-0.0) == "-0"
-    assert _signed_cell(0.0) == "0"
-    # same per-column -0.0 COUNTS (one each), different rows -> differ
-    a = signed_canonical_rows(["k", "v"], [("x", -0.0), ("y", 0.0)])
-    b = signed_canonical_rows(["k", "v"], [("x", 0.0), ("y", -0.0)])
-    assert a != b
-    # the sweep's --strict-zero mode must run THIS canonicalization
-    # (via compare_signed, which collects each side once)
-    import sys
-
-    from tests.oracle_harness import compare_signed
-
-    sys.path.insert(0, "tools")
-    import contract_sweep
-
-    assert contract_sweep.compare_signed is compare_signed
-
-
 def test_t19_reads_state_not_a_recompute(spark):
     """The r14 surface query must return rows from the STATE STORE
     batch source -- if a refactor quietly swaps in a batch aggregate
@@ -290,15 +266,3 @@ def test_t19_reads_state_not_a_recompute(spark):
     assert len(md) == 1
     assert md[0]["operatorName"] == "stateStoreSave"
     assert md[0]["numPartitions"] == 8  # the scoped_conf the query pins
-
-
-def test_stream_latency_shapes_registry():
-    """The latency harness's shape table backs the BASELINE.md
-    steady-state matrix (t4/join/merge/pystate); a renamed or dropped
-    shape silently orphans its recorded rows."""
-    import sys
-
-    sys.path.insert(0, "tools")
-    from stream_latency import SHAPES
-
-    assert sorted(SHAPES) == ["agg", "join", "merge", "pystate"]

@@ -325,6 +325,22 @@ def test_sinks_leave_session_overwrite_mode_unchanged(spark, tmp_path):
         assert sorted(r[0] for r in got) == [0, 1]
 
 
+def test_t16_leaves_the_callers_session_conf_alone(spark, monkeypatch):
+    """t16 runs its state drain with 4 shuffle (= state) partitions. It
+    must set them on a session clone: a query function that writes the
+    caller's session conf changes every query running next to it.
+    ``SparkSession.conf`` is cached per session, so the recorder below
+    sees only writes to the caller's conf, not the clone's."""
+    from fantasy_premier_league_spark.plans.registry import all_queries
+    from tests.conftest import SF_SMOKE
+
+    writes: list[tuple] = []
+    monkeypatch.setattr(spark.conf, "set", lambda *kv: writes.append(kv))
+    rows = all_queries()["t16_fpl_pipeline_roundtrip"](spark, SF_SMOKE)
+    assert rows.count() > 0
+    assert writes == []
+
+
 def test_stop_on_error_stops_every_query_and_keeps_first_error():
     """The t16 concurrent-drain cleanup: when the block fails, every
     active query is stopped even if an earlier stop raises, and the

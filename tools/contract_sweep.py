@@ -1,155 +1,142 @@
-"""Run the ENTIRE registered fleet against its DuckDB oracles at an
-arbitrary scale factor.
-
-The driver's correctness gate runs at sf0.01 forever; this tool replays
-the same queries()-vs-oracle_sql() comparison at a larger SF, where a
-decade more rows reach value edges the gate never sees. First run
-(r13, sf0.1) machine-found the signed-zero hazard: docs_dsir_weights
-doc 3533's log-ratio mean rounded to -0.0 in DuckDB and +0.0 in Spark
--- float-equal, hash-distinct -- now pinned fleet-wide by the
-`round(...) + 0` oracle convention (tests/test_round13_ops.py).
+"""Check every registered query against its DuckDB oracle, at one or
+more scale factors.
 
 Usage:
-    python tools/contract_sweep.py [sf_dir]   # default /root/testdata/sf0.1
-    python tools/contract_sweep.py .scale/sf1 --queries a,b,c   # subset
-    python tools/contract_sweep.py --strict-zero --out SWEEP_r17.json
+    python tools/contract_sweep.py [SF_DIR ...] [--queries a,b] [--out PATH]
 
-Comparison is the repo harness's own (type families + canonical rows,
-which intentionally normalizes signed zero like the parity suite); add
---strict-zero to ALSO fail on -0.0-vs-+0.0 splits, the class the
-driver's float normalization would see. --queries (comma-separated)
-restricts the sweep, e.g. the approximation/threshold tier at a
-make_scale.py-built sf1.
+SF_DIR defaults to the sf0.01 test data (tests/conftest.py
+SF_CORRECTNESS), the scale of the driver's correctness gate; a larger SF (sf0.1, a make_scale.py-built sf1) puts a
+decade more rows on value edges the gate never sees. Each query
+function is called once per SF dir, and both checks run on that one
+DataFrame:
 
---out writes a committed-artifact JSON (VERDICT r16 task #2: closing-run
-gates were prose-only -- the stdout-only sweep left SURVEY's wall claims
-unverifiable after the fact). The artifact carries per-query status, the
-sf_dir, the strict-zero flag, and the wall;
-tests/test_closing_artifacts.py requires the NEWEST SWEEP_r{N}.json to
-be git-tracked, divergence-free, and to cover EXACTLY the registered
-fleet, so a registration change forces a fresh committed sweep. --out is
-refused with --queries: a subset run must never masquerade as fleet
-coverage.
+- ``compare_signed`` (tests/oracle_harness.py): column names, type
+  families, canonical rows and signed-zero rows. Its first sf0.1 run
+  machine-found the signed-zero hazard -- docs_dsir_weights doc 3533's
+  log-ratio mean rounded to -0.0 in DuckDB and +0.0 in Spark, float-equal
+  but hash-distinct -- now pinned fleet-wide by the `round(...) + 0`
+  oracle convention (tests/test_round13_ops.py);
+- ``compare_strict``, the driver's own pandas path (``df.toPandas()``
+  against the oracle's ``fetchdf()``): per-column dtypes and byte-exact
+  cells, which the harness's value normalization collapses.
+
+Prints one line per query and SF dir and exits 1 on any failure. A
+report row's status is IDENTICAL when both checks pass, NO_ORACLE for a
+rows-only query (it still has to run), HARNESS (``harness``: the
+assertion), DTYPE (``dtype_diffs``) or VALUES (``first_diff``) for a
+failed check -- a DTYPE or VALUES row also carries ``harness`` when both
+checks failed -- and ERROR (``err``) when the query or its oracle
+raised. A failing row names its ``sf_dir``.
+
+--queries (comma-separated) restricts the run; without it the whole
+fleet runs. --out writes the JSON report.
+tests/test_tools.py::test_preflight_artifact_is_committed_and_clean
+requires the newest PREFLIGHT_r{N}.json to be git-tracked, to have no
+failing row and to cover exactly the registered fleet, so --out is
+refused with --queries: a subset run must never pass as fleet coverage.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import sys
 import time
+from collections import Counter
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from fantasy_premier_league_spark.plans import registry  # noqa: E402
+from fantasy_premier_league_spark.plans.registry import (  # noqa: E402
+    all_oracles,
+    all_queries,
+)
 from fantasy_premier_league_spark.session import get_spark  # noqa: E402
+from tests.conftest import SF_CORRECTNESS  # noqa: E402
 from tests.oracle_harness import (  # noqa: E402
-    compare,
     compare_signed,
+    compare_strict,
     duck_connection,
 )
 
+PASSED = ("IDENTICAL", "NO_ORACLE")
 
-def main() -> int:
-    argv = sys.argv[1:]
-    only: set[str] | None = None
-    strict_zero = False
-    out_path: str | None = None
-    args: list[str] = []
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a == "--queries":
-            if i + 1 >= len(argv):
-                raise SystemExit("--queries needs a comma-separated value")
-            only = set(argv[i + 1].split(","))
-            i += 2
-        elif a.startswith("--queries="):
-            only = set(a.split("=", 1)[1].split(","))
-            i += 1
-        elif a == "--strict-zero":
-            strict_zero = True
-            i += 1
-        elif a == "--out":
-            if i + 1 >= len(argv):
-                raise SystemExit("--out needs a path")
-            out_path = argv[i + 1]
-            i += 2
-        elif a.startswith("--out="):
-            out_path = a.split("=", 1)[1]
-            i += 1
-        elif a.startswith("--"):
-            # Unknown flags fail loudly: a typo'd flag silently sweeping
-            # the ENTIRE fleet costs ~35 min at sf0.1 (ADVICE r13 #2).
-            raise SystemExit(
-                f"unrecognized flag {a!r}; known: --queries NAMES | "
-                "--queries=NAMES | --strict-zero | --out PATH"
-            )
-        else:
-            args.append(a)
-            i += 1
-    if out_path is not None and only is not None:
-        # a subset artifact would satisfy nothing and could be mistaken
-        # for fleet coverage -- the coverage test checks exact equality
-        # with the registered fleet anyway, so fail at the source
-        raise SystemExit("--out is only valid for full-fleet sweeps (no --queries)")
-    sf_dir = args[0] if args else "/root/testdata/sf0.1"
-    registry._load_all()
-    if only is not None:
-        unknown = only - set(registry.QUERIES)
-        if unknown:
-            raise SystemExit(f"--queries names not registered: {sorted(unknown)}")
-    spark = get_spark("contract-sweep")
-    con = duck_connection(sf_dir)
-    report: dict[str, dict] = {}
-    failures: list[tuple[str, str]] = []
-    n = 0
-    t0 = time.monotonic()
-    for name, fn in registry.QUERIES.items():
-        if only is not None and name not in only:
-            continue
-        n += 1
-        oracle = registry.ORACLES.get(name)
+
+def check(spark, con, sf_dir: str, fn, sql: str | None) -> dict:
+    """The report row of one call of a query function."""
+    try:
+        df = fn(spark, sf_dir)
+        if sql is None:
+            df.count()
+            return {"status": "NO_ORACLE"}
+        row = compare_strict(df.toPandas(), con.execute(sql).fetchdf())
         try:
-            df = fn(spark, sf_dir)
-            if oracle is None:
-                rows = df.count()  # rows-only queries: must still run
-                report[name] = {"status": "ROWS_ONLY", "rows": rows}
-                print(f"{n:3d} {name}: rows-only ({rows})", flush=True)
-                continue
-            # compare_signed collects each side ONCE and layers the
-            # byte-level signed-zero multiset check on top; the r13
-            # form re-executed both engines a second time per query
-            (compare_signed if strict_zero else compare)(df, con, oracle)
-            report[name] = {"status": "OK"}
-            print(f"{n:3d} {name}: OK", flush=True)
-        except Exception as ex:
-            msg = str(ex).splitlines()[0][:160]
-            report[name] = {"status": "FAIL", "err": msg}
-            failures.append((name, msg))
-            print(f"{n:3d} {name}: FAIL {str(ex)[:160]}", flush=True)
+            compare_signed(df, con, sql)
+        except AssertionError as ex:
+            row["harness"] = str(ex)[:300]
+            if row["status"] == "IDENTICAL":
+                row["status"] = "HARNESS"
+        return row
+    except Exception as exc:  # noqa: BLE001 -- record it and go on
+        return {"status": "ERROR", "err": f"{type(exc).__name__}: {exc}"[:300]}
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Check registered queries against their DuckDB oracles."
+    )
+    ap.add_argument("sf_dirs", nargs="*", default=[SF_CORRECTNESS], metavar="SF_DIR")
+    ap.add_argument("--queries", help="comma-separated names (default: the whole fleet)")
+    ap.add_argument("--out", help="write the JSON report here (whole fleet only)")
+    args = ap.parse_args(argv)
+
+    queries, oracles = all_queries(), all_oracles()
+    names = list(queries)
+    if args.queries is not None:
+        if args.out is not None:
+            ap.error("--out is only valid for whole-fleet runs (no --queries)")
+        names = [s.strip() for s in args.queries.split(",") if s.strip()]
+        unknown = sorted(set(names) - set(queries))
+        if unknown:
+            ap.error(f"--queries names not registered: {unknown}")
+
+    spark = get_spark("contract-sweep")
+    report: dict[str, dict] = {}
+    t0 = time.monotonic()
+    for sf_dir in args.sf_dirs:
+        con = duck_connection(sf_dir)
+        for i, name in enumerate(names, 1):
+            row = check(spark, con, sf_dir, queries[name], oracles.get(name))
+            detail = ""
+            if row["status"] not in PASSED:
+                row["sf_dir"] = sf_dir
+                detail = " " + json.dumps({k: v for k, v in row.items() if k != "status"})
+            print(f"{i:3d} {name} [{sf_dir}]: {row['status']}{detail}", flush=True)
+            if report.get(name, {"status": "IDENTICAL"})["status"] in PASSED:
+                report[name] = row  # a failing row outlives later passes
+        con.close()
     wall_s = round(time.monotonic() - t0, 1)
-    print(f"sweep: {n - len(failures)}/{n} matched at {sf_dir} in {wall_s:.0f}s")
-    for name, msg in failures:
-        print(f"  DIVERGED {name}: {msg}")
-    if out_path is not None:
-        with open(out_path, "w") as fh:
+
+    counts = Counter(row["status"] for row in report.values())
+    failed = sorted(n for n, row in report.items() if row["status"] not in PASSED)
+    print(
+        f"# contract sweep @ {' '.join(args.sf_dirs)} in {wall_s:.0f}s: "
+        + ", ".join(f"{k}={v}" for k, v in sorted(counts.items()))
+    )
+    for name in failed:
+        print(f"  FAILED {name}: {report[name]['status']}")
+    if args.out is not None:
+        with open(args.out, "w") as fh:
             json.dump(
-                {
-                    "sf_dir": sf_dir,
-                    "strict_zero": strict_zero,
-                    "wall_s": wall_s,
-                    "n": n,
-                    "n_failed": len(failures),
-                    "queries": report,
-                },
+                {"sf_dirs": args.sf_dirs, "wall_s": wall_s, "counts": counts, "queries": report},
                 fh,
                 indent=1,
                 sort_keys=True,
             )
             fh.write("\n")
-        print(f"sweep artifact written to {out_path}")
-    spark.stop()
-    return 1 if failures else 0
+        print(f"report written to {args.out}")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
