@@ -662,16 +662,21 @@ def latest_per_player(df: DataFrame) -> DataFrame:
     )
 
 
-def latest_profile(folded: DataFrame) -> DataFrame:
-    """Each player's A4 profile from a folded frame (player_fold_df or
-    the stream's RATING_OUTPUT_SCHEMA rows): the totals of the player's
-    latest row, laid out as the stream's K3 profile snapshots."""
-    return latest_per_player(folded).select(
+def profile_columns(folded: DataFrame) -> DataFrame:
+    """The A4 profile after each row of a folded frame (player_fold_df
+    or the stream's RATING_OUTPUT_SCHEMA rows), laid out as the
+    stream's K3 profile snapshots."""
+    return folded.select(
         "playerId",
         "matchId",
         F.col("pass_accuracy_mean").alias("pass_accuracy"),
         *(F.col(f"{c}_total").alias(c) for c in PROFILE_COUNTS),
     )
+
+
+def latest_profile(folded: DataFrame) -> DataFrame:
+    """Each player's A4 profile: the profile columns of its latest row."""
+    return latest_per_player(profile_columns(folded))
 
 
 def final_rating_sql(trace: str) -> str:

@@ -12,7 +12,9 @@ with master unset (picked up from spark-submit). Config choices:
 - session timezone pinned to UTC so timestamp semantics match the
   DuckDB correctness oracle (duckdb timestamps are UTC-naive);
 - Arrow enabled for every pandas-interop path (Pandas UDFs,
-  applyInPandas, toPandas).
+  applyInPandas, toPandas);
+- Python workers fork from ``worker_daemon``, which keeps zipimport's
+  directory caches across tasks instead of re-reading pyspark.zip.
 """
 
 from __future__ import annotations
@@ -51,6 +53,7 @@ def get_spark(app_name: str = "fpl-spark-engine", master: str | None = None) -> 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "fantasy_premier_league_spark.worker_daemon")
         .config("spark.sql.parquet.filterPushdown", "true")
         # bucketed-table writes (bucketed_colocated_join) land in a
         # scratch warehouse, never the repo working tree

@@ -5,7 +5,9 @@ Reference topology: socket text DStream, 5 s batches, 4 chained
 ``updateStateByKey``, rmtree/append text sinks. Rebuild topology:
 
 - sources: ``readStream.format("socket")`` for the live demo (S1) and
-  the file source over the fixture stream dir for replayable tests --
+  the file source over the fixture stream dir (the directory plus a
+  ``*.jsonl`` name filter, so each trigger lists one directory) for
+  replayable tests --
   ``maxFilesPerTrigger=1`` makes one micro-batch per match file,
   reproducing the reference's match-per-batch cadence deterministically
   (T1); ``availableNow`` drains the backlog and stops (T7);
@@ -57,6 +59,7 @@ from pyspark.sql import types as T
 from fantasy_premier_league_spark.functions import scoped_conf
 from fantasy_premier_league_spark.functions.fpl_rules import (
     INIT_STATE,
+    PROFILE_COUNTS,
     final_metrics,
     fold_player,
     performance,
@@ -75,6 +78,17 @@ RATING_OUTPUT_SCHEMA = T.StructType(
         T.StructField("goals_total", T.LongType()),
         T.StructField("own_goals_total", T.LongType()),
         T.StructField("shots_on_target_total", T.LongType()),
+    ]
+)
+
+# K3 profile snapshot rows: operators/pipeline.py profile_columns of
+# the RATING_OUTPUT_SCHEMA rows, one per player
+PROFILE_SNAPSHOT_SCHEMA = T.StructType(
+    [
+        T.StructField("playerId", T.IntegerType()),
+        T.StructField("matchId", T.IntegerType()),
+        T.StructField("pass_accuracy", T.DoubleType()),
+        *(T.StructField(c, T.LongType()) for c in PROFILE_COUNTS),
     ]
 )
 
@@ -97,10 +111,16 @@ def stream_source(
     spark: SparkSession, stream_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """File-source replay of the fixture stream: one match file per
-    micro-batch (S1's test twin; socket source in socket_source())."""
+    micro-batch (S1's test twin; socket source in socket_source()).
+
+    The source path is the directory plus a ``*.jsonl`` name filter, not
+    a glob: a glob expands to one root path per file, and past
+    ``parallelPartitionDiscovery.threshold`` (32) roots every
+    latestOffset lists them with a distributed job."""
     return (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
-        .text(os.path.join(stream_dir, "*.jsonl"))
+        .option("pathGlobFilter", "*.jsonl")
+        .text(stream_dir)
         .select(F.from_json("value", STREAM_SCHEMA).alias("r"))
         .select("r.*")
     )
@@ -210,12 +230,17 @@ def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = Non
     partition, never duplicates.
 
     K3: profile snapshot v{batch_id} = previous COMMITTED snapshot
-    MERGE this batch's latest per-player state. "Committed" means a
-    _SUCCESS marker AND version < batch_id: after a crash mid-write,
+    MERGE this batch's latest per-player state, as ONE window: each
+    player's latest row over (previous snapshot UNION this batch's
+    profile rows). fold_player emits a match only above the player's
+    last_match, so a batch row always outranks the player's previous
+    row, and a player absent from the batch keeps it. "Committed" means
+    a _SUCCESS marker AND version < batch_id: after a crash mid-write,
     the replayed batch must not read its own partial v{batch_id} dir as
     the merge base (players absent from the partial write would be
     silently dropped) -- it re-reads v{batch_id-1} and reproduces the
-    identical snapshot.
+    identical snapshot. The previous snapshot is read with its known
+    schema (PROFILE_SNAPSHOT_SCHEMA), so no job infers it.
 
     ``marks``: when given, each batch appends
     ``{"batch_id", "rating_s", "merge_s"}`` so the K4 write and the K3
@@ -225,7 +250,10 @@ def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = Non
     """
     import time as _time
 
-    from fantasy_premier_league_spark.operators.pipeline import latest_profile
+    from fantasy_premier_league_spark.operators.pipeline import (
+        latest_per_player,
+        profile_columns,
+    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -245,16 +273,15 @@ def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = Non
                 "batch_id"
             ).parquet(rating_dir)
             t_rating = _time.perf_counter()
-            latest = latest_profile(batch_df)
+            rows = profile_columns(batch_df)
             prev_dir = latest_committed_version(profile_root, batch_id)
             if prev_dir is not None:
-                prev = sp.read.parquet(prev_dir)
-                merged = prev.join(latest, "playerId", "left_anti").unionByName(
-                    latest
+                rows = (
+                    sp.read.schema(PROFILE_SNAPSHOT_SCHEMA)
+                    .parquet(prev_dir)
+                    .unionByName(rows)
                 )
-            else:
-                merged = latest
-            merged.write.mode("overwrite").parquet(
+            latest_per_player(rows).write.mode("overwrite").parquet(
                 os.path.join(profile_root, f"v{batch_id:05d}")
             )
             if marks is not None:
@@ -270,6 +297,20 @@ def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = Non
             batch_df.unpersist()
 
     return sink
+
+
+def drop_listener_bus(jsession: Any) -> None:
+    """Unregister a finished JVM session's streaming listener bus from
+    its SparkContext. Spark registers one for every session whose
+    StreamingQueryManager gets built -- a ``newSession()`` clone that
+    starts a query, and the clone each stateful query runs on (its
+    state-store coordinator is reached through it) -- and never removes
+    it, so each such run would leave one behind for the context's life.
+    """
+    manager = jsession.streams()
+    field = manager.getClass().getDeclaredField("listenerBus")
+    field.setAccessible(True)
+    jsession.sparkContext().listenerBus().removeListener(field.get(manager))
 
 
 def streaming_match_counters(parsed: DataFrame) -> DataFrame:

@@ -42,6 +42,8 @@ from fantasy_premier_league_spark.operators.sketches import (
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.sources.testdata import canonicalize_ts, load_table
 from fantasy_premier_league_spark.streaming.pipeline import (
+    PROFILE_SNAPSHOT_SCHEMA,
+    RATING_OUTPUT_SCHEMA,
     latest_committed_version,
     run_stream_to_memory,
 )
@@ -802,7 +804,9 @@ def stop_on_error(queries: list):
 
 def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
     """Stage 3 -- serving: every input comes from the sink tables; the
-    profile is the newest COMMITTED K3 snapshot, as the sink reads it."""
+    profile is the newest COMMITTED K3 snapshot, as the sink reads it.
+    Each table is read with the schema its sink writes, so no job
+    infers one from the Parquet footers."""
     from fantasy_premier_league_spark.operators.pipeline import (
         chemistry_from_trace,
         latest_per_player,
@@ -813,10 +817,13 @@ def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
     events_dir = os.path.join(out_dir, "events")
 
     # ---- serving: every input below comes from the sink tables ----
-    rating = spark.read.parquet(rating_dir)
-    profile = spark.read.parquet(latest_committed_version(profile_root))
+    rating = spark.read.schema(RATING_OUTPUT_SCHEMA).parquet(rating_dir)
+    profile = spark.read.schema(PROFILE_SNAPSHOT_SCHEMA).parquet(
+        latest_committed_version(profile_root)
+    )
     teams = (
-        spark.read.parquet(events_dir)
+        spark.read.schema("playerId INT, matchId INT, teamId INT")
+        .parquet(events_dir)
         .select("playerId", "matchId", "teamId")
         .distinct()
     )
@@ -886,6 +893,7 @@ def _register_pipeline_roundtrip() -> None:
             FIXTURES as _fixtures_root,
         )
         from fantasy_premier_league_spark.streaming.pipeline import (
+            drop_listener_bus,
             make_state_sink,
             run_ingest_sinks,
             stream_source,
@@ -937,7 +945,7 @@ def _register_pipeline_roundtrip() -> None:
             )
             state_spark = spark.newSession()
             state_spark.conf.set("spark.sql.shuffle.partitions", "4")
-            queries.append(
+            state_query = (
                 streaming_player_state(
                     stream_source(
                         state_spark,
@@ -950,8 +958,13 @@ def _register_pipeline_roundtrip() -> None:
                 .trigger(availableNow=True)
                 .start()
             )
+            queries.append(state_query)
             for q in queries:
                 q.awaitTermination()
+        # the clone and the session the stateful query ran on leave one
+        # streaming listener bus each on the SparkContext
+        drop_listener_bus(state_spark._jsparkSession)
+        drop_listener_bus(state_query._jsq.streamingQuery().sparkSessionForStream())
         return t16_serve(spark, out_dir)
 
 

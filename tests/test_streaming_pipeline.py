@@ -341,6 +341,106 @@ def test_t16_leaves_the_callers_session_conf_alone(spark, monkeypatch):
     assert writes == []
 
 
+def test_t16_leaves_no_listener_behind(spark):
+    """Each t16 call drains its state on a session clone, and the
+    stateful query runs on a clone of that; Spark registers a streaming
+    listener bus for each and never removes it. t16 removes both, so
+    the SparkContext's listener count stays flat across calls."""
+    from fantasy_premier_league_spark.plans.registry import all_queries
+    from tests.conftest import SF_SMOKE
+
+    t16 = all_queries()["t16_fpl_pipeline_roundtrip"]
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    sizes = []
+    for _ in range(3):
+        assert t16(spark, SF_SMOKE).count() > 0
+        sizes.append(bus.listeners().size())
+    assert sizes == [sizes[0]] * 3
+
+
+def test_stream_source_lists_one_directory(spark, tmp_path):
+    """stream_source reads its directory with a ``*.jsonl`` name filter.
+    40 match files (past ``parallelPartitionDiscovery.threshold``, 32,
+    where a glob's one root path per file starts a distributed listing
+    job at every trigger) drain with no listing job, and a file of
+    another name (a publisher's temp copy) is never read."""
+    import glob
+    import shutil
+
+    from fantasy_premier_league_spark.streaming.pipeline import (
+        run_stream_to_memory,
+        stream_source,
+    )
+
+    fixtures = sorted(glob.glob(os.path.join(ensure_fixtures(), "stream", "*.jsonl")))
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(40):
+        shutil.copyfile(fixtures[i % len(fixtures)], src / f"match_{i:02d}.jsonl")
+    shutil.copyfile(fixtures[0], src / "match_40.jsonl.tmp")
+    lines = sum(len(p.read_text().splitlines()) for p in src.glob("*.jsonl"))
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def listing_jobs() -> set:
+        seq = store.jobsList(sc._jvm.java.util.ArrayList())
+        jobs = (seq.apply(i) for i in range(seq.size()))
+        return {
+            j.jobId()
+            for j in jobs
+            if j.description().isDefined()
+            and j.description().get().startswith("Listing leaf files")
+        }
+
+    before = listing_jobs()
+    got = run_stream_to_memory(
+        stream_source(spark, str(src), max_files_per_trigger=10), output_mode="append"
+    )
+    assert got.count() == lines
+    assert listing_jobs() - before == set()
+
+
+def test_state_sink_keeps_an_absent_players_profile(spark, tmp_path):
+    """K3: snapshot vN holds each player's latest row over v(N-1) and
+    batch N, so a player absent from batch N keeps its v(N-1) row. The
+    snapshot is written in PROFILE_SNAPSHOT_SCHEMA, the schema its
+    readers pass."""
+    from fantasy_premier_league_spark.streaming.pipeline import (
+        PROFILE_SNAPSHOT_SCHEMA,
+        RATING_OUTPUT_SCHEMA,
+        make_state_sink,
+    )
+
+    profile_root = tmp_path / "profile"
+    sink = make_state_sink(str(tmp_path / "rating"), str(profile_root))
+
+    def batch(*rows):
+        # (playerId, matchId, fouls_total): one folded row each
+        return spark.createDataFrame(
+            [(p, m, 0.5, 0.1, 70.0, f, 0, 0, 1) for p, m, f in rows],
+            RATING_OUTPUT_SCHEMA,
+        )
+
+    def snapshot(version: str):
+        df = spark.read.parquet(str(profile_root / version))
+        return df.schema, sorted(tuple(r) for r in df.collect())
+
+    sink(batch((1, 10, 1), (2, 10, 2), (2, 11, 3)), 0)
+    sink(batch((1, 12, 4), (3, 12, 5)), 1)
+    schema, v0 = snapshot("v00000")
+    _, v1 = snapshot("v00001")
+    assert [(f.name, f.dataType) for f in schema] == [
+        (f.name, f.dataType) for f in PROFILE_SNAPSHOT_SCHEMA
+    ]
+    assert v0 == [(1, 10, 70.0, 1, 0, 0, 1), (2, 11, 70.0, 3, 0, 0, 1)]
+    assert v1 == [
+        (1, 12, 70.0, 4, 0, 0, 1),
+        (2, 11, 70.0, 3, 0, 0, 1),
+        (3, 12, 70.0, 5, 0, 0, 1),
+    ]
+
+
 def test_stop_on_error_stops_every_query_and_keeps_first_error():
     """The t16 concurrent-drain cleanup: when the block fails, every
     active query is stopped even if an earlier stop raises, and the

@@ -8,7 +8,7 @@ SF_DIR defaults to the sf0.01 test data (tests/conftest.py
 SF_CORRECTNESS), the scale of the driver's correctness gate; a larger SF (sf0.1, a make_scale.py-built sf1) puts a
 decade more rows on value edges the gate never sees. Each query
 function is called once per SF dir, and both checks run on that one
-DataFrame:
+DataFrame, local-checkpointed so its plan runs once:
 
 - ``compare_signed`` (tests/oracle_harness.py): column names, type
   families, canonical rows and signed-zero rows. Its first sf0.1 run
@@ -70,13 +70,19 @@ def check(spark, con, sf_dir: str, fn, sql: str | None) -> dict:
         if sql is None:
             df.count()
             return {"status": "NO_ORACLE"}
-        row = compare_strict(df.toPandas(), con.execute(sql).fetchdf())
+        # both checks read one run of the plan
+        df = df.localCheckpoint()
         try:
-            compare_signed(df, con, sql)
-        except AssertionError as ex:
-            row["harness"] = str(ex)[:300]
-            if row["status"] == "IDENTICAL":
-                row["status"] = "HARNESS"
+            row = compare_strict(df.toPandas(), con.execute(sql).fetchdf())
+            try:
+                compare_signed(df, con, sql)
+            except AssertionError as ex:
+                row["harness"] = str(ex)[:300]
+                if row["status"] == "IDENTICAL":
+                    row["status"] = "HARNESS"
+        finally:
+            # the checkpoint's blocks stay until its RDD is unpersisted
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
         return row
     except Exception as exc:  # noqa: BLE001 -- record it and go on
         return {"status": "ERROR", "err": f"{type(exc).__name__}: {exc}"[:300]}
