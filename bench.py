@@ -631,10 +631,6 @@ def main() -> None:
         line = json.dumps(summary)
     print(line)
     sys.stdout.flush()
-    try:
-        spark.stop()
-    except Exception:
-        pass
     # guarantee rc=0 once the JSON line is out: lingering non-daemon
     # threads / JVM teardown races must not invalidate the artifact
     os._exit(0)

@@ -84,7 +84,7 @@ from fantasy_premier_league_spark.sources.fpl_fixtures import ensure_fixtures
 # SPARK_GRAFT_FPL_FIXTURES points the WHOLE chain (Spark readers + the
 # baked oracle paths, which stay consistent because both derive from
 # this constant) at a scaled fixture dir for the stream-volume study
-# (tools/stream_scale_study.py).
+# (tools/scale_study.py --scales).
 FIXTURES = os.environ.get("SPARK_GRAFT_FPL_FIXTURES") or ensure_fixtures()
 STREAM_GLOB = os.path.join(FIXTURES, "stream", "*.jsonl")
 

@@ -131,48 +131,3 @@ def test_missing_query_is_the_worst_regression(tmp_path):
     rc, out = _run(tmp_path, base, cur)
     assert rc == 1
     assert "vanished" in out and "MISSING" in out
-
-
-def _run_with_waiver(tmp_path, base, cur, extra_args):
-    """Run the gate in-process with a WAIVERS entry patched in, so the
-    explicit-base scoping (ADVICE r12) is testable without a committed
-    waiver existing."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("bench_regression", TOOL)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    mod.WAIVERS = {"waivable": ("deadbeef1", "test waiver")}
-    bp, cp = tmp_path / "base.json", tmp_path / "cur.json"
-    bp.write_text(json.dumps(base))
-    cp.write_text(json.dumps(cur))
-    argv = sys.argv
-    sys.argv = ["bench_regression.py", "--base", str(bp), "--cur", str(cp)] + extra_args
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    try:
-        with redirect_stdout(buf):
-            rc = mod.main()
-    finally:
-        sys.argv = argv
-    return rc, buf.getvalue()
-
-
-def test_explicit_base_does_not_blanket_apply_waivers(tmp_path):
-    # ADVICE r12: a stale waiver must NOT suppress a regression on an
-    # explicit-base run unless the operator names it with --waive.
-    base = _payload(_PEERS | {"waivable": 0.42})
-    cur = _payload(_PEERS | {"waivable": 1.3})
-    rc, out = _run_with_waiver(tmp_path, base, cur, [])
-    assert rc == 1
-    assert "waivable" in out and "EXPIRED" in out
-
-
-def test_explicit_base_with_named_waive_applies(tmp_path):
-    base = _payload(_PEERS | {"waivable": 0.42})
-    cur = _payload(_PEERS | {"waivable": 1.3})
-    rc, out = _run_with_waiver(tmp_path, base, cur, ["--waive", "waivable"])
-    assert rc == 0, out
-    assert "waived: test waiver" in out

@@ -9,13 +9,14 @@
    fleet-wide PREFLIGHT_r{N}.json, and the Spark test runs the runner on
    a stub registration that only the strict check catches.
 
-2. The streaming-latency harness (tools/stream_latency.py): the
-   percentile math and the shape table behind the BASELINE.md rows.
+2. The streaming-latency reader (tools/stream_latency.py): its
+   percentile definition, its progress summary and the shape table
+   behind the BASELINE.md rows.
+
+3. An import check over every tools/*.py.
 """
 
 from __future__ import annotations
-
-import math
 
 from tests.conftest import SF_SMOKE
 
@@ -154,25 +155,96 @@ def test_sweep_fails_an_int_column_against_a_bigint_oracle(spark, monkeypatch, c
 
 def test_stream_latency_percentile_is_quantile_cont():
     """The p50/p95 rows recorded in BASELINE.md use
-    tools/stream_latency.py's linear-interpolation percentile, pinned
-    here against the quantile_cont definition."""
+    perfbench.stats.percentile (tools/stream_latency.py reads through
+    it), pinned here against the quantile_cont definition."""
+    import pytest
+
     sys_path_repo()
-    from tools.stream_latency import _pct
+    from perfbench.stats import percentile
 
     xs = [10.0, 20.0, 30.0, 40.0]
     # quantile_cont: index = (n-1)*p over the sorted values;
     # p95 -> idx = 3 * 0.95 = 2.85 -> 30 + (40 - 30) * 0.85 = 38.5
-    assert _pct(xs, 0.50) == 25.0
-    assert abs(_pct(xs, 0.95) - 38.5) < 1e-9
-    assert _pct([7.0], 0.95) == 7.0
-    assert math.isnan(_pct([], 0.5))
+    assert percentile(xs, 50) == 25.0
+    assert abs(percentile(xs, 95) - 38.5) < 1e-9
+    assert percentile([7.0], 95) == 7.0
+    with pytest.raises(ValueError):
+        percentile([], 50)
+
+
+def _progress(batch_id, trigger, add, rows, state=None):
+    p = {
+        "batchId": batch_id,
+        "numInputRows": rows,
+        "durationMs": {"triggerExecution": trigger, "addBatch": add},
+    }
+    if state is not None:
+        p["stateOperators"] = [{"numRowsTotal": state}]
+    return p
+
+
+def test_stream_latency_summarize_drops_batch0():
+    """summarize reports batch 0 (stream init) alone and computes the
+    steady-state percentiles over the batches after it; state rows come
+    from the first state operator."""
+    sys_path_repo()
+    from tools.stream_latency import summarize
+
+    progress = [_progress(0, 5000, 4000, 0, state=0)] + [
+        _progress(i + 1, t, t // 2, 100 * (i + 1), state=10 * (i + 1))
+        for i, t in enumerate([10, 20, 30, 40])
+    ]
+    out = summarize(progress)
+    assert out["n_batches_steady"] == 4
+    assert out["batch0_trigger_ms"] == 5000.0
+    assert out["p50_trigger_ms"] == 25.0
+    assert out["p95_trigger_ms"] == 38.5
+    assert out["max_trigger_ms"] == 40.0
+    assert out["p50_addBatch_ms"] == 12.5
+    assert out["median_input_rows"] == 300
+    assert out["max_state_rows"] == 40
+    # a stateless shape (merge) reports no state rows
+    bare = summarize([_progress(0, 9, 9, 0), _progress(1, 5, 4, 7)])
+    assert bare["max_state_rows"] == 0 and bare["p50_trigger_ms"] == 5.0
 
 
 def test_stream_latency_shapes_registry():
-    """The latency harness's shape table backs the BASELINE.md
-    steady-state matrix (t4/join/merge/pystate); a renamed or dropped
-    shape silently orphans its recorded rows."""
+    """The latency reader's shape table backs the BASELINE.md
+    steady-state matrix (t4/join/merge); a renamed or dropped shape
+    silently orphans its recorded rows."""
     sys_path_repo()
     from tools.stream_latency import SHAPES
 
-    assert sorted(SHAPES) == ["agg", "join", "merge", "pystate"]
+    assert sorted(SHAPES) == ["agg", "join", "merge"]
+
+
+def test_every_tool_imports_without_starting_spark():
+    """Every tools/*.py loads by file path through importlib (its module
+    body runs, its main does not) in a fresh interpreter that ends with
+    no SparkContext: a tool left pointing at a deleted module fails
+    here, not on its next hand run."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = """
+import glob, importlib.util, os, sys
+for path in sorted(glob.glob(os.path.join(sys.argv[1], "tools", "*.py"))):
+    name = "tool_" + os.path.basename(path)[:-3]
+    spec = importlib.util.spec_from_file_location(name, path)
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
+    print(os.path.basename(path))
+from pyspark import SparkContext
+assert SparkContext._active_spark_context is None, "a tool started Spark"
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", code, repo],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    tools = sorted(f for f in os.listdir(os.path.join(repo, "tools")) if f.endswith(".py"))
+    assert out.stdout.split() == tools

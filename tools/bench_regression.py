@@ -8,7 +8,7 @@ i.e. the previous round's recorded spread -- and flags any query whose
 median grew past the threshold. Turns the judge's by-hand round-over-
 round diff into a standing tripwire.
 
-Exit status: 1 if any unwaived regression is flagged, else 0.
+Exit status: 1 if any regression is flagged, else 0.
 
 Usage:
     python tools/bench_regression.py [--threshold 1.5] [--base PATH] [--cur PATH]
@@ -18,40 +18,12 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DETAIL = os.path.join(REPO, "BENCH_DETAIL.json")
-
-# Queries whose slowdown is a DELIBERATE trade, with the one-line
-# waiver the round record carries (precedent: r7's containment +1.6 s
-# at sf0.1 bought the 27x -> 4.1x sf10 collapse). Each entry is
-# (base_rev_prefix, reason): the waiver applies ONLY while the gate
-# still compares against that committed baseline -- once the base
-# moves (next round's BENCH_DETAIL lands, absorbing the slowdown) the
-# waiver auto-expires and a recurrence flags normally (ADVICE r10:
-# name-keyed waivers persisted across rounds and could mask a real
-# future regression on the same query). Grant with:
-#   git rev-list -1 HEAD -- BENCH_DETAIL.json
-# Prune expired entries when touching this file.
-WAIVERS: dict[str, tuple[str, str]] = {
-    # (the two r10 waivers -- mm_image_resize's real-decode trade and
-    # bucketed_colocated_join's sub-second env drift -- expired when
-    # the r10 spread was committed at 48e6e2d and were pruned.)
-    # (r11's events_transition_matrix drift -- 1.76x median, 1.16x
-    # min-of-spread, no code change since r8 -- is now suppressed
-    # structurally by the min-of-spread gate below instead of a waiver;
-    # it measured 0.45-0.47 s again across all three r12 runs.)
-    # (the two r12 env-drift waivers -- ann_pq_recall and
-    # events_trailing_distinct_users, both pinned to the r11 base
-    # dd014c74 with solo 7-repeat floor evidence -- expired when the
-    # r12 spread was committed at 6e72b08 and were pruned at the start
-    # of r13 per VERDICT r12 #3: if either flags again vs the r12
-    # base, root-cause, do not re-waive.)
-}
 
 # Queries DELIBERATELY removed from the headline list (deregistered
 # twins etc). Their disappearance from the current run is expected and
@@ -79,8 +51,8 @@ def _steal_note(spread_entry: dict | None) -> str:
     VERDICT r14 #3): a flagged ratio whose wall-clock window recorded
     hypervisor steal carries the evidence inline, so the adjudication
     that took a run-order autopsy in r14 becomes part of the gate
-    output. Annotation only -- it NEVER waives; the solo-floor protocol
-    stays the named outcome path."""
+    output. Annotation only -- it never suppresses a flag; the solo-floor
+    protocol stays the named outcome path."""
     peak = (spread_entry or {}).get("steal_max")
     if peak is None or peak < 1.0:
         return ""
@@ -116,15 +88,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--threshold", type=float, default=1.5)
     ap.add_argument("--base", help="explicit baseline JSON path")
-    ap.add_argument(
-        "--waive",
-        action="append",
-        default=[],
-        metavar="NAME",
-        help="with --base: apply the named WAIVERS entry to this run "
-        "(rev-pinned auto-expiry cannot work against an arbitrary "
-        "file, so explicit-base runs apply no waivers unless named)",
-    )
     ap.add_argument("--cur", default=DETAIL)
     args = ap.parse_args()
 
@@ -156,7 +119,7 @@ def main() -> int:
     # only correct for drift, never tighten the gate below its stated
     # threshold when the machine happened to run FASTER
     drift = max(1.0, run_drift)
-    flagged, waived, improved, new, suppressed = [], [], [], [], []
+    flagged, improved, new, suppressed = [], [], [], []
     # a baseline query MISSING from the current run is the worst
     # regression there is (it errored or was dropped) -- bench.py
     # records failures in 'errors' and omits them from 'queries', so
@@ -214,32 +177,7 @@ def main() -> int:
             if cmin is not None and bmin:
                 row += f" [min-of-spread {cmin / bmin:.2f}x]"
             row += _steal_note(c_spread.get(name))
-            waiver = WAIVERS.get(name)
-            # ADVICE r12: with an explicit --base PATH, rev-prefix
-            # matching is meaningless (base_label is a file path, and
-            # the detail payload records no commit) -- but blanket-
-            # accepting every waiver on every explicit-base run
-            # disables expiry entirely, letting a stale waiver pinned
-            # to an old rev keep suppressing regressions against
-            # arbitrarily newer baselines. So an explicit-base run
-            # applies ONLY waivers the operator names with --waive;
-            # committed-base runs keep the rev-prefix auto-expiry.
-            if args.base is not None:
-                same_base = waiver is not None and name in args.waive
-            else:
-                same_base = waiver is not None and (
-                    waiver[0].startswith(base_label)
-                    or base_label.startswith(waiver[0])
-                )
-            if waiver and same_base:
-                waived.append(f"{row} [waived: {waiver[1]}]")
-            elif waiver:
-                flagged.append(
-                    f"{row} [waiver EXPIRED: granted vs base {waiver[0]}, "
-                    f"now comparing vs {base_label} -- prune or re-grant]"
-                )
-            else:
-                flagged.append(row)
+            flagged.append(row)
         elif ratio < 1 / args.threshold and (prev - med) > MIN_ABS_GROWTH:
             improved.append(f"{name}: {prev:.2f}s -> {med:.2f}s ({ratio:.2f}x)")
 
@@ -270,8 +208,6 @@ def main() -> int:
             )
     for row in flagged:
         print(f"REGRESSION {row}")
-    for row in waived:
-        print(f"WAIVED {row}")
     for row in suppressed:
         print(f"SUPPRESSED {row}")
     for row in retired_seen:
@@ -281,7 +217,7 @@ def main() -> int:
     if new:
         print(f"new (no baseline): {', '.join(new)}")
     if not flagged:
-        print("OK: no unwaived per-query regression")
+        print("OK: no per-query regression")
     return 1 if flagged else 0
 
 

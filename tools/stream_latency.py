@@ -1,64 +1,44 @@
 #!/usr/bin/env python
-"""Steady-state streaming latency readout (VERDICT r12 #8).
+"""Steady-state streaming latency reader.
 
 Every streaming correctness gate in this repo drains with
-trigger(availableNow=True) -- which proves exactly-once semantics and
-result parity but never measures the dimension a production stream
-lives on: per-micro-batch trigger-to-commit latency at a steady
-processing-time cadence. This harness runs the t4 SHAPE (event-time
-watermark + tumbling-window aggregate, update mode -- the canonical
-stateful pipeline of streaming/queries.py:118) over Spark's built-in
-``rate`` source with a processingTime trigger, lets it run for a fixed
-number of micro-batches, and reports the latency distribution from
-StreamingQueryProgress:
+trigger(availableNow=True), which proves exactly-once semantics and
+result parity but never measures per-micro-batch trigger-to-commit
+latency at a steady processing-time cadence. This reader runs one
+streaming shape over Spark's built-in ``rate`` source with a
+processingTime trigger for a fixed number of micro-batches and
+summarizes StreamingQueryProgress:
 
 - ``trigger_ms``  = durationMs.triggerExecution -- wall time from
   trigger fire to batch commit (the user-visible freshness bound);
 - ``addBatch_ms`` = durationMs.addBatch -- the execution component;
-- state rows / input rows per batch as a sanity readout.
+- median input rows and peak state rows per batch.
 
 Batch 0 pays stream initialization (offset log creation, state store
 setup) and is reported separately, not folded into the percentiles --
 steady state is what the p50/p95 claim is about.
 
-Round 14 (VERDICT r13 #4) extends the harness beyond the t4 aggregate
-to the shapes BASELINE.md names as the next knees: ``--shape join``
-(the t7/t12 double-watermarked stream-stream interval join -- the
-widest state), ``--shape merge`` (the t18 foreachBatch
-committed-snapshot MERGE ladder -- the highest per-batch fixed cost,
-using the real make_dedup_history_sink), and ``--shape pystate`` (the
-fpl_t5 applyInPandasWithState path -- the Arrow state boundary).
-``--partitions`` sets the state-partition count, the deployment lever
-the join-shape knee names (fixed at the first checkpoint).
+The shapes are the three that the perfbench ``stream`` workload (the
+real applyInPandasWithState fold) does not measure: ``agg`` (the t4
+watermark + tumbling-window aggregate), ``join`` (the t7/t12
+double-watermarked stream-stream interval join, the widest state) and
+``merge`` (the t18 foreachBatch committed-snapshot MERGE ladder, via
+the real make_dedup_history_sink).
 
 Usage:
-    python tools/stream_latency.py [--batches 24] [--trigger-ms 500]
-                                   [--rows-per-sec 5000] [--json]
-                                   [--shape agg|join|merge|pystate]
-                                   [--partitions 8] [--keys 1000]
-                                   [--state-provider hdfs|rocksdb]
-                                   [--recovery]
+    python tools/stream_latency.py [--shape agg|join|merge] [--batches 24]
+                                   [--trigger-ms 500] [--rows-per-sec 5000]
 
-``--recovery`` warms the state store, stops, restarts from the same
-checkpoint, and reports start() -> first committed data batch (the
-failover budget); ``--state-provider rocksdb`` swaps in the bundled
-RocksDBStateStoreProvider with changelog checkpointing. Round 15
-(VERDICT r14 stretch #8) adds a t19-shaped AUDIT phase to --recovery
-for the agg/join shapes: after the recovered query commits, the state
-store is read back via spark.read.format("statestore") WHILE the
-stream keeps running, reporting audit_read_ms, audit_state_rows, and
-the concurrent batches' p50 trigger (vs warm_p50_trigger_ms) -- the
-does-inspection-stall-the-stream readout.
-
-Prints a markdown table (BASELINE.md records it) or one JSON line.
+Prints one JSON line.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
+import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -66,17 +46,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def _pct(xs: list[float], p: float) -> float:
-    """Linear-interpolation percentile (the quantile_cont definition)."""
-    s = sorted(xs)
-    if not s:
-        return float("nan")
-    idx = (len(s) - 1) * p
-    lo, hi = math.floor(idx), math.ceil(idx)
-    if lo == hi:
-        return s[lo]
-    return s[lo] + (s[hi] - s[lo]) * (idx - lo)
+from perfbench.stats import percentile  # noqa: E402
 
 
 def _rate(spark, rows_per_sec: int):
@@ -146,28 +116,6 @@ def _shape_join(spark, rows_per_sec: int):
     )
 
 
-# One merge-scratch claim per Spark application: claim_session_tmpdir
-# WIPES at claim, so a second _shape_merge call in the same session --
-# run_recovery's phase-2 restart -- must reuse phase 1's dir, not
-# re-claim it. Re-claiming deleted the history/accepted snapshots the
-# checkpoint still recorded as committed, so the restarted MERGE ladder
-# measured against empty history (ADVICE r14 #1).
-_MERGE_SCRATCH: dict[str, str] = {}
-
-
-def _merge_scratch_root(spark) -> str:
-    from fantasy_premier_league_spark.functions.tuning import (
-        claim_session_tmpdir,
-    )
-
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _MERGE_SCRATCH:
-        _MERGE_SCRATCH[app_id] = claim_session_tmpdir(
-            "stream_latency_merge", app_id
-        )
-    return _MERGE_SCRATCH[app_id]
-
-
 def _shape_merge(spark, rows_per_sec: int):
     """t18 shape: foreachBatch committed-snapshot MERGE ladder -- the
     REAL make_dedup_history_sink (streaming/queries.py:1147), fed
@@ -178,15 +126,19 @@ def _shape_merge(spark, rows_per_sec: int):
     correctness gate proves, here priced per micro-batch."""
     from pyspark.sql import functions as F
 
+    from fantasy_premier_league_spark.functions.tuning import (
+        claim_session_tmpdir,
+    )
     from fantasy_premier_league_spark.streaming.queries import (
         make_dedup_history_sink,
     )
 
     # claimed scratch (wipe-at-claim + atexit removal): each batch
     # lands a history version + an accepted partition, real data
-    # volume a bare mkdtemp would orphan on every invocation --
-    # claimed ONCE per session so a recovery restart keeps the sink
-    root = _merge_scratch_root(spark)
+    # volume a bare mkdtemp would orphan on every invocation
+    root = claim_session_tmpdir(
+        "stream_latency_merge", spark.sparkContext.applicationId
+    )
     ingest = make_dedup_history_sink(
         os.path.join(root, "history"), os.path.join(root, "accepted")
     )
@@ -200,113 +152,45 @@ def _shape_merge(spark, rows_per_sec: int):
     )
 
 
-# pystate key cardinality: the r14 1000-key reading prices the Arrow
-# boundary in the small-state regime; --keys raises TOTAL state volume
-# (the regime where the HDFS provider's full-snapshot commits should
-# eventually lose to RocksDB's changelog -- VERDICT r14 stretch #9)
-_PYSTATE_KEYS = 1000
+SHAPES = {"agg": _shape_agg, "join": _shape_join, "merge": _shape_merge}
 
 
-def _shape_pystate(spark, rows_per_sec: int):
-    """fpl_t5 shape: applyInPandasWithState -- the Arrow-batched Python
-    state operator (streaming/pipeline.py:319), here a running
-    count/cent-sum over _PYSTATE_KEYS keys (default 1,000: every
-    micro-batch round-trips ~all key groups through the Python
-    worker). This prices the Arrow state boundary per batch, the one
-    state-op family the agg/join rows (pure JVM state) cannot show --
-    the streaming twin of the UDTF-vs-JVM pricing in BASELINE.md. At
-    higher --keys the per-batch group count is bounded by batch rows,
-    and what grows is the STORE -- the state-volume axis."""
-    import pandas as pd
+def summarize(progress: list[dict]) -> dict:
+    """Latency summary of StreamingQueryProgress dicts ordered by
+    batchId. The first (batch 0, stream init) is reported alone; the
+    percentiles cover the steady-state batches after it."""
+    init, steady = progress[0], progress[1:]
+    if not steady:
+        raise ValueError("need at least one batch after batch 0")
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType, StructField, StructType
+    def series(key: str) -> list[float]:
+        return [float(p["durationMs"][key]) for p in steady if key in p["durationMs"]]
 
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("n", LongType()),
-            StructField("total", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total", LongType())]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += int(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame({"key": [key[0]], "n": [n], "total": [total]})
-
-    stream = (
-        _rate(spark, rows_per_sec)
-        .withColumn("key", F.col("value") % _PYSTATE_KEYS)
-        .groupBy("key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    return (
-        stream.writeStream.outputMode("update").format("noop"),
-        f"rate -> {_PYSTATE_KEYS}-key applyInPandasWithState count/sum"
-        " -> noop (update)",
-    )
+    trig, add = series("triggerExecution"), series("addBatch")
+    state = [
+        int(p["stateOperators"][0]["numRowsTotal"])
+        for p in steady
+        if p.get("stateOperators")
+    ]
+    return {
+        "n_batches_steady": len(steady),
+        "batch0_trigger_ms": float(init["durationMs"]["triggerExecution"]),
+        "p50_trigger_ms": round(percentile(trig, 50), 1),
+        "p95_trigger_ms": round(percentile(trig, 95), 1),
+        "max_trigger_ms": round(max(trig), 1),
+        "p50_addBatch_ms": round(percentile(add, 50), 1),
+        "p95_addBatch_ms": round(percentile(add, 95), 1),
+        "median_input_rows": statistics.median_high(
+            int(p["numInputRows"]) for p in steady
+        ),
+        "max_state_rows": max(state, default=0),
+    }
 
 
-SHAPES = {
-    "agg": _shape_agg,
-    "join": _shape_join,
-    "merge": _shape_merge,
-    "pystate": _shape_pystate,
-}
-
-
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _configure_state(spark, partitions: int, provider: str) -> None:
-    # state partitioning is FIXED at the query's first checkpoint --
-    # this knob IS the deployment lever the join-shape knee names
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    if provider == "rocksdb":
-        # the production state backend: on-disk store + CHANGELOG
-        # checkpointing (commits upload only the batch's delta; restart
-        # replays the changelog onto the last snapshot instead of
-        # reloading a full HDFS-backed state file per partition)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
-
-
-def run(
-    n_batches: int,
-    trigger_ms: int,
-    rows_per_sec: int,
-    shape: str,
-    partitions: int = 8,
-    provider: str = "hdfs",
-    deadline_s: float | None = None,
-) -> dict:
+def run(n_batches: int, trigger_ms: int, rows_per_sec: int, shape: str) -> dict:
     from fantasy_premier_league_spark.session import get_spark
 
     spark = get_spark("stream-latency")
-    _configure_state(spark, partitions, provider)
-
     writer, shape_desc = SHAPES[shape](spark, rows_per_sec)
     ckpt = tempfile.mkdtemp(prefix="stream_latency_ckpt_")
     query = (
@@ -314,283 +198,43 @@ def run(
         .trigger(processingTime=f"{trigger_ms} milliseconds")
         .start()
     )
-    # wait until n_batches micro-batches have committed rows; poll
-    # lastProgress rather than sleeping a fixed wall time so a loaded
-    # machine yields MORE wait, not fewer batches. --deadline-s
-    # overrides the default budget for shapes whose whole point is a
-    # deep per-batch wall (the pystate 100k+/key state-volume runs
-    # commit ~30 s batches -- r15 stretch #9)
+    # poll until n_batches micro-batches have committed rather than
+    # sleeping a fixed wall time, so a loaded machine yields MORE wait,
+    # not fewer batches
     seen: dict[int, dict] = {}
-    deadline = time.monotonic() + (
-        deadline_s
-        if deadline_s is not None
-        else max(120, n_batches * trigger_ms / 1000 * 6)
-    )
-    while len(seen) < n_batches and time.monotonic() < deadline:
-        for p in query.recentProgress:
-            seen[p["batchId"]] = p
-        time.sleep(trigger_ms / 1000 / 4)
-    query.stop()
-    spark.stop()
+    deadline = time.monotonic() + max(120, n_batches * trigger_ms / 1000 * 6)
+    try:
+        while len(seen) < n_batches and time.monotonic() < deadline:
+            for p in query.recentProgress:
+                seen[p["batchId"]] = p
+            time.sleep(trigger_ms / 1000 / 4)
+    finally:
+        query.stop()
+        spark.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
-    batches = [seen[b] for b in sorted(seen)][:n_batches]
-    if len(batches) < n_batches:
+    if len(seen) < n_batches:
         raise SystemExit(
-            f"only {len(batches)}/{n_batches} micro-batches committed "
+            f"only {len(seen)}/{n_batches} micro-batches committed "
             f"before deadline -- machine too loaded for a readout"
         )
-    init, steady = batches[0], batches[1:]
-
-    def series(ps, key):
-        return [float(p["durationMs"][key]) for p in ps if key in p["durationMs"]]
-
-    trig = series(steady, "triggerExecution")
-    add = series(steady, "addBatch")
-    rows = [int(p["numInputRows"]) for p in steady]
-    state = [
-        int(p["stateOperators"][0]["numRowsTotal"])
-        for p in steady
-        if p.get("stateOperators")
-    ]
     return {
         "shape": shape_desc,
-        "partitions": partitions,
-        "state_provider": provider,
         "trigger_ms": trigger_ms,
         "rows_per_sec": rows_per_sec,
-        "n_batches_steady": len(steady),
-        "batch0_trigger_ms": float(init["durationMs"]["triggerExecution"]),
-        "p50_trigger_ms": round(_pct(trig, 0.50), 1),
-        "p95_trigger_ms": round(_pct(trig, 0.95), 1),
-        "max_trigger_ms": round(max(trig), 1),
-        "p50_addBatch_ms": round(_pct(add, 0.50), 1),
-        "p95_addBatch_ms": round(_pct(add, 0.95), 1),
-        "median_input_rows": sorted(rows)[len(rows) // 2],
-        "max_state_rows": max(state) if state else 0,
+        **summarize([seen[b] for b in sorted(seen)][:n_batches]),
     }
-
-
-def run_recovery(
-    n_warm: int,
-    trigger_ms: int,
-    rows_per_sec: int,
-    shape: str,
-    partitions: int = 8,
-    provider: str = "hdfs",
-    deadline_s: float | None = None,
-) -> dict:
-    """Failover readout: warm a query's state store, stop it, restart
-    from the SAME checkpoint, and time recovery -- the operational
-    metric batch-0 cold-init does not cover (a restarted query must
-    reload committed state AND drain the offset backlog accumulated
-    while down). The rate source checkpoints offsets, so the first
-    post-restart batch carries the downtime's backlog; recovery time
-    here is start() -> that batch's commit."""
-    from fantasy_premier_league_spark.session import get_spark
-
-    spark = get_spark("stream-recovery")
-    _configure_state(spark, partitions, provider)
-    ckpt = tempfile.mkdtemp(prefix="stream_recovery_ckpt_")
-
-    def start_query():
-        writer, desc = SHAPES[shape](spark, rows_per_sec)
-        return (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(processingTime=f"{trigger_ms} milliseconds")
-            .start(),
-            desc,
-        )
-
-    # phase 1: warm the state store (--deadline-s overrides both
-    # phases' budgets for deep-batch shapes, same as steady-state run())
-    query, shape_desc = start_query()
-    seen: dict[int, dict] = {}
-    phase_budget = (
-        deadline_s
-        if deadline_s is not None
-        else max(120, n_warm * trigger_ms / 1000 * 8)
-    )
-    deadline = time.monotonic() + phase_budget
-    while len(seen) < n_warm and time.monotonic() < deadline:
-        for p in query.recentProgress:
-            seen[p["batchId"]] = p
-        time.sleep(trigger_ms / 1000 / 4)
-    warm = [seen[b] for b in sorted(seen)]
-    state_rows = max(
-        (
-            int(p["stateOperators"][0]["numRowsTotal"])
-            for p in warm
-            if p.get("stateOperators")
-        ),
-        default=0,
-    )
-    query.stop()
-
-    # phase 2: restart from the same checkpoint, time to first commit
-    down_s = 2.0
-    time.sleep(down_s)  # accrue a deterministic-ish backlog window
-    t0 = time.monotonic()
-    query, _ = start_query()
-    first: dict | None = None
-    first_data: dict | None = None
-    first_ms = data_ms = float("nan")
-    deadline = time.monotonic() + (
-        deadline_s if deadline_s is not None else 120
-    )
-    while first_data is None and time.monotonic() < deadline:
-        for p in sorted(query.recentProgress, key=lambda p: p["batchId"]):
-            if first is None:
-                first = p
-                first_ms = (time.monotonic() - t0) * 1000
-            # the rate source may commit a no-data housekeeping batch
-            # before the downtime backlog drains; the DATA batch is the
-            # user-visible recovery point
-            if first_data is None and int(p["numInputRows"]) > 0:
-                first_data = p
-                data_ms = (time.monotonic() - t0) * 1000
-        time.sleep(0.05)
-
-    # phase 3: the t19-shaped OPERATIONAL audit (VERDICT r14 stretch
-    # #8) -- read the state store back as a batch DataFrame WHILE the
-    # recovered query keeps running, and price both sides: how long the
-    # inspection scan takes, and whether the live stream's trigger
-    # latency moves while it runs. The statestore batch source reads
-    # the newest COMMITTED snapshot, so the only possible interference
-    # is resource contention, which is exactly what this measures.
-    audit: dict = {}
-    if first_data is not None and shape in ("agg", "join"):
-        pre_ids = {p["batchId"] for p in query.recentProgress}
-        t_a = time.monotonic()
-        try:
-            reader = spark.read.format("statestore").option("path", ckpt)
-            if shape == "join":
-                # stream-stream join state is per-side; the left side
-                # carries the probe rows (both sides are symmetric here)
-                reader = reader.option("joinSide", "left")
-            audit_rows = reader.load().count()
-            audit_ms = (time.monotonic() - t_a) * 1000
-            # let the batches that overlapped the read finish committing
-            time.sleep(max(1.0, trigger_ms / 1000))
-            during = [
-                p
-                for p in query.recentProgress
-                if p["batchId"] not in pre_ids
-            ]
-            trig = [
-                float(p["durationMs"]["triggerExecution"]) for p in during
-            ]
-            audit = {
-                "audit_state_rows": int(audit_rows),
-                "audit_read_ms": round(audit_ms, 1),
-                "audit_concurrent_batches": len(during),
-                "audit_p50_trigger_ms": round(_pct(trig, 0.50), 1)
-                if trig
-                else float("nan"),
-            }
-        except Exception as exc:  # the reader surface, not the harness
-            audit = {"audit_error": f"{type(exc).__name__}: {str(exc)[:160]}"}
-    query.stop()
-    spark.stop()
-    if first is None:
-        raise SystemExit(
-            "restarted query never committed a batch within the "
-            f"{deadline_s if deadline_s is not None else 120:.0f} s budget"
-        )
-    warm_trig = [float(p["durationMs"]["triggerExecution"]) for p in warm[1:]]
-    out = {
-        "shape": shape_desc,
-        "partitions": partitions,
-        "state_provider": provider,
-        "rows_per_sec": rows_per_sec,
-        "warm_batches": len(warm),
-        "warm_p50_trigger_ms": round(_pct(warm_trig, 0.50), 1)
-        if warm_trig
-        else float("nan"),
-        "state_rows_at_stop": state_rows,
-        "cold_init_ms": float(warm[0]["durationMs"]["triggerExecution"])
-        if warm
-        else float("nan"),
-        "downtime_s": down_s,
-        "recovery_first_commit_ms": round(first_ms, 1),
-        "recovery_first_data_ms": round(data_ms, 1),
-        "recovery_batch_rows": int(first_data["numInputRows"]) if first_data else 0,
-        "recovery_trigger_ms": float(
-            (first_data or first)["durationMs"]["triggerExecution"]
-        ),
-    }
-    out.update(audit)
-    return out
 
 
 def main() -> int:
-    global _PYSTATE_KEYS
     ap = argparse.ArgumentParser()
     ap.add_argument("--batches", type=int, default=24)
     ap.add_argument("--trigger-ms", type=int, default=500)
     ap.add_argument("--rows-per-sec", type=int, default=5000)
     ap.add_argument("--shape", choices=sorted(SHAPES), default="agg")
-    ap.add_argument("--partitions", type=int, default=8)
-    ap.add_argument(
-        "--keys",
-        type=int,
-        default=_PYSTATE_KEYS,
-        help="pystate shape key cardinality (state-volume lever)",
-    )
-    ap.add_argument(
-        "--state-provider", choices=["hdfs", "rocksdb"], default="hdfs"
-    )
-    ap.add_argument(
-        "--deadline-s",
-        type=float,
-        default=None,
-        help="steady-state wall budget override (deep-batch shapes)",
-    )
-    ap.add_argument(
-        "--recovery",
-        action="store_true",
-        help="measure restart-from-checkpoint recovery instead of steady-state",
-    )
-    ap.add_argument("--json", action="store_true")
     args = ap.parse_args()
-
-    _PYSTATE_KEYS = args.keys
-
-    if args.recovery:
-        out = run_recovery(
-            args.batches,
-            args.trigger_ms,
-            args.rows_per_sec,
-            args.shape,
-            args.partitions,
-            args.state_provider,
-            args.deadline_s,
-        )
-        print(json.dumps(out, sort_keys=True))
-        return 0
-
-    out = run(
-        args.batches,
-        args.trigger_ms,
-        args.rows_per_sec,
-        args.shape,
-        args.partitions,
-        args.state_provider,
-        args.deadline_s,
-    )
-    if args.json:
-        print(json.dumps(out, sort_keys=True))
-        return 0
-    print(
-        "| shape | trigger | steady batches | p50 trigger→commit | "
-        "p95 | max | p50 addBatch | batch0 (init) |"
-    )
-    print("|---|---|---|---|---|---|---|---|")
-    print(
-        f"| {out['shape']} | {out['trigger_ms']} ms | "
-        f"{out['n_batches_steady']} | {out['p50_trigger_ms']} ms | "
-        f"{out['p95_trigger_ms']} ms | {out['max_trigger_ms']} ms | "
-        f"{out['p50_addBatch_ms']} ms | {out['batch0_trigger_ms']:.0f} ms |"
-    )
+    out = run(args.batches, args.trigger_ms, args.rows_per_sec, args.shape)
+    print(json.dumps(out, sort_keys=True))
     return 0
 
 
