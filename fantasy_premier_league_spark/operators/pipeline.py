@@ -62,7 +62,6 @@ from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.functions import rounded, safe_div
 from fantasy_premier_league_spark.functions.fpl_rules import (
-    FOLD_COLS,
     FULL_MATCH,
     INIT_RATING,
     PROFILE_COUNTS,
@@ -72,6 +71,7 @@ from fantasy_premier_league_spark.functions.fpl_rules import (
 )
 from fantasy_premier_league_spark.plans.registry import register
 from fantasy_premier_league_spark.schemas import (
+    FOLD_SCHEMA,
     METRIC_COUNTER_COLS,
     PLAYERS_SCHEMA,
     STREAM_SCHEMA,
@@ -510,21 +510,13 @@ def performance_df(
 
 def player_fold_df(perf: DataFrame) -> DataFrame:
     """fold_player over each player's performance_df rows, from the
-    initial state: one row per counted (player, match) with the rating
-    after it and the profile so far (FOLD_COLS)."""
+    initial state: one FOLD_SCHEMA row per counted (player, match)."""
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         folded, _ = fold_player(pdf.sort_values("matchId"))
-        return folded[["playerId", "matchId", "teamId", *FOLD_COLS]]
+        return folded[FOLD_SCHEMA.fieldNames()]
 
-    return perf.groupBy("playerId").applyInPandas(
-        fold,
-        schema=(
-            "playerId int, matchId int, teamId int, rating double, delta double, "
-            "pass_accuracy_mean double, fouls_total long, goals_total long, "
-            "own_goals_total long, shots_on_target_total long"
-        ),
-    )
+    return perf.groupBy("playerId").applyInPandas(fold, schema=FOLD_SCHEMA)
 
 
 def rated_rows(folded: DataFrame) -> DataFrame:
@@ -663,9 +655,9 @@ def latest_per_player(df: DataFrame) -> DataFrame:
 
 
 def profile_columns(folded: DataFrame) -> DataFrame:
-    """The A4 profile after each row of a folded frame (player_fold_df
-    or the stream's RATING_OUTPUT_SCHEMA rows), laid out as the
-    stream's K3 profile snapshots."""
+    """The A4 profile after each row of a folded frame (FOLD_SCHEMA
+    rows, from player_fold_df or the stream), laid out as the stream's
+    K3 profile snapshots."""
     return folded.select(
         "playerId",
         "matchId",

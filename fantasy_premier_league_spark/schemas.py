@@ -139,8 +139,8 @@ STREAM_SCHEMA = T.StructType(
 
 # --------------------------------------------------------------------------
 # The metric vector (a named replacement for the reference's positional
-# tuple, master.py:48-138). The A4+A5 fold state is the stream's
-# RATING_STATE_SCHEMA (streaming/pipeline.py).
+# tuple, master.py:48-138), and the A4+A5 fold's output row. The fold
+# state is the stream's RATING_STATE_SCHEMA (streaming/pipeline.py).
 # --------------------------------------------------------------------------
 
 # 17 counters + matchId: the fixed 18-slot metric vector (the reference's
@@ -164,3 +164,23 @@ METRIC_COUNTER_COLS = [
     "penalty_goals",
     "goals",
 ]
+
+# One row of the A4+A5 fold (functions/fpl_rules.py fold_player): a
+# counted (player, match), its roster span's teamId (null without one),
+# the rating after it and the profile so far. The batch fold
+# (operators/pipeline.py player_fold_df), the stream's state operator
+# and its K4 rating sink all emit it.
+FOLD_SCHEMA = T.StructType(
+    [
+        T.StructField("playerId", T.IntegerType()),
+        T.StructField("matchId", T.IntegerType()),
+        T.StructField("teamId", T.IntegerType()),
+        T.StructField("rating", T.DoubleType()),
+        T.StructField("delta", T.DoubleType()),
+        T.StructField("pass_accuracy_mean", T.DoubleType()),
+        T.StructField("fouls_total", T.LongType()),
+        T.StructField("goals_total", T.LongType()),
+        T.StructField("own_goals_total", T.LongType()),
+        T.StructField("shots_on_target_total", T.LongType()),
+    ]
+)

@@ -28,12 +28,14 @@ Reference topology: socket text DStream, 5 s batches, 4 chained
   so the state function reduces the batch's raw events to per-match
   rows itself: one pandas groupby-sum, then the A3 ratios and the
   contribution on whole Series (each batch carries whole matches, so
-  the sums are complete). It then runs the batch chain's own fold,
-  functions/fpl_rules.py ``fold_player``, from the player's stored
-  state. The stream reads no roster spans, so every counted match
-  takes a rating step; it reproduces the batch results when every
-  counted (player, match) is fielded, as in the fixtures, and matches
-  arrive in matchId order.
+  the sums are complete). The batch's roster spans (a stateless
+  explode of its match records) ride into the same groups, so a
+  counted (player, match) takes a rating step only where it has a
+  span, as in the batch chain's J2 join. It then runs the batch
+  chain's own fold, functions/fpl_rules.py ``fold_player``, from the
+  player's stored state, and emits the batch fold's FOLD_SCHEMA rows;
+  it reproduces the batch results when matches arrive in matchId
+  order.
 
 At 100 TB: the file/kafka source partitions by file/topic-partition;
 the single stateful shuffle keys on playerId (bounded state, one row
@@ -65,24 +67,14 @@ from fantasy_premier_league_spark.functions.fpl_rules import (
     performance,
     series_div,
 )
-from fantasy_premier_league_spark.schemas import STREAM_SCHEMA
-
-RATING_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("playerId", T.IntegerType()),
-        T.StructField("matchId", T.IntegerType()),
-        T.StructField("rating", T.DoubleType()),
-        T.StructField("delta", T.DoubleType()),
-        T.StructField("pass_accuracy_mean", T.DoubleType()),
-        T.StructField("fouls_total", T.LongType()),
-        T.StructField("goals_total", T.LongType()),
-        T.StructField("own_goals_total", T.LongType()),
-        T.StructField("shots_on_target_total", T.LongType()),
-    ]
+from fantasy_premier_league_spark.schemas import (
+    FOLD_SCHEMA,
+    METRIC_COUNTER_COLS,
+    STREAM_SCHEMA,
 )
 
 # K3 profile snapshot rows: operators/pipeline.py profile_columns of
-# the RATING_OUTPUT_SCHEMA rows, one per player
+# the FOLD_SCHEMA rows, one per player
 PROFILE_SNAPSHOT_SCHEMA = T.StructType(
     [
         T.StructField("playerId", T.IntegerType()),
@@ -222,12 +214,13 @@ def latest_committed_version(root: str, batch_id: "int | None" = None) -> "str |
 
 def make_state_sink(rating_dir: str, profile_root: str, marks: list | None = None):
     """K3 + K4 foreachBatch sink over the streaming player state
-    (shared by t16_fpl_pipeline_roundtrip and the restart-idempotency
-    test, so the test exercises the REAL sink).
+    (shared by t16_fpl_pipeline_roundtrip, perfbench's ``stream``
+    workload and the restart-idempotency test, so the test exercises
+    the REAL sink).
 
-    K4: each batch's rating rows land in their own batch_id partition
-    (dynamic partition overwrite) -- a replayed batch rewrites the same
-    partition, never duplicates.
+    K4: each batch's FOLD_SCHEMA rows land in their own batch_id
+    partition (dynamic partition overwrite) -- a replayed batch
+    rewrites the same partition, never duplicates.
 
     K3: profile snapshot v{batch_id} = previous COMMITTED snapshot
     MERGE this batch's latest per-player state, as ONE window: each
@@ -328,27 +321,49 @@ def _fold_player_state(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """A4+A5 (fpl_rules.fold_player) from the player's stored state.
-    Input rows: one per event for this player in this batch; each batch
-    carries whole matches, so its per-match sums are complete."""
-    c = pd.concat(list(pdfs)).groupby(["playerId", "matchId"], as_index=False).sum()
+    Input rows: one per event for this player in this batch (null
+    ``teamId``) and one per roster span (zero counters); each batch
+    carries whole matches, so its per-match sums are complete. A match
+    with an event is counted, and fielded iff it has a span, as in
+    performance_df's left join."""
+    pdf = pd.concat(list(pdfs))
+    is_span = pdf["teamId"].notna()
+    c = pdf[~is_span].drop(columns="teamId")
+    if c.empty:
+        return
+    c = c.groupby(["playerId", "matchId"], as_index=False).sum().merge(
+        pdf.loc[is_span, ["playerId", "matchId", "teamId"]],
+        on=["playerId", "matchId"],
+        how="left",
+    )
     c = c.assign(**final_metrics(c.__getitem__, series_div))
-    c["perf"] = performance(c.__getitem__)
+    c["perf"] = performance(c.__getitem__).where(c["teamId"].notna())
     folded, new_state = fold_player(c, state.get if state.exists else INIT_STATE)
     state.update(new_state)
-    yield folded[RATING_OUTPUT_SCHEMA.fieldNames()]
+    yield folded[FOLD_SCHEMA.fieldNames()]
 
 
 def streaming_player_state(parsed: DataFrame) -> DataFrame:
     """The stateful tier: per-player rating + profile evolving match by
     match, emitted in append mode. Replaces the reference's chained
-    updateStateByKey with ONE keyed state operator."""
-    from fantasy_premier_league_spark.operators.pipeline import metric_vectors
+    updateStateByKey with ONE keyed state operator, over the union of
+    each micro-batch's event vectors and roster spans. Both branches
+    read the one file source, so they see the same files per batch."""
+    from fantasy_premier_league_spark.operators.pipeline import (
+        metric_vectors,
+        player_spans,
+    )
 
     events = parsed.filter(F.col("eventId").isNotNull())
-    vectors = metric_vectors(events).drop("id")
-    return vectors.groupBy("playerId").applyInPandasWithState(
+    vectors = metric_vectors(events).select(
+        "playerId", "matchId", F.lit(None).cast("int").alias("teamId"), *METRIC_COUNTER_COLS
+    )
+    spans = player_spans(parsed.filter(F.col("wyId").isNotNull())).select(
+        "playerId", "matchId", "teamId", *(F.lit(0).alias(c) for c in METRIC_COUNTER_COLS)
+    )
+    return vectors.unionByName(spans).groupBy("playerId").applyInPandasWithState(
         _fold_player_state,
-        outputStructType=RATING_OUTPUT_SCHEMA,
+        outputStructType=FOLD_SCHEMA,
         stateStructType=RATING_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

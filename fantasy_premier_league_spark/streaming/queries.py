@@ -40,10 +40,10 @@ from fantasy_premier_league_spark.operators.sketches import (
     hll_registers,
 )
 from fantasy_premier_league_spark.plans.registry import register
+from fantasy_premier_league_spark.schemas import FOLD_SCHEMA
 from fantasy_premier_league_spark.sources.testdata import canonicalize_ts, load_table
 from fantasy_premier_league_spark.streaming.pipeline import (
     PROFILE_SNAPSHOT_SCHEMA,
-    RATING_OUTPUT_SCHEMA,
     latest_committed_version,
     run_stream_to_memory,
 )
@@ -276,7 +276,11 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_stateful() -> None:
-    from fantasy_premier_league_spark.operators.pipeline import RATING_ROWS_SQL
+    from fantasy_premier_league_spark.operators.pipeline import (
+        RATING_ROWS_SQL,
+        _rating_rows,
+        rated_rows,
+    )
     from fantasy_premier_league_spark.sources import fpl_fixtures
 
     @register("fpl_t5_stateful_stream", oracle=RATING_ROWS_SQL)
@@ -288,13 +292,7 @@ def _register_stateful() -> None:
 
         stream_dir = os.path.join(fpl_fixtures.ensure_fixtures(), "stream")
         out = streaming_player_state(stream_source(spark, stream_dir))
-        table = run_stream_to_memory(out, output_mode="append")
-        return table.select(
-            "playerId",
-            "matchId",
-            rounded(F.col("rating"), 6).alias("rating"),
-            rounded(F.col("delta"), 6).alias("delta"),
-        ).orderBy("playerId", "matchId")
+        return _rating_rows(rated_rows(run_stream_to_memory(out, output_mode="append")))
 
 
 _register_stateful()
@@ -805,33 +803,23 @@ def stop_on_error(queries: list):
 def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
     """Stage 3 -- serving: every input comes from the sink tables; the
     profile is the newest COMMITTED K3 snapshot, as the sink reads it.
-    Each table is read with the schema its sink writes, so no job
-    infers one from the Parquet footers."""
+    The K4 rows' rating trace feeds the final rating and chemistry, as
+    in the request snapshot. Each table is read with the schema its
+    sink writes, so no job infers one from the Parquet footers."""
     from fantasy_premier_league_spark.operators.pipeline import (
         chemistry_from_trace,
         latest_per_player,
+        rated_rows,
     )
 
-    rating_dir = os.path.join(out_dir, "rating")
-    profile_root = os.path.join(out_dir, "profile")
-    events_dir = os.path.join(out_dir, "events")
-
-    # ---- serving: every input below comes from the sink tables ----
-    rating = spark.read.schema(RATING_OUTPUT_SCHEMA).parquet(rating_dir)
+    trace = rated_rows(
+        spark.read.schema(FOLD_SCHEMA).parquet(os.path.join(out_dir, "rating"))
+    )
     profile = spark.read.schema(PROFILE_SNAPSHOT_SCHEMA).parquet(
-        latest_committed_version(profile_root)
+        latest_committed_version(os.path.join(out_dir, "profile"))
     )
-    teams = (
-        spark.read.schema("playerId INT, matchId INT, teamId INT")
-        .parquet(events_dir)
-        .select("playerId", "matchId", "teamId")
-        .distinct()
-    )
-    final = latest_per_player(rating).select(
+    final = latest_per_player(trace).select(
         "playerId", F.col("rating").alias("final_rating")
-    )
-    trace = rating.select("playerId", "matchId", "delta").join(
-        teams, ["playerId", "matchId"]
     )
     chem = chemistry_from_trace(trace).select(
         "p1", "p2", rounded(F.col("chemistry"), 6).alias("chemistry")
@@ -843,26 +831,12 @@ def t16_serve(spark: SparkSession, out_dir: str) -> DataFrame:
         .unionByName(chem.select(F.col("p2").alias("playerId"), "chemistry"))
         .groupBy("playerId")
         .agg(
-            (
-                F.sum(F.round(F.col("chemistry") * 1000000).cast("long")).cast(
-                    "long"
-                )
-                / 1000000.0
-            ).alias("chem_sum")
+            (F.sum(fixed_units(F.col("chemistry"), 1000000)).cast("long") / 1000000.0)
+            .alias("chem_sum")
         )
     )
     return (
-        final.join(
-            profile.select(
-                "playerId",
-                "pass_accuracy",
-                "fouls",
-                "goals",
-                "own_goals",
-                "shots_on_target",
-            ),
-            "playerId",
-        )
+        final.join(profile.drop("matchId"), "playerId")
         .join(chem_pp, "playerId")
         .select(
             "playerId",

@@ -75,6 +75,97 @@ def test_stateful_profile_matches_batch(spark):
         assert s["pass_accuracy_mean"] == pytest.approx(b["pass_accuracy"], abs=1e-12)
 
 
+def test_stream_folds_the_batch_chains_rows(spark, tmp_path, monkeypatch):
+    """A counted (player, match) takes a rating step only where the
+    player has a roster span: the stream reads each batch's spans, as
+    the batch chain's J2 join does. In a copy of the fixture stream one
+    player with events in a match is dropped from that match's lineup;
+    both sides keep the row with a null teamId and delta and the rating
+    unchanged, and agree on every FOLD_SCHEMA column."""
+    import shutil
+
+    from fantasy_premier_league_spark import schemas
+    from fantasy_premier_league_spark.operators import pipeline
+    from fantasy_premier_league_spark.streaming.pipeline import (
+        run_stream_to_memory,
+        stream_source,
+        streaming_player_state,
+    )
+
+    stream = tmp_path / "stream"
+    shutil.copytree(os.path.dirname(pipeline.STREAM_GLOB), stream)
+    monkeypatch.setattr(pipeline, "STREAM_GLOB", str(stream / "*.jsonl"))
+    path = sorted(stream.glob("*.jsonl"))[5]
+    match, *events = path.read_text().splitlines()
+    record = json.loads(match)
+    lineup = next(iter(record["teamsData"].values()))["formation"]["lineup"]
+    player = lineup.pop(0)["playerId"]
+    assert any(json.loads(e)["playerId"] == player for e in events)
+    # the file source takes files in modification-time order: keep the
+    # edited match in its place
+    mtime = path.stat().st_mtime_ns
+    path.write_text("\n".join([json.dumps(record), *events]) + "\n")
+    os.utime(path, ns=(mtime, mtime))
+
+    def by_key(df):
+        return {(r["playerId"], r["matchId"]): r.asDict() for r in df.collect()}
+
+    batch = by_key(pipeline.player_fold_df(pipeline.performance_df(spark)))
+    got = run_stream_to_memory(
+        streaming_player_state(stream_source(spark, str(stream))), output_mode="append"
+    )
+    stream_rows = by_key(got)
+
+    trace = sorted((m, r) for (p, m), r in stream_rows.items() if p == player)
+    pos = next(i for i, (m, _) in enumerate(trace) if m == record["wyId"])
+    assert pos > 0
+    unfielded, before = trace[pos][1], trace[pos - 1][1]
+    assert unfielded["delta"] is None and unfielded["teamId"] is None
+    assert unfielded["rating"] == before["rating"]
+
+    assert got.schema == schemas.FOLD_SCHEMA
+    assert stream_rows.keys() == batch.keys()
+    for key, b in batch.items():
+        s = stream_rows[key]
+        for col in schemas.FOLD_SCHEMA.fieldNames():
+            if col in ("rating", "delta") and b[col] is not None:
+                assert s[col] == pytest.approx(b[col], abs=1e-12), (key, col)
+            else:
+                assert s[col] == b[col], (key, col)
+
+
+def test_t16_serve_reads_no_event_feed(spark, tmp_path):
+    """t16_serve reads the K4 rating rows and the committed K3 profile
+    snapshot only: each K4 row carries its roster span's teamId, so
+    chemistry needs no join back to the event feed."""
+    from fantasy_premier_league_spark.streaming.pipeline import (
+        make_state_sink,
+        stream_source,
+        streaming_player_state,
+    )
+    from fantasy_premier_league_spark.streaming.queries import t16_serve
+
+    out = tmp_path / "out"
+    (
+        streaming_player_state(
+            stream_source(
+                spark, os.path.join(ensure_fixtures(), "stream"), max_files_per_trigger=6
+            )
+        )
+        .writeStream.foreachBatch(
+            make_state_sink(str(out / "rating"), str(out / "profile"))
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    served = t16_serve(spark, str(out))
+    files = served.inputFiles()
+    assert files and served.count() > 0
+    assert not [f for f in files if "/events/" in f]
+
+
 def test_stream_fold_imports_skip_the_batch_pipeline():
     """The stream fold and the applyInPandas folds reach the shared FPL
     rules by reference inside Python workers. Importing them, or the
@@ -277,8 +368,8 @@ def test_sinks_leave_session_overwrite_mode_unchanged(spark, tmp_path):
     drain the sink sees the query's cloned session, so a conf set there
     leaks into every later write of that query; a sink called directly
     on a static batch (as below) would flip the caller's own session."""
+    from fantasy_premier_league_spark.schemas import FOLD_SCHEMA
     from fantasy_premier_league_spark.streaming.pipeline import (
-        RATING_OUTPUT_SCHEMA,
         make_state_sink,
         run_ingest_sinks,
         stream_source,
@@ -310,7 +401,7 @@ def test_sinks_leave_session_overwrite_mode_unchanged(spark, tmp_path):
     for batch_id in (0, 1):
         state_sink(
             sess.createDataFrame(
-                [(7, batch_id, 0.5, 0.0, 0.5, 1, 0, 0, 1)], RATING_OUTPUT_SCHEMA
+                [(7, batch_id, 10, 0.5, 0.0, 0.5, 1, 0, 0, 1)], FOLD_SCHEMA
             ),
             batch_id,
         )
@@ -406,9 +497,9 @@ def test_state_sink_keeps_an_absent_players_profile(spark, tmp_path):
     batch N, so a player absent from batch N keeps its v(N-1) row. The
     snapshot is written in PROFILE_SNAPSHOT_SCHEMA, the schema its
     readers pass."""
+    from fantasy_premier_league_spark.schemas import FOLD_SCHEMA
     from fantasy_premier_league_spark.streaming.pipeline import (
         PROFILE_SNAPSHOT_SCHEMA,
-        RATING_OUTPUT_SCHEMA,
         make_state_sink,
     )
 
@@ -418,8 +509,8 @@ def test_state_sink_keeps_an_absent_players_profile(spark, tmp_path):
     def batch(*rows):
         # (playerId, matchId, fouls_total): one folded row each
         return spark.createDataFrame(
-            [(p, m, 0.5, 0.1, 70.0, f, 0, 0, 1) for p, m, f in rows],
-            RATING_OUTPUT_SCHEMA,
+            [(p, m, 10, 0.5, 0.1, 70.0, f, 0, 0, 1) for p, m, f in rows],
+            FOLD_SCHEMA,
         )
 
     def snapshot(version: str):
@@ -478,7 +569,6 @@ def test_state_sink_restart_idempotent(spark, tmp_path):
 
     from fantasy_premier_league_spark.streaming.pipeline import (
         make_state_sink,
-        run_ingest_sinks,
         stream_source,
         streaming_player_state,
     )
@@ -540,11 +630,6 @@ def test_state_sink_restart_idempotent(spark, tmp_path):
 
     # before the restart t16_serve must serve the last COMMITTED profile
     # snapshot (v00001), not the partial v00002 the crash left
-    run_ingest_sinks(
-        stream_source(spark, stream_dir, max_files_per_trigger=64),
-        str(tmp_path / "crash"),
-        str(tmp_path / "crash" / "ckpt_ingest"),
-    ).awaitTermination()
     counts = ["fouls", "goals", "own_goals", "shots_on_target"]
 
     def by_player(df):
